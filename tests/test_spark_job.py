@@ -7,7 +7,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from trek_spark.spark.corpus import build_golden, build_transcripts
+from trek_spark.spark.corpus import (
+    build_golden, build_transcripts, seeded_transcripts,
+)
 from trek_spark.spark.job import extract_turns, run_extraction_job
 from trek_spark.spark.session import get_spark
 
@@ -65,11 +67,11 @@ def test_metrics_columns_populated(extracted):
     assert row.d > 0 and row.w >= 0
 
 
-def test_metrics_not_inflated(spark, extracted, tmp_path_factory):
+def test_metrics_not_inflated(spark, tmp_path_factory):
     """Round-1 ADVICE: batch metrics stamped per row must not multiply —
     docs_in summed over the metrics table equals the actual row count."""
     out = str(tmp_path_factory.mktemp("metrics"))
-    transcripts = build_transcripts(spark).limit(30)
+    transcripts = seeded_transcripts(spark, 30, seed=1)
     r = run_extraction_job(spark, transcripts, out, num_partitions=8,
                            part_buckets=8)
     metrics = spark.read.parquet(os.path.join(out, "metrics"))
@@ -85,10 +87,15 @@ def test_metrics_not_inflated(spark, extracted, tmp_path_factory):
 
 def test_checkpoint_resume(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job"))
-    transcripts = build_transcripts(spark).limit(40)
+    transcripts = seeded_transcripts(spark, 40, seed=2)
     r1 = run_extraction_job(spark, transcripts, out, num_partitions=8,
                             part_buckets=8)
-    assert r1["rows"] == 40 and r1["failures"] == 0
+    assert r1["rows"] == 40
+    # failures come from the write's Observation: they must equal the
+    # written rows with an error (the seeded empty_input turn)
+    written = spark.read.parquet(os.path.join(out, "turns"))
+    assert r1["failures"] == written.filter(
+        F.col("error").isNotNull()).count() == 1
     # table-colocated checkpoint: no driver-local state; completion is
     # recorded by post-commit marker files, not inferred from data files
     assert not os.path.exists(os.path.join(out, "ledger.json"))
@@ -110,7 +117,7 @@ def test_resume_after_partial_crash(spark, tmp_path_factory):
     produce the complete, non-duplicated output with no driver-local
     state carried between the runs."""
     out = str(tmp_path_factory.mktemp("jobcrash"))
-    transcripts = build_transcripts(spark).limit(40)
+    transcripts = seeded_transcripts(spark, 40, seed=3)
     import trek_spark.spark.job as jobmod
 
     # simulate a crash after the first wave's commit: patch the wave loop
@@ -147,6 +154,10 @@ def test_resume_after_partial_crash(spark, tmp_path_factory):
     assert turns.select("conv_id", "turn_idx").distinct().count() == 40
     # every bucket is now marked committed (markers cover empty ones too)
     assert r["completed_buckets"] == 8
+    # the crashed run never derived metrics/; the rerun covers every
+    # committed bucket, the crashed run's wave included
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.agg(F.sum("docs_in")).collect()[0][0] == 40
 
 
 def test_partial_commit_without_marker_is_reextracted(spark,
@@ -156,7 +167,7 @@ def test_partial_commit_without_marker_is_reextracted(spark,
     incomplete: the rerun re-extracts it and dynamic overwrite replaces
     the partial files, so no rows are silently dropped."""
     out = str(tmp_path_factory.mktemp("jobcommitcrash"))
-    transcripts = build_transcripts(spark).limit(40)
+    transcripts = seeded_transcripts(spark, 40, seed=4)
     run_extraction_job(spark, transcripts, out, num_partitions=8,
                        part_buckets=8)
     from trek_spark.spark.job import _completed_buckets
@@ -190,7 +201,7 @@ def test_empty_buckets_not_reextracted(spark, tmp_path_factory):
     markers must still record them so resume does zero work instead of
     re-scanning them on every run."""
     out = str(tmp_path_factory.mktemp("jobempty"))
-    transcripts = build_transcripts(spark).limit(6)  # few convs, 64 buckets
+    transcripts = seeded_transcripts(spark, 6, seed=5)  # 4 convs, 64 buckets
     run_extraction_job(spark, transcripts, out, num_partitions=8,
                        part_buckets=64)
     from trek_spark.spark.job import _completed_buckets
@@ -202,9 +213,28 @@ def test_empty_buckets_not_reextracted(spark, tmp_path_factory):
     assert r2["completed_buckets"] == 64
 
 
+def test_plan_waves_sized_from_input_bytes(spark, tmp_path_factory):
+    """Waves come from the optimizer's size estimate: a small parquet
+    input is one wave, an input Spark cannot size gets the fixed
+    fallback, and an explicit ``waves`` wins (capped at one bucket per
+    wave)."""
+    from trek_spark.spark.job import UNKNOWN_SIZE_WAVES, plan_waves
+
+    d = str(tmp_path_factory.mktemp("waves") / "in")
+    seeded_transcripts(spark, 20, seed=9).write.parquet(d)
+    small = spark.read.parquet(d)
+    assert plan_waves(small, 64) == 1
+    unsized = spark.createDataFrame(
+        spark.sparkContext.parallelize([("c", 0)]), "conv_id string, n int")
+    assert plan_waves(unsized, 64) == UNKNOWN_SIZE_WAVES == 4
+    assert plan_waves(small, 64, waves=3) == 3
+    assert plan_waves(unsized, 2, waves=3) == 2
+    assert plan_waves(small, 0) == 0
+
+
 def test_salting_spreads_conversations(spark):
     from trek_spark.spark.job import salted
-    t = build_transcripts(spark)
+    t = seeded_transcripts(spark, 64, seed=6)
     df = salted(t, 8, salt_buckets=16)
     parts = df.withColumn("pid", F.spark_partition_id()) \
         .groupBy("pid").count().collect()
@@ -218,7 +248,7 @@ def test_giant_conversation_skew(spark, tmp_path_factory):
     that the job completes with correct output."""
     from pyspark.sql import functions as F
 
-    base = build_transcripts(spark).limit(8)
+    base = seeded_transcripts(spark, 8, seed=7)
     # one conversation with 400 turns (vs 8 normal rows)
     giant = (spark.range(400)
              .select(F.lit("conv-giant").alias("conv_id"),
@@ -243,7 +273,8 @@ def test_giant_conversation_skew(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("skewjob"))
     r = run_extraction_job(spark, skewed, out, num_partitions=8,
                            part_buckets=8, waves=2)
-    assert r["rows"] == 408 and r["failures"] == 0
+    # the one failure is the seeded empty_input turn
+    assert r["rows"] == 408 and r["failures"] == 1
     turns = spark.read.parquet(os.path.join(out, "turns"))
     assert turns.filter(F.col("conv_id") == "conv-giant").count() == 400
 
@@ -256,11 +287,11 @@ def test_iceberg_gate_and_parquet_fallback(spark, tmp_path_factory):
     assert iceberg_available(spark) is False
 
     out = str(tmp_path_factory.mktemp("jobtable"))
-    transcripts = build_transcripts(spark).limit(20)
+    transcripts = seeded_transcripts(spark, 20, seed=8)
     r1 = run_extraction_job(spark, transcripts, out, num_partitions=8,
                             part_buckets=8,
                             output_table="cat.db.turns")
-    assert r1["rows"] == 20 and r1["failures"] == 0
+    assert r1["rows"] == 20 and r1["failures"] == 1  # seeded empty turn
     assert r1["output"].endswith("turns")  # parquet dir, not the table
     assert spark.read.parquet(os.path.join(out, "turns")).count() == 20
     r2 = run_extraction_job(spark, transcripts, out, num_partitions=8,

