@@ -11,8 +11,9 @@ Usage (north-rule launch mode):
         [--partitions N] [--salt-buckets S] [--waves W] [--no-resume]
 
 Reads the transcript table (conv_id, turn_idx, role, text, tool, ts[, url]),
-runs the salted, checkpointed extraction job, writes the turns + metrics
-tables and prints a one-line JSON summary.
+runs the salted, checkpointed extraction job (waves sized from input bytes
+unless --waves is given), writes the turns + metrics tables and prints a
+one-line JSON summary of this run.
 
 With no --input, runs on the built-in deterministic fixture corpus (smoke
 mode / this sandbox).
@@ -40,8 +41,10 @@ def main() -> None:
                          "(catalog.db.table); requires the Iceberg runtime "
                          "on the classpath, else falls back to the parquet "
                          "sink under --output")
-    ap.add_argument("--waves", type=int, default=4,
-                    help="checkpoint granularity: bucket groups per run")
+    ap.add_argument("--waves", type=int, default=None,
+                    help="checkpoint granularity: bucket groups (write "
+                         "jobs) per run; default: sized from the input's "
+                         "estimated bytes, one wave per 64 MiB per core")
     ap.add_argument("--tile-copies", type=int, default=1,
                     help="fixture-corpus tiling factor (smoke mode only)")
     args = ap.parse_args()

@@ -411,9 +411,10 @@ def run_extraction_job(
         else:
             # explicit schema: skips footer inference and keeps a table
             # of only empty buckets (no data files) readable
+            lineage = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                                for f in METRICS_SCHEMA.fields)
             turns = spark.read.schema(
-                "part_id int, batch_idx int, doc_bytes long, wall_ms long, "
-                "error string, part_bucket int").parquet(turns_dir)
+                f"{lineage}, error string, part_bucket int").parquet(turns_dir)
         _write_metrics(turns, done, metrics_dir)
 
     wall = time.time() - t0
