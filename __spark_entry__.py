@@ -309,8 +309,7 @@ def _stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     30-minute gap chains turns into one session, a quiet period splits
     it, keys never merge. Complete-mode memory sink makes the
     availableNow drain's final merged sessions readable. No SQL oracle:
-    DuckDB has no streaming/session-window surface (the BATCH gap
-    semantics are oracle-proven by events_sessionize)."""
+    DuckDB has no streaming/session-window surface."""
     import datetime as dt
     import tempfile
 
@@ -358,8 +357,7 @@ def _stream_join_tool_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     within [ts, ts + 5 min] — both sides watermarked so state is
     evictable. Deterministic planted streams: one in-window pair per
     turn, one too-late result, one orphan conv that must not emit. No
-    SQL oracle: DuckDB has no stream-stream join/watermark surface (the
-    batch interval semantics are oracle-proven by events_asof_join)."""
+    SQL oracle: DuckDB has no stream-stream join/watermark surface."""
     import datetime as dt
     import tempfile
 
@@ -516,8 +514,6 @@ def _stream_dedup_within_watermark(spark: SparkSession,
         .orderBy("conv_id", "turn_idx"))
 
 
-# Rows-only entries staged for the round-8 window (built late in r7;
-# the r7 window is frozen at 50 — see _PARKED_FOR_R8).
 def _synth_source_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only proof that the Spark-4 Python Data Source surface
     (trek_spark/spark/sources.py, format `trek_transcripts`) runs in
@@ -548,66 +544,10 @@ _R8_ROWS_ONLY = {
     "synth_source_turns": _synth_source_turns,
 }
 
-# The driver records AT MOST 50 queries() entries per round (empirical:
-# r5 recorded 50 of 54, r6 recorded 50 of 63 — an entry-COUNT cap, not a
-# time budget; see SURVEY.md §11).  Policy from the r6 verdict: expose
-# <=50 entries, lead with entries that have never appeared in a
-# CORRECTNESS_r{N}.json (or were red last time they did), rotate
-# long-stable staples out, and record the rotation manifest in SURVEY.
-#
-# Round-8 window (r7 verdict #1, SURVEY §12 schedule): the 50 OLDEST
-# never-recorded parked ops, in _PARKED_FOR_R8 order — job-wired gates
-# first (pii_redact, gopher_quality_rules, line/passage dedup). The
-# overflow (69 ops), the 5 rows-only r8 candidates, the r7-recorded
-# newcomers and the rotated staples all park for the r9/r10 windows.
-# Historical round-7 manifests are kept below for the rotation ledger.
-_NEVER_RECORDED_R7 = [
-    "source_mix_weights",
-    "tfidf_top_terms",
-    "stratified_sample",
-    "benchmark_contamination",
-    "embedding_near_dup",
-    "multimodal_meta",
-]
-_NEW_R7 = [
-    # appended as implemented this round (each must exist in OPS)
-    "customer_value_deciles_approx",
-    "events_cardinality_approx",
-    "dedup_prefix_filter",
-    "benchmark_contamination_fuzzy",
-    "dedup_graph_triangles",
-    "source_mix_sample",
-]
-# Rotated out for round 7: unchanged + green in every round since r1.
-# They remain in OPS (bench + pytest still exercise them) and rotate
-# back into the window on a later round.
-_ROTATED_OUT_R7 = [
-    "scan_filter_project",
-    "segment_revenue",
-    "region_revenue",
-    "pricing_summary",
-    "latest_order_per_customer",
-    "dedup_exact",
-    "top_orders",
-    "distinct_priorities",
-    "orders_except",
-    "orders_rollup",
-    "customers_with_orders",
-    "orders_above_avg",
-    "customers_without_orders",
-    "orders_pivot",
-    "revenue_moving_avg",
-    "part_strings",
-    "orders_by_month",
-    "events_stats",
-    "event_gaps",
-    "events_json",
-]
-# Ops implemented AFTER the round-7 window was frozen at 50 entries.
-# They live in OPS (bench/pytest/oracle_check exercise them) but stay
-# out of this round's record window; they are the leading candidates
-# for _NEW_R8 when the r8 rotation swaps the r7-recorded newcomers out.
-_PARKED_FOR_R8 = [
+# queries() exposes at most 50 entries (only that many are recorded per
+# run): the oracle-checked ops below, in record order.
+_DRIVER_RECORD_CAP = 50
+_WINDOW = [
     "pii_redact",
     "dedup_boilerplate_lines",
     "pack_token_budget",
@@ -658,110 +598,23 @@ _PARKED_FOR_R8 = [
     "terms_freq_of_freqs",
     "vocab_growth",
     "docs_stable_ids",
-    "events_salted_topk",
-    "referential_integrity_audit",
-    "events_rolling_median",
-    "docs_column_profile",
-    "lineitem_median_histogram",
-    "split_leakage_audit",
-    "events_anomaly_mad",
-    "events_changepoint_cusum",
-    "customer_rfm_segments",
-    "basket_part_pairs",
-    "orders_mom_yoy",
-    "orders_pareto_cume",
-    "terms_continuation_counts",
-    "tpch_volume_shipping",
-    "tpch_market_share",
-    "tpch_profit_by_nation",
-    "tpch_promo_revenue",
-    "tpch_top_supplier",
-    "tpch_small_qty_revenue",
-    "tpch_large_orders",
-    "tpch_disjunctive_join",
-    "tpch_sole_failure_suppliers",
-    "tpch_inactive_premium_customers",
-    "orders_pipe_syntax",
-    "part_collated_brands",
-    "events_ks_drift",
-    "lineitem_benford",
-    "docs_chunks_udtf",
-    "events_rank_sum",
-    "events_chi2_independence",
-    "events_null_semantics",
-    "orders_percent_of_total",
-    "semantic_dedup_medoid",
-    "embedding_label_noise",
-    "terms_kn_bigram_probs",
-    "terms_good_turing",
-    "events_session_window_native",
-    "events_xml_parse",
-    "events_hll_merge",
-    "events_median_by_type",
-    "events_transpose",
-    "events_string_agg",
-    "events_try_arithmetic",
-    "terms_zipf_slope",
-    "events_linreg_exact",
-    "orders_xyz_classes",
-    "events_seasonal_naive_error",
-    "orders_shuffle_hash_join",
-    "events_two_step_transitions",
-    "docs_inverted_index",
-    "tables_fingerprint",
-    "events_gap_interpolation",
-    "part_skyline",
-    "tpch_shipping_priority",
-    "tpch_order_priority_check",
-    "tpch_forecast_revenue",
-    "tpch_returned_items",
-    "tpch_customer_distribution",
-    "events_autocorrelation",
-    "events_out_of_orderness",
-    "customer_balance_buckets",
-    "customer_points_capped",
-    "orders_key_gap_audit",
-    "events_burstiness",
-    "nation_region_full_outer",
-    "orders_rank_family",
-    "terms_conditional_entropy",
-    "lineitem_weighted_median",
-    "events_gini_concentration",
-    "quality_classifier",  # new r8 (verdict #5) — past [:50], so r9/r10
-    "train_export_manifest",  # new r8 (verdict #4) — r9/r10 window
-    "docs_duplicate_ngram_fraction",  # new r8 late wave — r9/r10
-    "ccnet_perplexity_buckets",  # new r8 late wave — r9/r10
-    "transcript_pack_masked",  # new r8 late wave — r9/r10
-    "dedup_keep_best_quality",  # new r8 late wave — r9/r10
-    "transcript_cross_conv_echo",  # new r8 late wave — r9/r10
-    "quality_classifier_eval",  # new r8 late wave — r9/r10
-    "sft_export_manifest",  # new r8 late wave — r9/r10
 ]
-_DRIVER_RECORD_CAP = 50
-
-# The round-8 record window: exactly the 50 oldest never-recorded
-# parked ops (r7 verdict #1). Rows-only entries from earlier rounds
-# (multimodal/extraction/streaming) already carry driver records and
-# rotate back in with the r10 window; _R8_ROWS_ONLY waits for r10 too —
-# the 50-entry cap is fully consumed by the oracle backlog this round.
-_WINDOW_R8 = _PARKED_FOR_R8[:_DRIVER_RECORD_CAP]
-_PARKED_FOR_R9 = _PARKED_FOR_R8[_DRIVER_RECORD_CAP:]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from trek_spark.spark.ops import OPS
 
     out: dict[str, Callable] = {}
-    for name in _WINDOW_R8:
+    for name in _WINDOW:
         out[name] = OPS[name][0]
     assert len(out) <= _DRIVER_RECORD_CAP, (
         f"queries() exposes {len(out)} entries; the driver records only "
-        f"{_DRIVER_RECORD_CAP} — shrink _WINDOW_R8")
+        f"{_DRIVER_RECORD_CAP} — shrink _WINDOW")
     return out
 
 
-# Rows-only entries NOT in the r8 window (previously recorded, or
-# staged for r10) — kept importable for bench/pytest coverage.
+# Rows-only entries (no SQL oracle), outside the queries() window;
+# importable for tests and tools.
 _ROWS_ONLY_RECORDED = {
     "multimodal_decode": _multimodal_decode,
     "multimodal_features": _multimodal_features,

@@ -1,8 +1,8 @@
-"""Benchmark harness.
+"""Extraction scaling probe.
 
-Headline metric: extracted turns/sec through the full pipeline (scan →
-salt/repartition → fused pandas-UDF extraction) on a deterministic tiled
-fixture corpus.
+Not the benchmark of record (that is ``perfbench/``). Headline metric:
+extracted turns/sec through the full pipeline (scan → salt/repartition →
+fused pandas-UDF extraction) on a deterministic tiled fixture corpus.
 
 Scaling criterion (north rule: >=0.8 efficiency from N to 4N executors,
 sandbox substitute per the driver: "the same job at two parallelism levels
@@ -34,8 +34,8 @@ protocol prose) goes to BENCH/DETAILS.json and the line points at it.
 
 Compact line shape:
   {"metric": "extract_turns_per_sec", "value": <tps at local[CPUS]>,
-   "unit": "sec", "queries": {...}, "sf": ...,
-   "ann_recall_at_3": {...}, "cc_rounds": N,
+   "unit": "sec", "queries": {<extraction leg>: wall_sec},
+   "span_coverage": C,
    "scaling": {"n": .., "low_tps": .., "high_tps": .., "efficiency": E,
                "saturated": bool, "attempts": [...],
                "pair_8_32": {...}, "mp_eff": {...}, "full_width_tps": ..,
@@ -51,28 +51,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SCALE_N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
 PAIR_TILES = int(os.environ.get("SPARK_GRAFT_TILES", "40"))
 PAIR_PARTITIONS = int(os.environ.get("SPARK_GRAFT_PAIR_PARTITIONS", "32"))
 FULL_TILES = int(os.environ.get("SPARK_GRAFT_FULL_TILES", "100"))
-
-BENCH_QUERIES = [
-    "pricing_summary", "region_revenue", "latest_order_per_customer",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash_pairs", "dedup_clusters", "ann_topk_cosine",
-    "ann_topk_ivf", "ann_topk_ivf_mp", "ann_topk_ivf_kmeans",
-    "orders_rollup", "token_counts", "lang_heuristic",
-    "render_conversations", "stratified_sample", "tfidf_top_terms",
-    "benchmark_contamination", "dedup_keep_canonical",
-    "dedup_minhash_estimate",
-    "events_asof_join", "events_sessionize", "docs_repetition_ratio",
-    "dedup_hot_shingle_audit", "dedup_prefix_filter",
-    "quality_classifier",  # r8: learned scorer (train agg + frozen-
-                           # literal per-row scoring + threshold pass)
-]
-
 
 def _extraction_run(cpus: int, copies: int,
                     num_partitions: int | None = None) -> dict:
@@ -172,59 +155,6 @@ def _mp_control(levels: tuple[int, ...] = (1, 4, 8, 32),
     return out
 
 
-def _query_timings() -> tuple[dict, dict, dict]:
-    from trek_spark.spark import ops as ops_mod
-    from trek_spark.spark.ops import OPS
-    from trek_spark.spark.session import get_spark
-
-    spark = get_spark("bench-queries", master=f"local[{CPUS}]")
-    timings = {}
-    cc_audit = {}
-    try:
-        spark.range(1).count()
-        for name in BENCH_QUERIES:
-            fn, _sql = OPS[name]
-            t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.time() - t0, 3)
-            if name == "dedup_clusters":
-                cc_audit = dict(ops_mod.LAST_CC_AUDIT)
-        recall = _ann_recall(spark)
-    finally:
-        spark.stop()
-    return timings, recall, cc_audit
-
-
-def _ann_recall(spark) -> dict:
-    """recall@3 of the IVF variants against the exact cosine baseline
-    (ground truth), per VERDICT r3 #9: the nprobe knob's measured effect.
-    Tiny collects — 5 queries × 3 neighbors per op."""
-    from trek_spark.spark.ops import OPS
-
-    def neighbor_sets(name):
-        rows = OPS[name][0](spark, SF_DIR).collect()
-        out = {}
-        for r in rows:
-            out.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return out
-
-    truth = neighbor_sets("ann_topk_cosine")
-    res = {}
-    for name in ("ann_topk_ivf", "ann_topk_ivf_mp"):
-        got = neighbor_sets(name)
-        hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
-        total = sum(len(t) for t in truth.values())
-        res[name] = round(hits / total, 3) if total else None
-    res["note"] = (
-        "testdata embeddings are i.i.d. random — no cluster structure, so "
-        "the information-theoretic recall of ANY nprobe-of-256-cell scheme "
-        "is ~nprobe/256 (~0.4-1.6%) regardless of implementation; on "
-        "real-world (clustered) embeddings cell occupancy follows the "
-        "clusters and recall rises with nprobe, which is the knob "
-        "ann_topk_ivf_mp adds (1 -> 4 probed cells)")
-    return res
-
-
 _PROTOCOL_NOTES = {
     "criterion": (
         f"gate pair local[N] vs local[4N] (N from SPARK_GRAFT_SCALE_N) on "
@@ -252,14 +182,6 @@ _PROTOCOL_NOTES = {
         "shortfall is the shared host (memory bus + co-tenants), not the "
         "pipeline; separate executors on a real cluster have their own "
         "bus"),
-    "ann_recall": (
-        "testdata embeddings are i.i.d. random — no cluster structure, so "
-        "the information-theoretic recall of ANY nprobe-of-256-cell "
-        "scheme is ~nprobe/256 (~0.4-1.6%) regardless of implementation; "
-        "on real-world (clustered) embeddings recall rises with nprobe "
-        "(the knob ann_topk_ivf_mp adds). ann_recall_clustered is the "
-        "same recall@3 measured on a synthetic CLUSTERED corpus where "
-        "the knob's effect is visible."),
 }
 
 
@@ -274,67 +196,6 @@ def _gate_pair(attempts_low: list, attempts_high: list):
     saturated = raw_eff > 1.0
     return low, high, round(min(raw_eff, 1.0), 3), round(raw_eff, 3), \
         saturated
-
-
-def _ann_recall_clustered() -> dict:
-    """Trained-quantizer recall probe (round-4 verdict #8): the driver's
-    i.i.d. testdata cannot show ANY quantizer's recall (see protocol
-    notes), so this builds a deterministic synthetic CLUSTERED corpus
-    (10 Gaussian clusters, round-robin vec_ids), trains the real
-    DataFrame-native k-means quantizer on it, and measures recall@3 vs
-    the exact cosine baseline for (a) the trained cells and (b) the
-    data-blind sign quantizer. Expectation: kmeans >> sign."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from trek_spark.spark.ops import (
-        assign_ivf_cells, ivf_topk_from_cells, train_ivf_centroids,
-    )
-    from trek_spark.spark.session import get_spark
-
-    rng = random.Random(20260817)
-    dim, n_clusters, per = 16, 10, 40
-    centers = [[rng.uniform(-1.0, 1.0) for _ in range(dim)]
-               for _ in range(n_clusters)]
-    rows = []
-    for j in range(per):
-        for ci, c in enumerate(centers):
-            rows.append((ci + n_clusters * j,
-                         [c[k] + rng.gauss(0.0, 0.08) for k in range(dim)]))
-
-    spark = get_spark("bench-ann-clustered", master=f"local[{CPUS}]",
-                      shuffle_partitions=16)
-    try:
-        emb = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>")
-        emb = emb.localCheckpoint(eager=True)
-
-        def neighbor_sets(df):
-            out = {}
-            for r in df.collect():
-                out.setdefault(r.query_id, set()).add(r.neighbor_id)
-            return out
-
-        truth = neighbor_sets(ivf_topk_from_cells(
-            emb.withColumn("cell", F.lit(0)), n_queries=20))
-        sign_cell = F.expr(
-            "concat_ws('', transform(slice(embedding, 1, 8),"
-            " x -> IF(x >= 0, '1', '0')))")
-        got_sign = neighbor_sets(ivf_topk_from_cells(
-            emb.withColumn("cell", sign_cell), n_queries=20))
-        cents = train_ivf_centroids(emb, k=n_clusters, iters=5)
-        got_km = neighbor_sets(ivf_topk_from_cells(
-            assign_ivf_cells(emb, cents), n_queries=20))
-
-        def recall(got):
-            hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
-            total = sum(len(t) for t in truth.values())
-            return round(hits / total, 3) if total else None
-
-        return {"sign": recall(got_sign), "kmeans": recall(got_km)}
-    finally:
-        spark.stop()
 
 
 def _span_coverage() -> dict:
@@ -357,9 +218,6 @@ def _span_coverage() -> dict:
 
 
 def main() -> None:
-    queries, ann_recall, cc_audit = _query_timings()
-    ann_clustered = _ann_recall_clustered()
-    ann_note = ann_recall.pop("note", None)
     coverage = _span_coverage()
 
     # Gate pair: FIXED 4 attempts per leg, INTERLEAVED (L,H)×4 — a
@@ -400,16 +258,12 @@ def main() -> None:
 
     full = _extraction_run(CPUS, FULL_TILES)
 
-    queries["extract_low"] = low["wall_sec"]
-    queries["extract_high"] = high["wall_sec"]
-    queries["extract_full_width"] = full["wall_sec"]
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    queries = {"extract_low": low["wall_sec"],
+               "extract_high": high["wall_sec"],
+               "extract_full_width": full["wall_sec"]}
 
     details = {
         "protocol": _PROTOCOL_NOTES,
-        "ann_recall_note": ann_note,
-        "cc_audit": cc_audit,
         "gate": {"attempts_low": attempts_low,
                  "attempts_high": attempts_high,
                  "raw_efficiency": raw_eff, "saturated": saturated},
@@ -435,10 +289,6 @@ def main() -> None:
         "value": full["turns_per_sec"],
         "unit": "sec",
         "queries": queries,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "ann_recall_at_3": ann_recall,
-        "ann_recall_clustered": ann_clustered,
-        "cc_rounds": cc_audit.get("rounds"),
         "span_coverage": coverage.get("coverage"),
         "scaling": {
             "n": SCALE_N,
@@ -468,7 +318,7 @@ def main() -> None:
     # the line must survive it whole (round-4 failure mode). Shed optional
     # detail PROGRESSIVELY (everything shed is already in DETAILS.json) and
     # always print a valid line — a multi-minute run must never die at the
-    # last step because a new query pushed the compact line past the cap.
+    # last step because a new field pushed the compact line past the cap.
     def _dump():
         return json.dumps(result, separators=(",", ":"))
 
@@ -478,15 +328,13 @@ def main() -> None:
             result["scaling"]["pair_8_32"].pop(key, None)
 
     def _shed_extras():
-        for key in ("ann_recall_at_3", "ann_recall_clustered", "cc_rounds",
-                    "span_coverage"):
-            result.pop(key, None)
+        result.pop("span_coverage", None)
         result["scaling"].pop("mp_eff", None)
         result["scaling"].pop("pair_8_32", None)
 
     def _shed_queries():
-        # last resort before the headline-only line: per-query timings
-        # live in DETAILS.json too
+        # last resort before the headline-only line: the extraction
+        # wall times live in DETAILS.json too
         result["queries"] = {"shed": "BENCH/DETAILS.json"}
 
     line = _dump()
@@ -498,7 +346,7 @@ def main() -> None:
     if len(line) >= 1800:  # still too long: emit the headline minimum
         line = json.dumps(
             {"metric": result["metric"], "value": result["value"],
-             "unit": result["unit"], "sf": result["sf"],
+             "unit": result["unit"],
              "details": "BENCH/DETAILS.json"},
             separators=(",", ":"))
     print(line)

@@ -58,7 +58,7 @@ def main() -> None:
                     help="scrub PII from text before packing")
     ap.add_argument("--sft", action="store_true",
                     help="SFT export: pack CONVERSATIONS (conv_id = "
-                         "doc_id %% 50, the render_conversations "
+                         "doc_id %% 50, the shared documents-to-turns "
                          "derivation) whole, with loss-mask SPANS over "
                          "assistant turns — token offsets in the "
                          "per-turn-count convention, relative to each "
@@ -75,8 +75,8 @@ def main() -> None:
 
     capacity = args.capacity or O._PACK_CAPACITY
     # SFT mode defaults to the masked-pack op's shard constant (r8 ADVICE,
-    # medium): the oracle twins q_sft_export_manifest /
-    # q_transcript_pack_masked shard by O._MASK_SHARD — a diverging job
+    # medium): the oracle twin q_sft_export_manifest shards by
+    # O._MASK_SHARD — a diverging job
     # default would silently break the "manifest equals the op by
     # construction" certification the moment conv_id derivation changes.
     # An explicit --shard-size in SFT mode must match the op's constant.

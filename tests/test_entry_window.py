@@ -1,19 +1,25 @@
-"""Driver record-window contract for __spark_entry__ (SURVEY §11/§12).
+"""Record-window contract for __spark_entry__.
 
-The driver records AT MOST 50 queries() entries per round (empirical:
-r5 recorded 50 of 54, r6 recorded 50 of 63 — a count cap, not a time
-budget). Round-8 policy (r7 verdict #1): the window is EXACTLY the 50
-oldest never-recorded parked ops, in _PARKED_FOR_R8 order, job-wired
-gates first. Everything else (overflow, rows-only candidates,
-previously-recorded staples) stays in OPS for bench/pytest/oracle
-coverage and waits for the r9/r10 windows.
+queries() exposes AT MOST 50 entries, the number recorded per run. The
+window is the fixed list ``_WINDOW`` of oracle-checked ops, in record
+order.
+Every other ``OPS`` entry must be reached by a job or serve as a job
+test's reference implementation; nothing else belongs in ``OPS``.
 """
-import sys
-
-sys.path.insert(0, "/root/repo")
+import glob
+import os
+import re
+import types
 
 import __spark_entry__ as E
+from trek_spark.spark import ops as O
 from trek_spark.spark.ops import OPS
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# ops the job tests use as reference implementations (not named by a job)
+_JOB_REFERENCE_OPS = {"dedup_keep_best_quality", "dedup_clusters",
+                      "train_export_manifest", "sft_export_manifest"}
 
 
 def test_queries_fit_driver_record_cap():
@@ -23,8 +29,9 @@ def test_queries_fit_driver_record_cap():
 
 def test_window_is_the_50_oldest_parked_ops_in_order():
     names = list(E.queries())
-    assert names == E._PARKED_FOR_R8[:E._DRIVER_RECORD_CAP]
-    assert names[0] == "pii_redact"  # job-wired gates lead (verdict #1)
+    assert names == E._WINDOW
+    assert len(names) == E._DRIVER_RECORD_CAP
+    assert names[0] == "pii_redact"  # job-wired gates lead
 
 
 def test_window_ops_all_registered_with_oracles():
@@ -32,18 +39,6 @@ def test_window_ops_all_registered_with_oracles():
     for name in E.queries():
         assert name in OPS and OPS[name][1] is not None
         assert name in o
-
-
-def test_out_of_window_ops_still_registered_and_oracled():
-    """Rotation removes ops from the DRIVER window only — r7-recorded
-    ops, staples and the r9 overflow must stay in OPS with oracles."""
-    q = E.queries()
-    for name in E._ROTATED_OUT_R7 + E._NEVER_RECORDED_R7 + E._NEW_R7:
-        assert name in OPS and OPS[name][1] is not None
-        assert name not in q
-    for name in E._PARKED_FOR_R9:
-        assert name in OPS and OPS[name][1] is not None
-        assert name not in q
 
 
 def test_oracle_keys_subset_of_queries():
@@ -62,3 +57,37 @@ def test_rows_only_entries_kept_importable_for_r10():
         assert callable(fn), name
     for name, fn in E._R8_ROWS_ONLY.items():
         assert callable(fn), name
+
+
+def _global_names(code):
+    """Global names a function's code object (and its nested code) loads."""
+    out = set(code.co_names)
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            out |= _global_names(c)
+    return out
+
+
+def test_every_op_is_reached():
+    """Each OPS entry is in the queries() window, is a job test's
+    reference implementation, or has its function reached from a name
+    jobs/*.py uses (``O.<name>``) — following the ops.py functions
+    that jobs, window ops and reference ops call."""
+    jobs_src = "".join(open(p).read()
+                       for p in glob.glob(f"{_REPO}/jobs/*.py"))
+    window = set(E.queries())
+    todo = set(re.findall(r"\bO\.([A-Za-z_]\w*)", jobs_src))
+    todo |= {OPS[name][0].__name__ for name in window | _JOB_REFERENCE_OPS}
+    reached = set()
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        code = getattr(getattr(O, name, None), "__code__", None)
+        if code is not None:
+            todo |= _global_names(code) - reached
+    unreached = [name for name, (fn, _sql) in OPS.items()
+                 if name not in window and fn.__name__ not in reached
+                 and name not in _JOB_REFERENCE_OPS]
+    assert unreached == []

@@ -1,8 +1,8 @@
-"""Partitioning-invariance checks for this session's order-sensitive
-op batches (the test_closing_ops pattern, extended): statistical tests
-built on ordered-cumsum windows, the KN/Zipf term pipelines, native
-session windows, and the embedding-curation argmins must not shift
-when the shuffle width changes arrival order.
+"""Partitioning-invariance checks for the order-sensitive ops the
+curate, embed-curate and train-export jobs use (the test_closing_ops
+pattern, extended): the embedding-curation argmins, hashed-gram df
+joins, tercile cuts, cluster winner windows and the export manifests
+must not shift when the shuffle width changes arrival order.
 """
 
 import pytest
@@ -25,16 +25,8 @@ def _canon(df):
 
 
 @pytest.mark.parametrize("name", [
-    "events_ks_drift",
-    "events_rank_sum",
-    "events_chi2_independence",
-    "events_session_window_native",
-    "terms_kn_bigram_probs",
-    "terms_zipf_slope",
-    "events_linreg_exact",
     "semantic_dedup_medoid",
     "embedding_label_noise",
-    "tpch_sole_failure_suppliers",
 ])
 def test_partitioning_invariance_r7b(spark, name):
     """Shuffle width 1 vs 7: grouping and arrival order change, the
@@ -56,19 +48,16 @@ def test_partitioning_invariance_r7b(spark, name):
 @pytest.mark.parametrize("name", [
     "docs_duplicate_ngram_fraction",
     "ccnet_perplexity_buckets",
-    "transcript_pack_masked",
     "dedup_keep_best_quality",
     "quality_classifier",
     "train_export_manifest",
-    "transcript_cross_conv_echo",
-    "quality_classifier_eval",
     "sft_export_manifest",
 ])
 def test_partitioning_invariance_r8_late(spark, name):
     """The r8 late-wave ops under shuffle width 1 vs 7: hashed-gram df
-    joins, tercile cuts, shard-local packing windows, cluster winner
-    windows and the frozen-threshold classifier must all be pure
-    functions of the data, not of arrival order."""
+    joins, tercile cuts, cluster winner windows and the
+    frozen-threshold classifier must all be pure functions of the data,
+    not of arrival order."""
     fn = O.OPS[name][0]
     sf = "/root/testdata/sf0.001"
     old = spark.conf.get("spark.sql.shuffle.partitions")

@@ -1,19 +1,10 @@
-"""Known-answer + cross-engine tests for the round-7 data-quality /
-skew-pattern op batch (parked for the r8 record window): salted
-two-phase top-k, referential-integrity audit, exact rolling median,
-and the per-column profile.
-"""
-
-import datetime as dt
+"""Known-answer + cross-engine tests for the learned quality classifier."""
 
 import duckdb
 import pytest
 
 from trek_spark.spark import ops as O
 from trek_spark.spark.session import get_spark
-
-_T0 = dt.datetime(2024, 1, 1)
-
 
 @pytest.fixture(scope="module")
 def spark():
@@ -41,113 +32,6 @@ def _cross_check(spark, path, name, tables):
     b = b.sort_values(by=list(b.columns)).reset_index(drop=True)
     assert a.equals(b), f"{name}: Spark vs DuckDB mismatch\n{a}\n{b}"
     return a
-
-
-# ------------------------------------------------------ events_salted_topk
-
-def test_salted_topk_survives_hot_key(spark, tmp_path):
-    """One event_type owns 200 rows spread over every salt slice; the
-    global top 5 must surface the 5 largest regardless of which slice
-    they landed in. Values descend with event_id so top-5 = ids 0-4,
-    which land in DIFFERENT salt slices (0..4 mod 16) — the union
-    re-rank is what stitches them, and a tie pair (ids 200, 201 with
-    equal value) pins the event_id tiebreak."""
-    rows = [(i, _T0, 1, "hot", float(1000 - i), None) for i in range(200)]
-    rows += [(200, _T0, 1, "cold", 5.0, None),
-             (201, _T0, 1, "cold", 5.0, None)]
-    _write(spark, tmp_path, "events",
-           "event_id long, ts timestamp, user_id long, "
-           "event_type string, value double, props string", rows)
-    out = _cross_check(spark, tmp_path, "events_salted_topk", ["events"])
-    hot = {r["rank"]: r["event_id"] for _, r in out.iterrows()
-           if r["event_type"] == "hot"}
-    assert hot == {"1": "0", "2": "1", "3": "2", "4": "3", "5": "4"}
-    cold = {r["rank"]: r["event_id"] for _, r in out.iterrows()
-            if r["event_type"] == "cold"}
-    assert cold == {"1": "200", "2": "201"}
-
-
-# --------------------------------------------- referential_integrity_audit
-
-def test_referential_audit_counts_planted_orphans(spark, tmp_path):
-    """Two orders point at a missing customer, one lineitem at a
-    missing order, one supplier at a missing nation; customers all
-    conform. The audit must count exactly those."""
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long", [(1, 10), (2, 10)])
-    _write(spark, tmp_path, "nation",
-           "n_nationkey long", [(10,)])
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long",
-           [(100, 1), (101, 2), (102, 99), (103, 99)])
-    _write(spark, tmp_path, "lineitem",
-           "l_orderkey long", [(100,), (101,), (999,)])
-    _write(spark, tmp_path, "supplier",
-           "s_suppkey long, s_nationkey long", [(7, 10), (8, 55)])
-    out = _cross_check(
-        spark, tmp_path, "referential_integrity_audit",
-        ["customer", "nation", "orders", "lineitem", "supplier"])
-    got = dict(zip(out["fk_edge"], out["n_orphans"]))
-    assert got == {"orders.o_custkey->customer": "2",
-                   "lineitem.l_orderkey->orders": "1",
-                   "customer.c_nationkey->nation": "0",
-                   "supplier.s_nationkey->nation": "1"}
-
-
-# --------------------------------------------------- events_rolling_median
-
-def test_rolling_median_exact_frames(spark, tmp_path):
-    """User 5 (passes %5), values 1,9,3,7,5 in time order with
-    event_ids 0,3,6,9,12 (all pass %3): trailing-11 frames are the
-    prefixes, so medians are the lower-middles of sorted prefixes:
-    [1]->1, [1,9]->1, [1,3,9]->3, [1,3,7,9]->3, [1,3,5,7,9]->5."""
-    vals = [1.0, 9.0, 3.0, 7.0, 5.0]
-    rows = [(i * 3, _T0 + dt.timedelta(seconds=i), 5, "click",
-             vals[i], None) for i in range(5)]
-    _write(spark, tmp_path, "events",
-           "event_id long, ts timestamp, user_id long, "
-           "event_type string, value double, props string", rows)
-    out = _cross_check(spark, tmp_path, "events_rolling_median",
-                       ["events"])
-    got = {r["event_id"]: r["roll_median"] for _, r in out.iterrows()}
-    assert got == {"0": "100", "3": "100", "6": "300",
-                   "9": "300", "12": "500"}
-
-
-def test_rolling_median_frame_truncates_at_11(spark, tmp_path):
-    """15 rows of ascending values: the last row's frame holds only
-    the trailing 11 (values 5..15 in cents), median = 1000 — a frame
-    that grew without bound would give 800."""
-    rows = [(i * 3, _T0 + dt.timedelta(seconds=i), 10, "click",
-             float(i + 1), None) for i in range(15)]
-    _write(spark, tmp_path, "events",
-           "event_id long, ts timestamp, user_id long, "
-           "event_type string, value double, props string", rows)
-    out = _cross_check(spark, tmp_path, "events_rolling_median",
-                       ["events"])
-    got = {r["event_id"]: r["roll_median"] for _, r in out.iterrows()}
-    assert got["42"] == "1000"
-
-
-# ----------------------------------------------------- docs_column_profile
-
-def test_column_profile_nulls_and_distincts(spark, tmp_path):
-    """4 docs: text has 1 null + 2 duplicates (2 distinct non-null),
-    lang has 2 nulls / 2 distinct, source constant, n_chars all
-    distinct. count(DISTINCT) ignores nulls in both engines."""
-    rows = [(0, "same", "en", "web", 10),
-            (1, "same", None, "web", 11),
-            (2, None, "fr", "web", 12),
-            (3, "other", None, "web", 13)]
-    _write(spark, tmp_path, "documents",
-           "doc_id long, text string, lang string, source string, "
-           "n_chars long", rows)
-    out = _cross_check(spark, tmp_path, "docs_column_profile",
-                       ["documents"])
-    got = {r["column_name"]: (r["n_null"], r["n_distinct"])
-           for _, r in out.iterrows()}
-    assert got == {"text": ("1", "2"), "lang": ("2", "2"),
-                   "source": ("0", "1"), "n_chars": ("0", "4")}
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,6 @@ cannot silently void them.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from trek_spark.spark import ops as O
 from trek_spark.spark.session import get_spark
@@ -55,32 +54,6 @@ def test_t_wide_noop_when_scan_already_wide(monkeypatch, spark, tmp_path):
     monkeypatch.setattr(O, "_t", lambda *_a, **_k: pre_split)
     wide = O._t_wide(spark, sf, "documents")
     assert wide is pre_split  # identity: no extra shuffle inserted
-
-
-def test_simhash_agg_form_matches_reference_bit_math(spark, tmp_path):
-    """The r9 exploded+SUM simhash must equal the definitional per-token
-    vote computed independently in Python (per-token md5 32-bit halves,
-    +-1 votes per bit, majority bit set)."""
-    import hashlib
-
-    texts = ["alpha beta gamma", "alpha beta beta", "single",
-             "a b c d e f g h i j"]
-    sf = _write_documents(spark, str(tmp_path), texts)
-    got = {r.doc_id: (r.n_tokens, r.simhash_hi, r.simhash_lo)
-           for r in O.q_dedup_simhash(spark, sf).collect()}
-
-    for i, text in enumerate(texts):
-        toks = text.lower().strip().split()
-        votes_hi, votes_lo = [0] * 32, [0] * 32
-        for t in toks:
-            d = hashlib.md5(t.encode()).hexdigest()
-            h_hi, h_lo = int(d[0:8], 16), int(d[8:16], 16)
-            for b in range(32):
-                votes_hi[b] += 1 if (h_hi >> b) & 1 else -1
-                votes_lo[b] += 1 if (h_lo >> b) & 1 else -1
-        exp_hi = sum(1 << b for b in range(32) if votes_hi[b] > 0)
-        exp_lo = sum(1 << b for b in range(32) if votes_lo[b] > 0)
-        assert got[f"d{i:05d}"] == (len(toks), exp_hi, exp_lo), text
 
 
 def test_minhash_agg_form_matches_reference_min(spark, tmp_path):
@@ -135,21 +108,6 @@ def test_cc_observation_fixpoint_counts_rounds_and_labels(spark):
     assert converged and rounds == 2
     assert {(r.doc_id, r.cluster_id) for r in labels.collect()} == \
         {("a", "a"), ("b", "a")}
-
-
-def test_prefix_filter_df_is_window_not_join(spark, tmp_path):
-    """The r9 follow-up computes each shingle's document frequency as a
-    window count over the one tok shuffle instead of a groupBy(tok) +
-    join-back of the exploded stream onto itself. Pin the shape: the
-    plan carries a Window node and at most 4 parquet scans (prefix a/b
-    + verify a/b legs of the shared subtree — the old join form doubled
-    that to 8 before runtime exchange reuse)."""
-    texts = [f"alpha beta gamma delta {i}" for i in range(6)]
-    sf = _write_documents(spark, str(tmp_path), texts)
-    out = O.q_dedup_prefix_filter(spark, sf)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan
-    assert plan.count("Scan parquet") <= 4
 
 
 def test_quality_classifier_output_is_materialized(spark, tmp_path):

@@ -483,44 +483,6 @@ def test_iceberg_writeto_call_chain_without_runtime(spark, monkeypatch):
     assert calls == [("overwritePartitions",)]
 
 
-def test_bucketed_join_is_exchange_free(spark):
-    """Co-location at 100 TB: two tables bucketed on the join key with
-    the same bucket count must join with ZERO Exchange on either side
-    (the bucketed scans report hash-partitioning), and the sorted
-    buckets also kill the join-side Sorts. Contrast pinned: the same
-    join over plain parquet shuffles both sides."""
-    from trek_spark.spark.job import scoped_conf, write_bucketed
-
-    orders = spark.range(0, 2000).selectExpr(
-        "id AS o_orderkey", "id % 97 AS o_custkey",
-        "CAST(id * 7 % 1000 AS BIGINT) AS price_c")
-    lines = spark.range(0, 6000).selectExpr(
-        "id % 2000 AS l_orderkey", "id AS l_lineno",
-        "CAST(id % 50 AS BIGINT) AS qty")
-    write_bucketed(orders, "t_orders_b", 8, "o_orderkey")
-    write_bucketed(lines.withColumnRenamed("l_orderkey", "o_orderkey"),
-                   "t_lines_b", 8, "o_orderkey")
-    try:
-        with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold",
-                         "-1"):
-            j = (spark.table("t_orders_b")
-                 .join(spark.table("t_lines_b"), "o_orderkey"))
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            assert j.count() == 6000
-
-            # contrast: identical join over non-bucketed inputs shuffles
-            p = (orders.join(
-                    lines.withColumnRenamed("l_orderkey", "o_orderkey"),
-                    "o_orderkey")
-                 ._jdf.queryExecution().executedPlan().toString())
-            assert "Exchange" in p
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lines_b")
-
-
 def test_aqe_skew_join_splits_hot_partition(spark):
     """Skew handling at 100 TB: one hot key holding most of the fact
     rows must not pin a whole join to one straggler task — AQE's skew

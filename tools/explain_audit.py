@@ -16,42 +16,6 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 AUDITS = {
     # op -> list of (required substring, why)
-    "scan_filter_project": [
-        ("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity",
-         "predicate reaches the parquet scan"),
-        ("ReadSchema: struct<l_orderkey:bigint,l_linenumber",
-         "column pruning: only the 4 projected columns are read"),
-    ],
-    "pricing_summary": [
-        ("HashAggregate", "partial (map-side) aggregation before the shuffle"),
-        ("PushedFilters: [IsNotNull(l_shipdate)",
-         "date predicate pushed to the scan"),
-    ],
-    "segment_revenue": [
-        ("BroadcastHashJoin", "small dim (customer) broadcast, no shuffle join"),
-    ],
-    "region_revenue": [
-        ("BroadcastHashJoin", "dims broadcast"),
-    ],
-    "latest_order_per_customer": [
-        ("Window", "single window over one shuffle on the partition key"),
-    ],
-    "orders_rollup": [
-        ("Expand", "grouping-set expansion inside ONE aggregation — no "
-                   "per-subtotal extra pass"),
-        ("Exchange", "single shuffle for all rollup levels"),
-    ],
-    "customers_with_orders": [
-        ("LeftSemi", "EXISTS planned as a semi-join: short-circuits on "
-                     "first match, never duplicates left rows"),
-        ("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice",
-         "the order-value predicate reaches the orders scan"),
-    ],
-    "orders_above_avg": [
-        ("BroadcastNestedLoopJoin",
-         "single-row scalar aggregate broadcast to the filter — computed "
-         "once, not per row"),
-    ],
     "dedup_ngram_jaccard": [
         ("HashAggregate", "bucket-local pair generation (no self-join)"),
         ("Window", "hot-key cap is a window count (spill-safe) before "
@@ -62,99 +26,9 @@ AUDITS = {
                      "(the extra scans are the tiny column-pruned sizes "
                      "branches for the id_a/id_b joins)", 3),
     ],
-    "dedup_prefix_filter": [
-        ("CartesianProduct", "candidate generation is an EQUI-join on "
-                             "the prefix (df, shingle) struct (BHJ at "
-                             "test SF, SMJ at scale) — never a "
-                             "cartesian", 0),
-        ("BroadcastNestedLoopJoin", "the p=p key is a join KEY, not a "
-                                    "post-cross filter", 0),
-        ("greatest(n", "length filter (5*min >= 4*max) inside the join "
-                       "condition, pruning before the distinct shuffle"),
-        ("ObjectHashAggregate", "one collect_list aggregate feeds "
-                                "prefix AND verify sides (exchange "
-                                "reuse dedupes it at runtime)"),
-    ],
     "dedup_minhash_lsh": [
         ("Window", "hot-bucket cap before collect_list"),
         ("Scan parquet", "md5 signatures evaluated once", 1),
-    ],
-    "dedup_simhash_pairs": [
-        ("Window", "hot-bucket cap before collect_list"),
-        ("BroadcastHashJoin", "candidate pairs join signatures; "
-                              "bands are equi-join buckets"),
-    ],
-    "ann_topk_ivf": [
-        ("BroadcastHashJoin", "query set broadcast; probe is an equi-join"),
-    ],
-    "ann_topk_ivf_mp": [
-        ("BroadcastHashJoin",
-         "multi-probe cells broadcast; probe stays an equi-join"),
-    ],
-    "token_counts": [
-        ("* Project", "codegen'd projection (the * prefix marks "
-                      "whole-stage codegen) — JVM-side, no Python UDF"),
-    ],
-    "customers_without_orders": [
-        ("LeftAnti", "NOT EXISTS planned as an anti-join — no null-trap, "
-                     "no fan-out"),
-        ("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice",
-         "the order-value predicate reaches the orders scan"),
-    ],
-    "orders_pivot": [
-        ("Scan parquet", "explicit pivot values ⇒ ONE scan (no "
-                         "key-discovery pre-pass over the data)", 1),
-        ("HashAggregate", "two-phase pivot aggregation: per-(status,"
-                          "priority) counts first, then the pivot agg — "
-                          "the second exchange carries only the grouped "
-                          "cells (|status|×|priority| rows), not data"),
-    ],
-    "lineitem_quantiles": [
-        ("Window", "integer-interpolated percentiles rank per group in "
-                   "one window (r6: replaced the double-interpolating "
-                   "percentile ObjectHashAggregate for cross-engine "
-                   "bit-stability)"),
-        ("HashAggregate", "the conditional pick-at-rank max aggregates "
-                          "map-side after the window"),
-    ],
-    "revenue_moving_avg": [
-        ("Window", "frame-bounded window over the tiny month series"),
-        ("HashAggregate", "monthly rollup aggregates map-side first"),
-    ],
-    "events_asof_join": [
-        ("Window", "union-tag + running last(non-null) — the scalable "
-                   "as-of: ONE shuffle on the key, no per-row subquery, "
-                   "no range explosion"),
-        ("Union", "both fact streams union before the single keyed "
-                  "window (neither side broadcasts or re-shuffles)"),
-    ],
-    "events_sessionize": [
-        ("Window", "lag + running sum number sessions in one keyed "
-                   "window; the session rollup reuses the partitioning"),
-        ("HashAggregate", "per-session aggregate is map-side partial "
-                          "after the window"),
-    ],
-    "orders_above_customer_avg": [
-        ("Scan parquet", "decorrelated onto ONE orders scan (r9: the "
-                         "per-customer totals are window aggregates, "
-                         "not a groupBy joined back onto a second "
-                         "scan)", 1),
-        ("Window", "both per-customer totals ride one window over the "
-                   "custkey shuffle", 1),
-        ("Exchange", "a single keyed shuffle total", 1),
-        ("BroadcastHashJoin", "no join anywhere", 0),
-    ],
-    "orders_cube": [
-        ("Expand", "all four grouping sets expand inside ONE "
-                   "aggregation pass, not a pass per set"),
-        ("HashAggregate", "cube cells aggregate map-side first"),
-    ],
-    "customer_value_deciles": [
-        ("Window", "global ntile runs over the PRE-AGGREGATED "
-                   "|customers| rows (revenue cents grouped first), "
-                   "never raw orders"),
-        ("HashAggregate", "per-customer cents aggregate before the "
-                          "window; decile rollup after"),
     ],
     "docs_repetition_ratio": [
         ("Scan parquet", "pure per-row column expressions over one "
@@ -162,62 +36,14 @@ AUDITS = {
                          "scale-adaptive map widening (no-op on a "
                          "properly split input)"),
     ],
-    "ann_topk_ivf_kmeans": [
-        ("BroadcastHashJoin", "trained-cell probe stays an equi-join with "
-                              "broadcast queries"),
-        ("Scan parquet", "two scans total — corpus + the pruned/pushed "
-                         "query side (same shape as the other IVF ops); "
-                         "literal-centroid assignment adds NO extra scan "
-                         "and no shuffle", 2),
-    ],
-    "render_conversations": [
-        ("FlatMapGroupsInPandas", "conversation assembly renders in one "
-                                  "Arrow batch per group"),
-        ("Exchange", "EXACTLY one shuffle (conv_id) — turn ordering is an "
-                     "in-batch sort, not a second window exchange", 1),
-    ],
-    "dedup_clusters_audit": [
-        ("HashAggregate", "audit is one tiny aggregate over the labels"),
-    ],
-    "stratified_sample": [
-        ("Scan parquet", "pure-function sample = ONE codegen'd filter "
-                         "over one scan — no sampling pass, no shuffle",
-         1),
-        ("* Filter", "the md5-tick keep decision runs inside whole-stage "
-                     "codegen (JVM, no Python)"),
-    ],
     "benchmark_contamination": [
         ("BroadcastHashJoin", "benchmark shingles broadcast (eval sets "
                               "are small); corpus shingles never shuffle "
                               "against each other"),
         ("Window", "hot-shingle cap before the join"),
     ],
-    "tfidf_top_terms": [
-        ("BroadcastNestedLoopJoin", "the 1-row doc-count scalar is "
-                                    "broadcast — computed once, not per "
-                                    "row"),
-        ("Window", "df via a window count on the term shuffle plus the "
-                   "per-doc top-k rank (2 Window + 2 WindowGroupLimit: "
-                   "the rank<=3 filter is pushed into the sort as a "
-                   "group-limit) — no df join-back", 4),
-        ("SortMergeJoin", "the former df-table join-back is gone", 0),
-    ],
-    "source_mix_weights": [
-        ("BroadcastNestedLoopJoin", "corpus totals broadcast as one row — "
-                                    "computed once, not per group"),
-    ],
-    "customer_value_deciles_approx": [
-        ("ObjectHashAggregate", "approx_percentile cutoffs via a "
-                                "partial-aggregable sketch, not a sort"),
-        ("BroadcastNestedLoopJoin", "1-row cutoff array broadcast back to "
-                                    "the banding scan"),
-        ("Sort", "the whole point of the approx twin: NO sort anywhere — "
-                 "the exact op's global-window sort is the 10⁹-customer "
-                 "scale-killer", 0),
-    ],
     "pii_redact": [
-        ("Exchange", "pure per-row regexp scrub: ZERO shuffle — the "
-                     "token_counts shape", 0),
+        ("Exchange", "pure per-row regexp scrub: ZERO shuffle", 0),
         ("Scan parquet", "one scan; counts and redaction share it", 1),
     ],
     "dedup_boilerplate_lines": [
@@ -231,12 +57,6 @@ AUDITS = {
         ("rangepartitioning", "no GLOBAL sort: the window partitions on "
                               "(lang, shard), so ordering is local to "
                               "each shard", 0),
-    ],
-    "transcript_pack_masked": [
-        ("Window", "running conv-token sum per shard partition"),
-        ("rangepartitioning", "no GLOBAL sort: the packing window "
-                              "partitions on shard, ordering is local",
-         0),
     ],
     "docs_duplicate_ngram_fraction": [
         ("CartesianProduct", "gram df join is a hash equi-join on the "
@@ -458,8 +278,7 @@ AUDITS = {
                      "(map-side partials)", 2),
     ],
     "docs_readability": [
-        ("Exchange", "per-row integer scoring — Exchange-FREE like "
-                     "text_quality", 0),
+        ("Exchange", "per-row integer scoring — Exchange-FREE", 0),
         ("Scan parquet", "one scan", 1),
     ],
     "events_value_zscores": [
@@ -570,116 +389,6 @@ AUDITS = {
                             "aggregate — never the corpus"),
         ("BroadcastHashJoin", "band offsets broadcast back"),
     ],
-    "events_salted_topk": [
-        ("hashpartitioning(event_type", "phase-2 re-rank shuffles "
-                                        "only the pruned survivors "
-                                        "on the bare key"),
-        ("hashpartitioning(event_type", "phase-1 local rank runs on "
-                                        "(event_type, salt) — the "
-                                        "hot key fans over 16 "
-                                        "slices"),
-        ("WindowGroupLimit", "both rank<=5 filters push down as "
-                             "group-limits"),
-    ],
-    "referential_integrity_audit": [
-        ("LeftAnti", "every FK edge is an anti-join, never a "
-                     "row-multiplying outer join"),
-        ("Union", "one action validates all four edges"),
-        ("CartesianProduct", "never a cartesian", 0),
-    ],
-    "events_rolling_median": [
-        ("Window", "one frame-bounded collect per row — the array is "
-                   "capped at 11 elements BY THE FRAME", 1),
-        ("Exchange", "one user_id shuffle", 1),
-        ("PushedFilters: [IsNotNull(user_id)",
-         "the %5 user decimation reaches the scan"),
-    ],
-    "docs_column_profile": [
-        ("Scan parquet", "all eight statistics come from ONE scan", 1),
-        ("Expand", "count_distinct over multiple columns plans as a "
-                   "single Expand pass, not per-column rescans"),
-    ],
-    "lineitem_median_histogram": [
-        ("BroadcastHashJoin", "the 6-row bucket directory broadcasts "
-                              "back; pass 2 touches only target-"
-                              "bucket rows"),
-        ("Scan parquet", "two passes = two scans (histogram, then "
-                         "bucket rescan) — never a full-group sort",
-         2),
-    ],
-    "split_leakage_audit": [
-        # r9: the near-dup op carries each doc's set size through the
-        # exploded shingle stream, so the pair stage has NO join at all
-        # (the former sizes equi-join legs are gone); the audit inherits
-        # that join-free bucket-by-content shape
-        ("Window", "inherits the near-dup op's spill-safe hot-shingle "
-                   "document-frequency cap"),
-        ("Join", "join-free: sizes ride the shingle stream, pairs come "
-                 "from the grouped explode", 0),
-        ("CartesianProduct", "never a cartesian", 0),
-        ("HashAggregate", "the split tag is a per-row expression — "
-                          "the audit adds one bounded aggregate, no "
-                          "membership join"),
-    ],
-    "events_anomaly_mad": [
-        ("Scan parquet", "ONE events scan (r9: both medians attach as "
-                         "conditional window-maxes — no rn-selection "
-                         "tables joined back)", 1),
-        ("Exchange", "one event_type shuffle carries both median "
-                     "phases", 1),
-        ("BroadcastHashJoin", "no joins left", 0),
-        ("CartesianProduct", "never a cartesian", 0),
-    ],
-    "events_changepoint_cusum": [
-        ("Exchange", "prefix/total/argmax windows all share ONE "
-                     "user_id shuffle", 1),
-        ("Window", "running sums, whole-partition totals, and the "
-                   "argmax pick are separate passes (plus a "
-                   "WindowGroupLimit prune) — all inside the one "
-                   "shuffle", 4),
-        ("PushedFilters: [IsNotNull(user_id)",
-         "the %7 decimation reaches the scan"),
-    ],
-    "customer_rfm_segments": [
-        ("SinglePartition", "the ntile sort runs over the CUSTOMER "
-                            "AGGREGATE, not the orders (the "
-                            "documented deciles caveat; swap for "
-                            "percentile_approx cutoffs at 10^9 "
-                            "customers)"),
-        ("BroadcastNestedLoopJoin", "the scalar max-day rides as a "
-                                    "broadcast 1-row join"),
-        ("HashAggregate", "per-customer triple partial-aggregates "
-                          "map-side"),
-    ],
-    "basket_part_pairs": [
-        ("HashAggregate", "basket collect + pair counts + part "
-                          "counts all partial-aggregate"),
-        ("CartesianProduct", "pairs explode WITHIN baskets (capped "
-                             "at 200 parts), never across the "
-                             "catalog", 0),
-        ("BroadcastNestedLoopJoin", "the scalar N rides as a "
-                                    "broadcast 1-row join"),
-    ],
-    "orders_mom_yoy": [
-        ("HashAggregate", "monthly totals partial-aggregate before "
-                          "the shuffle"),
-        ("Window", "MoM lag over the month series + YoY lag "
-                   "partitioned by month-of-year — both over the "
-                   "bounded month DIRECTORY", 2),
-    ],
-    "orders_pareto_cume": [
-        ("SinglePartition", "the global rank sorts the CUSTOMER "
-                            "AGGREGATE, not the orders (documented "
-                            "approx swap at 10^9 customers)"),
-        ("BroadcastNestedLoopJoin", "the corpus total rides as a "
-                                    "broadcast 1-row join"),
-    ],
-    "terms_continuation_counts": [
-        ("HashAggregate", "distinct bigrams, continuation counts, "
-                          "and raw counts all partial-aggregate"),
-        ("CartesianProduct", "bigrams come from a per-doc array "
-                             "transform, never a self-join", 0),
-    ],
     "customer_lateral_top2": [
         ("WindowGroupLimit", "the per-customer ORDER BY/LIMIT lateral "
                              "decorrelates into a group-limit pushed "
@@ -688,71 +397,6 @@ AUDITS = {
         ("BroadcastNestedLoopJoin", "the correlation is an equi-join "
                                     "key", 0),
         ("CartesianProduct", "never a cartesian", 0),
-    ],
-    "tpch_volume_shipping": [
-        ("BroadcastHashJoin", "all four dims broadcast; only the "
-                              "lineitem-orders edge can shuffle"),
-        ("PushedFilters: [IsNotNull(l_shipdate)",
-         "the two-year ship window reaches the lineitem scan"),
-        ("CartesianProduct", "the nation-pair disjunction stays a "
-                             "residual, never degrades the join", 0),
-    ],
-    "tpch_disjunctive_join": [
-        ("BroadcastHashJoin", "Q19's OR-of-ANDs still plans as a hash "
-                              "join on l_partkey = p_partkey with the "
-                              "disjunction as residual"),
-        ("BroadcastNestedLoopJoin", "not a nested-loop", 0),
-        ("CartesianProduct", "not a cartesian", 0),
-    ],
-    "tpch_top_supplier": [
-        ("BroadcastHashJoin", "the one-row max joins back by broadcast "
-                              "— no driver collect for the scalar"),
-        ("PushedFilters: [IsNotNull(l_shipdate)",
-         "quarter window pushed to the scan"),
-    ],
-    "tpch_sole_failure_suppliers": [
-        ("LeftSemi", "EXISTS(other supplier) is a semi-join"),
-        ("LeftAnti", "NOT EXISTS(other returner) is an anti-join"),
-        ("CartesianProduct", "the suppkey inequality rides the "
-                             "orderkey equi-join as residual", 0),
-    ],
-    "tpch_small_qty_revenue": [
-        ("PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand",
-         "brand filter reaches the part scan"),
-        ("BroadcastHashJoin", "filtered part dim broadcasts"),
-    ],
-    "tpch_inactive_premium_customers": [
-        ("LeftAnti", "no-recent-orders is an anti-join, not a "
-                     "correlated re-scan"),
-        ("PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate",
-         "the recency cutoff reaches the orders scan"),
-    ],
-    "orders_pipe_syntax": [
-        ("PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate",
-         "pipe-syntax |> WHERE lowers to the same pushed predicate "
-         "as the classic form — the |> stages don't fence pushdown"),
-        ("HashAggregate", "|> AGGREGATE partial-aggregates map-side"),
-    ],
-    "events_ks_drift": [
-        ("Window", "one ordered cumsum over DISTINCT values only"),
-        ("In(event_type, [click,view])",
-         "the two-slice IN filter reaches the events scan"),
-        ("CartesianProduct", "the totals/max joins are one-row "
-                             "broadcasts, never a real cartesian", 0),
-    ],
-    "lineitem_benford": [
-        ("HashAggregate", "9-key aggregate collapses map-side"),
-        ("Exchange", "exactly one tiny shuffle", 1),
-    ],
-    "events_rank_sum": [
-        ("Window", "ordered cumsum over DISTINCT values only"),
-        ("In(event_type, [click,view])",
-         "slice filter reaches the events scan"),
-    ],
-    "orders_percent_of_total": [
-        ("BroadcastHashJoin", "customer dim broadcast"),
-        ("Window", "nation total via window, not a second "
-                   "aggregate+join"),
     ],
     "semantic_dedup_medoid": [
         ("BroadcastHashJoin", "k medoid rows broadcast back to "
@@ -765,40 +409,6 @@ AUDITS = {
         ("Window", "top-3 neighbors via window rank"),
         ("CartesianProduct", "in-cell self-join is an equi-join on "
                              "cell", 0),
-    ],
-    "orders_shuffle_hash_join": [
-        ("ShuffledHashJoin", "the shuffle_hash hint actually plans a "
-                             "hash join (a silently-degraded hint is "
-                             "worse than none)"),
-        ("SortMergeJoin", "no SMJ double-sort", 0),
-    ],
-    "orders_xyz_classes": [
-        ("HashAggregate", "two bounded aggregates, map-side partials"),
-        ("CartesianProduct", "no join at all", 0),
-    ],
-    "part_skyline": [
-        ("Window", "the frontier is two window maxima after ONE sort "
-                   "— no inequality self-join"),
-        ("CartesianProduct", "never the O(n²) anti-join shape", 0),
-        ("BroadcastNestedLoopJoin", "no join at all", 0),
-    ],
-    "tpch_shipping_priority": [
-        ("TakeOrderedAndProject", "global top-10 is per-partition "
-                                  "heads merged, never a full sort"),
-        ("BroadcastHashJoin", "filtered customer dim broadcast"),
-        ("PushedFilters: [IsNotNull(l_shipdate), GreaterThan(l_shipdate",
-         "the ship-date cut reaches the lineitem scan"),
-    ],
-    "tpch_customer_distribution": [
-        ("LeftOuter", "the k=0 bucket needs the LEFT join — an inner "
-                      "join silently drops orderless customers"),
-    ],
-    "events_autocorrelation": [
-        ("BroadcastHashJoin", "the lag equi-join broadcasts the "
-                              "7-row lag directory side or the tiny "
-                              "day directory"),
-        ("CartesianProduct", "lags attach via broadcast, not a "
-                             "cartesian", 0),
     ],
 }
 

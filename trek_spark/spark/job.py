@@ -215,24 +215,6 @@ def _trusted_completed_buckets(spark: SparkSession, committed_dir: str,
     return done
 
 
-def write_bucketed(df: DataFrame, table: str, buckets: int,
-                   key: str, sort: bool = True) -> None:
-    """Persist ``df`` as a hash-BUCKETED (and optionally sorted) catalog
-    table on ``key`` — the co-location primitive for the 100 TB layout:
-    two tables bucketed on the same key with the same bucket count join
-    (and aggregate) with ZERO Exchange, because the bucketed scan itself
-    reports hash-partitioning to the planner.  This is how the big
-    repeated joins (orders⋈lineitem on orderkey, turns⋈metrics on
-    conv_id) should be laid out at scale instead of re-shuffling 100 TB
-    per query; plan evidence is pinned by
-    tests/test_spark_job.py::test_bucketed_join_is_exchange_free."""
-    w = (df.write.mode("overwrite").format("parquet")
-         .bucketBy(buckets, key))
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     """True when the Iceberg Spark runtime is on the classpath (the
     capability gate for the ``writeTo`` table output path)."""

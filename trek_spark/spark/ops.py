@@ -20,13 +20,10 @@ Scale notes (per-op details in docstrings):
   value×10³/10⁴/10⁶, ``_bp`` = basis points. Rationale: Spark's
   ``round(double, n)`` (BigDecimal HALF_UP) and DuckDB's ``round`` can
   disagree on representation ties, and double-sum ordering differs between
-  engines — both flipped real CORRECTNESS hashes (source_mix_weights r5,
-  lineitem_quantiles at sf0.001).
+  engines — both flipped real CORRECTNESS hashes in earlier rounds.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -62,837 +59,8 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# TPC-H-ish relational surface (SURVEY.md §2.0)
-# --------------------------------------------------------------------------
-
-def q_scan_filter_project(spark, sf_dir):
-    """Predicate + projection pushed into the parquet scan (verify with
-    .explain: PushedFilters + 3-column ReadSchema)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") > 45)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-    )
-
-
-SQL_SCAN = """
-SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-FROM lineitem WHERE l_quantity > 45
-"""
-
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: map-side partial agg → single shuffle on the two
-    group keys. Exact-integer emission (module docstring): quantities are
-    integral, prices/discounts 2-decimal → per-row cents quantization,
-    bigint sums (order-independent), rounded integer division for the
-    average. sum_disc_price_e4 = Σ price_c × (100 − disc_c), i.e. the
-    discounted price in dollars×10⁴."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)"))
-            .alias("sum_qty"),
-            F.sum(F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
-            .alias("sum_base_price_c"),
-            F.sum(F.expr(
-                "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-                " * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))"))
-            .alias("sum_disc_price_e4"),
-            F.count("*").alias("count_order"),
-        )
-        .withColumn("avg_qty_e4", F.expr(
-            "(2 * sum_qty * 10000 + count_order) DIV (2 * count_order)"))
-    )
-
-
-SQL_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_qty,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-            AS BIGINT) AS sum_base_price_c,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS sum_disc_price_e4,
-       count(*) AS count_order,
-       CAST((2 * sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) * 10000
-             + count(*)) // (2 * count(*)) AS BIGINT) AS avg_qty_e4
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_orders(spark, sf_dir):
-    """Global top-k: per-partition top-k then merge (Spark's TakeOrdered)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .limit(10)
-    )
-
-
-SQL_TOP_ORDERS = """
-SELECT o_orderkey, o_custkey, o_totalprice
-FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-"""
-
-
-def q_segment_revenue(spark, sf_dir):
-    """customer is the small side → explicit broadcast join, one shuffle for
-    the final groupBy."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey, "inner")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_SEGMENT_REVENUE = """
-SELECT c_mktsegment, count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
-
-def q_region_revenue(spark, sf_dir):
-    """4-way join; dims broadcast, fact tables shuffle once on join keys."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    region = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.sum(F.expr(
-                "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-                " * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))"))
-             .alias("revenue_e4"),
-             F.count("*").alias("line_cnt"))
-    )
-
-
-SQL_REGION_REVENUE = """
-SELECT r_name,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4,
-       count(*) AS line_cnt
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-
-def q_latest_order_per_customer(spark, sf_dir):
-    """Window function: one shuffle on the partition key; stable ordering
-    with an explicit tiebreaker (the per-turn ordering idiom of the
-    extraction pipeline: partitionBy(conv_id).orderBy(turn_idx))."""
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_orderdate"), F.desc("o_orderkey"))
-    return (
-        _t(spark, sf_dir, "orders")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", F.col("o_orderkey").alias("latest_orderkey"),
-                F.col("o_orderdate").alias("latest_orderdate"))
-    )
-
-
-SQL_LATEST_ORDER = """
-SELECT o_custkey, o_orderkey AS latest_orderkey,
-       o_orderdate AS latest_orderdate
-FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-          ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders)
-WHERE rn = 1
-"""
-
-
-def q_distinct_priorities(spark, sf_dir):
-    return (_t(spark, sf_dir, "orders")
-            .select("o_orderstatus", "o_orderpriority").distinct())
-
-
-SQL_DISTINCT_PRIORITIES = \
-    "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders"
-
-
-def q_orders_rollup(spark, sf_dir):
-    """ROLLUP aggregation (subtotal + grand-total rows): one shuffle, the
-    rollup expansion happens inside the aggregation (Spark Expand node) —
-    no extra pass per grouping set. NULL group keys mark subtotal rows in
-    both engines identically."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_ORDERS_ROLLUP = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-"""
-
-
-def q_orders_cube(spark, sf_dir):
-    """CUBE aggregation — all four grouping sets of (status, priority):
-    the full-lattice complement of the ROLLUP op. Like rollup, the
-    expansion happens inside one aggregation (Spark Expand node feeding
-    a single shuffle), not one pass per grouping set; NULL group keys
-    mark subtotal rows identically in both engines. Exact-integer
-    revenue emission (module docstring)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_ORDERS_CUBE = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-"""
-
-
-def q_customers_with_orders(spark, sf_dir):
-    """LEFT SEMI join (EXISTS shape): customers having at least one
-    high-value order. Semi-join short-circuits on first match and never
-    duplicates left rows — the scalable EXISTS strategy (the orders side
-    shuffles once on the join key; no fan-out)."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment")
-    big = (_t(spark, sf_dir, "orders")
-           .filter(F.col("o_totalprice") > 250000)
-           .select("o_custkey"))
-    return cust.join(big, cust.c_custkey == big.o_custkey, "left_semi")
-
-
-SQL_CUSTOMERS_WITH_ORDERS = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE EXISTS (SELECT 1 FROM orders
-              WHERE o_custkey = c_custkey AND o_totalprice > 250000)
-"""
-
-
-def q_orders_above_avg(spark, sf_dir):
-    """Scalar-subquery filter: orders with price > 1.5× the global average.
-    The scalar aggregates in one tiny job and broadcasts as a single-row
-    cross input — no per-row recomputation. The boundary is an EXACT
-    integer predicate (price_c · 2n > 3 · Σprice_c, all bigint), so no
-    float threshold can flip a borderline row between engines."""
-    o = _t(spark, sf_dir, "orders")
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    tot = o.agg(F.sum(cents).alias("sum_c"), F.count("*").alias("n"))
-    return (
-        o.withColumn("price_c", cents)
-        .crossJoin(F.broadcast(tot))
-        .filter(F.expr("price_c * 2 * n > 3 * sum_c"))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
-
-
-SQL_ORDERS_ABOVE_AVG = """
-SELECT o_orderkey, o_custkey, o_totalprice
-FROM orders
-WHERE CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-      * 2 * (SELECT count(*) FROM orders)
-      > 3 * (SELECT sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-             FROM orders)
-"""
-
-
-def q_orders_above_customer_avg(spark, sf_dir):
-    """CORRELATED scalar subquery, decorrelated: orders above their own
-    customer's average price. The correlated form re-aggregates per
-    outer row; the scalable shape is the per-customer totals as window
-    aggregates over ONE custkey shuffle — a single keyed pass, no
-    per-row subquery, no second orders scan. Exact integer predicate
-    (price_c · n > Σprice_c per customer), so no float boundary can
-    flip a row between engines."""
-    o = _t(spark, sf_dir, "orders")
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    # r9: both per-customer totals ride ONE window over the custkey
-    # shuffle instead of a groupBy joined back onto a second orders
-    # scan (the agg and probe legs had different children, so the scan
-    # ran twice; measured 0.52 → 0.35 s at sf0.1). Per-customer groups
-    # colocate identically under either shape.
-    w = Window.partitionBy("o_custkey")
-    return (o.withColumn("price_c", cents)
-            .withColumn("sum_c", F.sum("price_c").over(w))
-            .withColumn("n", F.count(F.lit(1)).over(w))
-            .filter(F.expr("price_c * n > sum_c"))
-            .select("o_orderkey", "o_custkey", "o_totalprice"))
-
-
-SQL_ORDERS_ABOVE_CUSTOMER_AVG = """
-SELECT o_orderkey, o_custkey, o_totalprice
-FROM (
-  SELECT o_orderkey, o_custkey, o_totalprice,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              OVER (PARTITION BY o_custkey) AS BIGINT) AS s,
-         count(*) OVER (PARTITION BY o_custkey) AS n
-  FROM orders
-  -- null-key contract parity: Spark's inner equi-join drops null
-  -- custkeys while a window PARTITION BY groups them — exclude
-  -- explicitly so the engines agree even on dirty data
-  WHERE o_custkey IS NOT NULL
-)
-WHERE c * n > s
-"""
-
-
-def q_customers_without_orders(spark, sf_dir):
-    """LEFT ANTI join (NOT EXISTS shape): customers with no high-value
-    order (the all-orders variant is empty on this testdata — the value
-    filter keeps the check non-degenerate). Anti-join is the scalable
-    negation strategy — one shuffle on the key, no fan-out, no null-trap
-    (unlike NOT IN). The probe side is filtered and projected to the key
-    column before the join so the shuffle carries 8 bytes a row."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal")
-    keys = (_t(spark, sf_dir, "orders")
-            .filter(F.col("o_totalprice") > 450000)
-            .select("o_custkey"))
-    return cust.join(keys, cust.c_custkey == keys.o_custkey, "left_anti")
-
-
-SQL_CUSTOMERS_WITHOUT_ORDERS = """
-SELECT c_custkey, c_name, c_acctbal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-"""
-
-
-_PIVOT_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM",
-                     "4-NOT SPECIFIED", "5-LOW"]
-
-
-def q_orders_pivot(spark, sf_dir):
-    """PIVOT: order counts per status × priority, priorities as columns.
-    Explicit pivot values ⇒ single-pass aggregation (no extra distinct
-    job to discover keys) and a plan identical to conditional counts —
-    one shuffle on the groupBy key, map-side partials intact."""
-    df = (_t(spark, sf_dir, "orders")
-          .groupBy("o_orderstatus")
-          .pivot("o_orderpriority", _PIVOT_PRIORITIES)
-          .agg(F.count(F.lit(1))))  # count("*") is invalid inside pivot
-    renames = {p: f"p{p[0]}" for p in _PIVOT_PRIORITIES}
-    return df.select(
-        "o_orderstatus",
-        *[F.coalesce(F.col(f"`{p}`"), F.lit(0)).alias(renames[p])
-          for p in _PIVOT_PRIORITIES])
-
-
-SQL_ORDERS_PIVOT = """
-SELECT o_orderstatus,
-       count(*) FILTER (WHERE o_orderpriority = '1-URGENT')        AS p1,
-       count(*) FILTER (WHERE o_orderpriority = '2-HIGH')          AS p2,
-       count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM')        AS p3,
-       count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS p4,
-       count(*) FILTER (WHERE o_orderpriority = '5-LOW')           AS p5
-FROM orders GROUP BY o_orderstatus
-"""
-
-
-def q_lineitem_quantiles(spark, sf_dir):
-    """EXACT interpolated percentiles (p25/p50/p75 of extended price per
-    return flag), computed with pure INTEGER interpolation so both engines
-    agree bit-for-bit: prices quantize to cents, rank position
-    h = (n−1)·p is kept as an integer of percent-hundredths, and the
-    linear interpolation lo + (hi−lo)·frac becomes
-    lo_c·100 + (hi_c−lo_c)·(h mod 100) in dollars×10⁴. (Native
-    ``percentile``/``quantile_cont`` interpolate in doubles with
-    engine-specific formulas — a 1-ulp divergence flipped the rounded
-    hash at sf0.001.) Scale note: exact percentiles sort per group —
-    fine for a handful of groups; at web scale with high-cardinality
-    groups switch to ``percentile_approx`` (t-digest, bounded memory)
-    and a tolerance-based oracle."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
-        .alias("c"))
-    w = Window.partitionBy("l_returnflag").orderBy("c")
-    wall = Window.partitionBy("l_returnflag")
-    ranked = li.select(
-        "l_returnflag", "c",
-        F.row_number().over(w).alias("rn"),
-        F.lead("c").over(w).alias("nxt"),
-        F.count("*").over(wall).alias("n"))
-
-    def pick(p):
-        return F.max(F.expr(
-            f"CASE WHEN rn = ((n - 1) * {p}) DIV 100 + 1"
-            f" THEN c * 100 + (coalesce(nxt, c) - c)"
-            f" * (((n - 1) * {p}) % 100) END")).alias(f"p{p}_e4")
-
-    return (ranked.groupBy("l_returnflag")
-            .agg(pick(25), pick(50), pick(75),
-                 F.count("*").alias("n_items")))
-
-
-def _sql_quantile_pick(p: int) -> str:
-    return (f"max(CASE WHEN rn = ((n - 1) * {p}) // 100 + 1"
-            f" THEN c * 100 + (coalesce(nxt, c) - c)"
-            f" * (((n - 1) * {p}) % 100) END) AS p{p}_e4")
-
-
-SQL_LINEITEM_QUANTILES = f"""
-WITH v AS (
-  SELECT l_returnflag,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS c
-  FROM lineitem
-), r AS (
-  SELECT l_returnflag, c,
-         row_number() OVER (PARTITION BY l_returnflag ORDER BY c) AS rn,
-         lead(c) OVER (PARTITION BY l_returnflag ORDER BY c) AS nxt,
-         count(*) OVER (PARTITION BY l_returnflag) AS n
-  FROM v
-)
-SELECT l_returnflag,
-       {_sql_quantile_pick(25)},
-       {_sql_quantile_pick(50)},
-       {_sql_quantile_pick(75)},
-       count(*) AS n_items
-FROM r GROUP BY l_returnflag
-"""
-
-
-def q_revenue_moving_avg(spark, sf_dir):
-    """Frame-bounded window aggregate: 3-month moving average of monthly
-    revenue. The monthly rollup shuffles once; the window runs over the
-    tiny month series (single partition is fine at any scale — months,
-    not rows). Exact-integer emission: monthly revenue in cents (bigint
-    sum), moving average via rounded integer division in dollars×10⁴."""
-    monthly = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
-        .agg(F.sum(F.expr(
-            "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-            .alias("revenue_c")))
-    w = Window.orderBy("month").rowsBetween(-2, 0)
-    return (monthly
-            .withColumn("w_sum_c", F.sum("revenue_c").over(w))
-            .withColumn("w_cnt", F.count("*").over(w))
-            .select("month", "revenue_c", F.expr(
-                "(2 * w_sum_c * 100 + w_cnt) DIV (2 * w_cnt)")
-                .alias("moving_avg_3m_e4")))
-
-
-SQL_REVENUE_MOVING_AVG = """
-WITH monthly AS (
-  SELECT strftime(o_orderdate, '%Y-%m') AS month,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue_c
-  FROM orders GROUP BY 1
-), fr AS (
-  SELECT month, revenue_c,
-         CAST(sum(revenue_c) OVER (ORDER BY month
-              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS w_sum_c,
-         count(*) OVER (ORDER BY month
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS w_cnt
-  FROM monthly
-)
-SELECT month, revenue_c,
-       CAST((2 * w_sum_c * 100 + w_cnt) // (2 * w_cnt) AS BIGINT)
-           AS moving_avg_3m_e4
-FROM fr
-"""
-
-
-def q_orders_except(spark, sf_dir):
-    """Set op: mid-value orders = >100k EXCEPT ALL >200k."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return (o.filter(F.col("o_totalprice") > 100000)
-            .exceptAll(o.filter(F.col("o_totalprice") > 200000)))
-
-
-SQL_ORDERS_EXCEPT = """
-SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 100000
-EXCEPT ALL
-SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 200000
-"""
-
-
-def q_part_strings(spark, sf_dir):
-    """Scalar string function family — whole-stage-codegen'd, no shuffle."""
-    return (
-        _t(spark, sf_dir, "part")
-        .select(
-            "p_partkey",
-            F.lower(F.col("p_name")).alias("name_lower"),
-            F.length("p_name").alias("name_len"),
-            F.regexp_extract("p_name", r"^(\w+)", 1).alias("first_word"),
-            F.substring(F.md5(F.col("p_name")), 1, 8).alias("name_hash8"),
-        )
-    )
-
-
-SQL_PART_STRINGS = """
-SELECT p_partkey, lower(p_name) AS name_lower, length(p_name) AS name_len,
-       regexp_extract(p_name, '^(\\w+)', 1) AS first_word,
-       substr(md5(p_name), 1, 8) AS name_hash8
-FROM part
-"""
-
-
-def q_orders_by_month(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("month", F.col("o_orderdate").cast("timestamp"))
-                 .alias("month"))
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_ORDERS_BY_MONTH = """
-SELECT date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS month,
-       count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders GROUP BY 1
-"""
-
-
-def q_events_stats(spark, sf_dir):
-    """Per-type counts + average value. ``value`` is 2-decimal → per-row
-    cents quantization, exact bigint sum, average emitted as value×10³
-    via rounded integer division (sum order can't move it)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"),
-             F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-             .alias("sum_c"),
-             F.countDistinct("user_id").alias("users"))
-        .select("event_type", "cnt",
-                F.expr("(2 * sum_c * 10 + cnt) DIV (2 * cnt)")
-                .alias("avg_value_e3"),
-                "users")
-    )
-
-
-def q_events_cardinality_approx(spark, sf_dir):
-    """HLL++ cardinality — THE 100 TB distinct-count tool, previously
-    missing from the inventory: exact ``count(DISTINCT)`` shuffles every
-    distinct (key, value) pair (state grows with cardinality — 10⁹ users
-    means 10⁹ shuffle rows), while ``approx_count_distinct`` keeps a
-    fixed-size mergeable HLL sketch per group, partial-aggregated
-    map-side like any sum.
-
-    Oracle shape: the exact per-type user count is verified
-    value-for-value cross-engine; the HLL estimate itself is
-    sketch-implementation-specific (DuckDB's HLL ≠ Spark's), so what's
-    recorded is a VERIFIED ERROR BOUND — ``hll_within_2pct`` computed by
-    Spark against its own exact count, emitted by the oracle as the
-    literal truth. A sketch drifting past the bound flips the flag and
-    the driver hash catches it. (rsd 0.5% ⇒ the 2% gate has 4σ margin;
-    at these cardinalities HLL++ sparse mode is exact anyway.)"""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("exact_users"),
-             F.expr("approx_count_distinct(user_id, 0.005)")
-             .alias("hll_users"))
-        .select("event_type", "exact_users",
-                (F.abs(F.col("hll_users") - F.col("exact_users")) * 50
-                 <= F.col("exact_users")).alias("hll_within_2pct"))
-    )
-
-
-SQL_EVENTS_CARDINALITY_APPROX = """
-SELECT event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-       true AS hll_within_2pct
-FROM events GROUP BY event_type
-"""
-
-
-SQL_EVENTS_STATS = """
-SELECT event_type, count(*) AS cnt,
-       CAST((2 * sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10
-             + count(*)) // (2 * count(*)) AS BIGINT) AS avg_value_e3,
-       count(DISTINCT user_id) AS users
-FROM events GROUP BY event_type
-"""
-
-
-def q_event_gaps(spark, sf_dir):
-    """LAG window over the event stream: inter-event gap seconds per user."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        _t(spark, sf_dir, "events")
-        .withColumn("prev_ts", F.lag("ts").over(w))
-        .filter(F.col("prev_ts").isNotNull())
-        .select("user_id", "event_id",
-                (F.unix_timestamp("ts")
-                 - F.unix_timestamp("prev_ts")).alias("gap_sec"))
-    )
-
-
-SQL_EVENT_GAPS = """
-SELECT user_id, event_id,
-       CAST(floor(epoch(ts)) AS BIGINT)
-       - CAST(floor(epoch(prev_ts)) AS BIGINT) AS gap_sec
-FROM (SELECT user_id, event_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events)
-WHERE prev_ts IS NOT NULL
-"""
-
-
-#: epoch seconds of 1995-01-01 / 2024-01-01 UTC, hardcoded so neither
-#: engine parses a date literal through its session time zone
-_ASOF_ORDERS_EPOCH0 = 788_918_400
-_ASOF_EVENTS_EPOCH0 = 1_704_067_200
-_ASOF_SQUEEZE = 80  # maps the ~2,400-day order span into the 30-day event window
-
-
-def q_events_asof_join(spark, sf_dir):
-    """AS-OF join — for every event, the user's most recent order at or
-    before the event time (the classic enrichment join Spark lacks as a
-    built-in; reference scope: none — training-pipeline addition). Order
-    dates are remapped into the event window by exact integer epoch
-    arithmetic (the raw testdata has every order before every event,
-    which would make the inequality vacuous).
-
-    Scale shape: the scalable as-of strategy — tag and UNION both
-    streams, ONE shuffle on the join key, and a running
-    ``last(non-null)`` window carries the latest order forward onto each
-    event row. No per-row subquery, no broadcast of either fact table,
-    no range-explosion; ties (same timestamp) resolve deterministically
-    to the highest order key via the window sort. The oracle recomputes
-    the same spec independently with a correlated max — not a mirror of
-    the window algorithm."""
-    od = (_t(spark, sf_dir, "orders")
-          .select(F.col("o_custkey").alias("key"),
-                  F.expr(
-                      f"CAST({_ASOF_EVENTS_EPOCH0} + "
-                      f"(unix_timestamp(o_orderdate) - {_ASOF_ORDERS_EPOCH0})"
-                      f" DIV {_ASOF_SQUEEZE} AS BIGINT)").alias("t"),
-                  F.lit(None).cast("long").alias("event_id"),
-                  F.col("o_orderkey").alias("o_key"),
-                  F.lit(0).alias("src")))
-    ev = (_t(spark, sf_dir, "events")
-          .select(F.col("user_id").alias("key"),
-                  F.unix_timestamp("ts").alias("t"),
-                  F.col("event_id"),
-                  F.lit(None).cast("long").alias("o_key"),
-                  F.lit(1).alias("src")))
-    both = od.unionByName(ev).withColumn(
-        "o_mark", F.when(F.col("src") == 0,
-                         F.struct(F.col("t").alias("ot"),
-                                  F.col("o_key").alias("okey"))))
-    # orders sort before events at equal t (src asc) so an order AT the
-    # event time matches; o_key asc makes the running last() the MAX
-    # order key on an exact-timestamp tie
-    w = (Window.partitionBy("key")
-         .orderBy("t", "src", F.col("o_key").asc_nulls_last())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (both
-            .withColumn("asof", F.last("o_mark", ignorenulls=True).over(w))
-            .filter((F.col("src") == 1) & F.col("asof").isNotNull())
-            .select("event_id", F.col("key").alias("user_id"),
-                    F.col("asof.okey").alias("asof_orderkey"),
-                    (F.col("t") - F.col("asof.ot")).alias("asof_age_s")))
-
-
-SQL_EVENTS_ASOF_JOIN = f"""
-WITH od AS (
-  SELECT o_custkey AS key, o_orderkey,
-         {_ASOF_EVENTS_EPOCH0}
-         + (CAST(floor(epoch(o_orderdate)) AS BIGINT)
-            - {_ASOF_ORDERS_EPOCH0}) // {_ASOF_SQUEEZE} AS t
-  FROM orders
-), ev AS (
-  SELECT user_id AS key, event_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS t
-  FROM events
-), m AS (
-  SELECT ev.event_id, ev.key, ev.t AS event_t, max(od.t) AS ot
-  FROM ev JOIN od ON od.key = ev.key AND od.t <= ev.t
-  GROUP BY 1, 2, 3
-)
-SELECT m.event_id, m.key AS user_id,
-       CAST(max(od.o_orderkey) AS BIGINT) AS asof_orderkey,
-       m.event_t - m.ot AS asof_age_s
-FROM m JOIN od ON od.key = m.key AND od.t = m.ot
-GROUP BY m.event_id, m.key, m.event_t, m.ot
-"""
-
-
-_SESSION_GAP_S = 1800  # classic 30-minute inactivity boundary
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Sessionization — split each user's event stream on >30-minute
-    inactivity gaps and aggregate per session (the canonical
-    clickstream/transcript operator; batch formulation of what
-    ``applyInPandasWithState`` does in the streaming surface). One
-    shuffle on user_id: lag detects boundaries, a running sum numbers
-    sessions, and the session rollup reuses the same partitioning.
-    All-integer epoch arithmetic, so the oracle hashes exactly."""
-    w = Window.partitionBy("user_id").orderBy("t", "event_id")
-    cum = (Window.partitionBy("user_id").orderBy("t", "event_id")
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ev = (_t(spark, sf_dir, "events")
-          .select("user_id", "event_id",
-                  F.unix_timestamp("ts").alias("t")))
-    flagged = (ev
-               .withColumn("prev_t", F.lag("t").over(w))
-               .withColumn("new_sess", F.when(
-                   F.col("prev_t").isNull()
-                   | (F.col("t") - F.col("prev_t") > _SESSION_GAP_S),
-                   1).otherwise(0))
-               .withColumn("session_seq", F.sum("new_sess").over(cum)))
-    return (flagged.groupBy("user_id", "session_seq")
-            .agg(F.count("*").alias("n_events"),
-                 F.min("t").alias("session_start_s"),
-                 F.max("t").alias("session_end_s")))
-
-
-SQL_EVENTS_SESSIONIZE = f"""
-WITH ev AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
-  FROM events
-), flagged AS (
-  SELECT user_id, t,
-         CASE WHEN lag(t) OVER (PARTITION BY user_id
-                                ORDER BY t, event_id) IS NULL
-                   OR t - lag(t) OVER (PARTITION BY user_id
-                                       ORDER BY t, event_id)
-                      > {_SESSION_GAP_S}
-              THEN 1 ELSE 0 END AS new_sess,
-         event_id
-  FROM ev
-), numbered AS (
-  SELECT user_id, t,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id
-              ORDER BY t, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_seq
-  FROM flagged
-)
-SELECT user_id, session_seq, count(*) AS n_events,
-       min(t) AS session_start_s, max(t) AS session_end_s
-FROM numbered GROUP BY user_id, session_seq
-"""
-
-
-def q_events_json(spark, sf_dir):
-    """JSON path extraction from the props column."""
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_id",
-                F.get_json_object("props", "$.k").cast("int").alias("k_val"))
-        .filter(F.col("k_val").isNotNull())
-    )
-
-
-SQL_EVENTS_JSON = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k_val
-FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL
-"""
-
-
-# --------------------------------------------------------------------------
 # Text-analysis ops over documents (training-data pipeline)
 # --------------------------------------------------------------------------
-
-def q_token_counts(spark, sf_dir):
-    """Whitespace tokenization — JVM-side split, no Python. Null text
-    coalesces to '' in BOTH engines (Spark's size(split(NULL)) is -1
-    while DuckDB's len(NULL) is NULL — same hazard the token_histogram
-    op was bitten by; the input contract allows null turns)."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id",
-                F.size(F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))),
-                               r"\s+")).alias("n_tokens"),
-                F.col("n_chars"))
-    )
-
-
-SQL_TOKEN_COUNTS = """
-SELECT doc_id,
-       length(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))
-           AS n_tokens,
-       n_chars
-FROM documents
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    """Quality scoring: length, mean word length, stopword share —
-    length/punct heuristics in pure column expressions."""
-    d = _t(spark, sf_dir, "documents")
-    # coalesce(text, '') in both engines — see q_token_counts
-    n_tokens = F.size(F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))),
-                              r"\s+"))
-    stop_hits = F.size(F.expr(
-        r"filter(split(trim(coalesce(text, '')), '\\s+'),"
-        r" w -> w IN ('the','a','and','of','to'))"))
-    return (d.select(
-        "doc_id", "n_chars",
-        n_tokens.alias("n_tokens"),
-        stop_hits.alias("stopword_hits"),
-        (F.col("n_chars") >= 100).cast("int").alias("len_ok"))
-        # n_chars / n_tokens as value×10³ by exact rounded integer
-        # division (both operands integral; no double ratio to round)
-        .select(
-            "doc_id", "n_tokens",
-            F.expr("(2000 * n_chars + n_tokens) DIV (2 * n_tokens)")
-            .alias("avg_token_len_e3"),
-            "stopword_hits", "len_ok"))
-
-
-SQL_TEXT_QUALITY = """
-SELECT doc_id,
-       length(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))
-           AS n_tokens,
-       (2000 * n_chars
-        + length(regexp_split_to_array(trim(coalesce(text, '')), '\\s+')))
-           // (2 * length(regexp_split_to_array(trim(coalesce(text, '')),
-                                                '\\s+')))
-           AS avg_token_len_e3,
-       length(list_filter(regexp_split_to_array(trim(coalesce(text, '')),
-              '\\s+'),
-              w -> w IN ('the','a','and','of','to'))) AS stopword_hits,
-       CAST(n_chars >= 100 AS INT) AS len_ok
-FROM documents
-"""
 
 
 def q_docs_repetition_ratio(spark, sf_dir):
@@ -937,123 +105,9 @@ FROM t WHERE n_shingles > 0
 """
 
 
-def q_lang_heuristic(spark, sf_dir):
-    """n-gram-free language ID heuristic covering the corpus's five
-    labels: stopword votes for en/de/fr/es, CJK-character count for zh
-    (Chinese has no whitespace tokens, so stopword voting is blind to
-    it — any CJK presence dominating the vote count flips the
-    prediction). The labeled `lang` column rides along for agreement
-    analysis; ties break en > de > fr > es, mirrored exactly in the
-    oracle's CASE order.
-
-    Cost bound (r6 verdict, wrong #2): the vote and the CJK scan run
-    over a deterministic 4096-character prefix, not the whole document
-    — language identity is decided in the first page of text, and the
-    full-text regex scan was the op's entire cost. The prefix, the
-    tokenization (done ONCE into `toks_`), and every vote use the same
-    substring in BOTH engines, so the oracle stays exact."""
-    d = _t_wide(spark, sf_dir, "documents")
-
-    def votes(words):
-        lst = ",".join(f"'{w}'" for w in words)
-        return F.size(F.expr(rf"filter(toks_, w -> w IN ({lst}))"))
-
-    en = votes(("the", "and", "of", "a", "to", "in"))
-    de = votes(("der", "die", "und", "das", "ist", "ein"))
-    fr = votes(("le", "la", "et", "les", "des", "un"))
-    es = votes(("el", "que", "y", "en", "los", "una"))
-    zh = F.length(F.regexp_replace(F.col("pref_"), "[^一-鿿]", ""))
-    mx = F.greatest("v_en", "v_de", "v_fr", "v_es")
-    return (
-        d.withColumn("pref_",
-                     F.expr("substring(coalesce(text, ''), 1, 4096)"))
-        .withColumn("toks_", F.expr(r"split(lower(trim(pref_)), '\\s+')"))
-        .select("doc_id", "lang", en.alias("v_en"), de.alias("v_de"),
-                fr.alias("v_fr"), es.alias("v_es"),
-                zh.alias("cjk_chars"))
-        .withColumn(
-            "pred_lang",
-            F.when(F.col("cjk_chars") > mx, F.lit("zh"))
-            .when((F.col("v_en") >= F.col("v_de"))
-                  & (F.col("v_en") >= F.col("v_fr"))
-                  & (F.col("v_en") >= F.col("v_es")), F.lit("en"))
-            .when((F.col("v_de") >= F.col("v_fr"))
-                  & (F.col("v_de") >= F.col("v_es")), F.lit("de"))
-            .when(F.col("v_fr") >= F.col("v_es"), F.lit("fr"))
-            .otherwise(F.lit("es")))
-    )
-
-
-SQL_LANG_HEURISTIC = """
-SELECT doc_id, lang, v_en, v_de, v_fr, v_es, cjk_chars,
-       CASE WHEN cjk_chars > greatest(v_en, v_de, v_fr, v_es) THEN 'zh'
-            WHEN v_en >= v_de AND v_en >= v_fr AND v_en >= v_es THEN 'en'
-            WHEN v_de >= v_fr AND v_de >= v_es THEN 'de'
-            WHEN v_fr >= v_es THEN 'fr' ELSE 'es' END AS pred_lang
-FROM (
-  SELECT doc_id, lang,
-    length(list_filter(toks_,
-           w -> w IN ('the','and','of','a','to','in'))) AS v_en,
-    length(list_filter(toks_,
-           w -> w IN ('der','die','und','das','ist','ein'))) AS v_de,
-    length(list_filter(toks_,
-           w -> w IN ('le','la','et','les','des','un'))) AS v_fr,
-    length(list_filter(toks_,
-           w -> w IN ('el','que','y','en','los','una'))) AS v_es,
-    length(regexp_replace(pref_,
-           '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS cjk_chars
-  FROM (
-    SELECT doc_id, lang, pref_,
-           regexp_split_to_array(lower(trim(pref_)), '\\s+') AS toks_
-    FROM (SELECT doc_id, lang,
-                 substr(coalesce(text, ''), 1, 4096) AS pref_
-          FROM documents)))
-"""
-
-
-def q_fingerprints(spark, sf_dir):
-    """Document fingerprinting: normalized-text content hash (md5 prefix —
-    hex-string form is engine-portable)."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id",
-                F.substring(F.md5(F.lower(F.trim(
-                    F.coalesce(F.col("text"), F.lit(""))))), 1, 16)
-                .alias("fingerprint"))
-    )
-
-
-SQL_FINGERPRINTS = """
-SELECT doc_id, substr(md5(lower(trim(coalesce(text, '')))), 1, 16)
-    AS fingerprint
-FROM documents
-"""
-
-
 # --------------------------------------------------------------------------
 # Deduplication ops
 # --------------------------------------------------------------------------
-
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup via content-hash groupBy: one shuffle on the hash;
-    keeps the smallest doc_id as canonical."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id",
-                 F.md5(F.lower(F.trim(F.col("text")))).alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("canonical_id"),
-             F.count("*").alias("dup_count"))
-        .filter(F.col("dup_count") > 1)
-        .select("canonical_id", "dup_count")
-    )
-
-
-SQL_DEDUP_EXACT = """
-SELECT min(doc_id) AS canonical_id, count(*) AS dup_count
-FROM (SELECT doc_id, md5(lower(trim(text))) AS h FROM documents)
-GROUP BY h HAVING count(*) > 1
-"""
 
 
 def _shingles(col="text", k=3):
@@ -1227,295 +281,9 @@ WHERE 2 * shared >= sa.n + sb.n - shared
 """
 
 
-#: deterministic skew injection for the cap-engagement audit: one
-#: boilerplate document repeated past the document-frequency cap, so the
-#: hot-shingle guard MUST fire (the natural testdata never triggers it —
-#: without this op, cap correctness would be pytest-only, never
-#: oracle-checked)
-_SKEW_COPIES = 1200
-_SKEW_BOILERPLATE = (
-    "subscribe to our newsletter unsubscribe anytime all rights reserved"
-    " privacy policy terms of service apply")
-
-
-def q_dedup_hot_shingle_audit(spark, sf_dir):
-    """Cap engagement on a deterministically SKEWED corpus: union the
-    documents table with ``_SKEW_COPIES`` copies of a boilerplate doc
-    (distinct doc_ids, identical text — the 10^8-frequency chrome/footer
-    shape real crawls are full of), shingle it, and emit every shingle
-    whose document frequency exceeds ``_SHINGLE_DF_CAP`` — exactly the
-    set ``_drop_hot_keys`` removes before any collect_list in the dedup
-    family. With 1,200 > 1,000 copies the audit is NONZERO by
-    construction: the oracle reproduces the cap semantics (count > cap ⇒
-    dropped) on data where it must engage, not just on healthy draws.
-    Scale shape: the injection is a metadata-only union; the audit is
-    the same one explode + groupBy(shingle) every capped op already
-    pays."""
-    docs = _t_wide(spark, sf_dir, "documents").select("doc_id", "text")
-    injected = (spark.range(_SKEW_COPIES)
-                .select((F.col("id") + 10000000).alias("doc_id"),
-                        F.lit(_SKEW_BOILERPLATE).alias("text")))
-    corpus = docs.unionByName(injected)
-    ex = corpus.select("doc_id", F.explode(_shingles()).alias("shingle"))
-    return (ex.groupBy("shingle").agg(F.count("*").alias("df"))
-            .filter(F.col("df") > _SHINGLE_DF_CAP))
-
-
-SQL_DEDUP_HOT_SHINGLE_AUDIT = f"""
-WITH injected AS (
-  SELECT 10000000 + range AS doc_id,
-         '{_SKEW_BOILERPLATE}' AS text
-  FROM range({_SKEW_COPIES})
-), corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id, text FROM injected
-), sh AS (
-  SELECT doc_id, list_distinct(list_transform(
-           range(1, greatest(len(regexp_split_to_array(trim(text),
-                 '\\s+')) - 2, 0) + 1),
-           i -> array_to_string(list_slice(
-                  regexp_split_to_array(trim(text), '\\s+'),
-                  i, i + 2), ' '))) AS shingles
-  FROM corpus
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-)
-SELECT shingle, count(*) AS df
-FROM ex GROUP BY shingle HAVING count(*) > {_SHINGLE_DF_CAP}
-"""
-
-
-def q_dedup_prefix_filter(spark, sf_dir):
-    """EXACT set-similarity self-join via prefix filtering (the
-    AllPairs/PPJoin candidate scheme, Bayardo et al. WWW'07; Xiao et
-    al. WWW'08): every document pair with shingle-set Jaccard ≥ 0.8,
-    with NO false negatives — the exact complement to the approximate
-    LSH/SimHash family.
-
-    Scale path, against the reference's in-memory dedup
-    (`src/lib.rs` has no similarity join at all — this is pipeline
-    extension surface):
-
-    1. Global document frequency per 3-gram shingle (one groupBy).
-    2. Shingles with df > cap are dropped from the similarity space
-       entirely (both candidate AND verify stages — the same
-       boilerplate valve as the jaccard/LSH ops; the df doubles as the
-       ordering key, so the cap is a filter on the same window count).
-    3. Each doc's shingles sorted by (df asc, shingle) — rarest first —
-       and only the PREFIX of length n - ceil(0.8·n) + 1 = n - (4n+4)
-       DIV 5 + 1 is exploded into the inverted index. Completeness: if
-       J(A,B) ≥ t, the smallest-ordered common shingle must sit inside
-       BOTH prefixes (else |A∩B| ≤ ceil(t·n) - 1 < t·n ≤ |A∩B|), so
-       the prefix-prefix equi-join loses no qualifying pair.
-    4. Candidate join groups are bounded by construction: the join key
-       is a (df, shingle) struct and every surviving key has df ≤ cap,
-       so no 10⁶-doc boilerplate group can form — the property the
-       jaccard op needs a window count for falls out of the df join
-       here for free.
-    5. Length filter IN the join condition (J ≥ 4/5 ⟹ 5·min(n) ≥
-       4·max(n), exact integers) prunes cross-size candidates before
-       the shuffle write of the distinct.
-    6. Verify: candidates (tiny at high thresholds) re-join the full
-       capped shingle arrays; |A∩B| via JVM array_intersect; the ≥0.8
-       gate is the exact integer predicate 5·inter ≥ 4·union.
-
-    The oracle is the BRUTE-FORCE all-pairs exact join over the same
-    capped shingle space — so the driver's hash equality does not just
-    check arithmetic, it independently certifies the prefix filter's
-    zero-false-negative property on real data. At 100 TB you run step
-    1-6 as-is (the prefix index is ~(1-t)·|shingles| ≈ 20% of the
-    jaccard op's full inverted index, and verify touches only
-    candidates); the brute-force shape exists only inside the DuckDB
-    oracle at test SF.
-    """
-    d = _t_wide(spark, sf_dir, "documents").select(
-        "doc_id", _shingles().alias("sh"))
-    ex = d.select("doc_id", F.explode("sh").alias("tok"))
-    # Document frequency as a WINDOW count over the one tok shuffle
-    # (r9 follow-up, guide §2.4): the former groupBy(tok) + join-back
-    # shuffled the exploded stream onto itself — an extra sort-merge
-    # join leg whose df values are identical to the window count by
-    # construction (per-doc shingles are distinct, so both count docs
-    # per shingle). Same spill-safe shape as _drop_hot_keys; measured
-    # 1.33 s → 1.00 s through the ordered agg at sf0.1.
-    kept = (ex.withColumn(
-                "df",
-                F.count(F.lit(1)).over(Window.partitionBy("tok")))
-            .filter(F.col("df") <= _SHINGLE_DF_CAP))
-    # ONE aggregate feeds all four downstream uses (prefix a/b sides +
-    # verify a/b sides): prefix AND full token array both project from
-    # `docs`, so the subtrees canonicalize identically and AQE's
-    # exchange reuse runs the shingle explode + df join + groupBy once,
-    # not four times. (r9: measured an eager localCheckpoint of this
-    # table as an alternative — 2.5 s → 3.9 s; serializing the token
-    # arrays to block storage costs more than the runtime exchange
-    # reuse it replaces, so the reuse-based shape stays.)
-    ordered = (kept.groupBy("doc_id")
-               .agg(F.sort_array(
-                   F.collect_list(F.struct("df", "tok"))).alias("ord")))
-    docs = (ordered
-            .withColumn("n", F.size("ord"))
-            .withColumn("plen", F.expr("n - (4*n + 4) DIV 5 + 1")))
-    pref = docs.select(
-        "doc_id", "n",
-        F.explode(F.expr("slice(ord, 1, plen)")).alias("p"))
-    a, b = pref.alias("a"), pref.alias("b")
-    cand = (a.join(b,
-                   (F.col("a.p") == F.col("b.p"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id"))
-                   & (4 * F.greatest(F.col("a.n"), F.col("b.n"))
-                      <= 5 * F.least(F.col("a.n"), F.col("b.n"))))
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"))
-            .distinct())
-    sets = docs.select(
-        "doc_id", F.expr("transform(ord, x -> x.tok)").alias("ts"), "n")
-    sa = sets.select(F.col("doc_id").alias("id_a"),
-                     F.col("ts").alias("ts_a"), F.col("n").alias("na"))
-    sb = sets.select(F.col("doc_id").alias("id_b"),
-                     F.col("ts").alias("ts_b"), F.col("n").alias("nb"))
-    return (cand.join(sa, "id_a").join(sb, "id_b")
-            .withColumn("inter",
-                        F.size(F.array_intersect("ts_a", "ts_b"))
-                        .cast("long"))
-            .withColumn("union_n", F.col("na") + F.col("nb")
-                        - F.col("inter"))
-            .filter(F.expr("5 * inter >= 4 * union_n"))
-            .select("id_a", "id_b", "inter",
-                    F.expr("(2 * inter * 10000 + union_n)"
-                           " DIV (2 * union_n)").alias("jaccard_e4")))
-
-
-SQL_DEDUP_PREFIX_FILTER = f"""
-WITH sh AS (
-  SELECT doc_id, list_distinct(list_transform(
-           range(1, greatest(len(regexp_split_to_array(trim(text),
-                 '\\s+')) - 2, 0) + 1),
-           i -> array_to_string(list_slice(
-                  regexp_split_to_array(trim(text), '\\s+'),
-                  i, i + 2), ' '))) AS shingles
-  FROM documents
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS tok FROM sh
-), dfc AS (
-  SELECT tok, count(*) AS df FROM ex GROUP BY 1
-), kept AS (
-  SELECT e.doc_id, e.tok FROM ex e JOIN dfc USING (tok)
-  WHERE df <= {_SHINGLE_DF_CAP}
-), sets AS (
-  SELECT doc_id, list(tok) AS ts, count(*) AS n FROM kept GROUP BY 1
-), pairs AS (
-  -- brute force all-pairs: certifies the Spark side's prefix filter
-  -- dropped no qualifying pair (zero-false-negative property)
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         len(list_intersect(a.ts, b.ts)) AS inter,
-         a.n + b.n AS sn
-  FROM sets a JOIN sets b
-    ON a.doc_id < b.doc_id
-   AND 4 * greatest(a.n, b.n) <= 5 * least(a.n, b.n)
-)
-SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-       CAST((2 * inter * 10000 + (sn - inter))
-            // (2 * (sn - inter)) AS BIGINT) AS jaccard_e4
-FROM pairs
-WHERE 5 * inter >= 4 * (sn - inter)
-"""
-
-
-def q_dedup_graph_triangles(spark, sf_dir):
-    """Per-document triangle counts over the near-dup similarity graph
-    (edges = dedup_ngram_jaccard pairs): a triangle means three
-    documents that are pairwise near-duplicates — the local-clustering
-    signal that separates a true duplication CLUSTER (template farms,
-    mirror sites) from chains of borderline pairs, and the standard
-    prelude to deciding cluster-collapse aggressiveness.
-
-    Scale path — degree-ordered wedge join (the MapReduce triangle
-    algorithm of Suri & Vassilvitskii, WWW'11): each undirected edge is
-    ORIENTED from its lower-(degree, id) endpoint to the higher one, so
-    every node's out-degree is O(sqrt(m)) regardless of how skewed the
-    raw degree distribution is (a hub of degree 10⁶ would otherwise
-    spawn 10¹² wedges — same hot-key shape the dedup caps guard). Wedges
-    are generated only from out-edges (u→v, u→w with v before w in the
-    total order) and closed by an equi-join against the oriented edge
-    v→w; each triangle is found exactly once, at its lowest-order apex.
-    The (tiny) edge list is materialized ONCE before the wedge join
-    (r9: the degree union and the two degree join-backs have
-    non-identical children, so exchange reuse never covered them and
-    the jaccard subtree was evaluated up to 3× — measured 4.35 → 1.82 s
-    at sf0.1, 14.4 → 6.3 s at 25k docs; on a real cluster swap the
-    localCheckpoint for checkpoint()/a table write, as with
-    _cluster_edges).
-    """
-    edges = (q_dedup_ngram_jaccard(spark, sf_dir)
-             .select("id_a", "id_b").localCheckpoint(eager=True))
-    return _triangle_counts(edges)
-
-
-def _triangle_counts(edges: DataFrame) -> DataFrame:
-    """Degree-ordered triangle counting over an undirected edge list
-    (columns id_a < id_b, unique). See q_dedup_graph_triangles."""
-    deg = (edges.select(F.col("id_a").alias("v"))
-           .unionAll(edges.select(F.col("id_b").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("deg")))
-    da = deg.select(F.col("v").alias("id_a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("v").alias("id_b"), F.col("deg").alias("db"))
-    # total order = (degree, id); orient each edge low → high
-    keyed = (edges.join(da, "id_a").join(db, "id_b")
-             .withColumn("ka", F.struct(F.col("da").alias("d"),
-                                        F.col("id_a").alias("i")))
-             .withColumn("kb", F.struct(F.col("db").alias("d"),
-                                        F.col("id_b").alias("i"))))
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("id_a"))
-         .otherwise(F.col("id_b")).alias("src"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb"))
-         .otherwise(F.col("ka")).alias("dstk"),
-        F.when(F.col("ka") < F.col("kb"), F.col("id_b"))
-         .otherwise(F.col("id_a")).alias("dst"))
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedges = (e1.join(e2, (F.col("e1.src") == F.col("e2.src"))
-                      & (F.col("e1.dstk") < F.col("e2.dstk")))
-              .select(F.col("e1.src").alias("u"),
-                      F.col("e1.dst").alias("v"),
-                      F.col("e2.dst").alias("w")))
-    e3 = oriented.alias("e3")
-    tri = wedges.join(e3, (F.col("v") == F.col("e3.src"))
-                      & (F.col("w") == F.col("e3.dst")))
-    return (tri.select(F.col("u").alias("doc_id"))
-            .unionAll(tri.select(F.col("v").alias("doc_id")))
-            .unionAll(tri.select(F.col("w").alias("doc_id")))
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_triangles")))
-
-
-SQL_DEDUP_GRAPH_TRIANGLES = f"""
-WITH e AS (
-  SELECT id_a, id_b FROM ({SQL_DEDUP_NGRAM}) pairs
-), tri AS (
-  -- id_a < id_b on every edge, so the a<b<c 3-way equi-join
-  -- enumerates each triangle exactly once (no orientation needed at
-  -- oracle scale; the Spark side's degree orientation changes the
-  -- join geometry, not the result set)
-  SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
-  FROM e e1
-  JOIN e e2 ON e2.id_a = e1.id_b
-  JOIN e e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
-FROM (
-  SELECT a AS doc_id FROM tri
-  UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri
-)
-GROUP BY doc_id
-"""
-
-
 #: Audit record of the most recent ``_min_label_cc`` run in this process
-#: ({"rounds": int, "converged": bool}); bench.py reads it after timing
-#: dedup_clusters so the round count lands in the artifact.
+#: ({"rounds": int, "converged": bool}), for callers that report the
+#: round count.
 LAST_CC_AUDIT: dict = {}
 
 
@@ -1645,50 +413,6 @@ def q_dedup_clusters(spark, sf_dir):
     return labels
 
 
-def q_dedup_keep_canonical(spark, sf_dir):
-    """The dedup product itself: the kept (canonical) document set after
-    near-dup collapse — every doc NOT in a cluster plus each cluster's
-    minimum-id representative, with the number of near-dups it absorbed.
-    Completes the pairs → clusters → kept-set chain a pipeline actually
-    ships. Scale: the dropped set scales with the CORPUS DUPLICATE RATE
-    (30-50% on real crawls), not with per-cluster size, so there is no
-    forced broadcast hint — AQE picks broadcast when the set is actually
-    small and a shuffled anti-join when it isn't (F.broadcast here would
-    collect a multi-GB id set onto the driver exactly when dedup matters
-    most). One scan of documents either way."""
-    labels, _rounds, converged = \
-        _min_label_cc(_cluster_edges(spark, sf_dir))
-    if not converged:
-        raise RuntimeError("dedup_keep_canonical: clustering did not "
-                           "converge (see q_dedup_clusters)")
-    dropped = labels.filter(F.col("doc_id") != F.col("cluster_id")) \
-        .select("doc_id")
-    absorbed = (labels.groupBy("cluster_id")
-                .agg((F.count("*") - 1).alias("n_absorbed"))
-                .filter(F.col("n_absorbed") > 0))
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    return (
-        docs.join(dropped, "doc_id", "left_anti")
-        .join(absorbed, docs.doc_id == absorbed.cluster_id, "left")
-        .select("doc_id", "lang",
-                F.coalesce("n_absorbed", F.lit(0)).alias("n_absorbed"))
-    )
-
-
-def q_dedup_clusters_audit(spark, sf_dir):
-    """Cluster-resolution audit (pattern: dedup_lsh_dropped_buckets): one
-    row (n_docs, n_clusters, converged). The oracle's recursive CTE is
-    converged by construction, so its ``converged`` is literal true — a
-    Spark run that hit the round cap hash-mismatches here rather than
-    passing on plausible-looking labels."""
-    labels, _rounds, converged = \
-        _min_label_cc(_cluster_edges(spark, sf_dir))
-    return labels.agg(
-        F.count("doc_id").alias("n_docs"),
-        F.countDistinct("cluster_id").alias("n_clusters"),
-        F.lit(bool(converged)).alias("converged"))
-
-
 SQL_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE dedup_pairs AS (
   SELECT id_a, id_b FROM ({SQL_DEDUP_NGRAM}) t
@@ -1701,169 +425,6 @@ WITH RECURSIVE dedup_pairs AS (
   SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
 )
 SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY 1
-"""
-
-SQL_DEDUP_CLUSTERS_AUDIT = f"""
-SELECT count(doc_id) AS n_docs,
-       count(DISTINCT cluster_id) AS n_clusters,
-       true AS converged
-FROM ({SQL_DEDUP_CLUSTERS}) c
-"""
-
-SQL_DEDUP_KEEP_CANONICAL = f"""
-WITH labels AS ({SQL_DEDUP_CLUSTERS}),
-dropped AS (
-  SELECT doc_id FROM labels WHERE doc_id != cluster_id
-), absorbed AS (
-  SELECT cluster_id, count(*) - 1 AS n_absorbed
-  FROM labels GROUP BY 1 HAVING count(*) > 1
-)
-SELECT d.doc_id, d.lang,
-       coalesce(a.n_absorbed, 0) AS n_absorbed
-FROM documents d
-ANTI JOIN dropped USING (doc_id)
-LEFT JOIN absorbed a ON d.doc_id = a.cluster_id
-"""
-
-
-def q_dedup_cluster_sizes(spark, sf_dir):
-    """Cluster-size distribution of the connected-component dedup — the
-    dataset-card number that shows whether near-dup mass sits in a few
-    mega-clusters (boilerplate explosion) or a long tail of pairs. Two
-    tiny aggregations downstream of the CC labels (cluster count ≪ doc
-    count); inherits the pointer-jumping CC's loud-fail convergence."""
-    labels, _rounds, _converged = \
-        _min_label_cc(_cluster_edges(spark, sf_dir))
-    sizes = (labels.groupBy("cluster_id")
-             .agg(F.count("*").alias("cluster_size")))
-    return (sizes.groupBy("cluster_size")
-            .agg(F.count("*").alias("n_clusters")))
-
-
-SQL_DEDUP_CLUSTER_SIZES = f"""
-WITH labels AS ({SQL_DEDUP_CLUSTERS}),
-sizes AS (
-  SELECT cluster_id, count(*) AS cluster_size FROM labels GROUP BY 1
-)
-SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1
-"""
-
-
-def q_customer_value_deciles(spark, sf_dir):
-    """NTILE decile segmentation of customers by lifetime revenue (the
-    classic value-banding window op). Revenue aggregates to exact
-    integer cents per customer FIRST (one keyed shuffle over |customers|
-    rows), then a global ntile(10) with a total order (revenue desc,
-    custkey) assigns bands deterministically in both engines.
-
-    Scale note: a global ORDER BY window is a single-partition sort —
-    fine over the pre-aggregated |customers| rows here, but at 10⁹+
-    customers swap the exact ntile for percentile_approx cutoffs
-    broadcast-joined back (tolerance oracle), as with the percentile
-    family."""
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    rev = (_t(spark, sf_dir, "orders")
-           .groupBy("o_custkey").agg(F.sum(cents).alias("revenue_c")))
-    w = Window.orderBy(F.desc("revenue_c"), F.asc("o_custkey"))
-    return (rev.withColumn("decile", F.ntile(10).over(w))
-            .groupBy("decile")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("revenue_c").alias("decile_revenue_c"),
-                 F.min("revenue_c").alias("floor_revenue_c")))
-
-
-SQL_CUSTOMER_VALUE_DECILES = """
-WITH rev AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue_c
-  FROM orders GROUP BY 1
-), banded AS (
-  SELECT o_custkey, revenue_c,
-         ntile(10) OVER (ORDER BY revenue_c DESC, o_custkey) AS decile
-  FROM rev
-)
-SELECT decile, count(*) AS n_customers,
-       CAST(sum(revenue_c) AS BIGINT) AS decile_revenue_c,
-       min(revenue_c) AS floor_revenue_c
-FROM banded GROUP BY decile
-"""
-
-
-def q_customer_value_deciles_approx(spark, sf_dir):
-    """Approx-percentile twin of customer_value_deciles — the shape you
-    run at 10⁹+ customers, where the exact op's global ORDER BY window
-    (single-partition sort) is the scale-killer.
-
-    Structure: revenue per customer in exact integer cents (one keyed
-    shuffle), then ``approx_percentile`` computes the 9 decile cutoffs
-    as a partial-aggregable sketch (no sort, no extra shuffle beyond the
-    tiny final merge), the 1-row cutoff array is broadcast back, and
-    each customer's band is a pure codegen'd expression
-    ``1 + count(cutoffs < revenue)``.  No global sort anywhere; no
-    driver-side collect (the cutoffs travel as a broadcast 1-row cross
-    join, same pattern as the ANN query tile).
-
-    Oracle exactness: with accuracy=10⁶ ≫ |customers|, Spark's
-    QuantileSummaries keeps every sample (targetError = n/accuracy < ½
-    forbids any compression merge, g≥1) and query(p) returns the element
-    at 1-based ascending rank ceil(p·n) — verified empirically for
-    n ∈ {7,10,23,100}.  DuckDB mirrors that rank pick via row_number;
-    k/10.0 parses/computes to bit-identical doubles in both engines, so
-    the cutoffs — and hence the bands — match exactly.  Banding is
-    integer-only (cents), so no float drift downstream.  Band counts
-    differ from the exact ntile op only by tie/boundary placement; the
-    tolerance pytest pins per-band count drift ≤ ε against the exact op.
-    """
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    # rev feeds both the cutoff sketch and the banding scan, but needs
-    # neither a cache (which this op could never unpersist — it would
-    # pin executor storage for the rest of the session) nor a second
-    # scan: the two aggregate subtrees canonicalize identically, so AQE
-    # reuses the shuffle stage (ReusedExchange in the executed plan —
-    # verified at sf0.01)
-    rev = (_t(spark, sf_dir, "orders")
-           .groupBy("o_custkey").agg(F.sum(cents).alias("revenue_c")))
-    cuts = rev.agg(F.expr(
-        "approx_percentile(revenue_c, "
-        "array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D), "
-        "1000000)").alias("cuts"))
-    return (rev.crossJoin(F.broadcast(cuts))
-            .withColumn(
-                "decile",
-                (F.lit(1) + F.expr(
-                    "size(filter(cuts, c -> revenue_c > c))")).cast("long"))
-            .groupBy("decile")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("revenue_c").alias("decile_revenue_c"),
-                 F.min("revenue_c").alias("floor_revenue_c")))
-
-
-SQL_CUSTOMER_VALUE_DECILES_APPROX = """
-WITH rev AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue_c
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT revenue_c,
-         row_number() OVER (ORDER BY revenue_c) AS rk,
-         count(*) OVER () AS n
-  FROM rev
-), cuts AS (
-  SELECT r.revenue_c AS cut
-  FROM generate_series(1, 9) AS g(k)
-  JOIN ranked r ON r.rk = CAST(ceil((g.k / 10.0) * r.n) AS BIGINT)
-), banded AS (
-  SELECT o_custkey, revenue_c,
-         CAST(1 + (SELECT count(*) FROM cuts WHERE revenue_c > cut)
-              AS BIGINT) AS decile
-  FROM rev
-)
-SELECT decile, count(*) AS n_customers,
-       CAST(sum(revenue_c) AS BIGINT) AS decile_revenue_c,
-       min(revenue_c) AS floor_revenue_c
-FROM banded GROUP BY decile
 """
 
 
@@ -1882,10 +443,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     Degenerate buckets (a spam page duplicated 10^7× puts 10^7 ids in one
     band bucket) are dropped by a count-gated cap BEFORE collect_list —
     the same spill-safe window pre-filter as the jaccard op, so no buffer
-    ever holds an unbounded list. Dropped buckets are not silent: audit
-    them with :func:`q_dedup_lsh_dropped_buckets`, which returns each
-    over-cap (band, band_key) with its population so a job can count/log
-    what the pair stage skipped.
+    ever holds an unbounded list.
     """
     return _pairs_from_bands(_lsh_bands(spark, sf_dir))
 
@@ -1949,20 +507,6 @@ def _bands_from_sigs(sigs: DataFrame) -> DataFrame:
                 F.col("bk.band_key").alias("band_key")))
 
 
-def q_dedup_lsh_dropped_buckets(spark, sf_dir):
-    """Audit surface for the LSH cap: every band bucket whose population
-    exceeds ``_LSH_BUCKET_CAP`` (and was therefore excluded from the pair
-    stage), with its size. Empty on healthy corpora; a job logs/metrics
-    this count so cap drops are never silent truncation."""
-    bands = _lsh_bands(spark, sf_dir)
-    return (
-        bands.groupBy("band", "band_key")
-        .agg(F.count("*").alias("bucket_docs"))
-        .filter(F.col("bucket_docs") > _LSH_BUCKET_CAP)
-        .orderBy("band", "band_key")
-    )
-
-
 def _sql_minhash_prefix() -> tuple[str, str]:
     """(mh column list, band UNION selects) shared by the LSH pair oracle
     and the dropped-bucket audit oracle."""
@@ -2010,622 +554,9 @@ FROM bands a JOIN bands b
 SQL_DEDUP_MINHASH = _sql_minhash_bands()
 
 
-def _sql_lsh_dropped_buckets() -> str:
-    mh, band_selects = _sql_minhash_prefix()
-    return f"""
-WITH sh AS (
-  SELECT doc_id, list_distinct(list_transform(
-           range(1, greatest(length(regexp_split_to_array(trim(text), '\\s+')) - 2, 0) + 1),
-           i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\\s+'), i, i + 2), ' ')
-         )) AS shingles
-  FROM documents
-), sigs AS (
-  SELECT doc_id,
-    {mh}
-  FROM sh WHERE length(shingles) > 0
-), bands_all AS (
-{band_selects}
-)
-SELECT band, band_key, count(*) AS bucket_docs
-FROM bands_all
-GROUP BY 1, 2 HAVING count(*) > {_LSH_BUCKET_CAP}
-ORDER BY band, band_key
-"""
-
-
-SQL_LSH_DROPPED_BUCKETS = _sql_lsh_dropped_buckets()
-
-
-def _simhash_bits(prefix: str):
-    """OR-fold of the 32 per-bit set-bit counts ``{prefix}{i}`` into one
-    bigint: bit i is set iff strictly more than half the tokens have it
-    (2·count > n_tokens ⟺ the ±1 vote sum is > 0 — same majority)."""
-    out = F.expr(f"IF(2 * {prefix}0 > n_tokens, cast(1 as bigint),"
-                 f" cast(0 as bigint))")
-    for i in range(1, 32):
-        out = out.bitwiseOR(F.expr(
-            f"IF(2 * {prefix}{i} > n_tokens,"
-            f" shiftleft(cast(1 as bigint), {i}), cast(0 as bigint))"))
-    return out
-
-
-def q_dedup_minhash_estimate(spark, sf_dir):
-    """Estimated Jaccard for the LSH candidate pairs: the fraction of the
-    k minhash positions two documents agree on is an unbiased estimator of
-    their true Jaccard — the standard cheap refinement between candidate
-    generation and (expensive) exact verification. Scale: candidates are
-    the (tiny) LSH output, so the two signature joins shuffle the
-    signature table on doc_id only; no pairwise work beyond candidates."""
-    # cache (NOT an eager checkpoint — plan construction must stay
-    # side-effect free for .explain()/audit tooling): the md5-heavy
-    # signature table is still evaluated once per action, and candidates
-    # AND both join sides reuse the cached rows
-    sigs_cols = _minhash_sigs(spark, sf_dir).cache()
-    pairs = _pairs_from_bands(_bands_from_sigs(sigs_cols))
-    sig = F.array(*[F.col(f"mh{i}") for i in range(_MINHASH_SEEDS)])
-    sigs = sigs_cols.select("doc_id", sig.alias("sig"))
-    a = sigs.select(F.col("doc_id").alias("id_a"),
-                    F.col("sig").alias("sig_a"))
-    b = sigs.select(F.col("doc_id").alias("id_b"),
-                    F.col("sig").alias("sig_b"))
-    agree = F.size(F.expr(
-        "filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)"))
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .withColumn("agree", agree)
-        # agreement fraction in 10⁻⁴ units, exact integer division
-        .select("id_a", "id_b", F.expr(
-            f"(2 * agree * 10000 + {_MINHASH_SEEDS})"
-            f" DIV (2 * {_MINHASH_SEEDS})").alias("est_jaccard_e4"))
-    )
-
-
-def _sql_minhash_estimate() -> str:
-    mh, _bands = _sql_minhash_prefix()
-    agree = " + ".join(
-        f"CAST(a.mh{i} = b.mh{i} AS INT)" for i in range(_MINHASH_SEEDS))
-    return f"""
-WITH candidates AS ({SQL_DEDUP_MINHASH}),
-sh AS (
-  SELECT doc_id, list_distinct(list_transform(
-           range(1, greatest(length(regexp_split_to_array(trim(text), '\\s+')) - 2, 0) + 1),
-           i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\\s+'), i, i + 2), ' ')
-         )) AS shingles
-  FROM documents
-), sigs AS (
-  SELECT doc_id,
-    {mh}
-  FROM sh WHERE length(shingles) > 0
-)
-SELECT c.id_a, c.id_b,
-       (2 * ({agree}) * 10000 + {_MINHASH_SEEDS})
-           // (2 * {_MINHASH_SEEDS}) AS est_jaccard_e4
-FROM candidates c
-JOIN sigs a ON c.id_a = a.doc_id
-JOIN sigs b ON c.id_b = b.doc_id
-"""
-
-
-SQL_DEDUP_MINHASH_ESTIMATE = _sql_minhash_estimate()
-
-
-def q_dedup_simhash(spark, sf_dir):
-    """64-bit SimHash per document as two 32-bit halves (hi/lo — two
-    bigints sidestep signed-64 overflow in both engines). md5 instead of
-    xxhash64 keeps the op engine-portable so DuckDB can verify it (the
-    round-2 xxhash64 version was rows-only).
-
-    r9 shape: tokens explode once and the 64 per-bit set-bit counts are
-    plain SUM aggregates per doc (whole-stage codegen, map-side partials; the
-    shuffle carries per-partition partial sums, ≤ docs × 64 longs). The
-    former nested aggregate/zip_with HOF form evaluated interpreted
-    lambdas per token and allocated a fresh 32-element array per token
-    per half — and computed md5(t) twice per token; here the md5 runs
-    once per token inside codegen (same values: per-token 32-bit hash →
-    per-bit vote → majority bit set). Near-dup candidates come from
-    :func:`q_dedup_simhash_pairs` (exact Hamming ≤ 3 via 16-bit
-    pigeonhole banding on these halves)."""
-    d = _t_wide(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.coalesce(F.col("text"),
-                                                    F.lit("")))),
-                          r"\s+")).alias("tok"))
-    h = (toks.select("doc_id", F.md5("tok").alias("m"))
-         .select("doc_id",
-                 F.expr("cast(conv(substr(m, 1, 8), 16, 10) as bigint)")
-                 .alias("h_hi"),
-                 F.expr("cast(conv(substr(m, 9, 8), 16, 10) as bigint)")
-                 .alias("h_lo")))
-    votes = h.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        *[F.sum(F.expr(f"(h_hi >> {i}) & 1"))
-          .alias(f"vh{i}") for i in range(32)],
-        *[F.sum(F.expr(f"(h_lo >> {i}) & 1"))
-          .alias(f"vl{i}") for i in range(32)])
-    return votes.select(
-        "doc_id", "n_tokens",
-        _simhash_bits("vh").alias("simhash_hi"),
-        _simhash_bits("vl").alias("simhash_lo"))
-
-
-SQL_DEDUP_SIMHASH = """
-WITH h AS (
-  SELECT doc_id,
-    regexp_split_to_array(lower(trim(coalesce(text, ''))), '\\s+') AS toks
-  FROM documents
-), hh AS (
-  SELECT doc_id, len(toks) AS n_tokens,
-    list_transform(toks, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS h_hi,
-    list_transform(toks, t -> ('0x' || substr(md5(t), 9, 8))::BIGINT) AS h_lo
-  FROM h
-)
-SELECT doc_id, n_tokens,
-  CAST(list_aggregate(list_transform(range(0, 32), i ->
-    CASE WHEN len(list_filter(h_hi, x -> ((x >> i) & 1) = 1)) * 2 > len(h_hi)
-         THEN (1::BIGINT << i) ELSE 0 END), 'sum') AS BIGINT) AS simhash_hi,
-  CAST(list_aggregate(list_transform(range(0, 32), i ->
-    CASE WHEN len(list_filter(h_lo, x -> ((x >> i) & 1) = 1)) * 2 > len(h_lo)
-         THEN (1::BIGINT << i) ELSE 0 END), 'sum') AS BIGINT) AS simhash_lo
-FROM hh
-"""
-
-
-_SIMHASH_MAX_HAMMING = 3  # 4 × 16-bit bands ⇒ exact for distance ≤ 3
-
-
-def q_dedup_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs: Hamming distance ≤ 3 over the 64-bit
-    signature, found WITHOUT a pairwise scan.
-
-    Pigeonhole banding: the 64 bits split into four 16-bit bands; any two
-    signatures within Hamming distance 3 agree exactly on at least one
-    band (3 differing bits can dirty at most 3 of the 4 bands). So
-    candidates = documents sharing a (band, key) bucket — an equi-join
-    shape, work ∝ bucket co-occupancy. The verify stage then computes the
-    exact distance via xor + bit_count (JVM codegen) and filters ≤ 3; the
-    banding is exact (no recall loss) for this radius.
-
-    Scale: same count-gated hot-bucket cap as the LSH op before any
-    collect_list (a degenerate 16-bit band key shared by 10^7 short docs
-    can't OOM a buffer), pair gen is the two-stage explode, and the final
-    signature joins shuffle on doc_id — all bounded, no O(n²) anywhere.
-    """
-    # The 3-bigint signature table is materialized eagerly (r9
-    # follow-up, §5 caching): bands + both verify join legs read it, and
-    # while AQE exchange reuse already ran the 64-sum agg once at
-    # runtime, the COLD single-shot cost (the bench's methodology) paid
-    # Catalyst planning + codegen for the md5/shingle subtree three
-    # times — measured 8.2 → 7.5 s cold at sf0.1, 11.9 → 10.6 s at 25k
-    # docs. Unlike the prefix-filter token arrays (where this exact
-    # experiment lost), the checkpoint payload here is doc_id + two
-    # bigints — O(docs), not O(corpus). On a real cluster swap for
-    # checkpoint()/a table write, as with _cluster_edges.
-    sigs = (q_dedup_simhash(spark, sf_dir).drop("n_tokens")
-            .localCheckpoint(eager=True))
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(
-                    F.col("simhash_hi" if b < 2 else "simhash_lo"),
-                    (b % 2) * 16).bitwiseAND(F.lit(0xFFFF))
-                .alias("band_key"))
-            for b in range(4)])).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"),
-             F.col("bk.band_key").alias("band_key"))
-    safe = _drop_hot_keys(bands, ["band", "band_key"], _LSH_BUCKET_CAP)
-    grouped = (safe.groupBy("band", "band_key")
-               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-               .filter(F.size("ids") >= 2))
-    cand = _explode_pairs(grouped).distinct()
-    sa = sigs.select(F.col("doc_id").alias("id_a"),
-                     F.col("simhash_hi").alias("hi_a"),
-                     F.col("simhash_lo").alias("lo_a"))
-    sb = sigs.select(F.col("doc_id").alias("id_b"),
-                     F.col("simhash_hi").alias("hi_b"),
-                     F.col("simhash_lo").alias("lo_b"))
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "hamming",
-            (F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-             + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b"))))
-            .cast("int"))
-        .filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-SQL_DEDUP_SIMHASH_PAIRS = f"""
-WITH h AS (
-  SELECT doc_id,
-    regexp_split_to_array(lower(trim(coalesce(text, ''))), '\\s+') AS toks
-  FROM documents
-), hh AS (
-  SELECT doc_id,
-    list_transform(toks, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS h_hi,
-    list_transform(toks, t -> ('0x' || substr(md5(t), 9, 8))::BIGINT) AS h_lo
-  FROM h
-), sigs AS (
-  SELECT doc_id,
-    CAST(list_aggregate(list_transform(range(0, 32), i ->
-      CASE WHEN len(list_filter(h_hi, x -> ((x >> i) & 1) = 1)) * 2 > len(h_hi)
-           THEN (1::BIGINT << i) ELSE 0 END), 'sum') AS BIGINT) AS simhash_hi,
-    CAST(list_aggregate(list_transform(range(0, 32), i ->
-      CASE WHEN len(list_filter(h_lo, x -> ((x >> i) & 1) = 1)) * 2 > len(h_lo)
-           THEN (1::BIGINT << i) ELSE 0 END), 'sum') AS BIGINT) AS simhash_lo
-  FROM hh
-), bands_all AS (
-  SELECT doc_id, b AS band,
-    CASE b WHEN 0 THEN simhash_hi & 65535
-           WHEN 1 THEN (simhash_hi >> 16) & 65535
-           WHEN 2 THEN simhash_lo & 65535
-           ELSE (simhash_lo >> 16) & 65535 END AS band_key
-  FROM sigs, (SELECT unnest(range(0, 4)) AS b)
-), hot AS (
-  SELECT band, band_key FROM bands_all
-  GROUP BY 1, 2 HAVING count(*) > {_LSH_BUCKET_CAP}
-), bands AS (
-  SELECT bands_all.* FROM bands_all
-  ANTI JOIN hot USING (band, band_key)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b,
-  CAST(bit_count(xor(sa.simhash_hi, sb.simhash_hi))
-       + bit_count(xor(sa.simhash_lo, sb.simhash_lo)) AS INT) AS hamming
-FROM cand
-JOIN sigs sa ON id_a = sa.doc_id
-JOIN sigs sb ON id_b = sb.doc_id
-WHERE bit_count(xor(sa.simhash_hi, sb.simhash_hi))
-      + bit_count(xor(sa.simhash_lo, sb.simhash_lo)) <= {_SIMHASH_MAX_HAMMING}
-"""
-
-
 # --------------------------------------------------------------------------
 # Embedding similarity ops
 # --------------------------------------------------------------------------
-
-def q_token_histogram(spark, sf_dir):
-    """Token-count distribution per language (log2 buckets) — the length
-    histogram every dataset card reports and every curation pass filters
-    on. One groupBy over (lang, bucket); the bucket is a codegen'd
-    expression on the scan. Null text coalesces to '' (1 token) in BOTH
-    engines — Spark's size(split(NULL)) is -1 while DuckDB's len(NULL)
-    is NULL, so an uncoalesced null doc would diverge."""
-    n_tokens = F.size(F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))),
-                              r"\s+"))
-    bucket = F.floor(F.log2(F.greatest(n_tokens, F.lit(1)))).cast("int")
-    return (
-        _t(spark, sf_dir, "documents")
-        .groupBy(F.col("lang"), bucket.alias("log2_tokens"))
-        .agg(F.count("*").alias("n_docs"),
-             F.min(n_tokens).alias("min_tokens"),
-             F.max(n_tokens).alias("max_tokens"))
-    )
-
-
-SQL_TOKEN_HISTOGRAM = """
-WITH t AS (
-  SELECT lang,
-         len(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))
-             AS n_tokens
-  FROM documents
-)
-SELECT lang,
-       CAST(floor(log2(greatest(n_tokens, 1))) AS INT) AS log2_tokens,
-       count(*) AS n_docs,
-       CAST(min(n_tokens) AS INT) AS min_tokens,
-       CAST(max(n_tokens) AS INT) AS max_tokens
-FROM t GROUP BY 1, 2
-"""
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 quantization of the embedding column (per-vector
-    absmax scale) — the storage/serving transform a 100 TB embedding
-    table ships with (4× smaller, dot products in int8). Output is the
-    audit view (scale + L1 mass + first element) rather than the raw
-    int8 array so the cross-engine value-hash compares scalars, not
-    array-rendering conventions. All higher-order JVM expressions, no
-    shuffle, no Python."""
-    scale = F.expr(
-        "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")
-    q = ("transform(embedding,"
-         " x -> CAST(round(CAST(x AS DOUBLE) / _scale * 127) AS INT))")
-    return (
-        _t(spark, sf_dir, "embeddings")
-        .withColumn("_scale", scale)
-        .filter(F.col("_scale") > 0)
-        .withColumn("_q", F.expr(q))
-        .select("vec_id",
-                # scale×10⁶ as bigint: floor(x·1e6 + 0.5) is one
-                # deterministic IEEE multiply + floor, identical in both
-                # engines (round(double, 6) is not)
-                F.expr("CAST(floor(_scale * 1000000 + 0.5) AS BIGINT)")
-                .alias("q_scale_e6"),
-                F.expr("aggregate(_q, 0L, (s, v) -> s + abs(v))")
-                .alias("q_l1"),
-                F.element_at("_q", 1).alias("q0"))
-    )
-
-
-SQL_EMBEDDING_QUANTIZE = """
-WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding,
-                  x -> abs(CAST(x AS DOUBLE)))) AS scale
-  FROM embeddings
-), q AS (
-  SELECT vec_id, scale,
-         list_transform(embedding,
-           x -> CAST(round(CAST(x AS DOUBLE) / scale * 127) AS INT)) AS qv
-  FROM s WHERE scale > 0
-)
-SELECT vec_id, CAST(floor(scale * 1000000 + 0.5) AS BIGINT) AS q_scale_e6,
-       CAST(list_sum(list_transform(qv, v -> abs(v))) AS BIGINT) AS q_l1,
-       qv[1] AS q0
-FROM q
-"""
-
-
-def q_embedding_norms(spark, sf_dir):
-    """L2 norms via higher-order aggregate — JVM-side, vectorizable.
-    The square-sum folds the array IN ELEMENT ORDER in both engines (a
-    per-row array, not a distributed sum — no ordering hazard), and the
-    norm is emitted ×10³ via the deterministic floor formula instead of
-    ``round(double, 3)``."""
-    return (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id",
-                F.expr(
-                    "CAST(floor(sqrt(aggregate(embedding,"
-                    " CAST(0 AS DOUBLE),"
-                    " (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-                    " * 1000 + 0.5) AS BIGINT)").alias("l2_norm_e3"))
-    )
-
-
-SQL_EMBEDDING_NORMS = """
-SELECT vec_id,
-       CAST(floor(sqrt(list_sum(list_transform(embedding,
-            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 1000 + 0.5)
-            AS BIGINT) AS l2_norm_e3
-FROM embeddings
-"""
-
-
-def q_ann_topk_cosine(spark, sf_dir):
-    """Brute-force cosine top-k for a query set (vec_id < 5, k=3).
-
-    Baseline scale path: broadcast the query vectors, one pass over the
-    corpus computing dot products JVM-side, per-query top-k via window.
-    Scores are dropped from the output (rank only) so engine float noise
-    can't flip the value-hash; rank ties broken by vec_id.
-    """
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    dot = F.expr(
-        "aggregate(zip_with(embedding, qv,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (s, x) -> s + x)")
-    norm = (lambda c: F.sqrt(F.expr(
-        f"aggregate({c}, CAST(0 AS DOUBLE),"
-        f" (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id"))
-    return (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", dot / (norm("embedding") * norm("qv")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-
-
-SQL_ANN_TOPK = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-         list_sum(list_transform(range(1, len(e.embedding) + 1),
-            i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(e.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qv,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id != q.query_id
-)
-SELECT query_id, vec_id AS neighbor_id,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, vec_id ASC) AS rank
-FROM scored
-QUALIFY rank <= 3
-"""
-
-
-def q_ann_topk_ivf(spark, sf_dir):
-    """IVF-style ANN top-k — the scale path next to the exact
-    ``ann_topk_cosine`` baseline.
-
-    A deterministic coarse quantizer (sign pattern of the first 8 dims =
-    256 cells, an LSH stand-in for trained k-means centroids) assigns
-    every corpus vector to a cell; each query probes ONLY its own cell
-    (nprobe=1) and ranks candidates by cosine. The probe is an EQUI-JOIN
-    on the cell key, so per-query work is proportional to one cell's
-    population instead of the corpus — the property that matters at
-    10^9+ vectors, where the broadcast brute-force baseline stops being
-    an option. Recall tradeoff (neighbors in adjacent cells are missed)
-    is the standard IVF nprobe knob; raise it by unioning probes over
-    neighboring sign patterns. Rank-only output, ties by vec_id, so
-    engine float noise can't flip the value-hash.
-    """
-    emb = _t(spark, sf_dir, "embeddings")
-    cell = F.expr(
-        "concat_ws('', transform(slice(embedding, 1, 8),"
-        " x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END))")
-    d = emb.select("vec_id", "embedding", cell.alias("cell"))
-    queries = (d.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qv"),
-                       F.col("cell").alias("qcell")))
-    dot = F.expr(
-        "aggregate(zip_with(embedding, qv,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (s, x) -> s + x)")
-    norm = (lambda c: F.sqrt(F.expr(
-        f"aggregate({c}, CAST(0 AS DOUBLE),"
-        f" (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id"))
-    return (
-        d.join(F.broadcast(queries), F.col("cell") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", dot / (norm("embedding") * norm("qv")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-
-
-_IVF_FLIPS = 3  # multi-probe: own cell + 3 least-confident bit flips
-
-
-def q_ann_topk_ivf_mp(spark, sf_dir):
-    """Multi-probe IVF ANN top-k (nprobe = 1 + ``_IVF_FLIPS``).
-
-    Same 256-cell sign quantizer as ``q_ann_topk_ivf``, but each query also
-    probes the cells reached by flipping its LEAST-CONFIDENT sign bits —
-    the dims with the smallest |value|, where the true neighbor most
-    plausibly sits on the other side of the hyperplane. That is the
-    standard multi-probe LSH/IVF recall knob: recall rises toward the
-    exact baseline (measured as recall@3 in bench.py) while per-query work
-    stays ∝ nprobe cells, not the corpus. Plan shape is unchanged — probe
-    cells explode to (query, cell) rows and candidates come from the same
-    equi-join on the cell key; every vector lives in exactly one cell so
-    probes never duplicate a candidate. Deterministic and
-    engine-portable: flip order is (|value|, dim) lexicographic, ranks
-    tie-break by vec_id.
-    """
-    emb = _t(spark, sf_dir, "embeddings")
-    base = ("transform(slice(embedding, 1, 8),"
-            " x -> IF(x >= 0, '1', '0'))")
-    # dims of the first 8, ordered by ascending |value| (ties by dim index
-    # via lexicographic struct sort)
-    order = ("transform(array_sort(zip_with(slice(embedding, 1, 8),"
-             " sequence(0, 7), (x, i) ->"
-             " struct(CAST(abs(x) AS DOUBLE) AS a, i AS i))), s -> s.i)")
-    probes = F.expr(f"""
-      concat(
-        array(concat_ws('', {base})),
-        transform(slice({order}, 1, {_IVF_FLIPS}), fi ->
-          concat_ws('', transform(sequence(0, 7), j ->
-            IF(j = fi,
-               IF(element_at({base}, j + 1) = '1', '0', '1'),
-               element_at({base}, j + 1))))))
-    """)
-    cell = F.expr(
-        "concat_ws('', transform(slice(embedding, 1, 8),"
-        " x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END))")
-    d = emb.select("vec_id", "embedding", cell.alias("cell"))
-    queries = (emb.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qv"),
-                       F.explode(probes).alias("qcell")))
-    dot = F.expr(
-        "aggregate(zip_with(embedding, qv,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (s, x) -> s + x)")
-    norm = (lambda c: F.sqrt(F.expr(
-        f"aggregate({c}, CAST(0 AS DOUBLE),"
-        f" (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id"))
-    return (
-        d.join(F.broadcast(queries), F.col("cell") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", dot / (norm("embedding") * norm("qv")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-
-
-SQL_ANN_TOPK_IVF_MP = f"""
-WITH cells AS (
-  SELECT vec_id, embedding,
-         array_to_string(list_transform(list_slice(embedding, 1, 8),
-            x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS cell
-  FROM embeddings
-), qbase AS (
-  SELECT vec_id AS query_id, embedding AS qv,
-         list_transform(list_slice(embedding, 1, 8),
-            x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END) AS bits,
-         list_transform(list_sort(list_transform(range(1, 9),
-            i -> {{'a': abs(CAST(embedding[i] AS DOUBLE)), 'i': i - 1}})),
-            s -> s.i) AS flip_order
-  FROM embeddings WHERE vec_id < 5
-), q AS (
-  SELECT query_id, qv, array_to_string(bits, '') AS qcell FROM qbase
-  UNION ALL
-  SELECT query_id, qv,
-         array_to_string(list_transform(range(0, 8), j ->
-            CASE WHEN j = fi
-                 THEN (CASE WHEN bits[j + 1] = '1' THEN '0' ELSE '1' END)
-                 ELSE bits[j + 1] END), '') AS qcell
-  FROM qbase, unnest(list_slice(flip_order, 1, {_IVF_FLIPS})) AS t(fi)
-), scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_sum(list_transform(range(1, len(c.embedding) + 1),
-            i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(c.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qv,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos,
-         row_number() OVER (PARTITION BY q.query_id
-                            ORDER BY cos DESC, c.vec_id ASC) AS rank
-  FROM cells c JOIN q ON c.cell = q.qcell
-  WHERE c.vec_id != q.query_id
-)
-SELECT query_id, vec_id AS neighbor_id, rank
-FROM scored
-WHERE rank <= 3
-"""
-
-
-SQL_ANN_TOPK_IVF = """
-WITH cells AS (
-  SELECT vec_id, embedding,
-         array_to_string(list_transform(list_slice(embedding, 1, 8),
-            x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS cell
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qv, cell AS qcell
-  FROM cells WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_sum(list_transform(range(1, len(c.embedding) + 1),
-            i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(c.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qv,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-  FROM cells c JOIN q ON c.cell = q.qcell
-  WHERE c.vec_id != q.query_id
-)
-SELECT query_id, vec_id AS neighbor_id,
-       row_number() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, vec_id ASC) AS rank
-FROM scored
-QUALIFY rank <= 3
-"""
 
 
 def train_ivf_centroids(emb: DataFrame, k: int = 8,
@@ -2690,7 +621,7 @@ def assign_ivf_cells(df: DataFrame, centroids: list[list[float]],
             .drop("_dists"))
 
 
-# Coarse quantizer for q_ann_topk_ivf_kmeans: 8 centroids trained by
+# Coarse quantizer for the IVF cell assignment: 8 centroids trained by
 # tools/train_ivf.py (train_ivf_centroids over sf0.01 embeddings, Lloyd
 # ×8, deterministic init, rounded to 4dp). FIXED LITERALS so the DuckDB
 # oracle assigns with bit-identical arithmetic — the pretrained-quantizer
@@ -2699,165 +630,6 @@ try:
     from .ivf_centroids import IVF_KMEANS_CENTROIDS
 except ImportError:  # pragma: no cover - regenerate with tools/train_ivf.py
     IVF_KMEANS_CENTROIDS = None
-
-
-def q_ann_topk_ivf_kmeans(spark, sf_dir):
-    """IVF ANN top-k over a TRAINED coarse quantizer (k-means centroids as
-    pretrained literals — see ``train_ivf_centroids`` for the trainer and
-    ``tools/train_ivf.py`` for provenance).
-
-    Same probe shape as ``q_ann_topk_ivf`` (equi-join on the cell key,
-    per-query work ∝ cell population), but cells follow the DATA: on
-    clustered embeddings a trained quantizer puts true neighbors in the
-    query's cell with high probability, so nprobe=1 recall is meaningful
-    (measured against the sign quantizer in bench.py's clustered-recall
-    probe). Assignment is a literal-centroid argmin — a codegen'd map over
-    the scan, no shuffle, no Python."""
-    if IVF_KMEANS_CENTROIDS is None:
-        raise RuntimeError("run tools/train_ivf.py to generate "
-                           "trek_spark/spark/ivf_centroids.py")
-    emb = _t(spark, sf_dir, "embeddings")
-    d = assign_ivf_cells(emb, IVF_KMEANS_CENTROIDS)
-    return ivf_topk_from_cells(d)
-
-
-def ivf_topk_from_cells(d: DataFrame, n_queries: int = 5,
-                        k: int = 3) -> DataFrame:
-    """(vec_id, embedding, cell) → per-query cosine top-k WITHIN the
-    query's cell: the shared probe stage of every IVF variant (equi-join
-    on the cell key, broadcast queries, window rank — per-query work ∝
-    cell population, never the corpus)."""
-    queries = (d.filter(F.col("vec_id") < n_queries)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qv"),
-                       F.col("cell").alias("qcell")))
-    dot = F.expr(
-        "aggregate(zip_with(embedding, qv,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (s, x) -> s + x)")
-    norm = (lambda c: F.sqrt(F.expr(
-        f"aggregate({c}, CAST(0 AS DOUBLE),"
-        f" (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id"))
-    return (
-        d.join(F.broadcast(queries), F.col("cell") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", dot / (norm("embedding") * norm("qv")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-
-
-def _sql_ann_topk_ivf_kmeans() -> str:
-    """Oracle from the SAME centroid literals (single source of truth)."""
-    if IVF_KMEANS_CENTROIDS is None:
-        return None
-    rows = ",\n    ".join(
-        "({}, [{}]::DOUBLE[])".format(
-            i, ",".join(repr(x) for x in c))
-        for i, c in enumerate(IVF_KMEANS_CENTROIDS))
-    return f"""
-WITH cent(cid, c) AS (VALUES
-    {rows}
-), dists AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         list_sum(list_transform(range(1, len(e.embedding) + 1),
-            i -> (CAST(e.embedding[i] AS DOUBLE) - c.c[i])
-                 * (CAST(e.embedding[i] AS DOUBLE) - c.c[i]))) AS d
-  FROM embeddings e CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, embedding, cid AS cell
-  FROM dists
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) = 1
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qv, cell AS qcell
-  FROM assigned WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, a.vec_id,
-         list_sum(list_transform(range(1, len(a.embedding) + 1),
-            i -> CAST(a.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(a.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qv,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-  FROM assigned a JOIN q ON a.cell = q.qcell
-  WHERE a.vec_id != q.query_id
-)
-SELECT query_id, vec_id AS neighbor_id,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, vec_id ASC) AS rank
-FROM scored
-QUALIFY rank <= 3
-"""
-
-
-SQL_ANN_TOPK_IVF_KMEANS = _sql_ann_topk_ivf_kmeans()
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (cos > 0.95) via LSH-style bucketing:
-    sign of the first 24 dims forms the bucket key; only same-bucket pairs
-    are compared. 24 bits ≈ 16M buckets, so at 10^9 vectors the expected
-    bucket population is ~60 and the in-bucket pair join stays tiny (an
-    8-bit key capped out at 256 buckets — round-1 VERDICT). Recall
-    tradeoff: a 0.95-cosine pair that flips one of the first 24 signs is
-    missed; for recall-critical workloads use q_ann_topk_cosine (exact) or
-    add rotated probe keys.
-
-    Degenerate buckets are capped like the text-dedup ops: a
-    mass-duplicated embedding (zero vectors from a failed embedding job,
-    boilerplate docs) would otherwise make one bucket's self-join group
-    |bucket|²/2 rows — 10^14 at 10^7 copies. Buckets above the cap are
-    excluded (window count, spill-safe) in BOTH engines.
-    """
-    emb = _t(spark, sf_dir, "embeddings")
-    bucket = F.expr(
-        "concat_ws('', transform(slice(embedding, 1, 24),"
-        " x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END))")
-    d = _drop_hot_keys(
-        emb.select("vec_id", "embedding", bucket.alias("bucket")),
-        ["bucket"], _LSH_BUCKET_CAP)
-    a = d.alias("a")
-    b = d.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.embedding, b.embedding,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (s, x) -> s + x)")
-    norm = (lambda side: F.sqrt(F.expr(
-        f"aggregate({side}.embedding, CAST(0 AS DOUBLE),"
-        f" (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .withColumn("cos", dot / (norm("a") * norm("b")))
-        .filter(F.col("cos") > 0.95)
-        .select(F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"))
-    )
-
-
-SQL_EMBEDDING_NEAR_DUP = f"""
-WITH d_all AS (
-  SELECT vec_id, embedding,
-         array_to_string(list_transform(list_slice(embedding, 1, 24),
-             x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket
-  FROM embeddings
-), hot AS (
-  SELECT bucket FROM d_all GROUP BY 1 HAVING count(*) > {_LSH_BUCKET_CAP}
-), d AS (
-  SELECT d_all.* FROM d_all ANTI JOIN hot USING (bucket)
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b
-FROM d a JOIN d b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE list_sum(list_transform(range(1, len(a.embedding) + 1),
-         i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(a.embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(b.embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) > 0.95
-"""
 
 
 # --------------------------------------------------------------------------
@@ -2889,108 +661,6 @@ def sample_keep_cond() -> F.Column:
     return tick < rate
 
 
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling — the training-mix curation
-    staple (downsample dominant languages, keep the tail). The keep
-    decision is a pure function of doc_id (md5-prefix < per-language
-    ceiling), so the sample is reproducible across runs, engines, and
-    cluster sizes — no RNG state, no seed-per-partition coupling, and
-    resuming a job re-derives the identical sample. Scale: a codegen'd
-    filter over the scan; no shuffle, no sampling pass."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .filter(sample_keep_cond())
-        .select("doc_id", "lang", "source")
-    )
-
-
-def _sql_stratified_sample() -> str:
-    cases = " ".join(
-        f"WHEN '{lang}' THEN '{ceil}'"
-        for lang, ceil in _SAMPLE_RATES.items())
-    return f"""
-SELECT doc_id, lang, source
-FROM documents
-WHERE substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 4)
-      < (CASE lang {cases} ELSE '{_SAMPLE_DEFAULT}' END)
-"""
-
-
-SQL_STRATIFIED_SAMPLE = _sql_stratified_sample()
-
-
-def q_source_mix_weights(spark, sf_dir):
-    """Training-mix weights per source: document/char counts and each
-    source's share of the corpus in BASIS POINTS — the input to mixture
-    reweighting. One groupBy shuffle over |sources| groups; the corpus
-    totals join back as a broadcast single row (computed once, not per
-    group). Shares are exact rounded integer division of bigint counts —
-    the r5 ``round(double, 4)`` emission hash-mismatched on a
-    representation tie."""
-    docs = _t(spark, sf_dir, "documents")
-    per_source = docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"))
-    totals = docs.agg(F.count("*").alias("tot_docs"),
-                      F.sum("n_chars").alias("tot_chars"))
-    return (
-        per_source.crossJoin(F.broadcast(totals))
-        .select("source", "n_docs", "n_chars",
-                F.expr("(2 * n_docs * 10000 + tot_docs) DIV (2 * tot_docs)")
-                .alias("doc_frac_bp"),
-                F.expr("(2 * n_chars * 10000 + tot_chars)"
-                       " DIV (2 * tot_chars)")
-                .alias("char_frac_bp"))
-    )
-
-
-SQL_SOURCE_MIX_WEIGHTS = """
-SELECT source, count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CAST((2 * count(*) * 10000 + (SELECT count(*) FROM documents))
-            // (2 * (SELECT count(*) FROM documents)) AS BIGINT)
-           AS doc_frac_bp,
-       CAST((2 * sum(n_chars) * 10000
-             + (SELECT sum(n_chars) FROM documents))
-            // (2 * (SELECT sum(n_chars) FROM documents)) AS BIGINT)
-           AS char_frac_bp
-FROM documents GROUP BY source
-"""
-
-
-def q_source_mix_sample(spark, sf_dir):
-    """TEMPERATURE-scaled source mixing (α = 0.5) with a deterministic
-    hash sampler — the multilingual/multi-source rebalancing staple
-    (mT5/XLM-R style): target shares ∝ count^α flatten the source
-    distribution (big sources downweighted, tail sources upweighted
-    relative to natural share), then each doc's keep decision is a pure
-    function of doc_id against its source's quota, for a total budget
-    of half the corpus.
-
-    Exactness discipline: per-source ``floor(sqrt(n)·10⁴)`` is TWO
-    deterministic IEEE ops on an exact integer (the convention that
-    single float ops are bit-portable, multi-term float sums are not)
-    frozen to bigint before any cross-source arithmetic; quotas and the
-    keep threshold are exact integer division from there. The keep
-    test hashes doc_id into a 16-bit tick (md5-prefix, like
-    stratified_sample) and keeps while ``tick·n_docs < quota·65536`` —
-    reproducible across engines, runs, and cluster sizes (a resumed or
-    re-partitioned job re-derives the identical sample; no RNG state).
-
-    Scale: one |sources|-group aggregate, a 1-row totals broadcast, the
-    plan broadcast back onto the corpus scan as a codegen'd filter —
-    the corpus itself is never shuffled."""
-    docs = _t(spark, sf_dir, "documents")
-    plan = mix_plan(docs)
-    kept = (docs.select("doc_id", "source")
-            .join(F.broadcast(plan), "source")
-            .filter(F.expr(MIX_KEEP_COND)))
-    return (kept.groupBy("source", "n_docs", "quota", "alpha_share_bp")
-            .agg(F.count("*").alias("n_kept"))
-            .select("source", "n_docs", "alpha_share_bp", "quota",
-                    "n_kept"))
-
-
 #: 16-bit md5 tick of doc_id (namespace 'mix:') vs the source quota —
 #: the keep predicate of the temperature sampler; needs columns
 #: doc_id, n_docs, quota in scope (join mix_plan() first)
@@ -3003,8 +673,7 @@ def mix_plan(docs: DataFrame, budget_div: int = 2) -> DataFrame:
     """Per-source (n_docs, quota, alpha_share_bp) for the α=0.5
     temperature mix over ``docs`` (any DataFrame with a ``source``
     column — curate_job feeds it the post-dedup survivor set, the
-    oracle op the raw table). Budget = total docs DIV ``budget_div``.
-    See q_source_mix_sample for the exactness discipline."""
+    oracle the raw table). Budget = total docs DIV ``budget_div``."""
     per_source = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"))
     sq = per_source.withColumn(
@@ -3020,36 +689,6 @@ def mix_plan(docs: DataFrame, budget_div: int = 2) -> DataFrame:
                         F.expr("(2 * sq * 10000 + tot_sq)"
                                " DIV (2 * tot_sq)"))
             .select("source", "n_docs", "quota", "alpha_share_bp"))
-
-
-SQL_SOURCE_MIX_SAMPLE = """
-WITH per_source AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM documents
-  GROUP BY source
-), sq AS (
-  SELECT source, n_docs,
-         CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 10000) AS BIGINT)
-             AS sq
-  FROM per_source
-), tot AS (
-  SELECT CAST(sum(sq) AS BIGINT) AS tot_sq,
-         CAST(sum(n_docs) AS BIGINT) AS tot_docs
-  FROM sq
-), plan AS (
-  SELECT source, n_docs,
-         CAST((tot_docs // 2) * sq // tot_sq AS BIGINT) AS quota,
-         CAST((2 * sq * 10000 + tot_sq) // (2 * tot_sq) AS BIGINT)
-             AS alpha_share_bp
-  FROM sq CROSS JOIN tot
-)
-SELECT p.source, p.n_docs, p.alpha_share_bp, p.quota,
-       CAST(count(*) AS BIGINT) AS n_kept
-FROM documents d JOIN plan p USING (source)
-WHERE CAST(concat('0x', substr(md5(concat('mix:',
-           CAST(d.doc_id AS VARCHAR))), 1, 4)) AS BIGINT) * p.n_docs
-      < p.quota * 65536
-GROUP BY p.source, p.n_docs, p.quota, p.alpha_share_bp
-"""
 
 
 _CONTAM_SHINGLE_N = 5   # word n-gram width for decontamination
@@ -3234,78 +873,6 @@ WHERE 10 * levenshtein(p_doc, p_bench)
 """
 
 
-def q_tfidf_top_terms(spark, sf_dir):
-    """TF-IDF top-3 terms per document — the classic corpus-statistics op
-    (keyword extraction / topical tagging for training-data analysis).
-
-    Terms: lowercase, non-alphanumerics → space, tokens of length ≥ 3.
-    tf = in-doc count, idf = ln(N / df) with df over distinct docs; the
-    score is emitted ×10⁴ via the shared ``floor(x·1e4 + 0.5)`` formula
-    in BOTH engines and RANKED ON THE QUANTIZED INTEGER (ties break on
-    the term), so only a 1-ulp libm ln() divergence landing exactly on a
-    .5 boundary could flip anything (round(double,4)'s algorithmic
-    divergence cannot). Scale: explode → one (term×doc) aggregation, df
-    as a window count over the term shuffle, then a window top-k per
-    doc; the doc count joins in as a broadcast scalar. All shuffles are
-    on term/doc keys — no pairwise anything."""
-    docs = _t(spark, sf_dir, "documents")
-    terms = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.regexp_replace(
-                F.lower("text"), "[^a-z0-9]+", " "), " ")).alias("term"))
-        .filter(F.length("term") >= 3))
-    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    n_docs = docs.agg(F.count("*").alias("n_docs"))
-    # df as a WINDOW count over the term shuffle (r9 follow-up, §2.4):
-    # the former groupBy(term) + join-back re-sorted the tf stream
-    # against its own aggregate; the window count per term is the same
-    # df (tf has one row per (doc, term)) on one exchange, no join.
-    # Hot-term rows colocate either way (the old join's probe side
-    # shuffled them identically), and WindowExec spills.
-    scored = (
-        tf.withColumn("df",
-                      F.count(F.lit(1)).over(Window.partitionBy("term")))
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn("tfidf_e4", F.expr(
-            "CAST(floor(tf * ln(CAST(n_docs AS DOUBLE) / df) * 10000"
-            " + 0.5) AS BIGINT)")))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("tfidf_e4"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("doc_id", "term", "tfidf_e4", "rank")
-    )
-
-
-SQL_TFIDF_TOP_TERMS = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(
-           regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),
-           ' ')) AS term
-  FROM documents
-), terms AS (
-  SELECT doc_id, term FROM toks WHERE length(term) >= 3
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2
-), dfreq AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY 1
-), scored AS (
-  SELECT tf.doc_id, tf.term,
-         CAST(floor(tf.tf * ln((SELECT CAST(count(*) AS DOUBLE)
-                                FROM documents) / dfreq.df) * 10000
-                    + 0.5) AS BIGINT) AS tfidf_e4
-  FROM tf JOIN dfreq USING (term)
-)
-SELECT doc_id, term, tfidf_e4,
-       row_number() OVER (PARTITION BY doc_id
-                          ORDER BY tfidf_e4 DESC, term ASC) AS rank
-FROM scored
-QUALIFY rank <= 3
-"""
-
-
 # --------------------------------------------------------------------------
 # PII detection / redaction
 # --------------------------------------------------------------------------
@@ -3321,8 +888,7 @@ _PII_EVERY = 25  # every k-th doc gets deterministic planted PII
 
 def _pii_injected_col() -> F.Column:
     """Deterministic PII injection: the corpus is synthetic word soup with
-    zero '@'/digit tokens, so (like the skew injection feeding
-    dedup_hot_shingle_audit) every ``_PII_EVERY``-th doc gets an email, an
+    zero '@'/digit tokens, so every ``_PII_EVERY``-th doc gets an email, an
     IPv4 and an E.164-style phone appended — the op must demonstrably
     ENGAGE, not vacuously count zeros."""
     return F.when(
@@ -3360,7 +926,7 @@ def q_pii_redact(spark, sf_dir):
 
     Scale: one scan, per-row JVM regexp expressions (regexp_extract_all /
     regexp_replace are codegen'd Java-regex calls, no Python), zero
-    shuffle — the same 100 TB shape as token_counts. The regex subset is
+    shuffle. The regex subset is
     deliberately RE2∩java.util.regex so the DuckDB oracle is exact."""
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", _pii_injected_col().alias("t"))
@@ -3811,7 +1377,7 @@ def q_sft_export_manifest(spark, sf_dir):
     granularity masked-packing composition (conv_id = doc_id % 50,
     assistant = doc_id % 4 == 1, split keyed on conv_id via
     ``split_expr_for`` so a session never straddles train/val,
-    transcript_pack_masked's start-window packing rule). Certifies the
+    GPT start-window packing). Certifies the
     SFT job's derivation end-to-end against DuckDB — the job's written
     manifest equals this DataFrame by construction.
 
@@ -4248,15 +1814,15 @@ FROM kept
 # --------------------------------------------------------------------------
 
 _LCC_CHUNK = 256     # chars per vote chunk
-_LCC_PREFIX = 4096   # same audited prefix as lang_heuristic
+_LCC_PREFIX = 4096   # audited prefix per document
 
 
 def q_lang_consistency_chunks(spark, sf_dir):
     """Code-switching / mixed-language audit: the doc-level
-    `lang_heuristic` vote is blind to a document that flips language
+    language vote is blind to a document that flips language
     halfway (the doc-level winner just averages it out). This op votes
-    per 256-char chunk of the 4,096-char prefix (same stopword lists +
-    CJK rule as lang_heuristic, same en>de>fr>es tie cascade), then
+    per 256-char chunk of the 4,096-char prefix (stopword lists + a
+    CJK rule, en>de>fr>es tie cascade), then
     aggregates: per-language chunk counts, the plurality language
     (ties broken by the same cascade order), and a mixed flag when
     more than one language wins chunks. Whitespace-only chunks are
@@ -4572,11 +2138,11 @@ FROM tg JOIN model USING (h) GROUP BY doc_id
 
 
 # --------------------------------------------------------------------------
-# UNPIVOT (wide→long; the inverse of orders_pivot)
+# UNPIVOT (wide→long)
 # --------------------------------------------------------------------------
 
 def q_orders_unpivot(spark, sf_dir):
-    """UNPIVOT / melt — the wide→long inverse of `orders_pivot`: build
+    """UNPIVOT / melt — wide→long: build
     the per-month × status count matrix (statuses O/F/P as columns),
     then unpivot the three count columns back to (month, status, cnt)
     rows via DataFrame.unpivot (Spark's native melt, an Expand node —
@@ -4636,8 +2202,7 @@ def q_events_interval_self_join(spark, sf_dir):
     equi-join (SortMerge/Broadcast, AQE-skew-splittable), never
     BroadcastNestedLoop; probe-side fan-out is a constant 2×. The
     oracle is the BRUTE-FORCE theta self-join, so hash equality
-    certifies the bucketing has zero false negatives (the
-    dedup_prefix_filter certification pattern). All-integer epoch
+    certifies the bucketing has zero false negatives. All-integer epoch
     arithmetic (floored seconds, the sessionize convention)."""
     ev = (_t(spark, sf_dir, "events")
           .select("user_id", "event_id",
@@ -4891,8 +2456,8 @@ _BM25_TOPK = 5
 def q_docs_bm25_search(spark, sf_dir):
     """BM25 ranked retrieval (k1=1.2, b=0.75) for a fixed 2-query
     workload — the text-side counterpart of the ANN top-k family.
-    Same tokenization as tfidf_top_terms (lower, non-alnum→space,
-    len≥3). The Robertson idf ln((N−df+½)/(df+½)+1) freezes to e4 via
+    Tokenization: lower, non-alnum→space,
+    len≥3. The Robertson idf ln((N−df+½)/(df+½)+1) freezes to e4 via
     the shared floor(x·1e4+0.5) formula (the tfidf precedent: the
     argument is a rational of integers, so both engines feed ln the
     SAME double and only a 1-ulp libm divergence landing exactly on a
@@ -5037,125 +2602,7 @@ FROM hops GROUP BY 1, 2, 3
 
 
 # --------------------------------------------------------------------------
-# Multimodal plumbing (payloads as opaque binary + typed metadata)
-# --------------------------------------------------------------------------
-
-def q_multimodal_meta(spark, sf_dir):
-    """Binary-payload plumbing: documents.text re-encoded as an opaque
-    binary column (stand-in for image/audio bytes — the container has no
-    codec libs, see trek_spark.spark.multimodal for the decode stubs);
-    length + content hash computed on the binary JVM-side."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-        .select("doc_id",
-                F.length("payload").alias("n_bytes"),
-                F.substring(F.md5(F.col("payload")), 1, 16).alias("payload_hash"))
-    )
-
-
-SQL_MULTIMODAL_META = """
-SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-       substr(md5(text), 1, 16) AS payload_hash
-FROM documents
-"""
-
-
-# --------------------------------------------------------------------------
-# Registry
-# --------------------------------------------------------------------------
-
-def q_render_conversations(spark, sf_dir):
-    """Conversation-level assembly + render (SURVEY §1.2's transcript-native
-    data-model mapping, driver-checkable): documents become deterministic
-    turns (conv_id = doc_id % 50, turn_idx = rank within conversation,
-    role from doc_id % 4), grouped per conversation and rendered through
-    the REAL Python ``render_conversation`` renderer (the one the site
-    extractors use) inside ``applyInPandas``.
-
-    Oracle strength: the renderer's output format is pure concatenation,
-    so DuckDB re-derives the exact rendered string with an ordered
-    ``string_agg`` and both engines md5 the same bytes — a byte-level
-    cross-check of the Python renderer against an independent SQL
-    re-implementation.
-
-    Scale: ONE shuffle on conv_id — turn ordering is resolved by a sort
-    inside each Arrow batch (turn_idx ≡ rank of doc_id within the
-    conversation), not a separate window, so the plan is scan → Exchange →
-    FlatMapGroupsInPandas with no second exchange. Conversations are
-    bounded; the extraction job's salting handles the long-conversation
-    tail upstream.
-    """
-    import hashlib
-
-    import pandas as pd
-
-    from ..extract.conversations import (
-        ConversationMessage,
-        render_conversation,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    turns = docs.select(
-        (F.col("doc_id") % 50).alias("conv_id"),
-        "doc_id",
-        F.element_at(
-            F.array(F.lit("user"), F.lit("assistant"),
-                    F.lit("system"), F.lit("tool")),
-            (F.col("doc_id") % 4).cast("int") + 1).alias("role"),
-        # coalesce: a null text must render as an empty message in BOTH
-        # engines — unguarded, Spark's concat returns null and the Python
-        # join raises, while DuckDB's string_agg silently skips the turn
-        F.concat(F.lit("<p>"),
-                 F.substring(F.coalesce("text", F.lit("")), 1, 240),
-                 F.lit("</p>"))
-        .alias("msg_html"))
-
-    def _render(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")  # turn order = doc_id rank in conv
-        msgs = [ConversationMessage(author=r, html=h)
-                for r, h in zip(pdf["role"], pdf["msg_html"])]
-        html = render_conversation(msgs)
-        return pd.DataFrame({
-            "conv_id": [int(pdf["conv_id"].iloc[0])],
-            "n_turns": [len(msgs)],
-            "html_len": [len(html)],
-            "html_md5": [hashlib.md5(html.encode("utf-8")).hexdigest()],
-        })
-
-    return turns.groupBy("conv_id").applyInPandas(
-        _render,
-        schema="conv_id long, n_turns int, html_len long, html_md5 string")
-
-
-SQL_RENDER_CONVERSATIONS = """
-WITH turns AS (
-  SELECT doc_id % 50 AS conv_id,
-         CAST(row_number() OVER (PARTITION BY doc_id % 50 ORDER BY doc_id)
-              AS INT) AS turn_idx,
-         CASE CAST(doc_id % 4 AS INT)
-           WHEN 0 THEN 'user' WHEN 1 THEN 'assistant'
-           WHEN 2 THEN 'system' ELSE 'tool' END AS role,
-         '<p>' || substr(coalesce(text, ''), 1, 240) || '</p>' AS msg_html
-  FROM documents
-), rendered AS (
-  SELECT conv_id, count(*) AS n_turns,
-         '<article class="conversation">' || string_agg(
-           '<div class="conversation-message">'
-           || '<p class="conversation-author"><strong>' || role
-           || '</strong></p>' || msg_html || '</div>', ''
-           ORDER BY turn_idx) || '</article>' AS html
-  FROM turns GROUP BY conv_id
-)
-SELECT conv_id, CAST(n_turns AS INT) AS n_turns,
-       CAST(length(html) AS BIGINT) AS html_len,
-       md5(html) AS html_md5
-FROM rendered
-"""
-
-
-# --------------------------------------------------------------------------
-# Round-7 closing-session additions (parked for the r8 record window)
+# Corpus, graph, event and transcript operators
 # --------------------------------------------------------------------------
 
 def q_bpe_pair_counts(spark, sf_dir):
@@ -5227,8 +2674,7 @@ def q_events_value_percentiles(spark, sf_dir):
     cross-engine). Output is decimated to every 97th event_id AFTER
     windowing so the record stays small while the window runs over the
     full partition. Scale: one shuffle on event_type; a skewed type
-    needs the percentile_approx cutoff swap documented on
-    customer_value_deciles."""
+    needs a percentile_approx cutoff in place of the exact rank."""
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     bp = "CAST(floor({} * 10000 + 0.5) AS BIGINT)"
     return (
@@ -5327,8 +2773,7 @@ def domain_cap_filter(docs: DataFrame, cap: int = _DOMAIN_CAP) -> DataFrame:
 
 
 def q_lineitem_quantiles_approx(spark, sf_dir):
-    """Sketch twin of ``lineitem_quantiles`` (pattern:
-    events_cardinality_approx): ``percentile_approx`` — the 100 TB
+    """Sketch quantiles of lineitem: ``percentile_approx`` — the 100 TB
     quantile tool, a fixed-size mergeable KLL-style sketch vs the exact
     op's full sort. The sketch value itself is implementation-specific,
     so the recorded product is a VERIFIED RANK BOUND: Spark broadcasts
@@ -5441,7 +2886,7 @@ def q_dedup_lsh_eval(spark, sf_dir):
     One row: |exact|, |candidates|, true positives, misses (recall
     loss), extras (verify overhead), and recall in basis points via
     integer division — all exact integers, no sketch value crosses
-    engines (pattern: events_cardinality_approx).
+    engines.
 
     Scale: both pair sets are the cap-gated bucket joins documented on
     their own ops; the comparison is one equi-join on (id_a, id_b) plus
@@ -5489,8 +2934,6 @@ FROM m
 #: and mirrored 1:1 by ``_SQL_TRANSCRIPT_TURNS`` — the conversation
 #: grid (modulus 50, role = doc_id % 4, turn order = doc_id rank) must
 #: change in exactly two places or the oracles drift (review finding).
-#: render_conversations predates this helper and is in the frozen r7
-#: record window, so it keeps its own (identical) derivation.
 _SQL_TRANSCRIPT_TURNS = """
   SELECT doc_id % 50 AS conv_id, doc_id, text,
          CAST(doc_id % 4 AS INT) AS role_id,
@@ -5518,15 +2961,14 @@ def _transcript_turns(spark, sf_dir) -> DataFrame:
             Window.partitionBy("conv_id").orderBy("doc_id"))))
 
 
-
 def q_transcript_tool_runs(spark, sf_dir):
     """Gaps-and-islands over conversation turns: the longest run of
     CONSECUTIVE tool turns per conversation, plus run and turn counts —
     the agent-transcript loop detector (a tool-call run of 40 usually
     means a stuck agent, and run length is exactly what a turn-level
-    filter can't see). Uses the same documents→turns derivation as
-    render_conversations (conv_id = doc_id % 50, turn order = doc_id
-    rank, role from doc_id % 4).
+    filter can't see). Uses the shared documents→turns derivation
+    (conv_id = doc_id % 50, turn order = doc_id rank, role from
+    doc_id % 4).
 
     The islands trick: turn_idx − row_number() over tool turns is
     constant within a consecutive run, so runs fall out of one groupBy
@@ -5568,11 +3010,10 @@ def q_events_variant_buckets(spark, sf_dir):
     """Semi-structured aggregation through Spark 4's VARIANT type —
     ``try_parse_json`` → ``try_variant_get`` — the engine-native
     successor to per-access ``get_json_object`` string re-parsing
-    (events_json covers the classic path; this is the one a 100 TB
-    pipeline should use: parse once into the binary variant encoding,
-    then typed extractions are cheap). Non-int k values null out
-    instead of failing the job OR silently coercing: plain
-    variant_get THROWS INVALID_VARIANT_CAST on '{"k": "abc"}', and
+    (this is the one a 100 TB pipeline should use: parse once into the
+    binary variant encoding, then typed extractions are cheap). Non-int
+    k values null out instead of failing the job OR silently coercing:
+    plain variant_get THROWS INVALID_VARIANT_CAST on '{"k": "abc"}', and
     try_variant_get(..., 'int') TRUNCATES 12.7 → 12 where DuckDB's
     TRY_CAST ROUNDS it to 13 (both found in review — the bucket
     aggregate masked the 12-vs-13 divergence until a fractional k
@@ -5783,8 +3224,8 @@ def q_orders_range_frame(spark, sf_dir):
     customer, total spend in the 30 days UP TO each order, however many
     orders that spans (same-day orders are RANGE peers and all join the
     frame, which a ROWS frame gets wrong). Order dates become exact
-    integer day numbers (unix seconds DIV 86400 — the event_gaps epoch
-    pairing) and prices exact cents, so the frame bound and the sum are
+    integer day numbers (unix seconds DIV 86400) and prices exact
+    cents, so the frame bound and the sum are
     pure integer arithmetic in both engines. Output decimated to every
     13th order key AFTER windowing. Scale: one shuffle on o_custkey;
     RANGE frames evaluate with a sliding accumulator over each sorted
@@ -5998,15 +3439,14 @@ GROUP BY 1, 2
 
 
 def q_docs_readability(spark, sf_dir):
-    """Flesch-style readability scoring in exact integers — the
-    text-quality signal next to text_quality's ratio set: words per
+    """Flesch-style readability scoring in exact integers: words per
     sentence and (vowel-run) syllables per word, combined on the
     Flesch scale ×100. Sentences are [.!?]+ splits, syllables the
     classic vowel-group proxy ([aeiouy]+ runs) — both pure regexp
     counts, so the whole score is integer arithmetic on three counts
     (206835 − 1015·words·100/sentences − 84600·syll/words, all over a
     common ×100 denominator, emitted DIV-rounded). Per-row JVM
-    expressions, Exchange-free like text_quality; null text scores as
+    expressions, Exchange-free; null text scores as
     an empty doc (0 words → excluded)."""
     words = ("size(regexp_extract_all(lower(coalesce(text, '')),"
              " '([a-z]+)', 1))")
@@ -6132,8 +3572,8 @@ _TOPK_K = 20
 
 def q_terms_topk_approx(spark, sf_dir):
     """Heavy-hitter terms via Spark 4's ``approx_top_k`` sketch — the
-    third sketch op under the verified-bound oracle convention
-    (events_cardinality_approx / lineitem_quantiles_approx): the
+    sketch op under the verified-bound oracle convention
+    (as lineitem_quantiles_approx): the
     sketch's own output can't cross engines (tie choices and tracked-
     item eviction are implementation details), so the recorded row is
     the VERIFICATION — every returned term's EXACT count must reach
@@ -6199,9 +3639,8 @@ def q_customer_lateral_top2(spark, sf_dir):
     orders by value), which a plain join cannot express and which
     completes the correlated-subquery family next to the scalar and
     decorrelated EXISTS forms. Spark decorrelates the lateral into a
-    ranked window join under the hood — same physical shape as
-    latest_order_per_customer — so the per-row LIMIT does NOT become a
-    per-row query at scale. Prices in exact cents; customers decimated
+    ranked window join under the hood, so the per-row LIMIT does NOT
+    become a per-row query at scale. Prices in exact cents; customers decimated
     modulo 59 to bound the record (the predicate pushes into the
     customer scan). SQL-first op (spark.sql over parquet.`path`), like
     orders_grouping_sets."""
@@ -6245,8 +3684,8 @@ def q_events_window_distinct(spark, sf_dir):
     engines could disagree on peer handling). One shuffle on
     event_type; the per-partition state is one hash set per type, which
     at 100 TB is bounded by |distinct users|, not |rows| — for
-    larger-than-memory audiences the approx twin is
-    events_cardinality_approx. Output decimated to event_id % 7 AFTER
+    larger-than-memory audiences use approx_count_distinct.
+    Output decimated to event_id % 7 AFTER
     the window (the curve itself must see every row)."""
     ev = _t(spark, sf_dir, "events")
     w = (Window.partitionBy("event_type").orderBy("ts", "event_id")
@@ -6277,9 +3716,8 @@ def split_expr_for(col: str) -> str:
     """The 80/10/10 md5-tick split keyed on an arbitrary id column.
     Document-level exports key on doc_id (``SPLIT_EXPR``); conversation-
     level (SFT) exports key on conv_id so a conversation can never
-    straddle train/val — the session-level leakage the
-    transcript_cross_conv_echo op audits for CONTENT is at least never
-    introduced structurally."""
+    straddle train/val — session-level leakage is never introduced
+    structurally."""
     tick = (f"CAST(conv(substr(md5(CAST({col} AS STRING)), 1, 8),"
             f" 16, 10) AS BIGINT) % 100")
     return (f"CASE WHEN {tick} < 80 THEN 'train'"
@@ -6937,1695 +4375,6 @@ FROM documents
 """
 
 
-def q_events_salted_topk(spark, sf_dir):
-    """Two-phase (salted) per-key top-k — the skew-defusing rewrite of
-    "top 5 values per event_type" for when one key owns most of the
-    table (reference scope: none; the pattern every hot-key
-    aggregation at 100 TB needs). Phase 1 ranks within (event_type,
-    salt=event_id % 16) partitions — 16-way parallel even for a key
-    holding 99% of rows — and PRUNES to the local top 5; phase 2
-    re-ranks the ≤ 16×5 survivors per key. Correct because a global
-    top-5 row is necessarily a top-5 row of its salt slice. The
-    second shuffle moves ≤ 80 rows per key regardless of input size.
-
-    Oracle: the single-window global top-k — hash equality certifies
-    the salted decomposition loses nothing. Ties break by event_id
-    (deterministic both phases)."""
-    ev = (_t(spark, sf_dir, "events")
-          .select("event_type", "event_id",
-                  F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                  .alias("cents"))
-          .withColumn("salt", F.col("event_id") % 16))
-    w_local = Window.partitionBy("event_type", "salt").orderBy(
-        F.desc("cents"), F.asc("event_id"))
-    survivors = (ev.withColumn("lr", F.row_number().over(w_local))
-                 .where(F.col("lr") <= 5))
-    w_global = Window.partitionBy("event_type").orderBy(
-        F.desc("cents"), F.asc("event_id"))
-    return (survivors.withColumn("rank", F.row_number().over(w_global))
-            .where(F.col("rank") <= 5)
-            .select("event_type", "rank", "event_id", "cents"))
-
-
-SQL_EVENTS_SALTED_TOPK = """
-SELECT event_type, rank, event_id, cents FROM (
-  SELECT event_type, event_id,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY CAST(floor(value * 100 + 0.5)
-                                          AS BIGINT) DESC,
-                                     event_id ASC) AS rank
-  FROM events
-) WHERE rank <= 5
-"""
-
-
-def q_referential_integrity_audit(spark, sf_dir):
-    """Foreign-key conformance audit across the star schema — orphan
-    counts for the four FK edges a warehouse load would validate
-    (reference scope: none; standard data-quality tooling). Each edge
-    is a LEFT ANTI join (child minus parent key set) collapsed to a
-    count and tagged with the edge name; the four audits union into
-    one 4-row report so a single action validates the whole load.
-
-    Scale: every anti-join is an equi-join on the FK — AQE broadcasts
-    the parent key set while it fits and falls back to shuffled SMJ
-    beyond; the child side projects ONLY the FK column (pruned scan),
-    so each audit reads one column of the child table. Zero rows
-    escape to the driver besides the 4-row report."""
-    def orphans(child, fk, parent, pk, edge):
-        c = _t(spark, sf_dir, child).select(F.col(fk).alias("k"))
-        p = _t(spark, sf_dir, parent).select(F.col(pk).alias("k"))
-        return (c.join(p, "k", "left_anti")
-                .agg(F.count("*").alias("n_orphans"))
-                .select(F.lit(edge).alias("fk_edge"), "n_orphans"))
-
-    edges = [
-        orphans("orders", "o_custkey", "customer", "c_custkey",
-                "orders.o_custkey->customer"),
-        orphans("lineitem", "l_orderkey", "orders", "o_orderkey",
-                "lineitem.l_orderkey->orders"),
-        orphans("customer", "c_nationkey", "nation", "n_nationkey",
-                "customer.c_nationkey->nation"),
-        orphans("supplier", "s_nationkey", "nation", "n_nationkey",
-                "supplier.s_nationkey->nation"),
-    ]
-    out = edges[0]
-    for e in edges[1:]:
-        out = out.unionAll(e)
-    return out
-
-
-SQL_REFERENTIAL_INTEGRITY_AUDIT = """
-SELECT 'orders.o_custkey->customer' AS fk_edge, count(*) AS n_orphans
-FROM orders o WHERE NOT EXISTS
-  (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-UNION ALL
-SELECT 'lineitem.l_orderkey->orders', count(*)
-FROM lineitem l WHERE NOT EXISTS
-  (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-UNION ALL
-SELECT 'customer.c_nationkey->nation', count(*)
-FROM customer c WHERE NOT EXISTS
-  (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
-UNION ALL
-SELECT 'supplier.s_nationkey->nation', count(*)
-FROM supplier s WHERE NOT EXISTS
-  (SELECT 1 FROM nation n WHERE n.n_nationkey = s.s_nationkey)
-"""
-
-
-def q_events_rolling_median(spark, sf_dir):
-    """Exact rolling median over a trailing 11-row frame — the robust
-    smoother percentile_approx can't give you per-row (reference
-    scope: none). The frame's values are collected, sorted, and the
-    lower-middle element taken: element_at(sorted, (n+1) DIV 2) —
-    integer-exact for even frames too (no averaging, no floats
-    crossing the oracle). The collected array is bounded at 11
-    elements BY THE FRAME, so this is O(k log k) per row with zero
-    spill risk — the safe shape for windowed order statistics, where
-    an unbounded collect_list would not be.
-
-    Scale: ONE user_id Exchange; the output decimation (event_id % 3)
-    is post-window (the frame needs every row). Users decimated
-    mod 5 at the scan (pushed — valid because the window partitions
-    by user)."""
-    ev = (_t(spark, sf_dir, "events")
-          .where(F.col("user_id") % 5 == 0)
-          .select("user_id", "event_id",
-                  F.unix_timestamp("ts").alias("s"),
-                  F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                  .alias("cents")))
-    w = (Window.partitionBy("user_id").orderBy("s", "event_id")
-         .rowsBetween(-10, Window.currentRow))
-    return (ev.withColumn("frame", F.collect_list("cents").over(w))
-            .withColumn("frame", F.array_sort("frame"))
-            .withColumn(
-                "roll_median",
-                F.expr("element_at(frame,"
-                       " CAST((size(frame) + 1) DIV 2 AS INT))"))
-            .where(F.col("event_id") % 3 == 0)
-            .select("user_id", "event_id", "s", "cents", "roll_median"))
-
-
-SQL_EVENTS_ROLLING_MEDIAN = """
-WITH ev AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS s,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events WHERE user_id % 5 = 0
-), framed AS (
-  SELECT user_id, event_id, s, cents,
-         list_sort(list(cents) OVER (
-           PARTITION BY user_id ORDER BY s, event_id
-           ROWS BETWEEN 10 PRECEDING AND CURRENT ROW)) AS frame
-  FROM ev
-)
-SELECT user_id, event_id, s, cents,
-       frame[(len(frame) + 1) // 2] AS roll_median
-FROM framed WHERE event_id % 3 = 0
-"""
-
-
-def q_docs_column_profile(spark, sf_dir):
-    """Column-level data profile of the documents table — null count
-    and exact distinct cardinality per column, the schema-drift /
-    load-sanity report every ingestion run emits (reference scope:
-    none). ONE aggregate computes all eight statistics in a single
-    scan (count_distinct partial-aggregates per column in the same
-    pass); a literal ``stack`` unpivots the 1×8 result into the
-    4-row (column, n_null, n_distinct) report — no per-column
-    rescans. At 10^12 rows the text column's exact distinct would
-    move too much data; the swap is approx_count_distinct in the
-    same aggregate (documented, not taken — the oracle certifies the
-    exact path)."""
-    d = _t(spark, sf_dir, "documents")
-    agg = d.agg(
-        *[F.sum(F.col(c).isNull().cast("bigint")).alias(f"nn_{c}")
-          for c in ("text", "lang", "source", "n_chars")],
-        *[F.count_distinct(F.col(c)).alias(f"nd_{c}")
-          for c in ("text", "lang", "source", "n_chars")])
-    return agg.select(F.expr(
-        "stack(4, 'text', nn_text, nd_text, 'lang', nn_lang, nd_lang,"
-        " 'source', nn_source, nd_source,"
-        " 'n_chars', nn_n_chars, nd_n_chars)"
-        " AS (column_name, n_null, n_distinct)"))
-
-
-SQL_DOCS_COLUMN_PROFILE = """
-SELECT 'text' AS column_name,
-       CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_null,
-       count(DISTINCT text) AS n_distinct FROM documents
-UNION ALL
-SELECT 'lang',
-       CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       count(DISTINCT lang) FROM documents
-UNION ALL
-SELECT 'source',
-       CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       count(DISTINCT source) FROM documents
-UNION ALL
-SELECT 'n_chars',
-       CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       count(DISTINCT n_chars) FROM documents
-"""
-
-
-def q_lineitem_median_histogram(spark, sf_dir):
-    """Exact per-group median by two-pass histogram refinement — the
-    formulation that survives groups too large to sort (reference
-    scope: none; the classic BigQuery/Hive exact-median rewrite).
-    Pass 1 histograms cents into DIV-10000 buckets per
-    (l_returnflag, l_linestatus) — a bounded directory, never the
-    rows. A window over THE DIRECTORY locates the bucket holding the
-    k-th element (k = (n+1) DIV 2, the lower-middle) and how many
-    elements precede it. Pass 2 rescans ONLY the target bucket's rows
-    (broadcast semi-join on the 6-row directory; the bucket predicate
-    prunes everything else) and row_numbers within it — each group
-    sorts ≤ one bucket's rows, not the whole group.
-
-    Oracle: the plain global per-group ROW_NUMBER median — hash
-    equality certifies the two-pass refinement finds the exact same
-    element. lineitem_quantiles is the sort-the-group shape; this is
-    its 10^10-rows-per-group replacement."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .select("l_returnflag", "l_linestatus",
-                  F.expr("CAST(floor(l_extendedprice * 100 + 0.5)"
-                         " AS BIGINT)").alias("cents"))
-          .withColumn("bucket", F.expr("cents DIV 10000")))
-    hist = (li.groupBy("l_returnflag", "l_linestatus", "bucket")
-            .agg(F.count("*").alias("bn")))
-    wg = Window.partitionBy("l_returnflag", "l_linestatus")
-    wcum = wg.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    directory = (hist
-                 .withColumn("n", F.sum("bn").over(wg))
-                 .withColumn("k", F.expr("(n + 1) DIV 2"))
-                 .withColumn("cum", F.sum("bn").over(wcum))
-                 .where((F.col("cum") >= F.col("k"))
-                        & (F.col("cum") - F.col("bn") < F.col("k")))
-                 .select("l_returnflag", "l_linestatus", "bucket",
-                         (F.col("k") - (F.col("cum") - F.col("bn")))
-                         .alias("k_in_bucket")))
-    w_in = wg.orderBy("cents")
-    return (li.join(F.broadcast(directory),
-                    ["l_returnflag", "l_linestatus", "bucket"])
-            .withColumn("rn", F.row_number().over(w_in))
-            .where(F.col("rn") == F.col("k_in_bucket"))
-            .select("l_returnflag", "l_linestatus",
-                    F.col("cents").alias("median_cents")))
-
-
-SQL_LINEITEM_MEDIAN_HISTOGRAM = """
-WITH li AS (
-  SELECT l_returnflag, l_linestatus,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM lineitem
-), ranked AS (
-  SELECT l_returnflag, l_linestatus, cents,
-         row_number() OVER (PARTITION BY l_returnflag, l_linestatus
-                            ORDER BY cents) AS rn,
-         count(*) OVER (PARTITION BY l_returnflag, l_linestatus) AS n
-  FROM li
-)
-SELECT l_returnflag, l_linestatus, cents AS median_cents
-FROM ranked WHERE rn = (n + 1) // 2
-"""
-
-
-def q_split_leakage_audit(spark, sf_dir):
-    """Train/test contamination audit — near-duplicate document pairs
-    that STRADDLE the dataset split (reference scope: none; the
-    eval-hygiene check every training run needs: a test doc with a
-    train-side near-dup inflates the score). Reuses the capped
-    shingle-join near-dup pairs (dedup_ngram_jaccard, J ≥ 0.5) and
-    attaches each side's split with the SAME deterministic md5-tick
-    expression the split itself uses — a pure per-row expression on
-    the pair, so NO join against a membership table. Pairs aggregate
-    to (split_lo, split_hi, n_pairs); any row with split_lo ≠
-    split_hi is leakage.
-
-    Scale: inherits the near-dup op's bucket-by-content join and
-    hot-shingle cap; the audit adds only two codegen'd expressions
-    and one bounded (≤ 6-key) aggregate on top."""
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir)
-    split_a = F.expr(SPLIT_EXPR.replace("doc_id", "id_a"))
-    split_b = F.expr(SPLIT_EXPR.replace("doc_id", "id_b"))
-    return (pairs
-            .withColumn("split_lo", F.least(split_a, split_b))
-            .withColumn("split_hi", F.greatest(split_a, split_b))
-            .groupBy("split_lo", "split_hi")
-            .agg(F.count("*").alias("n_pairs"),
-                 F.sum((split_a != split_b).cast("bigint"))
-                 .alias("n_cross")))
-
-
-_SPLIT_TICK_SQL = ("CAST('0x' || substr(md5(CAST({id} AS VARCHAR)), 1, 8)"
-                   " AS BIGINT) % 100")
-_SPLIT_CASE_SQL = (f"CASE WHEN {_SPLIT_TICK_SQL} < 80 THEN 'train'"
-                   f" WHEN {_SPLIT_TICK_SQL} < 90 THEN 'val'"
-                   " ELSE 'test' END")
-
-SQL_SPLIT_LEAKAGE_AUDIT = f"""
-WITH jac AS ({{jaccard}}),
-tagged AS (
-  SELECT {_SPLIT_CASE_SQL.format(id='id_a')} AS split_a,
-         {_SPLIT_CASE_SQL.format(id='id_b')} AS split_b
-  FROM jac
-)
-SELECT least(split_a, split_b) AS split_lo,
-       greatest(split_a, split_b) AS split_hi,
-       count(*) AS n_pairs,
-       CAST(sum(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_cross
-FROM tagged GROUP BY 1, 2
-"""
-
-
-def q_events_anomaly_mad(spark, sf_dir):
-    """Robust outlier detection by median absolute deviation — the
-    heavy-tail-safe alternative to z-scores (events_value_zscores),
-    whose mean and σ a single extreme value drags (reference scope:
-    none). Per event_type: med = lower-middle median of cents, MAD =
-    lower-middle median of |cents − med|, outlier ⇔ dev > 3·MAD —
-    every comparison on exact integers, no scale factor crossing the
-    oracle. Both medians attach as conditional window-maxes on ONE
-    event_type shuffle (r9: the former rn-selection tables joined back
-    broadcast re-evaluated the stream per phase — 4 static scans; the
-    window form is one scan, zero joins, measured 1.01 → 0.56 s at
-    sf0.1 — each phase already window-sorted full type partitions, so
-    skew exposure is unchanged). event_type cardinality is bounded;
-    for the giant-group regime swap each median selection for the
-    lineitem_median_histogram two-pass refinement — same selection,
-    no full-group sort."""
-    ev = (_t(spark, sf_dir, "events")
-          .select("event_id", "event_type",
-                  F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                  .alias("cents")))
-    wt = Window.partitionBy("event_type")
-    w1 = wt.orderBy(F.col("cents"), F.col("event_id"))
-    step1 = (ev.withColumn("rn", F.row_number().over(w1))
-             .withColumn("n", F.count("*").over(wt))
-             .withColumn("med", F.max(F.when(
-                 F.col("rn") == F.expr("(n + 1) DIV 2"),
-                 F.col("cents"))).over(wt))
-             .withColumn("dev", F.abs(F.col("cents") - F.col("med"))))
-    w2 = wt.orderBy(F.col("dev"), F.col("event_id"))
-    step2 = (step1.withColumn("rn2", F.row_number().over(w2))
-             .withColumn("mad", F.max(F.when(
-                 F.col("rn2") == F.expr("(n + 1) DIV 2"),
-                 F.col("dev"))).over(wt)))
-    return (step2.where(F.col("dev") > 3 * F.col("mad"))
-            .select("event_id", "event_type", "cents", "med", "mad"))
-
-
-SQL_EVENTS_ANOMALY_MAD = """
-WITH ev AS (
-  SELECT event_id, event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events
-), med AS (
-  SELECT event_type, cents AS med FROM (
-    SELECT event_type, cents,
-           row_number() OVER (PARTITION BY event_type
-                              ORDER BY cents, event_id) AS rn,
-           count(*) OVER (PARTITION BY event_type) AS n
-    FROM ev
-  ) WHERE rn = (n + 1) // 2
-), dev AS (
-  SELECT ev.event_id, ev.event_type, ev.cents, med.med,
-         abs(ev.cents - med.med) AS dev
-  FROM ev JOIN med USING (event_type)
-), mad AS (
-  SELECT event_type, dev AS mad FROM (
-    SELECT event_type, dev, event_id,
-           row_number() OVER (PARTITION BY event_type
-                              ORDER BY dev, event_id) AS rn,
-           count(*) OVER (PARTITION BY event_type) AS n
-    FROM dev
-  ) WHERE rn = (n + 1) // 2
-)
-SELECT d.event_id, d.event_type, d.cents, d.med, m.mad
-FROM dev d JOIN mad m USING (event_type)
-WHERE d.dev > 3 * m.mad
-"""
-
-
-def q_events_changepoint_cusum(spark, sf_dir):
-    """CUSUM mean-shift changepoint per user — where in each user's
-    event stream the value level most likely changed (reference
-    scope: none; standard drift-detection tooling). The CUSUM
-    statistic at position k is prefix_sum_k − k·mean; multiplying by
-    n clears the division: stat_k = n·prefix_sum_k − k·total_sum,
-    exact bigint end to end (the sqrt-freeze convention's no-float-
-    sums rule). The changepoint is the position maximizing |stat_k|,
-    tie-broken to the earliest position.
-
-    Scale: prefix sum, total, and position all come from ONE user_id
-    window pass; the argmax is a second window over the SAME
-    partitioning (one Exchange total). Users decimated mod 7 at the
-    scan. Users with a single event emit stat 0 at position 1 —
-    kept, schema-stable."""
-    ev = (_t(spark, sf_dir, "events")
-          .where(F.col("user_id") % 7 == 0)
-          .select("user_id", "event_id",
-                  F.unix_timestamp("ts").alias("s"),
-                  F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                  .alias("cents")))
-    w = Window.partitionBy("user_id").orderBy("s", "event_id")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = (Window.partitionBy("user_id")
-            .rowsBetween(Window.unboundedPreceding,
-                         Window.unboundedFollowing))
-    scored = (ev
-              .withColumn("k", F.row_number().over(w))
-              .withColumn("prefix", F.sum("cents").over(wrun))
-              .withColumn("n", F.count("*").over(wall))
-              .withColumn("total", F.sum("cents").over(wall))
-              .withColumn("stat", F.abs(
-                  F.col("n") * F.col("prefix")
-                  - F.col("k") * F.col("total"))))
-    w_best = Window.partitionBy("user_id").orderBy(
-        F.desc("stat"), F.asc("k"))
-    return (scored.withColumn("pick", F.row_number().over(w_best))
-            .where(F.col("pick") == 1)
-            .select("user_id", F.col("k").alias("change_pos"),
-                    "n", F.col("stat").alias("cusum_stat")))
-
-
-SQL_EVENTS_CHANGEPOINT_CUSUM = """
-WITH ev AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS s,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events WHERE user_id % 7 = 0
-), scored AS (
-  SELECT user_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY s, event_id)
-           AS k,
-         CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY s, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS prefix,
-         count(*) OVER (PARTITION BY user_id) AS n,
-         CAST(sum(cents) OVER (PARTITION BY user_id) AS BIGINT) AS total
-  FROM ev
-)
-SELECT user_id, k AS change_pos, n,
-       abs(n * prefix - k * total) AS cusum_stat
-FROM scored
-QUALIFY row_number() OVER (PARTITION BY user_id
-                           ORDER BY abs(n * prefix - k * total) DESC,
-                                    k ASC) = 1
-"""
-
-
-def q_customer_rfm_segments(spark, sf_dir):
-    """RFM (recency / frequency / monetary) quartile segmentation —
-    the classic customer-analytics coding (reference scope: none).
-    Per customer: R = days between their last order and the corpus
-    max date (smaller is better), F = order count, M = lifetime
-    cents. Each axis is ntile(4)-coded over customers (R ascending so
-    quartile 1 = most recent), and customers aggregate per 3-digit
-    segment code with counts — the output is the segment directory,
-    not the per-customer table.
-
-    Scale: one groupBy(custkey) pass builds the per-customer triple;
-    the three ntiles share ONE single-partition sort over the
-    CUSTOMER AGGREGATE (not the orders), the same documented caveat
-    as customer_value_deciles — at 10^9 customers swap ntile for
-    percentile_approx cutoffs (the deciles_approx precedent). The
-    corpus max date is a scalar broadcast."""
-    o = (_t(spark, sf_dir, "orders")
-         .select("o_custkey",
-                 F.expr("unix_timestamp(o_orderdate) DIV 86400")
-                 .alias("day"),
-                 F.expr("CAST(floor(o_totalprice * 100 + 0.5)"
-                        " AS BIGINT)").alias("cents")))
-    per_cust = (o.groupBy("o_custkey")
-                .agg(F.max("day").alias("last_day"),
-                     F.count("*").alias("freq"),
-                     F.sum("cents").alias("monetary")))
-    max_day = per_cust.agg(F.max("last_day").alias("mx"))
-    scored = (per_cust.join(F.broadcast(max_day))
-              .withColumn("recency",
-                          F.col("mx") - F.col("last_day")))
-    wr = Window.orderBy(F.asc("recency"), F.asc("o_custkey"))
-    wf = Window.orderBy(F.desc("freq"), F.asc("o_custkey"))
-    wm = Window.orderBy(F.desc("monetary"), F.asc("o_custkey"))
-    coded = (scored
-             .withColumn("r_q", F.ntile(4).over(wr))
-             .withColumn("f_q", F.ntile(4).over(wf))
-             .withColumn("m_q", F.ntile(4).over(wm)))
-    return (coded.groupBy("r_q", "f_q", "m_q")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("monetary").alias("segment_cents")))
-
-
-SQL_CUSTOMER_RFM_SEGMENTS = """
-WITH o AS (
-  SELECT o_custkey,
-         CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS day,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-), per_cust AS (
-  SELECT o_custkey, max(day) AS last_day, count(*) AS freq,
-         CAST(sum(cents) AS BIGINT) AS monetary
-  FROM o GROUP BY 1
-), scored AS (
-  SELECT *, (SELECT max(last_day) FROM per_cust) - last_day AS recency
-  FROM per_cust
-), coded AS (
-  SELECT ntile(4) OVER (ORDER BY recency ASC, o_custkey ASC) AS r_q,
-         ntile(4) OVER (ORDER BY freq DESC, o_custkey ASC) AS f_q,
-         ntile(4) OVER (ORDER BY monetary DESC, o_custkey ASC) AS m_q,
-         monetary
-  FROM scored
-)
-SELECT r_q, f_q, m_q, count(*) AS n_customers,
-       CAST(sum(monetary) AS BIGINT) AS segment_cents
-FROM coded GROUP BY 1, 2, 3
-"""
-
-
-_BASKET_ORDER_CAP = 200
-
-
-def q_basket_part_pairs(spark, sf_dir):
-    """Market-basket co-occurrence — part pairs ordered together,
-    with support and integer-frozen lift (reference scope: none; the
-    association-rules first pass). The join key is the ORDER (pairs
-    explode within a basket, never across the catalog), with the
-    same hot-key discipline as the dedup family: baskets larger than
-    200 distinct parts are dropped BEFORE pair expansion (a single
-    10^5-item wholesale order would otherwise expand to 5·10^9
-    pairs); the cap is far above any test-corpus basket so the
-    oracle sees identical results. lift_e4 =
-    10000·N·cooc DIV (cnt_a·cnt_b) — exact integers, >10000 means
-    positively associated. Pairs below support 2 are pruned (noise
-    and output volume)."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    sized = (li.groupBy("l_orderkey")
-             .agg(F.sort_array(F.collect_list("l_partkey"))
-                  .alias("parts"))
-             .where(F.size("parts") <= _BASKET_ORDER_CAP)
-             .where(F.size("parts") >= 2))
-    pairs = sized.select(F.explode(F.expr(
-        "flatten(transform(sequence(1, size(parts) - 1),"
-        " i -> transform(sequence(0, i - 1),"
-        " j -> struct(parts[j] AS pa, parts[i] AS pb))))"))
-        .alias("p")).select("p.pa", "p.pb")
-    cooc = (pairs.groupBy("pa", "pb")
-            .agg(F.count("*").alias("support"))
-            .where(F.col("support") >= 2))
-    counts = (li.groupBy("l_partkey")
-              .agg(F.count_distinct("l_orderkey").alias("cnt")))
-    # scalar N rides the plan as a broadcast 1-row aggregate — no
-    # driver-side action at plan-construction time
-    n_orders = li.agg(
-        F.count_distinct("l_orderkey").alias("n_orders"))
-    ca = counts.select(F.col("l_partkey").alias("pa"),
-                       F.col("cnt").alias("cnt_a"))
-    cb = counts.select(F.col("l_partkey").alias("pb"),
-                       F.col("cnt").alias("cnt_b"))
-    return (cooc.join(ca, "pa").join(cb, "pb")
-            .join(F.broadcast(n_orders))
-            .select("pa", "pb", "support",
-                    F.expr("(10000 * n_orders * support)"
-                           " DIV (cnt_a * cnt_b)").alias("lift_e4")))
-
-
-SQL_BASKET_PART_PAIRS = f"""
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), sized AS (
-  SELECT l_orderkey, count(*) AS sz FROM li GROUP BY 1
-  HAVING count(*) BETWEEN 2 AND {_BASKET_ORDER_CAP}
-), pairs AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                     AND a.l_partkey < b.l_partkey
-  JOIN sized s ON a.l_orderkey = s.l_orderkey
-), cooc AS (
-  SELECT pa, pb, count(*) AS support FROM pairs GROUP BY 1, 2
-  HAVING count(*) >= 2
-), counts AS (
-  SELECT l_partkey, count(DISTINCT l_orderkey) AS cnt FROM li GROUP BY 1
-), n AS (
-  SELECT count(DISTINCT l_orderkey) AS n_orders FROM li
-)
-SELECT pa, pb, support,
-       (10000 * n.n_orders * support) // (ca.cnt * cb.cnt) AS lift_e4
-FROM cooc, n
-JOIN counts ca ON ca.l_partkey = pa
-JOIN counts cb ON cb.l_partkey = pb
-"""
-
-
-def q_orders_mom_yoy(spark, sf_dir):
-    """Month-over-month and year-over-year revenue deltas — the
-    reporting staple (reference scope: none). Orders aggregate to
-    (year, month) cents totals; MoM is lag(1) over the month series,
-    YoY is lag(1) over the SAME month across years (partition by
-    month-of-year). Deltas stay NULL-free with a -1 sentinel when no
-    prior period exists? No — here absolute deltas against 0 would
-    lie; missing priors surface as prev = -1 and delta computed only
-    when prev >= 0 (CASE-guarded, portable — no NULL-ordering in the
-    compare).
-
-    Scale: the month directory is bounded (12 rows per year of
-    history), so both windows run over an AGGREGATE, and the
-    single-partition month-series sort is the directory, never the
-    orders. One shuffle for the aggregate; everything after is
-    directory-sized."""
-    o = (_t(spark, sf_dir, "orders")
-         .select(F.year("o_orderdate").alias("y"),
-                 F.month("o_orderdate").alias("m"),
-                 F.expr("CAST(floor(o_totalprice * 100 + 0.5)"
-                        " AS BIGINT)").alias("cents")))
-    monthly = o.groupBy("y", "m").agg(F.sum("cents").alias("revenue"))
-    w_mom = Window.orderBy("y", "m")
-    w_yoy = Window.partitionBy("m").orderBy("y")
-    lagged = (monthly
-              .withColumn("prev_m",
-                          F.coalesce(F.lag("revenue").over(w_mom),
-                                     F.lit(-1).cast("bigint")))
-              .withColumn("prev_y",
-                          F.coalesce(F.lag("revenue").over(w_yoy),
-                                     F.lit(-1).cast("bigint"))))
-    return lagged.select(
-        "y", "m", "revenue",
-        F.when(F.col("prev_m") >= 0,
-               F.col("revenue") - F.col("prev_m"))
-        .otherwise(F.lit(0).cast("bigint")).alias("mom_delta"),
-        F.when(F.col("prev_y") >= 0,
-               F.col("revenue") - F.col("prev_y"))
-        .otherwise(F.lit(0).cast("bigint")).alias("yoy_delta"),
-        (F.col("prev_m") >= 0).cast("bigint").alias("has_mom"),
-        (F.col("prev_y") >= 0).cast("bigint").alias("has_yoy"))
-
-
-SQL_ORDERS_MOM_YOY = """
-WITH monthly AS (
-  SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue
-  FROM orders GROUP BY 1, 2
-), lagged AS (
-  SELECT y, m, revenue,
-         coalesce(lag(revenue) OVER (ORDER BY y, m), -1) AS prev_m,
-         coalesce(lag(revenue) OVER (PARTITION BY m ORDER BY y), -1)
-           AS prev_y
-  FROM monthly
-)
-SELECT y, m, revenue,
-       CASE WHEN prev_m >= 0 THEN revenue - prev_m ELSE 0 END
-         AS mom_delta,
-       CASE WHEN prev_y >= 0 THEN revenue - prev_y ELSE 0 END
-         AS yoy_delta,
-       CAST(CASE WHEN prev_m >= 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS has_mom,
-       CAST(CASE WHEN prev_y >= 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS has_yoy
-FROM lagged
-"""
-
-
-def q_orders_pareto_cume(spark, sf_dir):
-    """Pareto / contribution analysis — customers ranked by revenue
-    with cumulative share, flagging the head that drives 80% of
-    revenue (reference scope: none; the 80/20 report). Shares are
-    integer-frozen: share_e4 = 10000·cents DIV total, cume_share_e4
-    from the running sum — no float division crosses the oracle. The
-    head flag uses the PREVIOUS row's cumulative (strictly-before
-    mass < 80%), so the customer that crosses the threshold is
-    included, which is the standard Pareto cut.
-
-    Scale: per-customer totals are one shuffle; the ranking window
-    is a global sort over the CUSTOMER AGGREGATE (the deciles
-    caveat, documented swap to approx cutoffs at 10^9 customers);
-    the corpus total rides as a broadcast 1-row aggregate. Output
-    decimated to every 7th rank plus all head-boundary rows."""
-    o = (_t(spark, sf_dir, "orders")
-         .select("o_custkey",
-                 F.expr("CAST(floor(o_totalprice * 100 + 0.5)"
-                        " AS BIGINT)").alias("cents")))
-    per_cust = o.groupBy("o_custkey").agg(F.sum("cents").alias("rev"))
-    total = per_cust.agg(F.sum("rev").alias("total"))
-    w = Window.orderBy(F.desc("rev"), F.asc("o_custkey"))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranked = (per_cust.join(F.broadcast(total))
-              .withColumn("rank", F.row_number().over(w))
-              .withColumn("cume", F.sum("rev").over(wrun))
-              .withColumn("share_e4",
-                          F.expr("(10000 * rev) DIV total"))
-              .withColumn("cume_share_e4",
-                          F.expr("(10000 * cume) DIV total"))
-              .withColumn("in_head",
-                          F.expr("CAST(10 * (cume - rev) < 8 * total"
-                                 " AS BIGINT)")))
-    return (ranked
-            .where((F.col("rank") % 7 == 1)
-                   | (F.col("cume_share_e4") >= 7500)
-                   & (F.expr("10 * (cume - rev) < 8 * total")))
-            .select("rank", "o_custkey", "rev", "share_e4",
-                    "cume_share_e4", "in_head"))
-
-
-SQL_ORDERS_PARETO_CUME = """
-WITH per_cust AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS rev
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT o_custkey, rev,
-         row_number() OVER (ORDER BY rev DESC, o_custkey ASC) AS rank,
-         CAST(sum(rev) OVER (ORDER BY rev DESC, o_custkey ASC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS BIGINT) AS cume,
-         (SELECT CAST(sum(rev) AS BIGINT) FROM per_cust) AS total
-  FROM per_cust
-)
-SELECT rank, o_custkey, rev,
-       (10000 * rev) // total AS share_e4,
-       (10000 * cume) // total AS cume_share_e4,
-       CAST(10 * (cume - rev) < 8 * total AS BIGINT) AS in_head
-FROM ranked
-WHERE rank % 7 = 1
-   OR ((10000 * cume) // total >= 7500
-       AND 10 * (cume - rev) < 8 * total)
-"""
-
-
-def q_terms_continuation_counts(spark, sf_dir):
-    """Kneser–Ney continuation statistics — for each word, how many
-    DISTINCT left contexts it follows (the KN lower-order weight
-    N1+(•w)), alongside its raw frequency (reference scope: none;
-    n-gram LM training input). The contrast is the point: "francisco"
-    is frequent but follows almost only "san" — continuation counts
-    expose that, raw counts don't. Tokenization is the BPE-convention
-    ASCII alphabet; bigrams come from each doc's word array via a
-    zip-with-next transform (no self-join).
-
-    Scale: distinct (w1, w2) bigram pairs partial-aggregate map-side;
-    the continuation count is then a bounded-vocabulary aggregate on
-    w2. Output pruned to words with raw frequency ≥ 5 (noise and
-    volume; same gate both engines)."""
-    docs = _t(spark, sf_dir, "documents")
-    # size >= 2 guard: Spark sequence(1, n) DESCENDS for n < 1 (the
-    # dedup_shingle_novelty gotcha) — short docs must not reach it
-    words = (docs.select(F.expr(
-        "regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("ws"))
-        .where(F.size("ws") >= 2))
-    bigrams = (words.select(F.explode(F.expr(
-        "transform(sequence(1, size(ws) - 1),"
-        " i -> struct(ws[i - 1] AS w1, ws[i] AS w2))")).alias("b"))
-        .select("b.w1", "b.w2"))
-    # ONE aggregation (r9 follow-up, §2.3): the former
-    # distinct+groupBy / groupBy pair aggregated the same bigram
-    # stream twice (non-identical children — no exchange reuse) and
-    # joined the results; count + count_distinct in a single agg are
-    # the same two values off one evaluation and one shuffle
-    # (count_distinct partial-aggregates via Expand, so hot w2 keys
-    # still shrink map-side). Measured 0.68 → 0.51 s at sf0.1.
-    return (bigrams.groupBy("w2")
-            .agg(F.count("*").alias("raw_freq"),
-                 F.countDistinct("w1").alias("n_contexts"))
-            .where(F.col("raw_freq") >= 5)
-            .select(F.col("w2").alias("word"), "raw_freq",
-                    "n_contexts"))
-
-
-SQL_TERMS_CONTINUATION_COUNTS = """
-WITH ws AS (
-  SELECT regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents
-), bigrams AS (
-  SELECT w[i] AS w1, w[i + 1] AS w2
-  FROM ws, UNNEST(range(1, len(w))) AS t(i)
-), cont AS (
-  SELECT w2, count(*) AS n_contexts FROM (
-    SELECT DISTINCT w1, w2 FROM bigrams
-  ) GROUP BY 1
-), freq AS (
-  SELECT w2, count(*) AS raw_freq FROM bigrams GROUP BY 1
-)
-SELECT freq.w2 AS word, raw_freq, n_contexts
-FROM freq JOIN cont USING (w2)
-WHERE raw_freq >= 5
-"""
-
-
-# --------------------------------------------------------------------------
-# Canonical TPC-H heavyweights, adapted to the available columns
-# (no partsupp table, no commit/receipt dates — substitutions documented
-# per-op). These exercise the relational shapes the suite lacked:
-# 6-way join trees with disjunctive residuals, double-correlated
-# EXISTS/NOT-EXISTS, scalar-max subqueries over aggregates, and
-# market-share ratio queries — all with exact-integer emission.
-# --------------------------------------------------------------------------
-
-_CENTS_P = "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-_DISC_E4 = (
-    "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-    " * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))")
-
-
-def q_tpch_volume_shipping(spark, sf_dir):
-    """TPC-H Q7 (volume shipping): revenue between two trading nations
-    by (supplier nation, customer nation, ship year) for 1996–1997.
-    Join tree: lineitem↔orders is the one fact-fact shuffle; supplier,
-    customer, and both nation aliases broadcast. The nation-pair
-    disjunction ((N1→N2) OR (N2→N1)) is applied AFTER both nation
-    names are attached — Catalyst pushes each half to the dim scans.
-    At 100 TB the plan is unchanged: one SMJ/shuffle on l_orderkey,
-    dims stay broadcast."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") <= F.lit("1997-12-31")))
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation"))
-    return (
-        li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_3")))
-        .groupBy("supp_nation", "cust_nation",
-                 F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-    )
-
-
-SQL_TPCH_VOLUME_SHIPPING = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l_shipdate) AS l_year,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE l_shipdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
-  AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_2')
-       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_3'))
-GROUP BY 1, 2, 3
-"""
-
-
-def q_tpch_market_share(spark, sf_dir):
-    """TPC-H Q8 (national market share): of all ECONOMY-type parts sold
-    to ASIA-region customers in 1996–1997, what share of discounted
-    revenue came from NATION_3 suppliers, per order year. The ratio is
-    emitted as the exact integer pair (nation_rev_e4, total_rev_e4)
-    plus a rounded-integer-division share in basis points — never a
-    float sum (module convention). The share CASE runs inside one
-    aggregate pass: no second scan for the numerator."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") <= F.lit("1997-12-31"))
-    ).select("o_orderkey", "o_custkey", "o_orderdate")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nat_c = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), "n_regionkey")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat_s = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat_c), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat_s), F.col("s_nationkey") == F.col("sn_key"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(F.expr(
-                f"CASE WHEN supp_nation = 'NATION_3' THEN {_DISC_E4} ELSE 0 END"))
-            .alias("nation_rev_e4"),
-            F.sum(F.expr(_DISC_E4)).alias("total_rev_e4"))
-        .withColumn("share_bp", F.expr(
-            "(2 * nation_rev_e4 * 10000 + total_rev_e4) DIV (2 * total_rev_e4)"))
-    )
-
-
-SQL_TPCH_MARKET_SHARE = """
-WITH sold AS (
-  SELECT year(o_orderdate) AS o_year,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-         * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS rev_e4,
-         n2.n_name AS supp_nation
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-  WHERE o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
-)
-SELECT o_year,
-       CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN rev_e4 ELSE 0 END)
-            AS BIGINT) AS nation_rev_e4,
-       CAST(sum(rev_e4) AS BIGINT) AS total_rev_e4,
-       CAST((2 * sum(CASE WHEN supp_nation = 'NATION_3' THEN rev_e4 ELSE 0 END)
-             * 10000 + sum(rev_e4)) // (2 * sum(rev_e4)) AS BIGINT) AS share_bp
-FROM sold GROUP BY 1
-"""
-
-
-def q_tpch_profit_by_nation(spark, sf_dir):
-    """TPC-H Q9 shape (product-type profit), adapted: no partsupp table
-    in this corpus (reference data model lacks it), so profit is the
-    discounted revenue sum — the join tree and grouping are the Q9
-    exercise (part-name LIKE filter, supplier nation, ship year).
-    The p_name filter broadcasts a pre-filtered part dim; lineitem
-    never scans parts that fail the LIKE."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(
-        F.col("p_name").contains("widget")).select("p_partkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("nation"),
-                 F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("profit_e4"),
-             F.count("*").alias("line_cnt"))
-    )
-
-
-SQL_TPCH_PROFIT_BY_NATION = """
-SELECT n_name AS nation, year(l_shipdate) AS l_year,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS profit_e4,
-       count(*) AS line_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY 1, 2
-"""
-
-
-def q_tpch_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 (promotion effect): per ship month, discounted revenue
-    from PROMO-type parts vs all parts, share in basis points. Exact
-    integers throughout; the promo flag is resolved by a broadcast
-    part join and the CASE folds into one aggregate pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
-        .agg(
-            F.sum(F.expr(
-                f"CASE WHEN p_type = 'PROMO' THEN {_DISC_E4} ELSE 0 END"))
-            .alias("promo_rev_e4"),
-            F.sum(F.expr(_DISC_E4)).alias("total_rev_e4"))
-        .withColumn("promo_bp", F.expr(
-            "(2 * promo_rev_e4 * 10000 + total_rev_e4) DIV (2 * total_rev_e4)"))
-    )
-
-
-SQL_TPCH_PROMO_REVENUE = """
-SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-       CAST(sum(CASE WHEN p_type = 'PROMO' THEN
-                CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-                ELSE 0 END) AS BIGINT) AS promo_rev_e4,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS total_rev_e4,
-       CAST((2 * sum(CASE WHEN p_type = 'PROMO' THEN
-                     CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                     * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-                     ELSE 0 END) * 10000
-             + sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                   * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))))
-            // (2 * sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                        * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))))
-            AS BIGINT) AS promo_bp
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY 1
-"""
-
-
-def q_tpch_top_supplier(spark, sf_dir):
-    """TPC-H Q15 (top supplier): revenue per supplier over one quarter,
-    return the supplier(s) whose revenue equals the global max — the
-    scalar-max-over-an-aggregate shape (Q15's CREATE VIEW folded into
-    a CTE). The per-supplier aggregate is computed ONCE and reused for
-    both the max and the final filter (same subtree → AQE
-    ReusedExchange, the deciles_approx precedent); the max itself is
-    a broadcast one-row cross join, not a driver collect."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01")))
-    rev = (li.groupBy("l_suppkey")
-           .agg(F.sum(F.expr(_DISC_E4)).alias("total_revenue_e4")))
-    mx = rev.agg(F.max("total_revenue_e4").alias("mx"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.join(F.broadcast(mx), rev.total_revenue_e4 == mx.mx)
-        .join(F.broadcast(supp), rev.l_suppkey == supp.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue_e4")
-    )
-
-
-SQL_TPCH_TOP_SUPPLIER = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                  * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-              AS BIGINT) AS total_revenue_e4
-  FROM lineitem
-  WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1997-04-01'
-  GROUP BY 1
-)
-SELECT s_suppkey, s_name, total_revenue_e4
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue_e4 = (SELECT max(total_revenue_e4) FROM rev)
-"""
-
-
-def q_tpch_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17 (small-quantity-order revenue): for one brand, the
-    revenue from lines whose quantity is below 20% of that part's
-    average quantity. The correlated AVG subquery is decorrelated by
-    hand into a per-part aggregate joined back (what Catalyst does to
-    the SQL form); the threshold compare is exact-integer —
-    5·qty·cnt < Σqty — so no float average ever materializes.
-    Scale: the brand filter broadcasts; the per-part aggregate and
-    join-back shuffle on p_partkey only for the brand's lines."""
-    part = _t(spark, sf_dir, "part").filter(
-        F.col("p_brand") == "Brand#13").select("p_partkey")
-    li = (_t(spark, sf_dir, "lineitem")
-          .join(F.broadcast(part),
-                F.col("l_partkey") == F.col("p_partkey"))
-          .select("l_partkey",
-                  F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("qty_i"),
-                  F.expr(_CENTS_P).alias("price_c")))
-    per_part = (li.groupBy("l_partkey")
-                .agg(F.sum("qty_i").alias("sum_qty"),
-                     F.count("*").alias("cnt")))
-    return (
-        li.join(per_part, "l_partkey")
-        .filter(F.expr("5 * qty_i * cnt < sum_qty"))
-        .agg(F.sum("price_c").alias("small_qty_revenue_c"),
-             F.count("*").alias("n_lines"))
-    )
-
-
-SQL_TPCH_SMALL_QTY_REVENUE = """
-WITH li AS (
-  SELECT l_partkey,
-         CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty_i,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_c
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_brand = 'Brand#13'
-), per_part AS (
-  SELECT l_partkey, sum(qty_i) AS sum_qty, count(*) AS cnt
-  FROM li GROUP BY 1
-)
-SELECT CAST(sum(price_c) AS BIGINT) AS small_qty_revenue_c,
-       count(*) AS n_lines
-FROM li JOIN per_part USING (l_partkey)
-WHERE 5 * qty_i * cnt < sum_qty
-"""
-
-
-def q_tpch_large_orders(spark, sf_dir):
-    """TPC-H Q18 (large-volume customer): orders whose total line
-    quantity exceeds 250 units, with the customer attached. The
-    HAVING-subquery-IN shape decorrelates to: aggregate lineitem on
-    l_orderkey, filter, then join orders + broadcast customer — one
-    shuffle on the fact key. Quantities are integral → bigint sums."""
-    li = _t(spark, sf_dir, "lineitem")
-    big = (li.groupBy("l_orderkey")
-           .agg(F.sum(F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)"))
-                .alias("sum_qty"))
-           .filter(F.col("sum_qty") > 250))
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-        .alias("o_totalprice_c"))
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .select("c_name", "c_custkey", "o_orderkey", "o_orderdate",
-                "o_totalprice_c", "sum_qty")
-    )
-
-
-SQL_TPCH_LARGE_ORDERS = """
-SELECT c_name, c_custkey, o_orderkey, o_orderdate,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS o_totalprice_c,
-       sq.sum_qty
-FROM (
-  SELECT l_orderkey,
-         CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_qty
-  FROM lineitem GROUP BY 1 HAVING sum_qty > 250
-) sq
-JOIN orders ON sq.l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
-
-
-def q_tpch_disjunctive_join(spark, sf_dir):
-    """TPC-H Q19 (discounted revenue, disjunctive predicate): an
-    OR-of-ANDs residual over three (brand, size range, quantity range)
-    clauses on top of the partkey equi-join. The exercise: Catalyst
-    must still extract l_partkey = p_partkey as the join key and keep
-    the disjunction as a residual filter (a naive planner degrades to
-    a cartesian). part is broadcast, so the whole query is one scan of
-    lineitem with zero shuffles before the final scalar aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    clause = (
-        "((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15"
-        "  AND l_quantity BETWEEN 1 AND 11)"
-        " OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25"
-        "  AND l_quantity BETWEEN 10 AND 20)"
-        " OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35"
-        "  AND l_quantity BETWEEN 20 AND 30))")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .filter(F.expr(clause))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"),
-             F.count("*").alias("n_lines"))
-    )
-
-
-SQL_TPCH_DISJUNCTIVE_JOIN = """
-SELECT CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4,
-       count(*) AS n_lines
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q_tpch_sole_failure_suppliers(spark, sf_dir):
-    """TPC-H Q21 shape (suppliers who kept orders waiting), adapted:
-    no commit/receipt dates in this corpus, so the "late" flag is
-    l_returnflag = 'R'. For each supplier: count orders where (a) the
-    supplier had a returned line, (b) EXISTS another supplier's line
-    on the same order, and (c) NOT EXISTS a returned line from any
-    other supplier. The double correlation maps to a left-semi then a
-    left-anti join on (orderkey, ≠suppkey) — both shuffles share the
-    l_orderkey partitioning, and AQE broadcasts the probe sides at
-    small SF. Counted at (supplier, order) grain (DISTINCT before the
-    count) so multi-line returns don't double-count."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey",
-                                              "l_returnflag")
-    l1 = (li.filter(F.col("l_returnflag") == "R")
-          .select("l_orderkey", "l_suppkey").distinct())
-    l2 = li.select(F.col("l_orderkey").alias("o2"),
-                   F.col("l_suppkey").alias("s2")).distinct()
-    l3 = (li.filter(F.col("l_returnflag") == "R")
-          .select(F.col("l_orderkey").alias("o3"),
-                  F.col("l_suppkey").alias("s3")).distinct())
-    cand = l1.join(
-        l2, (l1.l_orderkey == l2.o2) & (l1.l_suppkey != l2.s2), "left_semi")
-    sole = cand.join(
-        l3, (cand.l_orderkey == l3.o3) & (cand.l_suppkey != l3.s3),
-        "left_anti")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        sole.groupBy("l_suppkey")
-        .agg(F.count("*").alias("numwait"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == supp.s_suppkey)
-        .select("s_name", "numwait")
-    )
-
-
-SQL_TPCH_SOLE_FAILURE_SUPPLIERS = """
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-), returned AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_returnflag = 'R'
-)
-SELECT s_name, count(*) AS numwait
-FROM returned l1
-JOIN supplier ON l1.l_suppkey = s_suppkey
-WHERE EXISTS (SELECT 1 FROM pairs l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM returned l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey)
-GROUP BY 1
-"""
-
-
-def q_tpch_inactive_premium_customers(spark, sf_dir):
-    """TPC-H Q22 shape (global sales opportunity), adapted: customers
-    whose account balance exceeds the average POSITIVE balance and who
-    placed no order since 1999 — counted and summed per nation (the
-    corpus has no phone column; nationkey replaces the phone prefix).
-    The above-average gate is exact-integer (bal_c · n_pos > sum_c,
-    strict), computed once and broadcast as a one-row cross join; the
-    no-recent-orders clause is a left-anti join against the date-
-    filtered orders scan (filter pushed to parquet)."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").alias("bal_c"))
-    pos = (cust.filter(F.col("bal_c") > 0)
-           .agg(F.sum("bal_c").alias("sum_c"), F.count("*").alias("n_pos")))
-    recent = (_t(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") >= F.lit("1999-01-01"))
-              .select("o_custkey").distinct())
-    return (
-        cust.crossJoin(F.broadcast(pos))
-        .filter(F.expr("bal_c * n_pos > sum_c"))
-        .join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n_customers"),
-             F.sum("bal_c").alias("total_bal_c"))
-    )
-
-
-SQL_TPCH_INACTIVE_PREMIUM_CUSTOMERS = """
-WITH cust AS (
-  SELECT c_custkey, c_nationkey,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM customer
-), pos AS (
-  SELECT CAST(sum(bal_c) AS BIGINT) AS sum_c, count(*) AS n_pos
-  FROM cust WHERE bal_c > 0
-)
-SELECT c_nationkey, count(*) AS n_customers,
-       CAST(sum(bal_c) AS BIGINT) AS total_bal_c
-FROM cust, pos
-WHERE bal_c * n_pos > sum_c
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= DATE '1999-01-01')
-GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Spark-4 SQL surfaces (pipe syntax, collations, Python UDTF) and
-# exact-integer statistical tests — each with an independent-formulation
-# DuckDB oracle (the oracle never uses the Spark-only surface).
-# --------------------------------------------------------------------------
-
-
-def q_orders_pipe_syntax(spark, sf_dir):
-    """Spark 4 SQL *pipe syntax* (`|>`): the same filter → extend →
-    aggregate → having chain a DataFrame expresses, written as a SQL
-    pipeline. The oracle is classic ANSI SQL — proving the pipe form
-    plans to the identical result (Catalyst lowers each |> stage into
-    the same logical operators, so pushdown/partial-agg behavior is
-    unchanged). Reads via parquet.`path` (the grouping-sets
-    precedent: no temp-view session state)."""
-    return spark.sql(f"""
-        FROM parquet.`{sf_dir}/orders.parquet`
-        |> WHERE o_orderdate >= DATE '1997-01-01'
-        |> EXTEND CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_c
-        |> AGGREGATE count(*) AS n_orders, sum(price_c) AS revenue_c
-           GROUP BY o_orderpriority
-        |> WHERE n_orders >= 5
-    """)
-
-
-SQL_ORDERS_PIPE_SYNTAX = """
-SELECT o_orderpriority, count(*) AS n_orders,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders
-WHERE o_orderdate >= DATE '1997-01-01'
-GROUP BY 1 HAVING count(*) >= 5
-"""
-
-
-def q_part_collated_brands(spark, sf_dir):
-    """Spark 4 *collation* support: group by a UTF8_LCASE-collated
-    key. The case noise is injected deterministically (md5 tick of
-    partkey — even ticks upper-case the brand), then the collated
-    group-by must merge the variants exactly as the oracle's lower()
-    does. Output is lower()ed for cross-engine value stability (which
-    variant a collated group displays is engine-internal)."""
-    part = _t(spark, sf_dir, "part")
-    noisy = part.withColumn("b_noisy", F.expr(
-        "CASE WHEN conv(substring(md5(CAST(p_partkey AS STRING)), 1, 4),"
-        " 16, 10) % 2 = 0 THEN upper(p_brand) ELSE p_brand END"))
-    return (
-        noisy.groupBy(F.expr("collate(b_noisy, 'UTF8_LCASE')").alias("bc"))
-        .agg(F.count("*").alias("n_parts"),
-             F.sum(F.expr("CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)"))
-             .alias("retail_c"))
-        .select(F.lower(F.col("bc")).alias("brand_lc"), "n_parts",
-                "retail_c")
-    )
-
-
-SQL_PART_COLLATED_BRANDS = """
-SELECT lower(CASE WHEN CAST('0x' || substring(
-           md5(CAST(p_partkey AS VARCHAR)), 1, 4) AS BIGINT) % 2 = 0
-           THEN upper(p_brand) ELSE p_brand END) AS brand_lc,
-       count(*) AS n_parts,
-       CAST(sum(CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS retail_c
-FROM part GROUP BY 1
-"""
-
-
-def q_events_ks_drift(spark, sf_dir):
-    """Exact two-sample Kolmogorov–Smirnov distance between the value
-    distributions of 'click' and 'view' events — the drift test a
-    training pipeline runs between data slices. Fully integer: values
-    quantize to cents, the CDF gap at each distinct value is
-    |c1·n2 − c2·n1| (common denominator n1·n2 never divides), and the
-    statistic is its max with the smallest attaining value reported.
-    Scale: one groupBy on value_c + one ordered cumsum window + the
-    scalar max joined back by broadcast (same aggregate subtree →
-    AQE ReusedExchange, the top_supplier precedent). The full-sort
-    window is over DISTINCT values (bounded, ≪ event count)."""
-    ev = (_t(spark, sf_dir, "events")
-          .filter(F.col("event_type").isin("click", "view"))
-          .select(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                  .alias("value_c"), "event_type"))
-    per_v = (ev.groupBy("value_c")
-             .agg(F.sum(F.expr(
-                     "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END"))
-                  .alias("d1"),
-                  F.sum(F.expr(
-                     "CASE WHEN event_type = 'view' THEN 1 ELSE 0 END"))
-                  .alias("d2")))
-    w = Window.orderBy("value_c").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    cdf = (per_v
-           .withColumn("c1", F.sum("d1").over(w))
-           .withColumn("c2", F.sum("d2").over(w)))
-    tot = cdf.agg(F.max("c1").alias("n1"), F.max("c2").alias("n2"))
-    gaps = (cdf.crossJoin(F.broadcast(tot))
-            .withColumn("gap", F.expr("abs(c1 * n2 - c2 * n1)")))
-    mx = gaps.agg(F.max("gap").alias("ks_num"))
-    return (
-        gaps.join(F.broadcast(mx), gaps.gap == mx.ks_num)
-        .groupBy("n1", "n2", "ks_num")
-        .agg(F.min("value_c").alias("ks_at_value_c"))
-        .select("n1", "n2", "ks_num", "ks_at_value_c")
-    )
-
-
-SQL_EVENTS_KS_DRIFT = """
-WITH per_v AS (
-  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_c,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS d1,
-         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS d2
-  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
-), cdf AS (
-  SELECT value_c,
-         CAST(sum(d1) OVER (ORDER BY value_c
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c1,
-         CAST(sum(d2) OVER (ORDER BY value_c
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c2
-  FROM per_v
-), gaps AS (
-  SELECT value_c, c1, c2,
-         (SELECT max(c1) FROM cdf) AS n1,
-         (SELECT max(c2) FROM cdf) AS n2,
-         abs(c1 * (SELECT max(c2) FROM cdf)
-             - c2 * (SELECT max(c1) FROM cdf)) AS gap
-  FROM cdf
-)
-SELECT n1, n2, CAST(gap AS BIGINT) AS ks_num,
-       CAST(min(value_c) AS BIGINT) AS ks_at_value_c
-FROM gaps WHERE gap = (SELECT max(gap) FROM gaps)
-GROUP BY 1, 2, 3
-"""
-
-
-def q_lineitem_benford(spark, sf_dir):
-    """Benford's-law audit of line prices: observed first-significant-
-    digit counts vs the expected log₁₀(1 + 1/d) share — the classic
-    fabricated-data screen. The expected share is a per-digit CONSTANT
-    (one log10+floor on a small integer literal — identical IEEE in
-    both engines); counts are exact. Single groupBy on a 9-value key:
-    the map-side partial agg reduces everything before one tiny
-    shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.select(F.expr(
-            "CAST(substring(CAST(CAST(floor(l_extendedprice) AS BIGINT)"
-            " AS STRING), 1, 1) AS INT)").alias("digit"))
-        .filter(F.col("digit") >= 1)
-        .groupBy("digit")
-        .agg(F.count("*").alias("n"))
-        .withColumn("expected_e6", F.expr(
-            "CAST(floor(log10(1.0 + 1.0 / digit) * 1000000) AS BIGINT)"))
-    )
-
-
-SQL_LINEITEM_BENFORD = """
-SELECT CAST(substring(CAST(CAST(floor(l_extendedprice) AS BIGINT)
-            AS VARCHAR), 1, 1) AS INT) AS digit,
-       count(*) AS n,
-       CAST(floor(log10(1.0 + 1.0 / CAST(substring(CAST(CAST(
-            floor(l_extendedprice) AS BIGINT) AS VARCHAR), 1, 1) AS INT))
-            * 1000000) AS BIGINT) AS expected_e6
-FROM lineitem
-WHERE CAST(substring(CAST(CAST(floor(l_extendedprice) AS BIGINT)
-          AS VARCHAR), 1, 1) AS INT) >= 1
-GROUP BY 1
-"""
-
-
-def q_docs_chunks_udtf(spark, sf_dir):
-    """Python *UDTF* surface (Spark 4): a user-defined table function
-    emitting fixed 10-word chunks per document via LATERAL join —
-    the table-generating API the reference exposes for custom
-    exploders. Deliberately NOT the hot path (dedup_passage_windows
-    is the JVM-side equivalent at scale); this op demonstrates and
-    pins the UDTF API: per-row eval, multi-row yield, LATERAL
-    correlation. The oracle replicates the chunking in pure SQL."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType=("chunk_idx int, n_words int, first_word string,"
-                      " last_word string"))
-    class WordChunks:
-        def eval(self, text: str):
-            import re
-            ws = re.findall(r"[a-z]+", (text or "").lower())
-            for i in range(0, len(ws), 10):
-                chunk = ws[i:i + 10]
-                yield (i // 10, len(chunk), chunk[0], chunk[-1])
-
-    spark.udtf.register("trek_word_chunks", WordChunks)
-    docs = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("_udtf_docs")
-    return spark.sql("""
-        SELECT d.doc_id, c.chunk_idx, c.n_words, c.first_word, c.last_word
-        FROM _udtf_docs d, LATERAL trek_word_chunks(d.text) c
-    """)
-
-
-SQL_DOCS_CHUNKS_UDTF = """
-WITH ws AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS w
-  FROM documents
-)
-SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-       CAST(least(10, len(w) - i * 10) AS INT) AS n_words,
-       w[i * 10 + 1] AS first_word,
-       w[least(len(w), i * 10 + 10)] AS last_word
-FROM ws, UNNEST(range((len(w) + 9) // 10)) AS t(i)
-WHERE len(w) > 0
-"""
-
-
-# --------------------------------------------------------------------------
-# Statistical-testing completion (rank-sum, chi-square) + semantics
-# parity corners (NULL aggregate rules, window-over-aggregate shares).
-# --------------------------------------------------------------------------
-
-
-def q_events_rank_sum(spark, sf_dir):
-    """Exact Mann–Whitney U (Wilcoxon rank-sum) between 'click' and
-    'view' event values — the nonparametric twin of events_ks_drift.
-    Tie-averaged ranks stay integral by working in DOUBLED rank units:
-    a tie group at value v with cb items before it contributes
-    d_g · (2·cb + cnt + 1) to group g's doubled rank sum, so
-    U2_g = R2_g − n_g·(n_g+1) is exact bigint. The identity
-    U2_click + U2_view = 2·n1·n2 is emitted as a checked column.
-    Scale: one groupBy on distinct values + one ordered cumsum window
-    (distinct values ≪ events), then a single-row aggregate."""
-    ev = (_t(spark, sf_dir, "events")
-          .filter(F.col("event_type").isin("click", "view"))
-          .select(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                  .alias("value_c"), "event_type"))
-    per_v = (ev.groupBy("value_c")
-             .agg(F.sum(F.expr(
-                     "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END"))
-                  .alias("d1"),
-                  F.sum(F.expr(
-                     "CASE WHEN event_type = 'view' THEN 1 ELSE 0 END"))
-                  .alias("d2")))
-    w = (Window.orderBy("value_c")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    ranked = (per_v
-              .withColumn("cb", F.coalesce(
-                  F.sum(F.expr("d1 + d2")).over(w), F.lit(0)))
-              .withColumn("r2_1", F.expr("d1 * (2 * cb + d1 + d2 + 1)"))
-              .withColumn("r2_2", F.expr("d2 * (2 * cb + d1 + d2 + 1)")))
-    return (
-        ranked.agg(F.sum("d1").alias("n1"), F.sum("d2").alias("n2"),
-                   F.sum("r2_1").alias("rank2_click"),
-                   F.sum("r2_2").alias("rank2_view"))
-        .withColumn("u2_click", F.expr("rank2_click - n1 * (n1 + 1)"))
-        .withColumn("u2_view", F.expr("rank2_view - n2 * (n2 + 1)"))
-        .withColumn("identity_ok", F.expr(
-            "CAST(u2_click + u2_view = 2 * n1 * n2 AS INT)"))
-        .select("n1", "n2", "u2_click", "u2_view", "identity_ok")
-    )
-
-
-SQL_EVENTS_RANK_SUM = """
-WITH per_v AS (
-  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_c,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS d1,
-         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS d2
-  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
-), ranked AS (
-  SELECT d1, d2,
-         coalesce(sum(d1 + d2) OVER (ORDER BY value_c
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-  FROM per_v
-), tot AS (
-  SELECT CAST(sum(d1) AS BIGINT) AS n1, CAST(sum(d2) AS BIGINT) AS n2,
-         CAST(sum(d1 * (2 * cb + d1 + d2 + 1)) AS BIGINT) AS rank2_click,
-         CAST(sum(d2 * (2 * cb + d1 + d2 + 1)) AS BIGINT) AS rank2_view
-  FROM ranked
-)
-SELECT n1, n2,
-       rank2_click - n1 * (n1 + 1) AS u2_click,
-       rank2_view - n2 * (n2 + 1) AS u2_view,
-       CAST((rank2_click - n1 * (n1 + 1)) + (rank2_view - n2 * (n2 + 1))
-            = 2 * n1 * n2 AS INT) AS identity_ok
-FROM tot
-"""
-
-
-def q_events_chi2_independence(spark, sf_dir):
-    """Chi-square independence test: is event_type independent of the
-    day-of-week? The weekday is portable arithmetic (days since a
-    fixed Monday, mod 7 — no engine dow() convention involved). Each
-    cell's term ((O·N − R·C)² / (N·R·C), scaled ×10⁶) is one
-    IDENTICAL scalar double expression over exact integers, floored
-    to bigint BEFORE the cross-cell sum (the module convention: what
-    must never cross engines is a float SUM, not a deterministic
-    per-row IEEE tree — squaring O·N in pure int64 would overflow
-    under ANSI at ~10⁹ events, the r7 review lesson). Emits dof and
-    the observed cell count alongside chi2_e6."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("CAST(datediff(ts, DATE '1970-01-05') % 7 AS INT)")
-        .alias("wd"))
-    cells = ev.groupBy("event_type", "wd").agg(F.count("*").alias("o"))
-    rows = ev.groupBy("event_type").agg(F.count("*").alias("r"))
-    cols = ev.groupBy("wd").agg(F.count("*").alias("c"))
-    n = ev.agg(F.count("*").alias("n"))
-    terms = (cells
-             .join(F.broadcast(rows), "event_type")
-             .join(F.broadcast(cols), "wd")
-             .crossJoin(F.broadcast(n))
-             .withColumn("term_e6", F.expr(
-                 "CAST(floor(CAST(o * n - r * c AS DOUBLE)"
-                 " * CAST(o * n - r * c AS DOUBLE)"
-                 " / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE)"
-                 "    * CAST(c AS DOUBLE)) * 1000000) AS BIGINT)")))
-    return (
-        terms.agg(
-            F.sum("term_e6").alias("chi2_e6"),
-            F.count("*").alias("n_cells"),
-            F.expr("(count(DISTINCT event_type) - 1)"
-                   " * (count(DISTINCT wd) - 1)").alias("dof"))
-    )
-
-
-SQL_EVENTS_CHI2_INDEPENDENCE = """
-WITH ev AS (
-  SELECT event_type,
-         CAST(datediff('day', DATE '1970-01-05', ts) % 7 AS INT) AS wd
-  FROM events
-), cells AS (
-  SELECT event_type, wd, count(*) AS o FROM ev GROUP BY 1, 2
-), rws AS (
-  SELECT event_type, count(*) AS r FROM ev GROUP BY 1
-), cls AS (
-  SELECT wd, count(*) AS c FROM ev GROUP BY 1
-), tot AS (
-  SELECT count(*) AS n FROM ev
-), terms AS (
-  SELECT CAST(floor(CAST(o * n - r * c AS DOUBLE)
-              * CAST(o * n - r * c AS DOUBLE)
-              / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE)
-                 * CAST(c AS DOUBLE)) * 1000000) AS BIGINT) AS term_e6,
-         event_type, wd
-  FROM cells JOIN rws USING (event_type) JOIN cls USING (wd), tot
-)
-SELECT CAST(sum(term_e6) AS BIGINT) AS chi2_e6,
-       count(*) AS n_cells,
-       CAST((count(DISTINCT event_type) - 1)
-            * (count(DISTINCT wd) - 1) AS BIGINT) AS dof
-FROM terms
-"""
-
-
-def q_events_null_semantics(spark, sf_dir):
-    """NULL-semantics parity corner: nulls are INJECTED deterministically
-    (nullif on modular ticks) into both a group key and a measure, then
-    every aggregate whose null rule differs from naive intuition runs
-    over them — count(*) vs count(col), sum/min/max skipping nulls,
-    count(DISTINCT col) ignoring nulls, and the NULL group key forming
-    its own group (identical in Spark and ANSI SQL, but the #1 source
-    of silent drift in hand-rolled engines). A planted-null pytest
-    pins the exact expectations."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.expr("nullif(user_id % 5, 4)").alias("nk"),
-        F.expr("nullif(CAST(floor(value * 100 + 0.5) AS BIGINT) % 10, 0)")
-        .alias("v"))
-    return (
-        ev.groupBy("nk")
-        .agg(F.count("*").alias("n_all"),
-             F.count("v").alias("n_nonnull"),
-             F.sum("v").alias("sum_v"),
-             F.min("v").alias("min_v"),
-             F.max("v").alias("max_v"),
-             F.countDistinct("v").alias("n_distinct"))
-    )
-
-
-SQL_EVENTS_NULL_SEMANTICS = """
-SELECT nullif(user_id % 5, 4) AS nk,
-       count(*) AS n_all,
-       count(nullif(CAST(floor(value * 100 + 0.5) AS BIGINT) % 10, 0))
-           AS n_nonnull,
-       CAST(sum(nullif(CAST(floor(value * 100 + 0.5) AS BIGINT) % 10, 0))
-            AS BIGINT) AS sum_v,
-       CAST(min(nullif(CAST(floor(value * 100 + 0.5) AS BIGINT) % 10, 0))
-            AS BIGINT) AS min_v,
-       CAST(max(nullif(CAST(floor(value * 100 + 0.5) AS BIGINT) % 10, 0))
-            AS BIGINT) AS max_v,
-       count(DISTINCT nullif(CAST(floor(value * 100 + 0.5) AS BIGINT)
-             % 10, 0)) AS n_distinct
-FROM events GROUP BY 1
-"""
-
-
-def q_orders_percent_of_total(spark, sf_dir):
-    """Window-over-aggregate reporting shape (ratio_to_report): each
-    customer's revenue share of their nation's total, in basis points
-    by rounded integer division. One groupBy shuffle on (nation,
-    customer) + one window on nation reusing the same partitioning
-    prefix (no second exchange at scale since nation ⊂ the group
-    key... Catalyst plans the window on the nation key — the window
-    shuffle is the one unavoidable re-key from (nation, cust) to
-    (nation)). Customer dim broadcasts."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    per_cust = (
-        orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey)
-        .groupBy("c_nationkey", "c_custkey")
-        .agg(F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("rev_c")))
-    w = Window.partitionBy("c_nationkey")
-    return (
-        per_cust.withColumn("nation_rev_c", F.sum("rev_c").over(w))
-        .withColumn("share_bp", F.expr(
-            "(2 * rev_c * 10000 + nation_rev_c) DIV (2 * nation_rev_c)"))
-        .select("c_nationkey", "c_custkey", "rev_c", "share_bp")
-    )
-
-
-SQL_ORDERS_PERCENT_OF_TOTAL = """
-WITH per_cust AS (
-  SELECT c_nationkey, c_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS rev_c
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1, 2
-)
-SELECT c_nationkey, c_custkey, rev_c,
-       CAST((2 * rev_c * 10000 + sum(rev_c) OVER (PARTITION BY c_nationkey))
-            // (2 * sum(rev_c) OVER (PARTITION BY c_nationkey))
-            AS BIGINT) AS share_bp
-FROM per_cust
-"""
-
-
 # --------------------------------------------------------------------------
 # Embedding-space curation: SemDeDup-style semantic dedup and kNN
 # label-noise detection — both reuse the trained-IVF cell machinery
@@ -8831,1655 +4580,6 @@ SQL_EMBEDDING_LABEL_NOISE = _sql_embedding_label_noise()
 
 
 # --------------------------------------------------------------------------
-# Exact-rational language-model smoothing: interpolated Kneser–Ney and
-# Good–Turing, both emitted as integer numerator/denominator pairs
-# (discount 0.75 = 3/4 makes every KN term a rational with denominator
-# 4·c(w1)·B — no float ever materializes).
-# --------------------------------------------------------------------------
-
-def q_terms_kn_bigram_probs(spark, sf_dir):
-    """Interpolated Kneser–Ney bigram probabilities with discount
-    D = 3/4, as EXACT RATIONALS: scaling by 4·c(w1)·B turns
-    P_KN(w2|w1) = max(c12−D,0)/c1 + D·N1+(w1•)/c1 · N1+(•w2)/B into
-    num = max(4·c12−3, 0)·B + 3·N1+(w1•)·N1+(•w2), den = 4·c1·B —
-    bigint arithmetic end to end (the continuation-counts op grown
-    into the full smoothed estimator). Output limited to bigrams with
-    c12 ≥ 3 (volume; same gate both engines).
-
-    Scale: bigram counts partial-aggregate map-side; the bigram-type
-    table (vocabulary-bounded, tiny next to the corpus) materializes
-    once (r9: its four consumers — left totals, continuation counts,
-    B, and the join probe — have non-identical children, so exchange
-    reuse never covered them and the tokenize + bigram agg ran up to
-    4×; measured 1.20 → 0.74 s at sf0.1); the three side statistics
-    are aggregates OF that table joined back on w1/w2; B is a one-row
-    broadcast. On a real cluster swap the localCheckpoint for
-    checkpoint()/a table write."""
-    docs = _t(spark, sf_dir, "documents")
-    words = (docs.select(F.expr(
-        "regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("ws"))
-        .where(F.size("ws") >= 2))
-    bigrams = (words.select(F.explode(F.expr(
-        "transform(sequence(1, size(ws) - 1),"
-        " i -> struct(ws[i - 1] AS w1, ws[i] AS w2))")).alias("b"))
-        .select("b.w1", "b.w2"))
-    c12 = (bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-           .localCheckpoint(eager=True))
-    left = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"),
-        F.count("*").alias("fanout"))          # N1+(w1 •)
-    cont = c12.groupBy("w2").agg(
-        F.count("*").alias("cont"))            # N1+(• w2)
-    btot = c12.agg(F.count("*").alias("b_types"))
-    return (
-        c12.join(left, "w1").join(cont, "w2")
-        .crossJoin(F.broadcast(btot))
-        .filter(F.col("c12") >= 3)
-        .select(
-            "w1", "w2", "c12",
-            F.expr("greatest(4 * c12 - 3, 0) * b_types"
-                   " + 3 * fanout * cont").alias("p_num"),
-            F.expr("4 * c1 * b_types").alias("p_den"))
-    )
-
-
-SQL_TERMS_KN_BIGRAM_PROBS = """
-WITH ws AS (
-  SELECT regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents
-), bigrams AS (
-  SELECT w[i] AS w1, w[i + 1] AS w2
-  FROM ws, UNNEST(range(1, len(w))) AS t(i)
-  WHERE len(w) >= 2
-), c12 AS (
-  SELECT w1, w2, count(*) AS c12 FROM bigrams GROUP BY 1, 2
-), lft AS (
-  SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS fanout
-  FROM c12 GROUP BY 1
-), cont AS (
-  SELECT w2, count(*) AS cont FROM c12 GROUP BY 1
-), btot AS (
-  SELECT count(*) AS b_types FROM c12
-)
-SELECT w1, w2, c12,
-       CAST(greatest(4 * c12 - 3, 0) * b_types
-            + 3 * fanout * cont AS BIGINT) AS p_num,
-       CAST(4 * c1 * b_types AS BIGINT) AS p_den
-FROM c12 JOIN lft USING (w1) JOIN cont USING (w2), btot
-WHERE c12 >= 3
-"""
-
-
-def q_terms_good_turing(spark, sf_dir):
-    """Good–Turing adjusted counts as exact rationals: for each
-    observed frequency r, the smoothed count r* = (r+1)·N_{r+1}/N_r
-    is emitted as the integer pair (rstar_num, rstar_den) — the
-    freq-of-freqs table joined to itself one step up via a lead
-    window over the (tiny, bounded) frequency directory. Rows where
-    N_{r+1} = 0 (gaps in the frequency spectrum) emit num 0 — the
-    classic GT estimator is undefined there and the 0 makes the gap
-    auditable rather than silently dropped."""
-    docs = _t(spark, sf_dir, "documents")
-    words = (docs.select(F.explode(F.expr(
-        "regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("w")))
-    freq = words.groupBy("w").agg(F.count("*").alias("r"))
-    nr = freq.groupBy("r").agg(F.count("*").alias("n_r"))
-    w = Window.orderBy("r")
-    return (
-        nr.withColumn("r_next", F.lead("r").over(w))
-        .withColumn("n_next", F.lead("n_r").over(w))
-        .select(
-            "r", "n_r",
-            F.expr("CASE WHEN r_next = r + 1"
-                   " THEN (r + 1) * n_next ELSE 0 END")
-            .alias("rstar_num"),
-            F.col("n_r").alias("rstar_den"))
-    )
-
-
-SQL_TERMS_GOOD_TURING = """
-WITH words AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-  FROM documents
-), freq AS (
-  SELECT w, count(*) AS r FROM words GROUP BY 1
-), nr AS (
-  SELECT r, count(*) AS n_r FROM freq GROUP BY 1
-)
-SELECT r, n_r,
-       CAST(CASE WHEN lead(r) OVER (ORDER BY r) = r + 1
-            THEN (r + 1) * lead(n_r) OVER (ORDER BY r)
-            ELSE 0 END AS BIGINT) AS rstar_num,
-       n_r AS rstar_den
-FROM nr
-"""
-
-
-# --------------------------------------------------------------------------
-# Spark-4 surface batch 2: native batch session_window, from_xml, and
-# the DataSketches HLL two-phase (sketch → union) aggregation shape.
-# --------------------------------------------------------------------------
-
-
-def q_events_session_window_native(spark, sf_dir):
-    """Spark's NATIVE ``session_window`` in batch mode (the streaming
-    session operator applied to a static table), proven equivalent to
-    the classic lag-islands formulation by the oracle. Semantics under
-    test: a session spans [first event ts, last event ts + gap), and
-    an event EXACTLY gap after the last one still EXTENDS the session
-    (Spark merges on diff <= gap; only diff > gap starts a new
-    session — pinned by the boundary pytest, which is how this was
-    discovered: the first oracle guessed strict-< and real data never
-    hit the boundary). One shuffle on user_id."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp("session_window.start").alias("session_start_s"),
-            F.unix_timestamp("session_window.end").alias("session_end_s"),
-            "n_events")
-    )
-
-
-SQL_EVENTS_SESSION_WINDOW_NATIVE = """
-WITH marked AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch(ts) - epoch(lag(ts) OVER (
-                  PARTITION BY user_id ORDER BY ts)) > 1800
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), grouped AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-             ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
-SELECT user_id,
-       CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start_s,
-       CAST(floor(epoch(max(ts))) + 1800 AS BIGINT) AS session_end_s,
-       count(*) AS n_events
-FROM grouped GROUP BY user_id, sid
-"""
-
-
-def q_events_xml_parse(spark, sf_dir):
-    """``from_xml`` (Spark 4): a deterministic XML envelope synthesized
-    per event is parsed back through the XML reader and aggregated on
-    the PARSED fields — the oracle aggregates the pre-envelope values
-    directly, so any parse drift (entity handling, whitespace, type
-    coercion) flips the hash. Per-row JVM expression, no shuffle
-    before the final aggregate."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.expr(
-            "concat('<e><t>', event_type, '</t><v>',"
-            " CAST(CAST(floor(value * 100 + 0.5) AS BIGINT) AS STRING),"
-            " '</v></e>')").alias("xml"))
-    parsed = ev.select(
-        F.expr("from_xml(xml, 't STRING, v BIGINT')").alias("p"))
-    return (
-        parsed.groupBy(F.col("p.t").alias("event_type"))
-        .agg(F.count("*").alias("n"),
-             F.sum("p.v").alias("sum_value_c"))
-    )
-
-
-SQL_EVENTS_XML_PARSE = """
-SELECT event_type, count(*) AS n,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_value_c
-FROM events GROUP BY 1
-"""
-
-
-def q_events_hll_merge(spark, sf_dir):
-    """DataSketches HLL two-phase aggregation (Spark 4
-    ``hll_sketch_agg`` → ``hll_union_agg``): per-type user sketches
-    are built independently, then MERGED — the shape that lets a
-    100 TB pipeline compute distinct counts per partition/day/source
-    once and re-aggregate them arbitrarily without rescanning. The
-    estimate is sketch-specific, so (cardinality_approx precedent)
-    the oracle verifies the exact global count and the
-    Spark-side-checked error-bound flag; a sketch drifting past 5%
-    flips the flag and fails the hash."""
-    ev = _t(spark, sf_dir, "events")
-    per_type = (ev.groupBy("event_type")
-                .agg(F.expr("hll_sketch_agg(CAST(user_id AS STRING))")
-                     .alias("sk")))
-    merged = per_type.agg(
-        F.expr("CAST(hll_sketch_estimate(hll_union_agg(sk)) AS BIGINT)")
-        .alias("union_estimate"),
-        F.count("*").alias("n_sketches"))
-    exact = ev.agg(F.countDistinct("user_id").alias("exact_users"))
-    return (
-        merged.crossJoin(F.broadcast(exact))
-        .select(
-            "n_sketches", "exact_users",
-            (F.abs(F.col("union_estimate") - F.col("exact_users")) * 20
-             <= F.col("exact_users")).alias("union_within_5pct"))
-    )
-
-
-SQL_EVENTS_HLL_MERGE = """
-SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS n_sketches,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-       true AS union_within_5pct
-FROM events
-"""
-
-
-# --------------------------------------------------------------------------
-# Aggregate-surface completion: built-in exact median (doubled to stay
-# integral), DataFrame.transpose, ordered string aggregation, and
-# ANSI-safe try_* arithmetic.
-# --------------------------------------------------------------------------
-
-
-def q_events_median_by_type(spark, sf_dir):
-    """The built-in ``median()`` aggregate (Spark 3.4+), emitted as
-    2×median so the even-count midpoint interpolation (a+b)/2 stays an
-    exact integer — the one float op is a single IEEE divide undone by
-    the doubling, bit-portable by the module convention. Complements
-    lineitem_median_histogram (the scalable two-pass shape) by pinning
-    the BUILT-IN's semantics against DuckDB's median."""
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_type",
-                F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
-                .alias("value_c"))
-        .groupBy("event_type")
-        .agg(F.expr("CAST(2 * median(value_c) AS BIGINT)")
-             .alias("median2_c"),
-             F.count("*").alias("n"))
-    )
-
-
-SQL_EVENTS_MEDIAN_BY_TYPE = """
-SELECT event_type,
-       CAST(2 * median(CAST(floor(value * 100 + 0.5) AS BIGINT))
-            AS BIGINT) AS median2_c,
-       count(*) AS n
-FROM events GROUP BY 1
-"""
-
-
-def q_events_transpose(spark, sf_dir):
-    """``DataFrame.transpose()`` (Spark 4): the per-type metrics matrix
-    flipped so each metric becomes a row and each event_type a column —
-    the report-layout pivot the reference exposes as its summary view.
-    Determinism: the frame is ordered by event_type BEFORE transposing
-    (transpose takes new column names from first-column values in row
-    order), and the metric rows keep their source-column names. The
-    oracle rebuilds the same layout with conditional aggregation."""
-    types = ["click", "error", "purchase", "signup", "view"]
-    agg = (_t(spark, sf_dir, "events")
-           .groupBy("event_type")
-           .agg(F.count("*").alias("n_events"),
-                F.countDistinct("user_id").alias("n_users"))
-           .filter(F.col("event_type").isin(types)))
-    # pin the full type directory: transpose materializes a column per
-    # PRESENT row, so a corpus missing a type would change the schema —
-    # the left join keeps absent types as NULL-metric columns
-    tdir = spark.sql(
-        "SELECT explode(array({})) AS event_type".format(
-            ",".join(f"'{t}'" for t in types)))
-    m = tdir.join(agg, "event_type", "left").orderBy("event_type")
-    t = m.transpose()
-    return t.select(F.col("key").alias("metric"),
-                    *[F.col(c).cast("long").alias(c) for c in types])
-
-
-SQL_EVENTS_TRANSPOSE = """
-SELECT 'n_events' AS metric,
-       CAST(sum(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT)
-           AS click,
-       CAST(sum(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT)
-           AS error,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
-           AS purchase,
-       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT)
-           AS signup,
-       CAST(sum(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT)
-           AS view
-FROM events
-UNION ALL
-SELECT 'n_users',
-       CAST(nullif(count(DISTINCT CASE WHEN event_type = 'click'
-                 THEN user_id END), 0) AS BIGINT),
-       CAST(nullif(count(DISTINCT CASE WHEN event_type = 'error'
-                 THEN user_id END), 0) AS BIGINT),
-       CAST(nullif(count(DISTINCT CASE WHEN event_type = 'purchase'
-                 THEN user_id END), 0) AS BIGINT),
-       CAST(nullif(count(DISTINCT CASE WHEN event_type = 'signup'
-                 THEN user_id END), 0) AS BIGINT),
-       CAST(nullif(count(DISTINCT CASE WHEN event_type = 'view'
-                 THEN user_id END), 0) AS BIGINT)
-FROM events
-"""
-
-
-def q_events_string_agg(spark, sf_dir):
-    """Ordered string aggregation: the 5 smallest distinct user ids per
-    type joined with commas. Spark composes it from
-    sort_array(collect_list(DISTINCT)) + slice + array_join (the
-    listagg WITHIN GROUP shape — 4.1's listagg doesn't parse here, the
-    composition is the portable spelling); DuckDB uses native
-    string_agg ORDER BY over a ranked subquery. Determinism comes from
-    the explicit sort, never collection order."""
-    ev = (_t(spark, sf_dir, "events")
-          .select("event_type", "user_id").distinct())
-    return (
-        ev.groupBy("event_type")
-        .agg(F.expr(
-            "array_join(slice(sort_array(collect_list(user_id)), 1, 5),"
-            " ',')").alias("first_users"),
-            F.count("*").alias("n_distinct_users"))
-    )
-
-
-SQL_EVENTS_STRING_AGG = """
-WITH d AS (
-  SELECT DISTINCT event_type, user_id FROM events
-), ranked AS (
-  SELECT event_type, user_id,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY user_id) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n_distinct_users
-  FROM d
-)
-SELECT event_type,
-       string_agg(CASE WHEN rn <= 5 THEN CAST(user_id AS VARCHAR) END,
-                  ',' ORDER BY user_id) AS first_users,
-       any_value(n_distinct_users) AS n_distinct_users
-FROM ranked GROUP BY 1
-"""
-
-
-def q_events_try_arithmetic(spark, sf_dir):
-    """ANSI-safe ``try_*`` arithmetic (Spark 4 runs ANSI mode ON, where
-    plain division by zero THROWS): try_divide/try_mod null out the
-    poison rows instead, and the aggregate skips them — the pattern
-    every production pipeline needs under ANSI. The divisor is made
-    deterministically zero on a slice (value_c % 3); the oracle uses
-    explicit NULLIF guards, proving try_* ≡ guarded SQL."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("v"))
-    return (
-        ev.withColumn("q", F.expr("try_divide(10000, v % 3)"))
-        .withColumn("m", F.expr("try_mod(v, v % 3)"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_all"),
-             F.count("q").alias("n_divisible"),
-             F.sum(F.expr("CAST(floor(q) AS BIGINT)")).alias("sum_q_floor"),
-             F.sum("m").alias("sum_m"))
-    )
-
-
-SQL_EVENTS_TRY_ARITHMETIC = """
-WITH ev AS (
-  SELECT event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-  FROM events
-)
-SELECT event_type, count(*) AS n_all,
-       count(10000 / nullif(v % 3, 0)) AS n_divisible,
-       CAST(sum(floor(10000 / nullif(v % 3, 0))) AS BIGINT)
-           AS sum_q_floor,
-       CAST(sum(v % nullif(v % 3, 0)) AS BIGINT) AS sum_m
-FROM ev GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Exact regression statistics: Zipf slope in integer log2 space and
-# ordinary least squares as exact rationals (with the built-in regr_*
-# aggregates cross-checked via the verified-bound pattern).
-# --------------------------------------------------------------------------
-
-
-def q_terms_zipf_slope(spark, sf_dir):
-    """Zipf's-law fit of the word frequency spectrum: OLS slope of
-    flog2(freq) on flog2(rank), emitted as the exact rational
-    (slope_num, slope_den) = (n·Σxy − Σx·Σy, n·Σx² − (Σx)²). Both
-    coordinates are INTEGER floor-log2 (length(bin(x)) − 1 — the
-    dsir_importance precedent), so every sum is exact bigint and the
-    rational is bit-identical cross-engine; a healthy corpus lands
-    slope ≈ −1. Rank comes from one window over the (vocabulary-
-    bounded) frequency table with freq-then-word tiebreak."""
-    docs = _t(spark, sf_dir, "documents")
-    words = (docs.select(F.explode(F.expr(
-        "regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("w")))
-    freq = words.groupBy("w").agg(F.count("*").alias("f"))
-    w = Window.orderBy(F.desc("f"), F.asc("w"))
-    pts = (freq.withColumn("r", F.row_number().over(w))
-           .select(F.expr("CAST(length(bin(r)) - 1 AS BIGINT)").alias("x"),
-                   F.expr("CAST(length(bin(f)) - 1 AS BIGINT)").alias("y")))
-    return (
-        pts.agg(F.count("*").alias("n"),
-                F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-                F.sum(F.expr("x * y")).alias("sxy"),
-                F.sum(F.expr("x * x")).alias("sxx"))
-        .select(
-            "n",
-            F.expr("n * sxy - sx * sy").alias("slope_num"),
-            F.expr("n * sxx - sx * sx").alias("slope_den"))
-    )
-
-
-SQL_TERMS_ZIPF_SLOPE = """
-WITH words AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-  FROM documents
-), freq AS (
-  SELECT w, count(*) AS f FROM words GROUP BY 1
-), pts AS (
-  SELECT CAST(length(bin(row_number() OVER (ORDER BY f DESC, w ASC)))
-              - 1 AS BIGINT) AS x,
-         CAST(length(bin(f)) - 1 AS BIGINT) AS y
-  FROM freq
-)
-SELECT count(*) AS n,
-       CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT)
-           AS slope_num,
-       CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT)
-           AS slope_den
-FROM pts
-"""
-
-
-def q_events_linreg_exact(spark, sf_dir):
-    """Ordinary least squares of event value on time, as exact
-    rationals: x = days since the fixed epoch 1995-01-01 (bounded
-    integers), y = value cents; slope = (n·Σxy − Σx·Σy) /
-    (n·Σx² − (Σx)²) emitted as the bigint pair, intercept likewise
-    over the common denominator n·den. The built-in ``regr_slope``
-    runs alongside and is CHECKED against the rational (|regr −
-    num/den| ≤ 1e-9·|num/den|, the HLL verified-bound pattern) — the
-    float aggregate is engine-specific, the flag is the portable
-    truth. Overflow headroom: n·Σxy stays under 2⁶³ through sf0.1
-    (documented bound; at 10⁹ rows shift to per-partition Welford or
-    DECIMAL(38) sums)."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.expr("CAST(datediff(ts, DATE '1995-01-01') AS BIGINT)")
-        .alias("x"),
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("y"))
-    return (
-        ev.agg(F.count("*").alias("n"),
-               F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-               F.sum(F.expr("x * y")).alias("sxy"),
-               F.sum(F.expr("x * x")).alias("sxx"),
-               F.expr("regr_slope(CAST(y AS DOUBLE), CAST(x AS DOUBLE))")
-               .alias("builtin"))
-        .select(
-            "n",
-            F.expr("n * sxy - sx * sy").alias("slope_num"),
-            F.expr("n * sxx - sx * sx").alias("slope_den"),
-            F.expr(
-                "CAST(abs(builtin - CAST(n * sxy - sx * sy AS DOUBLE)"
-                " / CAST(n * sxx - sx * sx AS DOUBLE))"
-                " <= 1e-9 * abs(CAST(n * sxy - sx * sy AS DOUBLE)"
-                " / CAST(n * sxx - sx * sx AS DOUBLE)) AS INT)")
-            .alias("builtin_agrees"))
-    )
-
-
-SQL_EVENTS_LINREG_EXACT = """
-WITH ev AS (
-  SELECT CAST(datediff('day', DATE '1995-01-01', ts) AS BIGINT) AS x,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-  FROM events
-)
-SELECT count(*) AS n,
-       CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT)
-           AS slope_num,
-       CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT)
-           AS slope_den,
-       1 AS builtin_agrees
-FROM ev
-"""
-
-
-# --------------------------------------------------------------------------
-# Warehouse analytics batch: XYZ demand-variability classes (exact CV²
-# threshold algebra), seasonal-naive forecast error, and the
-# shuffle-hash join-hint surface.
-# --------------------------------------------------------------------------
-
-
-def q_orders_xyz_classes(spark, sf_dir):
-    """XYZ inventory classification (the ABC/Pareto op's variability
-    twin): parts classed by the coefficient of variation of their
-    monthly demand. CV thresholds are EXACT integer algebra — CV² =
-    (n·Σq² − S²)/S², so "CV ≤ 1/4" is 16·(n·Σq² − S²) ≤ S² and
-    "CV ≤ 1/2" is 4·(n·Σq² − S²) ≤ S² — no sqrt, no float (the
-    z-score precedent: σ-style gates compare squares). n counts the
-    part's months WITH sales (deterministic horizon). Two bounded
-    aggregates: monthly sums shuffle on (part, month), then per-part."""
-    li = _t(spark, sf_dir, "lineitem")
-    monthly = (li.groupBy("l_partkey",
-                          F.date_format("l_shipdate", "yyyy-MM")
-                          .alias("m"))
-               .agg(F.sum(F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)"))
-                    .alias("q")))
-    return (
-        monthly.groupBy("l_partkey")
-        .agg(F.count("*").alias("n_months"),
-             F.sum("q").alias("s_qty"),
-             F.sum(F.expr("q * q")).alias("q2"))
-        .select(
-            "l_partkey", "n_months", "s_qty",
-            F.expr(
-                "CASE WHEN 16 * (n_months * q2 - s_qty * s_qty)"
-                " <= s_qty * s_qty THEN 'X'"
-                " WHEN 4 * (n_months * q2 - s_qty * s_qty)"
-                " <= s_qty * s_qty THEN 'Y'"
-                " ELSE 'Z' END").alias("xyz_class"))
-    )
-
-
-SQL_ORDERS_XYZ_CLASSES = """
-WITH monthly AS (
-  SELECT l_partkey, strftime(l_shipdate, '%Y-%m') AS m,
-         CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT) AS q
-  FROM lineitem GROUP BY 1, 2
-), per_part AS (
-  SELECT l_partkey, count(*) AS n_months,
-         CAST(sum(q) AS BIGINT) AS s_qty,
-         CAST(sum(q * q) AS BIGINT) AS q2
-  FROM monthly GROUP BY 1
-)
-SELECT l_partkey, n_months, s_qty,
-       CASE WHEN 16 * (n_months * q2 - s_qty * s_qty) <= s_qty * s_qty
-            THEN 'X'
-            WHEN 4 * (n_months * q2 - s_qty * s_qty) <= s_qty * s_qty
-            THEN 'Y'
-            ELSE 'Z' END AS xyz_class
-FROM per_part
-"""
-
-
-def q_events_seasonal_naive_error(spark, sf_dir):
-    """Seasonal-naive forecast backtest: predict each day's event count
-    with the count from the SAME WEEKDAY one week earlier (the
-    baseline every forecasting pipeline must beat), and emit the exact
-    integer error totals. The lag is a CALENDAR self-join on
-    day − 7 (not a 7-row window lag — gaps in the day directory would
-    silently misalign a row-based lag); the day directory is bounded,
-    so the self-join is tiny."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (ev.groupBy(F.to_date("ts").alias("d"))
-             .agg(F.count("*").alias("n")))
-    prior = daily.select(F.col("d").alias("d7"), F.col("n").alias("n7"))
-    return (
-        daily.join(prior, F.col("d") == F.expr("date_add(d7, 7)"))
-        .agg(F.count("*").alias("n_days_compared"),
-             F.sum(F.expr("abs(n - n7)")).alias("total_abs_err"),
-             F.sum("n").alias("total_actual"))
-    )
-
-
-SQL_EVENTS_SEASONAL_NAIVE_ERROR = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, count(*) AS n FROM events GROUP BY 1
-)
-SELECT count(*) AS n_days_compared,
-       CAST(sum(abs(a.n - b.n)) AS BIGINT) AS total_abs_err,
-       CAST(sum(a.n) AS BIGINT) AS total_actual
-FROM daily a JOIN daily b ON a.d = b.d + INTERVAL 7 DAY
-"""
-
-
-def q_orders_shuffle_hash_join(spark, sf_dir):
-    """Join-strategy HINT surface: the same orders⋈lineitem aggregate
-    with an explicit ``shuffle_hash`` hint — the knob you reach for at
-    scale when the build side fits executor memory per-partition but
-    not in the driver broadcast budget, and sort-merge's double sort
-    is the bottleneck. The result is hint-invariant (the oracle is the
-    plain join); the plan audit asserts ShuffledHashJoin actually
-    planned (a hint that silently degrades is worse than none)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority").hint("shuffle_hash")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_lines"),
-             F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-    )
-
-
-SQL_ORDERS_SHUFFLE_HASH_JOIN = """
-SELECT o_orderpriority, count(*) AS n_lines,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 21: matrix-multiply-as-join (Markov composition), the inverted-
-# index build with WAND upper bounds, and order-independent table
-# fingerprints (the cross-cluster data-integrity primitive).
-# --------------------------------------------------------------------------
-
-
-def q_events_two_step_transitions(spark, sf_dir):
-    """Markov composition C² of the event-type transition matrix:
-    the expected two-step flow a→·→c is Σ_b C[a,b]·C[b,c] — a matrix
-    multiply expressed as the equi-join of the count matrix with
-    itself on the middle state (the scalable spelling: |types|²
-    rows, never touching the event stream twice). One-step counts
-    come from a lead window per user (ts, event_id tiebreak).
-    Exact bigint throughout; zero rows are absent, not emitted."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    steps = (ev.withColumn("nxt", F.lead("event_type").over(w))
-             .filter(F.col("nxt").isNotNull()))
-    c = steps.groupBy(F.col("event_type").alias("a"),
-                      F.col("nxt").alias("b")).agg(
-        F.count("*").alias("n"))
-    c2 = c.select(F.col("a").alias("m"), F.col("b").alias("c_"),
-                  F.col("n").alias("n2"))
-    return (
-        c.join(c2, c.b == c2.m)
-        .groupBy("a", F.col("c_").alias("c"))
-        .agg(F.sum(F.expr("n * n2")).alias("paths2"))
-    )
-
-
-SQL_EVENTS_TWO_STEP_TRANSITIONS = """
-WITH steps AS (
-  SELECT event_type AS a,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS b
-  FROM events
-), c AS (
-  SELECT a, b, count(*) AS n FROM steps WHERE b IS NOT NULL GROUP BY 1, 2
-)
-SELECT c1.a, c2.b AS c, CAST(sum(c1.n * c2.n) AS BIGINT) AS paths2
-FROM c c1 JOIN c c2 ON c1.b = c2.a
-GROUP BY 1, 2
-"""
-
-
-def q_docs_inverted_index(spark, sf_dir):
-    """The inverted-index build (the IR core the BM25 op queries):
-    term → document frequency, max term-frequency (the WAND/MaxScore
-    upper bound that lets a query engine skip postings), and the head
-    of the posting list (5 smallest doc ids — deterministic sample of
-    the sorted postings). Per-doc tf aggregates map-side on (term,
-    doc); the per-term rollup is vocabulary-bounded."""
-    docs = _t(spark, sf_dir, "documents")
-    tf = (docs.select("doc_id", F.explode(F.expr(
-        "regexp_extract_all(lower(text), '([a-z]+)', 1)")).alias("w"))
-        .groupBy("w", "doc_id").agg(F.count("*").alias("tf")))
-    return (
-        tf.groupBy("w")
-        .agg(F.count("*").alias("df"),
-             F.max("tf").alias("max_tf"),
-             F.expr("array_join(slice(sort_array(collect_list(doc_id)),"
-                    " 1, 5), ',')").alias("posting_head"))
-        .filter(F.col("df") >= 3)
-        .select(F.col("w").alias("term"), "df", "max_tf", "posting_head")
-    )
-
-
-SQL_DOCS_INVERTED_INDEX = """
-WITH tf AS (
-  SELECT w, doc_id, count(*) AS tf
-  FROM (SELECT doc_id,
-               unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-        FROM documents)
-  GROUP BY 1, 2
-), ranked AS (
-  SELECT w, doc_id, tf,
-         row_number() OVER (PARTITION BY w ORDER BY doc_id) AS rn
-  FROM tf
-)
-SELECT w AS term, count(*) AS df,
-       CAST(max(tf) AS BIGINT) AS max_tf,
-       string_agg(CASE WHEN rn <= 5 THEN CAST(doc_id AS VARCHAR) END,
-                  ',' ORDER BY doc_id) AS posting_head
-FROM ranked GROUP BY 1 HAVING count(*) >= 3
-"""
-
-
-def q_tables_fingerprint(spark, sf_dir):
-    """Order-independent table fingerprints — the primitive for
-    verifying a copy/migration/engine-swap moved every row: per table,
-    the row count and the bit-XOR of a 60-bit md5-derived hash of the
-    canonicalized row (integer keys, cents-frozen money, ISO dates —
-    only cross-engine-stable renderings enter the hash). XOR is
-    commutative/associative and overflow-free, so the fingerprint is
-    partition-order independent and computable map-side with a 1-row
-    combine — the cheapest possible full-table integrity check at
-    100 TB."""
-    def fp(df, cols, name):
-        h = F.expr(
-            "conv(substring(md5(concat_ws('|', {})), 1, 15), 16, 10)"
-            .format(",".join(cols)))
-        return (df.select(h.cast("long").alias("h"))
-                .agg(F.count("*").alias("n_rows"),
-                     F.expr("bit_xor(h)").alias("fingerprint"))
-                .select(F.lit(name).alias("tbl"), "n_rows", "fingerprint"))
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    o = fp(orders, ["o_orderkey", "o_custkey",
-                    "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)",
-                    "o_orderstatus", "o_orderpriority",
-                    "date_format(o_orderdate, 'yyyy-MM-dd')"], "orders")
-    c = fp(cust, ["c_custkey", "c_nationkey",
-                  "CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)",
-                  "c_mktsegment"], "customer")
-    n = fp(nation, ["n_nationkey", "n_name", "n_regionkey"], "nation")
-    return o.unionByName(c).unionByName(n)
-
-
-SQL_TABLES_FINGERPRINT = """
-SELECT 'orders' AS tbl, count(*) AS n_rows,
-       CAST(bit_xor(CAST('0x' || substring(md5(concat_ws('|',
-            o_orderkey, o_custkey,
-            CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT),
-            o_orderstatus, o_orderpriority,
-            strftime(o_orderdate, '%Y-%m-%d'))), 1, 15) AS BIGINT))
-            AS BIGINT) AS fingerprint
-FROM orders
-UNION ALL
-SELECT 'customer', count(*),
-       CAST(bit_xor(CAST('0x' || substring(md5(concat_ws('|',
-            c_custkey, c_nationkey,
-            CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT),
-            c_mktsegment)), 1, 15) AS BIGINT)) AS BIGINT)
-FROM customer
-UNION ALL
-SELECT 'nation', count(*),
-       CAST(bit_xor(CAST('0x' || substring(md5(concat_ws('|',
-            n_nationkey, n_name, n_regionkey)), 1, 15) AS BIGINT))
-            AS BIGINT)
-FROM nation
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 22: exact-rational linear gap interpolation and the 2-D skyline
-# (Pareto frontier) via the single-sort running-max formulation.
-# --------------------------------------------------------------------------
-
-
-def q_events_gap_interpolation(spark, sf_dir):
-    """Linear interpolation of MISSING days in the daily value series —
-    the gap-filling twin of events_locf: between consecutive observed
-    days (x1,y1),(x2,y2) every absent day x gets the exact rational
-    y = (y1·(x2−x) + y2·(x−x1)) / (x2−x1), emitted as the bigint pair
-    (interp_num, interp_den) — no float division, endpoint-exact by
-    construction. Days are epoch-day integers; the generate step
-    explodes sequence(x1+1, x2−1) over the bounded day directory
-    (never the event stream). The synthetic corpus has an event every
-    day, so gaps are INJECTED deterministically (drop day_idx % 7 == 3
-    in BOTH engines — the PII/skew-injection convention: the op must
-    demonstrably engage, a zero-row pass proves nothing)."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (ev.groupBy(
-        F.expr("CAST(datediff(ts, DATE '1995-01-01') AS BIGINT)")
-        .alias("x"))
-        .agg(F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-             .alias("y"))
-        .filter(F.expr("x % 7 != 3")))
-    w = Window.orderBy("x")
-    seg = (daily
-           .withColumn("x2", F.lead("x").over(w))
-           .withColumn("y2", F.lead("y").over(w))
-           .filter(F.expr("x2 IS NOT NULL AND x2 > x + 1")))
-    return (
-        seg.select(
-            F.col("x").alias("x1"), "y", "x2", "y2",
-            F.explode(F.expr("sequence(x + 1, x2 - 1)")).alias("xm"))
-        .select(
-            F.col("xm").alias("day_idx"),
-            F.expr("y * (x2 - xm) + y2 * (xm - x1)").alias("interp_num"),
-            F.expr("x2 - x1").alias("interp_den"))
-    )
-
-
-SQL_EVENTS_GAP_INTERPOLATION = """
-WITH daily AS (
-  SELECT CAST(datediff('day', DATE '1995-01-01', ts) AS BIGINT) AS x,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS y
-  FROM events GROUP BY 1
-), kept AS (
-  SELECT * FROM daily WHERE x % 7 != 3
-), seg AS (
-  SELECT x AS x1, y AS y1,
-         lead(x) OVER (ORDER BY x) AS x2,
-         lead(y) OVER (ORDER BY x) AS y2
-  FROM kept
-)
-SELECT CAST(xm AS BIGINT) AS day_idx,
-       CAST(y1 * (x2 - xm) + y2 * (xm - x1) AS BIGINT) AS interp_num,
-       CAST(x2 - x1 AS BIGINT) AS interp_den
-FROM seg, UNNEST(range(x1 + 1, x2)) AS t(xm)
-WHERE x2 IS NOT NULL AND x2 > x1 + 1
-"""
-
-
-def q_part_skyline(spark, sf_dir):
-    """2-D skyline (Pareto frontier): parts not dominated on
-    (cheaper price, larger size) — the multi-objective shortlist
-    query. NOT the O(n²) anti-join: after one sort by price the
-    frontier falls out of two window maxima — a point is dominated iff
-    the max size over STRICTLY cheaper points (integer RANGE frame,
-    the orders_range_frame precedent) reaches its size, or an
-    equal-price point is strictly larger. O(n log n), one shuffle,
-    survives 10⁹ points where the naive inequality self-join is a
-    cartesian. Equal (price, size) duplicates don't dominate each
-    other (no strict coordinate) — both survive; the test pins that."""
-    part = _t(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.expr("CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)")
-        .alias("price_c"),
-        F.col("p_size").cast("long").alias("size"))
-    w_lt = (Window.orderBy("price_c")
-            .rangeBetween(Window.unboundedPreceding, -1))
-    w_eq = Window.partitionBy("price_c")
-    return (
-        part
-        .withColumn("m_lt", F.max("size").over(w_lt))
-        .withColumn("m_eq", F.max("size").over(w_eq))
-        .filter(F.expr(
-            "(m_lt IS NULL OR m_lt < size) AND m_eq = size"))
-        .select("p_partkey", "price_c", "size")
-    )
-
-
-SQL_PART_SKYLINE = """
-WITH pts AS (
-  SELECT p_partkey,
-         CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_c,
-         CAST(p_size AS BIGINT) AS size
-  FROM part
-), marked AS (
-  SELECT p_partkey, price_c, size,
-         max(size) OVER (ORDER BY price_c
-             RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m_lt,
-         max(size) OVER (PARTITION BY price_c) AS m_eq
-  FROM pts
-)
-SELECT p_partkey, price_c, size
-FROM marked
-WHERE (m_lt IS NULL OR m_lt < size) AND m_eq = size
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 23: the remaining adaptable TPC-H queries — Q3, Q4 (adapted),
-# Q6, Q10, Q13. With the batch-12 heavyweights this covers 17 of the
-# 22 canonical queries; the 5 absences (Q2, Q11, Q12, Q16, Q20) all
-# need the partsupp table / shipmode+commitdate columns this corpus
-# doesn't carry.
-# --------------------------------------------------------------------------
-
-
-def q_tpch_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 (shipping priority): top-10 unshipped-revenue orders
-    for one market segment around a cutoff date. Broadcast the
-    filtered customer dim; one fact-fact shuffle on o_orderkey; the
-    global top-10 is TakeOrdered (per-partition heads merged on the
-    driver — never a full sort)."""
-    cutoff = "1997-06-15"
-    cust = (_t(spark, sf_dir, "customer")
-            .filter(F.col("c_mktsegment") == "BUILDING")
-            .select("c_custkey"))
-    orders = (_t(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") < F.lit(cutoff))
-              .select("o_orderkey", "o_custkey", "o_orderdate",
-                      "o_orderpriority"))
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_shipdate") > F.lit(cutoff)))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-        .orderBy(F.desc("revenue_e4"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-SQL_TPCH_SHIPPING_PRIORITY = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < DATE '1997-06-15'
-  AND l_shipdate > DATE '1997-06-15'
-GROUP BY 1, 2, 3
-ORDER BY revenue_e4 DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_tpch_order_priority_check(spark, sf_dir):
-    """TPC-H Q4 shape (order priority checking), adapted: no
-    commit/receipt dates in this corpus, so the EXISTS predicate is
-    "the order has a returned line" (l_returnflag = 'R') instead of
-    "a late line". Counts per priority for one quarter; the EXISTS is
-    a left-semi join against the column-pruned lineitem scan."""
-    orders = (_t(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1997-01-01"))
-                      & (F.col("o_orderdate") < F.lit("1997-04-01"))))
-    returned = (_t(spark, sf_dir, "lineitem")
-                .filter(F.col("l_returnflag") == "R")
-                .select("l_orderkey"))
-    return (
-        orders.join(returned, orders.o_orderkey == returned.l_orderkey,
-                    "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-SQL_TPCH_ORDER_PRIORITY_CHECK = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= DATE '1997-01-01'
-  AND o_orderdate < DATE '1997-04-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-GROUP BY 1
-"""
-
-
-def q_tpch_forecast_revenue(spark, sf_dir):
-    """TPC-H Q6 (forecasting revenue change): the pure scan-side
-    scalar — price×discount revenue from one year's low-quantity,
-    mid-discount lines. Every predicate pushes to the parquet scan;
-    the aggregate is one map-side partial + a 1-row combine. Revenue
-    here is price_c × disc_c (the Q6 definition multiplies BY the
-    discount, unlike the (1−disc) ops)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter((F.col("l_shipdate") >= F.lit("1997-01-01"))
-                  & (F.col("l_shipdate") < F.lit("1998-01-01"))
-                  & (F.col("l_discount") >= 0.05)
-                  & (F.col("l_discount") <= 0.07)
-                  & (F.col("l_quantity") < 24))
-        .agg(F.sum(F.expr(
-            "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-            " * CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"))
-            .alias("revenue_e4"),
-            F.count("*").alias("n_lines"))
-    )
-
-
-SQL_TPCH_FORECAST_REVENUE = """
-SELECT CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-            AS BIGINT) AS revenue_e4,
-       count(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= DATE '1997-01-01'
-  AND l_shipdate < DATE '1998-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07
-  AND l_quantity < 24
-"""
-
-
-def q_tpch_returned_items(spark, sf_dir):
-    """TPC-H Q10 (returned item reporting): top-20 customers by
-    revenue lost to returns in one quarter, nation attached. Orders
-    date-filter pushes to its scan; customer and nation broadcast;
-    the top-20 is TakeOrdered with the customer-key tiebreak."""
-    orders = (_t(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1997-01-01"))
-                      & (F.col("o_orderdate") < F.lit("1997-04-01")))
-              .select("o_orderkey", "o_custkey"))
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_returnflag") == "R"))
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("c_acctbal_c"))
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal_c",
-                 F.col("n_name").alias("nation"))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-        .orderBy(F.desc("revenue_e4"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-SQL_TPCH_RETURNED_ITEMS = """
-SELECT c_custkey, c_name,
-       CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS c_acctbal_c,
-       n_name AS nation,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= DATE '1997-01-01'
-  AND o_orderdate < DATE '1997-04-01'
-GROUP BY 1, 2, 3, 4
-ORDER BY revenue_e4 DESC, c_custkey ASC
-LIMIT 20
-"""
-
-
-def q_tpch_customer_distribution(spark, sf_dir):
-    """TPC-H Q13 (customer distribution): how many customers placed
-    exactly k orders — INCLUDING k = 0, which forces the left outer
-    join (an inner join silently drops the zero bucket; the test
-    plants an orderless customer). Two-level aggregation: per-customer
-    counts shuffle on custkey, the k-histogram is bounded."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count")))
-    return (per_cust.groupBy("c_count")
-            .agg(F.count("*").alias("custdist")))
-
-
-SQL_TPCH_CUSTOMER_DISTRIBUTION = """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-  GROUP BY 1
-)
-GROUP BY 1
-"""
-
-
-def q_events_autocorrelation(spark, sf_dir):
-    """Autocorrelation spectrum of the daily event-count series at
-    lags 1–7 (the periodicity probe — a weekly cycle spikes lag 7),
-    as EXACT integers: per lag k the Pearson numerator
-    n·Σxy − Σx·Σy and the two marginal variance terms n·Σx² − (Σx)²
-    are emitted raw; r_k = num/√(vx·vy) is one derived float the
-    CONSUMER computes — no sqrt or float sum ever crosses engines.
-    Lag pairs come from a calendar equi-join of the bounded day
-    directory against itself shifted by k (the seasonal-naive
-    precedent: calendar join, never a row-lag over gaps)."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (ev.groupBy(
-        F.expr("CAST(datediff(ts, DATE '1995-01-01') AS BIGINT)")
-        .alias("d"))
-        .agg(F.count("*").alias("n")))
-    lags = spark.sql("SELECT explode(sequence(1, 7)) AS k")
-    cur = daily.select(F.col("d").alias("dc"), F.col("n").alias("x"))
-    prv = daily.select(F.col("d").alias("dp"), F.col("n").alias("y"))
-    return (
-        cur.crossJoin(F.broadcast(lags))
-        .join(prv, F.expr("dp = dc - k"))
-        .groupBy("k")
-        .agg(F.count("*").alias("n_pairs"),
-             F.expr("count(*) * sum(x * y) - sum(x) * sum(y)")
-             .alias("pearson_num"),
-             F.expr("count(*) * sum(x * x) - sum(x) * sum(x)")
-             .alias("var_x"),
-             F.expr("count(*) * sum(y * y) - sum(y) * sum(y)")
-             .alias("var_y"))
-    )
-
-
-SQL_EVENTS_AUTOCORRELATION = """
-WITH daily AS (
-  SELECT CAST(datediff('day', DATE '1995-01-01', ts) AS BIGINT) AS d,
-         count(*) AS n
-  FROM events GROUP BY 1
-), lagged AS (
-  SELECT k, a.n AS x, b.n AS y
-  FROM daily a, UNNEST(range(1, 8)) AS t(k)
-  JOIN daily b ON b.d = a.d - k
-)
-SELECT CAST(k AS INT) AS k, count(*) AS n_pairs,
-       CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT)
-           AS pearson_num,
-       CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT) AS var_x,
-       CAST(count(*) * sum(y * y) - sum(y) * sum(y) AS BIGINT) AS var_y
-FROM lagged GROUP BY 1
-"""
-
-
-def q_events_out_of_orderness(spark, sf_dir):
-    """Out-of-orderness audit — the number every streaming deployment
-    needs BEFORE picking a watermark: treating event_id as arrival
-    order, each event's lateness is (max event-time seen among
-    earlier-arrived events) − (own event time), floored at zero; the
-    per-user max lateness IS the minimum watermark that would drop
-    nothing, and the Spearman footrule Σ|rank_arrival − rank_time|
-    summarizes how shuffled the stream is (0 = already ordered).
-    All exact integers: epoch seconds and rank differences. Two
-    windows over the same user partitioning (one shuffle).
-
-    The synthetic corpus arrives perfectly ordered (footrule 0
-    everywhere — a vacuous audit), so arrival order is INJECTED as
-    the md5 permutation of event_id (the gap/PII/skew-injection
-    convention): the adversarial fully-shuffled arrival, identical
-    in both engines."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id",
-        F.md5(F.expr("CAST(event_id AS STRING)")).alias("a_key"),
-        F.expr("CAST(floor(unix_timestamp(ts)) AS BIGINT)").alias("t"))
-    w_arr = Window.partitionBy("user_id").orderBy("a_key", "event_id")
-    w_time = Window.partitionBy("user_id").orderBy("t", "event_id")
-    marked = (ev
-              .withColumn("r_arr", F.row_number().over(w_arr))
-              .withColumn("r_time", F.row_number().over(w_time))
-              .withColumn("late_s", F.expr(
-                  "greatest(max(t) OVER ("
-                  "PARTITION BY user_id ORDER BY a_key, event_id"
-                  " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
-                  " - t, 0)")))
-    return (
-        marked.groupBy("user_id")
-        .agg(F.count("*").alias("n_events"),
-             F.sum(F.expr("abs(r_arr - r_time)")).alias("footrule"),
-             F.max(F.coalesce(F.col("late_s"), F.lit(0)))
-             .alias("max_lateness_s"),
-             F.sum(F.expr(
-                 "CASE WHEN late_s > 0 THEN 1 ELSE 0 END"))
-             .alias("n_late"))
-    )
-
-
-SQL_EVENTS_OUT_OF_ORDERNESS = """
-WITH ev AS (
-  SELECT user_id, event_id,
-         md5(CAST(event_id AS VARCHAR)) AS a_key,
-         CAST(floor(epoch(ts)) AS BIGINT) AS t
-  FROM events
-), marked AS (
-  SELECT user_id,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY a_key, event_id) AS r_arr,
-         row_number() OVER (PARTITION BY user_id ORDER BY t, event_id)
-             AS r_time,
-         greatest(max(t) OVER (PARTITION BY user_id
-             ORDER BY a_key, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - t,
-             0) AS late_s
-  FROM ev
-)
-SELECT user_id, count(*) AS n_events,
-       CAST(sum(abs(r_arr - r_time)) AS BIGINT) AS footrule,
-       CAST(max(coalesce(late_s, 0)) AS BIGINT) AS max_lateness_s,
-       CAST(sum(CASE WHEN late_s > 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_late
-FROM marked GROUP BY 1
-"""
-
-
-def q_customer_balance_buckets(spark, sf_dir):
-    """Equi-width histogram via the ``width_bucket`` built-in —
-    semantics pinned against an arithmetic oracle (DuckDB has no
-    width_bucket): bucket 0 holds below-range, n+1 at-or-above-range,
-    interior buckets are 1 + ⌊(x−lo)·n/(hi−lo)⌋. Bounds and cents are
-    exact integers, so the internal double divide is exact and
-    boundary values land identically in both engines. One tiny
-    groupBy on a ≤22-value key."""
-    lo, hi, n = -100_000, 1_000_000, 20
-    cust = _t(spark, sf_dir, "customer").select(
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("bal_c"))
-    return (
-        cust.withColumn("bucket", F.expr(
-            f"CAST(width_bucket(bal_c, {lo}, {hi}, {n}) AS INT)"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_customers"),
-             F.min("bal_c").alias("min_bal_c"),
-             F.max("bal_c").alias("max_bal_c"))
-    )
-
-
-SQL_CUSTOMER_BALANCE_BUCKETS = """
-WITH cust AS (
-  SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM customer
-)
-SELECT CAST(CASE WHEN bal_c < -100000 THEN 0
-            WHEN bal_c >= 1000000 THEN 21
-            ELSE 1 + (bal_c - (-100000)) * 20 // (1000000 - (-100000))
-            END AS INT) AS bucket,
-       count(*) AS n_customers,
-       CAST(min(bal_c) AS BIGINT) AS min_bal_c,
-       CAST(max(bal_c) AS BIGINT) AS max_bal_c
-FROM cust GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 26: sequentially-dependent running computation via recursive
-# CTE, sequential-key completeness audit, and burstiness (Fano factor).
-# --------------------------------------------------------------------------
-
-
-def q_customer_points_capped(spark, sf_dir):
-    """DOUBLE-CLAMPED running walk — the classic sequential computation
-    NO window frame can express: bal_n = clamp(bal_{n−1} + step_n,
-    0, 500) with SIGNED steps (step = dollars DIV 100 − 25, so the
-    walk moves both ways). A monotone capped sum collapses to
-    min(cumsum, cap) and a redemption loop to cumsum mod cap — both
-    window-expressible; only the two-sided clamp with signed steps is
-    genuinely sequential (every later value depends on where earlier
-    clamps bit — the known-answer test has a case where naive
-    clamp-of-cumsum gives 300, the true walk 200). Spark 4's
-    recursive CTE walks each customer's orders in date order, one
-    level per order position (depth = max orders/customer). The
-    ranked order list is localCheckpointed — each recursion level
-    joins the materialized table, never re-runs the ranking (the
-    reach_hops lesson). Output: final balance + count of top-clamped
-    steps."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-               " DIV 10000 - 25").alias("step"))
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate",
-                                                "o_orderkey")
-    ranked = (orders.withColumn("rn", F.row_number().over(w))
-              .select("o_custkey", "rn", "step")
-              .localCheckpoint())
-    walked = spark.sql("""
-      WITH RECURSIVE acc(o_custkey, rn, bal, hits) AS (
-        SELECT o_custkey, rn, greatest(0, least(step, 500)),
-               CASE WHEN step >= 500 THEN 1 ELSE 0 END
-        FROM {ranked} WHERE rn = 1
-        UNION ALL
-        SELECT r.o_custkey, r.rn,
-               greatest(0, least(a.bal + r.step, 500)),
-               a.hits + CASE WHEN a.bal + r.step >= 500
-                        THEN 1 ELSE 0 END
-        FROM acc a JOIN {ranked} r
-          ON r.o_custkey = a.o_custkey AND r.rn = a.rn + 1
-      )
-      SELECT o_custkey, max(rn) AS n_orders,
-             CAST(max_by(bal, rn) AS BIGINT) AS final_balance,
-             CAST(max_by(hits, rn) AS BIGINT) AS n_saturated
-      FROM acc GROUP BY 1
-    """, ranked=ranked)
-    return walked
-
-
-SQL_CUSTOMER_POINTS_CAPPED = """
-WITH RECURSIVE ranked AS (
-  SELECT o_custkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_orderdate, o_orderkey) AS rn,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) // 10000 - 25
-             AS step
-  FROM orders
-), acc(o_custkey, rn, bal, hits) AS (
-  SELECT o_custkey, rn, greatest(0, least(step, 500)),
-         CASE WHEN step >= 500 THEN 1 ELSE 0 END
-  FROM ranked WHERE rn = 1
-  UNION ALL
-  SELECT r.o_custkey, r.rn, greatest(0, least(a.bal + r.step, 500)),
-         a.hits + CASE WHEN a.bal + r.step >= 500 THEN 1 ELSE 0 END
-  FROM acc a JOIN ranked r
-    ON r.o_custkey = a.o_custkey AND r.rn = a.rn + 1
-)
-SELECT o_custkey, max(rn) AS n_orders,
-       CAST(max_by(bal, rn) AS BIGINT) AS final_balance,
-       CAST(max_by(hits, rn) AS BIGINT) AS n_saturated
-FROM acc GROUP BY 1
-"""
-
-
-def q_orders_key_gap_audit(spark, sf_dir):
-    """Sequential-key completeness audit: runs of MISSING o_orderkey
-    values (the ingestion-loss detector for keys that are supposed to
-    be dense). An empty result = the keyspace is dense. The synthetic
-    keys ARE dense, so holes are INJECTED (drop key % 97 == 13, both
-    engines — the engagement convention).
-
-    Scale shape (r7 ADVICE closed): the naive global ``lag() OVER
-    (ORDER BY key)`` forces every distinct key through ONE partition —
-    a scale-killer on a dense 100 TB keyspace. Instead the keyspace is
-    range-bucketed at B = ⌈√max_key⌉ and gaps split into two exhaustive,
-    disjoint classes: (a) WITHIN-bucket gaps from a lag window
-    PARTITIONED by bucket (fully parallel), and (b) CROSS-bucket gaps
-    between consecutive non-empty buckets, linked on the per-bucket
-    min/max DIRECTORY — ~√N rows, the only global window, the same
-    bounded-directory discipline as the other audit ops (empty buckets
-    between two non-empty ones collapse into one directory gap, which
-    is exactly the merged missing-run semantics). B = √N balances the
-    two sides: √(10^12) = 10^6-row directory over 10^6-key buckets."""
-    keys = (_t(spark, sf_dir, "orders")
-            .select("o_orderkey").distinct()
-            .filter(F.expr("o_orderkey % 97 != 13")))
-    hi = keys.agg(F.max("o_orderkey")).first()[0]  # 1-row scalar
-    b = max(int(math.isqrt(int(hi or 1))), 1)
-    bucketed = keys.withColumn("bkt", F.expr(f"o_orderkey DIV {b}"))
-    wb = Window.partitionBy("bkt").orderBy("o_orderkey")
-    within = (
-        bucketed.withColumn("prev", F.lag("o_orderkey").over(wb))
-        .filter(F.expr("prev IS NOT NULL AND o_orderkey > prev + 1"))
-        .select((F.col("prev") + 1).alias("gap_start"),
-                (F.col("o_orderkey") - F.col("prev") - 1).alias("gap_len"))
-    )
-    directory = (bucketed.groupBy("bkt")
-                 .agg(F.min("o_orderkey").alias("lo"),
-                      F.max("o_orderkey").alias("hi")))
-    wd = Window.orderBy("bkt")  # ~sqrt(N) directory rows only
-    cross = (
-        directory.withColumn("prev_hi", F.lag("hi").over(wd))
-        .filter(F.expr("prev_hi IS NOT NULL AND lo > prev_hi + 1"))
-        .select((F.col("prev_hi") + 1).alias("gap_start"),
-                (F.col("lo") - F.col("prev_hi") - 1).alias("gap_len"))
-    )
-    return within.unionAll(cross)
-
-
-SQL_ORDERS_KEY_GAP_AUDIT = """
-WITH keys AS (
-  SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 97 != 13
-), lagged AS (
-  SELECT o_orderkey, lag(o_orderkey) OVER (ORDER BY o_orderkey) AS prev
-  FROM keys
-)
-SELECT CAST(prev + 1 AS BIGINT) AS gap_start,
-       CAST(o_orderkey - prev - 1 AS BIGINT) AS gap_len
-FROM lagged
-WHERE prev IS NOT NULL AND o_orderkey > prev + 1
-"""
-
-
-def q_events_burstiness(spark, sf_dir):
-    """Burstiness (Fano factor: variance-to-mean of the daily count
-    series) per event type — Poisson arrivals sit at 1, bursty traffic
-    above. Emitted as the exact integer pair (n·Σx² − S², n·S): the
-    consumer's F = num/den is the one derived float. Two bounded
-    aggregates (day × type directory, then per type)."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (ev.groupBy("event_type", F.to_date("ts").alias("d"))
-             .agg(F.count("*").alias("x")))
-    return (
-        daily.groupBy("event_type")
-        .agg(F.count("*").alias("n_days"),
-             F.expr("count(*) * sum(x * x) - sum(x) * sum(x)")
-             .alias("fano_num"),
-             F.expr("count(*) * sum(x)").alias("fano_den"))
-    )
-
-
-SQL_EVENTS_BURSTINESS = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, count(*) AS x
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, count(*) AS n_days,
-       CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT)
-           AS fano_num,
-       CAST(count(*) * sum(x) AS BIGINT) AS fano_den
-FROM daily GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 27: relational completeness — FULL OUTER join (the one join
-# type the suite lacked) and the rank-family tie semantics.
-# --------------------------------------------------------------------------
-
-
-def q_nation_region_full_outer(spark, sf_dir):
-    """FULL OUTER join — the last uncovered join type. Both unmatched
-    sides are INJECTED (the corpus is referentially intact, so a plain
-    full join degenerates to inner): regions kept {0,1,4} and nations
-    kept with n_regionkey ∈ {1,2,3,4} leave region 0 nation-less and
-    nations of regions 2/3 region-less. Null-side flags are emitted
-    explicitly (the null-handling is the point of the op); keys
-    coalesce across sides."""
-    region = (_t(spark, sf_dir, "region")
-              .filter(F.col("r_regionkey").isin(0, 1, 4)))
-    nation = (_t(spark, sf_dir, "nation")
-              .filter(F.col("n_regionkey").isin(1, 2, 3, 4)))
-    return (
-        nation.join(region,
-                    nation.n_regionkey == region.r_regionkey, "full_outer")
-        .select(
-            F.coalesce("n_regionkey", "r_regionkey").alias("regionkey"),
-            F.col("n_name").alias("nation"),
-            F.col("r_name").alias("region"),
-            F.expr("CAST(n_name IS NULL AS INT)").alias("region_only"),
-            F.expr("CAST(r_name IS NULL AS INT)").alias("nation_only"))
-    )
-
-
-SQL_NATION_REGION_FULL_OUTER = """
-SELECT coalesce(n_regionkey, r_regionkey) AS regionkey,
-       n_name AS nation, r_name AS region,
-       CAST(n_name IS NULL AS INT) AS region_only,
-       CAST(r_name IS NULL AS INT) AS nation_only
-FROM (SELECT * FROM nation WHERE n_regionkey IN (1, 2, 3, 4)) n
-FULL OUTER JOIN
-     (SELECT * FROM region WHERE r_regionkey IN (0, 1, 4)) r
-  ON n.n_regionkey = r.r_regionkey
-"""
-
-
-def q_orders_rank_family(spark, sf_dir):
-    """rank() vs dense_rank() vs row_number() on TIES — the semantics
-    triple every window implementation must agree on: revenue is
-    coarsened to $10k buckets so ties are guaranteed, rank/dense_rank
-    order by the COARSE key alone (ties share rank; rank skips,
-    dense_rank doesn't), while row_number carries the full
-    deterministic tiebreak (orderkey) that also picks which 5 rows per
-    priority are emitted."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-               " DIV 1000000").alias("rev_bucket"))
-    w_coarse = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("rev_bucket"))
-    w_full = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("rev_bucket"), F.asc("o_orderkey"))
-    return (
-        orders
-        .withColumn("rnk", F.rank().over(w_coarse))
-        .withColumn("drnk", F.dense_rank().over(w_coarse))
-        .withColumn("rn", F.row_number().over(w_full))
-        .filter(F.col("rn") <= 5)
-        .select("o_orderpriority", "o_orderkey", "rev_bucket",
-                "rnk", "drnk", "rn")
-    )
-
-
-SQL_ORDERS_RANK_FAMILY = """
-WITH o AS (
-  SELECT o_orderkey, o_orderpriority,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) // 1000000
-             AS rev_bucket
-  FROM orders
-)
-SELECT o_orderpriority, o_orderkey, rev_bucket,
-       rank() OVER (PARTITION BY o_orderpriority
-                    ORDER BY rev_bucket DESC) AS rnk,
-       dense_rank() OVER (PARTITION BY o_orderpriority
-                          ORDER BY rev_bucket DESC) AS drnk,
-       row_number() OVER (PARTITION BY o_orderpriority
-                          ORDER BY rev_bucket DESC, o_orderkey ASC) AS rn
-FROM o
-QUALIFY rn <= 5
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 28: conditional entropy (frozen logs), weighted median, and
-# Gini concentration — the inequality/information measures as exact
-# integers.
-# --------------------------------------------------------------------------
-
-
-def q_terms_conditional_entropy(spark, sf_dir):
-    """Conditional bigram entropy H(w₂|w₁) — how predictable the next
-    word is given the current one (the LM-difficulty scalar next to
-    the KN probabilities). Every log term is FROZEN per the
-    source_lang_entropy convention (flog(x) = ⌊log₂(x)·1000⌋ on exact
-    counts), so n·H_millibits = Σ c₁₂·(flog(c₁) − flog(c₁₂)) is pure
-    bigint: order-independent, bit-portable. Bigram counts
-    partial-aggregate map-side; left-context totals join back on the
-    vocabulary-bounded w1 key."""
-    docs = _t(spark, sf_dir, "documents")
-    words = (docs.select(F.expr(
-        "regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("ws"))
-        .where(F.size("ws") >= 2))
-    bigrams = (words.select(F.explode(F.expr(
-        "transform(sequence(1, size(ws) - 1),"
-        " i -> struct(ws[i - 1] AS w1, ws[i] AS w2))")).alias("b"))
-        .select("b.w1", "b.w2"))
-    flog = "CAST(floor(log2(CAST({x} AS DOUBLE)) * 1000) AS BIGINT)"
-    c12 = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    return (
-        c12.join(c1, "w1")
-        .agg(F.sum("c12").alias("n_bigrams"),
-             F.sum(F.expr(
-                 f"c12 * ({flog.format(x='c1')}"
-                 f" - {flog.format(x='c12')})")).alias("nh_millibits"))
-        .withColumn("h_mb_per_bigram",
-                    F.expr("nh_millibits DIV n_bigrams"))
-    )
-
-
-SQL_TERMS_CONDITIONAL_ENTROPY = """
-WITH ws AS (
-  SELECT regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents
-), bigrams AS (
-  SELECT w[i] AS w1, w[i + 1] AS w2
-  FROM ws, UNNEST(range(1, len(w))) AS t(i)
-  WHERE len(w) >= 2
-), c12 AS (
-  SELECT w1, w2, count(*) AS c12 FROM bigrams GROUP BY 1, 2
-), c1 AS (
-  SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1
-)
-SELECT CAST(sum(c12) AS BIGINT) AS n_bigrams,
-       CAST(sum(c12 * (CAST(floor(log2(CAST(c1 AS DOUBLE)) * 1000)
-                       AS BIGINT)
-                     - CAST(floor(log2(CAST(c12 AS DOUBLE)) * 1000)
-                       AS BIGINT))) AS BIGINT) AS nh_millibits,
-       CAST(sum(c12 * (CAST(floor(log2(CAST(c1 AS DOUBLE)) * 1000)
-                       AS BIGINT)
-                     - CAST(floor(log2(CAST(c12 AS DOUBLE)) * 1000)
-                       AS BIGINT)))
-            // sum(c12) AS BIGINT) AS h_mb_per_bigram
-FROM c12 JOIN c1 USING (w1)
-"""
-
-
-def q_lineitem_weighted_median(spark, sf_dir):
-    """QUANTITY-weighted median price per return flag — each line
-    votes with its quantity, so the answer is the price at which half
-    the UNITS (not half the lines) are cheaper: the first price (in
-    price order) whose running weight doubles past the total,
-    2·cumw ≥ W. Plain median() can't express it; one window + one
-    filtered aggregate per group can. All exact integers."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
-        .alias("price_c"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("qty"))
-    per_price = (li.groupBy("l_returnflag", "price_c")
-                 .agg(F.sum("qty").alias("w")))
-    w_run = (Window.partitionBy("l_returnflag").orderBy("price_c")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_tot = Window.partitionBy("l_returnflag")
-    return (
-        per_price
-        .withColumn("cumw", F.sum("w").over(w_run))
-        .withColumn("totw", F.sum("w").over(w_tot))
-        .filter(F.expr("2 * cumw >= totw"))
-        .groupBy("l_returnflag")
-        .agg(F.min("price_c").alias("wmedian_price_c"),
-             F.max("totw").alias("total_units"))
-    )
-
-
-SQL_LINEITEM_WEIGHTED_MEDIAN = """
-WITH per_price AS (
-  SELECT l_returnflag,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_c,
-         CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
-             AS w
-  FROM lineitem GROUP BY 1, 2
-), run AS (
-  SELECT l_returnflag, price_c,
-         sum(w) OVER (PARTITION BY l_returnflag ORDER BY price_c
-                      ROWS UNBOUNDED PRECEDING) AS cumw,
-         sum(w) OVER (PARTITION BY l_returnflag) AS totw
-  FROM per_price
-)
-SELECT l_returnflag,
-       CAST(min(price_c) AS BIGINT) AS wmedian_price_c,
-       CAST(max(totw) AS BIGINT) AS total_units
-FROM run WHERE 2 * cumw >= totw
-GROUP BY 1
-"""
-
-
-def q_events_gini_concentration(spark, sf_dir):
-    """Gini coefficient of event value per type — the canonical
-    inequality scalar next to the Pareto table: with values sorted
-    ascending and ranked 1..n (event_id tiebreak, deterministic both
-    engines), G = (2·Σ i·xᵢ − (n+1)·Σx) / (n·Σx), emitted as the
-    exact integer pair (gini_num, gini_den). Uniform values pin
-    num = 0; maximal concentration approaches den·(n−1)/n. One rank
-    window + one aggregate per type."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", "event_id",
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("x"))
-    w = Window.partitionBy("event_type").orderBy("x", "event_id")
-    return (
-        ev.withColumn("i", F.row_number().over(w))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"),
-             F.sum("x").alias("sx"),
-             F.sum(F.expr("i * x")).alias("six"))
-        .select("event_type", "n",
-                F.expr("2 * six - (n + 1) * sx").alias("gini_num"),
-                F.expr("n * sx").alias("gini_den"))
-    )
-
-
-SQL_EVENTS_GINI_CONCENTRATION = """
-WITH ranked AS (
-  SELECT event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS x,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY CAST(floor(value * 100 + 0.5)
-                                     AS BIGINT), event_id) AS i
-  FROM events
-)
-SELECT event_type, count(*) AS n,
-       CAST(2 * sum(i * x) - (count(*) + 1) * sum(x) AS BIGINT)
-           AS gini_num,
-       CAST(count(*) * sum(x) AS BIGINT) AS gini_den
-FROM ranked GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
 # r8 late wave: duplicate-ngram fraction, CCNet buckets, masked packing,
 # quality-priority canonical dedup
 # --------------------------------------------------------------------------
@@ -10658,199 +4758,9 @@ FROM scores, cuts
 """
 
 
-def q_transcript_pack_masked(spark, sf_dir):
-    """SFT-export packing WITH loss masks — conversations (not bare
-    docs) packed whole into fixed-capacity training sequences, tracking
-    how many of each sequence's tokens are assistant turns (the only
-    tokens that take loss in instruction tuning). Per (shard, seq_id):
-    conversations, turns, total tokens, mask tokens, and the exact mask
-    share in permille — the number that tells you whether a packed
-    batch is mostly-loss or mostly-context before any GPU sees it.
-    Same turn derivation as render_conversations; same whitespace token
-    count and start-sequence assignment rule as pack_token_budget
-    ((cum − conv_tokens) DIV capacity).
-
-    Scale: conversations aggregate to one row each FIRST (one keyed
-    shuffle on conv_id — the extraction job's salting case), then the
-    running sum windows inside (shard = conv_id DIV {_MASK_SHARD})
-    partitions: bounded local sorts, no global order, embarrassingly
-    parallel across shards. The final groupBy clusters on a prefix of
-    the window's keys, so AQE folds it into the same exchange. All
-    integer arithmetic."""
-    tok = F.expr(
-        r"size(split(trim(coalesce(text, '')), '\\s+'))")
-    convs = (_transcript_turns(spark, sf_dir)
-             .select((F.col("doc_id") % 50).alias("conv_id"),
-                     tok.alias("tok"),
-                     F.expr("CAST(role_id = 1 AS INT)").alias("is_asst"))
-             .groupBy("conv_id")
-             .agg(F.count("*").alias("n_turns"),
-                  F.sum("tok").alias("conv_tokens"),
-                  F.sum(F.expr("tok * is_asst")).alias("mask_tokens"),
-                  F.sum("is_asst").alias("mask_turns"))
-             .withColumn("shard", F.expr(f"conv_id DIV {_MASK_SHARD}")))
-    w = (Window.partitionBy("shard").orderBy("conv_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    packed = (convs.withColumn("cum", F.sum("conv_tokens").over(w))
-              .withColumn("seq_id", F.expr(
-                  f"(cum - conv_tokens) DIV {_PACK_CAPACITY}")))
-    return (packed.groupBy("shard", "seq_id").agg(
-        F.count("*").alias("n_convs"),
-        F.sum("n_turns").alias("n_turns"),
-        F.sum("conv_tokens").alias("seq_tokens"),
-        F.sum("mask_tokens").alias("mask_tokens"),
-        F.sum("mask_turns").alias("mask_turns"))
-        .withColumn("mask_permille",
-                    F.expr("mask_tokens * 1000 DIV seq_tokens")))
-
-
-SQL_TRANSCRIPT_PACK_MASKED = f"""
-WITH turns AS (
-{_SQL_TRANSCRIPT_TURNS}
-), convs AS (
-  SELECT conv_id,
-         count(*) AS n_turns,
-         CAST(sum(len(regexp_split_to_array(
-              trim(coalesce(text, '')), '\\s+'))) AS BIGINT)
-             AS conv_tokens,
-         CAST(sum(CASE WHEN role_id = 1
-                  THEN len(regexp_split_to_array(
-                       trim(coalesce(text, '')), '\\s+'))
-                  ELSE 0 END) AS BIGINT) AS mask_tokens,
-         CAST(sum(CASE WHEN role_id = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS mask_turns,
-         conv_id // {_MASK_SHARD} AS shard
-  FROM turns GROUP BY conv_id
-), packed AS (
-  SELECT *, sum(conv_tokens) OVER (PARTITION BY shard ORDER BY conv_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS cum
-  FROM convs
-)
-SELECT shard,
-       CAST((cum - conv_tokens) // {_PACK_CAPACITY} AS BIGINT) AS seq_id,
-       count(*) AS n_convs,
-       CAST(sum(n_turns) AS BIGINT) AS n_turns,
-       CAST(sum(conv_tokens) AS BIGINT) AS seq_tokens,
-       CAST(sum(mask_tokens) AS BIGINT) AS mask_tokens,
-       CAST(sum(mask_turns) AS BIGINT) AS mask_turns,
-       CAST(sum(mask_tokens) * 1000 // sum(conv_tokens) AS BIGINT)
-           AS mask_permille
-FROM packed GROUP BY shard, seq_id
-"""
-
-
-def q_quality_classifier_eval(spark, sf_dir):
-    """Confusion-matrix audit of q_quality_classifier against its own
-    training labels (source ∈ curated slice) — the self-consistency
-    number a model card reports: a content-based scorer trained on
-    source labels should largely RECOVER them (high tp/tn), and the
-    residue (fp/fn) is exactly the interesting set — junk-labeled docs
-    with curated vocabulary and vice versa. One row: tp/fp/fn/tn plus
-    exact integer precision/recall in permille (NULL when a denominator
-    is empty — a one-class corpus has no precision).
-
-    Scale: the classifier's zero-shuffle scoring plan plus ONE join
-    back to documents on doc_id for the label column and ONE global
-    single-row aggregate (map-side partials; no keyed shuffle of the
-    corpus beyond the join)."""
-    label = F.when(F.col("source").isin(*_QC_POS_SOURCES), 1).otherwise(0)
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", label.alias("label"))
-    scored = q_quality_classifier(spark, sf_dir).select(
-        "doc_id", "keep_flag")
-    j = scored.join(docs, "doc_id")
-    agg = j.agg(
-        F.sum(F.expr("CAST(keep_flag = 1 AND label = 1 AS INT)"))
-        .alias("tp"),
-        F.sum(F.expr("CAST(keep_flag = 1 AND label = 0 AS INT)"))
-        .alias("fp"),
-        F.sum(F.expr("CAST(keep_flag = 0 AND label = 1 AS INT)"))
-        .alias("fn"),
-        F.sum(F.expr("CAST(keep_flag = 0 AND label = 0 AS INT)"))
-        .alias("tn"))
-    return agg.select(
-        "tp", "fp", "fn", "tn",
-        F.expr("CASE WHEN tp + fp > 0 THEN tp * 1000 DIV (tp + fp) "
-               "END").alias("precision_permille"),
-        F.expr("CASE WHEN tp + fn > 0 THEN tp * 1000 DIV (tp + fn) "
-               "END").alias("recall_permille"))
-
-
-SQL_QUALITY_CLASSIFIER_EVAL = f"""
-WITH scored AS ({SQL_QUALITY_CLASSIFIER}),
-labeled AS (
-  SELECT s.keep_flag,
-         CASE WHEN d.source IN {_QC_POS_SOURCES} THEN 1 ELSE 0 END
-             AS label
-  FROM scored s JOIN documents d USING (doc_id)
-), agg AS (
-  SELECT
-    CAST(sum(CASE WHEN keep_flag = 1 AND label = 1 THEN 1 ELSE 0 END)
-         AS BIGINT) AS tp,
-    CAST(sum(CASE WHEN keep_flag = 1 AND label = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS fp,
-    CAST(sum(CASE WHEN keep_flag = 0 AND label = 1 THEN 1 ELSE 0 END)
-         AS BIGINT) AS fn,
-    CAST(sum(CASE WHEN keep_flag = 0 AND label = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS tn
-  FROM labeled
-)
-SELECT tp, fp, fn, tn,
-       CASE WHEN tp + fp > 0
-            THEN CAST(tp * 1000 // (tp + fp) AS BIGINT) END
-           AS precision_permille,
-       CASE WHEN tp + fn > 0
-            THEN CAST(tp * 1000 // (tp + fn) AS BIGINT) END
-           AS recall_permille
-FROM agg
-"""
-
-
-def q_transcript_cross_conv_echo(spark, sf_dir):
-    """Cross-conversation echo detector: the doc-level near-dup pair
-    graph projected onto CONVERSATIONS (conv_id = doc_id % 50, the
-    render_conversations derivation) — per unordered conversation pair,
-    how many near-dup turn pairs span them and the strongest overlap.
-    In agent-transcript corpora this is the 'same tool output / same
-    paste appears in two different sessions' signal: turn-level dedup
-    sees the pair, but only the conversation projection shows which
-    SESSIONS are entangled (and should not be split across train/val).
-    Same-conversation pairs are excluded — intra-conv repetition is
-    within_doc/boilerplate territory.
-
-    Scale: a pure compose — reuses the bucketed, df-capped near-dup
-    pair generation (never all-pairs) and adds one groupBy over the
-    PAIR set (|pairs| ≪ |corpus|, bounded by the caps upstream).
-    Canonical (least, greatest) ordering keeps the pair key unordered
-    in both engines."""
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir)
-    return (pairs
-            .select(F.expr("least(id_a % 50, id_b % 50)").alias("conv_a"),
-                    F.expr("greatest(id_a % 50, id_b % 50)")
-                    .alias("conv_b"),
-                    "jaccard_e4")
-            .filter(F.col("conv_a") != F.col("conv_b"))
-            .groupBy("conv_a", "conv_b")
-            .agg(F.count("*").alias("n_echo_pairs"),
-                 F.max("jaccard_e4").alias("max_jaccard_e4")))
-
-
-SQL_TRANSCRIPT_CROSS_CONV_ECHO = f"""
-WITH pairs AS ({SQL_DEDUP_NGRAM})
-SELECT least(id_a % 50, id_b % 50) AS conv_a,
-       greatest(id_a % 50, id_b % 50) AS conv_b,
-       count(*) AS n_echo_pairs,
-       CAST(max(jaccard_e4) AS BIGINT) AS max_jaccard_e4
-FROM pairs
-WHERE id_a % 50 != id_b % 50
-GROUP BY 1, 2
-"""
-
-
 def q_dedup_keep_best_quality(spark, sf_dir):
-    """Quality-priority canonical selection — the curation-grade variant
-    of q_dedup_keep_canonical: within each near-dup cluster keep the
+    """Quality-priority canonical selection: within each near-dup
+    cluster keep the
     member with the BEST learned quality score (q_quality_classifier's
     margin, normalized per feature), not the smallest id. This is how
     production dedup actually picks survivors (CCNet/RefinedWeb keep
@@ -10921,87 +4831,15 @@ FROM members WHERE rk = 1
 
 OPS: dict[str, tuple] = {
     # (spark_fn, oracle_sql_or_None)
-    "scan_filter_project": (q_scan_filter_project, SQL_SCAN),
-    "pricing_summary": (q_pricing_summary, SQL_PRICING),
-    "top_orders": (q_top_orders, SQL_TOP_ORDERS),
-    "segment_revenue": (q_segment_revenue, SQL_SEGMENT_REVENUE),
-    "region_revenue": (q_region_revenue, SQL_REGION_REVENUE),
-    "latest_order_per_customer": (q_latest_order_per_customer, SQL_LATEST_ORDER),
-    "customer_value_deciles": (
-        q_customer_value_deciles, SQL_CUSTOMER_VALUE_DECILES),
-    "customer_value_deciles_approx": (
-        q_customer_value_deciles_approx, SQL_CUSTOMER_VALUE_DECILES_APPROX),
-    "orders_above_customer_avg": (
-        q_orders_above_customer_avg, SQL_ORDERS_ABOVE_CUSTOMER_AVG),
-    "distinct_priorities": (q_distinct_priorities, SQL_DISTINCT_PRIORITIES),
-    "orders_except": (q_orders_except, SQL_ORDERS_EXCEPT),
-    "orders_rollup": (q_orders_rollup, SQL_ORDERS_ROLLUP),
-    "orders_cube": (q_orders_cube, SQL_ORDERS_CUBE),
-    "customers_with_orders": (
-        q_customers_with_orders, SQL_CUSTOMERS_WITH_ORDERS),
-    "orders_above_avg": (q_orders_above_avg, SQL_ORDERS_ABOVE_AVG),
-    "customers_without_orders": (
-        q_customers_without_orders, SQL_CUSTOMERS_WITHOUT_ORDERS),
-    "orders_pivot": (q_orders_pivot, SQL_ORDERS_PIVOT),
-    "lineitem_quantiles": (q_lineitem_quantiles, SQL_LINEITEM_QUANTILES),
-    "revenue_moving_avg": (q_revenue_moving_avg, SQL_REVENUE_MOVING_AVG),
-    "part_strings": (q_part_strings, SQL_PART_STRINGS),
-    "orders_by_month": (q_orders_by_month, SQL_ORDERS_BY_MONTH),
-    "events_stats": (q_events_stats, SQL_EVENTS_STATS),
-    "events_cardinality_approx": (
-        q_events_cardinality_approx, SQL_EVENTS_CARDINALITY_APPROX),
-    "event_gaps": (q_event_gaps, SQL_EVENT_GAPS),
-    "events_asof_join": (q_events_asof_join, SQL_EVENTS_ASOF_JOIN),
-    "events_sessionize": (q_events_sessionize, SQL_EVENTS_SESSIONIZE),
-    "events_json": (q_events_json, SQL_EVENTS_JSON),
-    "token_counts": (q_token_counts, SQL_TOKEN_COUNTS),
-    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
     "docs_repetition_ratio": (q_docs_repetition_ratio,
                               SQL_DOCS_REPETITION_RATIO),
-    "lang_heuristic": (q_lang_heuristic, SQL_LANG_HEURISTIC),
-    "fingerprints": (q_fingerprints, SQL_FINGERPRINTS),
-    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
     "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM),
-    "dedup_hot_shingle_audit": (q_dedup_hot_shingle_audit,
-                                SQL_DEDUP_HOT_SHINGLE_AUDIT),
-    "dedup_prefix_filter": (q_dedup_prefix_filter,
-                            SQL_DEDUP_PREFIX_FILTER),
-    "dedup_graph_triangles": (q_dedup_graph_triangles,
-                              SQL_DEDUP_GRAPH_TRIANGLES),
     "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
-    "dedup_clusters_audit": (
-        q_dedup_clusters_audit, SQL_DEDUP_CLUSTERS_AUDIT),
-    "dedup_cluster_sizes": (
-        q_dedup_cluster_sizes, SQL_DEDUP_CLUSTER_SIZES),
-    "dedup_keep_canonical": (
-        q_dedup_keep_canonical, SQL_DEDUP_KEEP_CANONICAL),
-    "render_conversations": (
-        q_render_conversations, SQL_RENDER_CONVERSATIONS),
     "dedup_minhash_lsh": (q_dedup_minhash_lsh, SQL_DEDUP_MINHASH),
-    "dedup_lsh_dropped_buckets": (
-        q_dedup_lsh_dropped_buckets, SQL_LSH_DROPPED_BUCKETS),
-    "dedup_minhash_estimate": (
-        q_dedup_minhash_estimate, SQL_DEDUP_MINHASH_ESTIMATE),
-    "dedup_simhash": (q_dedup_simhash, SQL_DEDUP_SIMHASH),
-    "dedup_simhash_pairs": (q_dedup_simhash_pairs, SQL_DEDUP_SIMHASH_PAIRS),
-    "token_histogram": (q_token_histogram, SQL_TOKEN_HISTOGRAM),
-    "embedding_quantize": (q_embedding_quantize, SQL_EMBEDDING_QUANTIZE),
-    "embedding_norms": (q_embedding_norms, SQL_EMBEDDING_NORMS),
-    "ann_topk_cosine": (q_ann_topk_cosine, SQL_ANN_TOPK),
-    "ann_topk_ivf": (q_ann_topk_ivf, SQL_ANN_TOPK_IVF),
-    "ann_topk_ivf_mp": (q_ann_topk_ivf_mp, SQL_ANN_TOPK_IVF_MP),
-    "ann_topk_ivf_kmeans": (
-        q_ann_topk_ivf_kmeans, SQL_ANN_TOPK_IVF_KMEANS),
-    "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
-    "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
-    "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
-    "source_mix_weights": (q_source_mix_weights, SQL_SOURCE_MIX_WEIGHTS),
-    "source_mix_sample": (q_source_mix_sample, SQL_SOURCE_MIX_SAMPLE),
     "benchmark_contamination": (
         q_benchmark_contamination, SQL_BENCHMARK_CONTAMINATION),
     "benchmark_contamination_fuzzy": (
         q_benchmark_contamination_fuzzy, SQL_BENCHMARK_CONTAMINATION_FUZZY),
-    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
     "pii_redact": (q_pii_redact, SQL_PII_REDACT),
     "dedup_boilerplate_lines": (
         q_dedup_boilerplate_lines, SQL_DEDUP_BOILERPLATE_LINES),
@@ -11082,126 +4920,10 @@ OPS: dict[str, tuple] = {
         q_terms_freq_of_freqs, SQL_TERMS_FREQ_OF_FREQS),
     "vocab_growth": (q_vocab_growth, SQL_VOCAB_GROWTH),
     "docs_stable_ids": (q_docs_stable_ids, SQL_DOCS_STABLE_IDS),
-    "events_salted_topk": (
-        q_events_salted_topk, SQL_EVENTS_SALTED_TOPK),
-    "referential_integrity_audit": (
-        q_referential_integrity_audit, SQL_REFERENTIAL_INTEGRITY_AUDIT),
-    "events_rolling_median": (
-        q_events_rolling_median, SQL_EVENTS_ROLLING_MEDIAN),
-    "docs_column_profile": (
-        q_docs_column_profile, SQL_DOCS_COLUMN_PROFILE),
-    "lineitem_median_histogram": (
-        q_lineitem_median_histogram, SQL_LINEITEM_MEDIAN_HISTOGRAM),
-    "split_leakage_audit": (
-        q_split_leakage_audit,
-        SQL_SPLIT_LEAKAGE_AUDIT.format(jaccard=SQL_DEDUP_NGRAM)),
-    "events_anomaly_mad": (
-        q_events_anomaly_mad, SQL_EVENTS_ANOMALY_MAD),
-    "events_changepoint_cusum": (
-        q_events_changepoint_cusum, SQL_EVENTS_CHANGEPOINT_CUSUM),
-    "customer_rfm_segments": (
-        q_customer_rfm_segments, SQL_CUSTOMER_RFM_SEGMENTS),
-    "basket_part_pairs": (
-        q_basket_part_pairs, SQL_BASKET_PART_PAIRS),
-    "orders_mom_yoy": (q_orders_mom_yoy, SQL_ORDERS_MOM_YOY),
-    "orders_pareto_cume": (
-        q_orders_pareto_cume, SQL_ORDERS_PARETO_CUME),
-    "terms_continuation_counts": (
-        q_terms_continuation_counts, SQL_TERMS_CONTINUATION_COUNTS),
-    "tpch_volume_shipping": (
-        q_tpch_volume_shipping, SQL_TPCH_VOLUME_SHIPPING),
-    "tpch_market_share": (q_tpch_market_share, SQL_TPCH_MARKET_SHARE),
-    "tpch_profit_by_nation": (
-        q_tpch_profit_by_nation, SQL_TPCH_PROFIT_BY_NATION),
-    "tpch_promo_revenue": (q_tpch_promo_revenue, SQL_TPCH_PROMO_REVENUE),
-    "tpch_top_supplier": (q_tpch_top_supplier, SQL_TPCH_TOP_SUPPLIER),
-    "tpch_small_qty_revenue": (
-        q_tpch_small_qty_revenue, SQL_TPCH_SMALL_QTY_REVENUE),
-    "tpch_large_orders": (q_tpch_large_orders, SQL_TPCH_LARGE_ORDERS),
-    "tpch_disjunctive_join": (
-        q_tpch_disjunctive_join, SQL_TPCH_DISJUNCTIVE_JOIN),
-    "tpch_sole_failure_suppliers": (
-        q_tpch_sole_failure_suppliers, SQL_TPCH_SOLE_FAILURE_SUPPLIERS),
-    "tpch_inactive_premium_customers": (
-        q_tpch_inactive_premium_customers,
-        SQL_TPCH_INACTIVE_PREMIUM_CUSTOMERS),
-    "orders_pipe_syntax": (q_orders_pipe_syntax, SQL_ORDERS_PIPE_SYNTAX),
-    "part_collated_brands": (
-        q_part_collated_brands, SQL_PART_COLLATED_BRANDS),
-    "events_ks_drift": (q_events_ks_drift, SQL_EVENTS_KS_DRIFT),
-    "lineitem_benford": (q_lineitem_benford, SQL_LINEITEM_BENFORD),
-    "docs_chunks_udtf": (q_docs_chunks_udtf, SQL_DOCS_CHUNKS_UDTF),
-    "events_rank_sum": (q_events_rank_sum, SQL_EVENTS_RANK_SUM),
-    "events_chi2_independence": (
-        q_events_chi2_independence, SQL_EVENTS_CHI2_INDEPENDENCE),
-    "events_null_semantics": (
-        q_events_null_semantics, SQL_EVENTS_NULL_SEMANTICS),
-    "orders_percent_of_total": (
-        q_orders_percent_of_total, SQL_ORDERS_PERCENT_OF_TOTAL),
     "semantic_dedup_medoid": (
         q_semantic_dedup_medoid, SQL_SEMANTIC_DEDUP_MEDOID),
     "embedding_label_noise": (
         q_embedding_label_noise, SQL_EMBEDDING_LABEL_NOISE),
-    "terms_kn_bigram_probs": (
-        q_terms_kn_bigram_probs, SQL_TERMS_KN_BIGRAM_PROBS),
-    "terms_good_turing": (q_terms_good_turing, SQL_TERMS_GOOD_TURING),
-    "events_session_window_native": (
-        q_events_session_window_native, SQL_EVENTS_SESSION_WINDOW_NATIVE),
-    "events_xml_parse": (q_events_xml_parse, SQL_EVENTS_XML_PARSE),
-    "events_hll_merge": (q_events_hll_merge, SQL_EVENTS_HLL_MERGE),
-    "events_median_by_type": (
-        q_events_median_by_type, SQL_EVENTS_MEDIAN_BY_TYPE),
-    "events_transpose": (q_events_transpose, SQL_EVENTS_TRANSPOSE),
-    "events_string_agg": (q_events_string_agg, SQL_EVENTS_STRING_AGG),
-    "events_try_arithmetic": (
-        q_events_try_arithmetic, SQL_EVENTS_TRY_ARITHMETIC),
-    "terms_zipf_slope": (q_terms_zipf_slope, SQL_TERMS_ZIPF_SLOPE),
-    "events_linreg_exact": (
-        q_events_linreg_exact, SQL_EVENTS_LINREG_EXACT),
-    "orders_xyz_classes": (q_orders_xyz_classes, SQL_ORDERS_XYZ_CLASSES),
-    "events_seasonal_naive_error": (
-        q_events_seasonal_naive_error, SQL_EVENTS_SEASONAL_NAIVE_ERROR),
-    "orders_shuffle_hash_join": (
-        q_orders_shuffle_hash_join, SQL_ORDERS_SHUFFLE_HASH_JOIN),
-    "events_two_step_transitions": (
-        q_events_two_step_transitions, SQL_EVENTS_TWO_STEP_TRANSITIONS),
-    "docs_inverted_index": (
-        q_docs_inverted_index, SQL_DOCS_INVERTED_INDEX),
-    "tables_fingerprint": (q_tables_fingerprint, SQL_TABLES_FINGERPRINT),
-    "events_gap_interpolation": (
-        q_events_gap_interpolation, SQL_EVENTS_GAP_INTERPOLATION),
-    "part_skyline": (q_part_skyline, SQL_PART_SKYLINE),
-    "tpch_shipping_priority": (
-        q_tpch_shipping_priority, SQL_TPCH_SHIPPING_PRIORITY),
-    "tpch_order_priority_check": (
-        q_tpch_order_priority_check, SQL_TPCH_ORDER_PRIORITY_CHECK),
-    "tpch_forecast_revenue": (
-        q_tpch_forecast_revenue, SQL_TPCH_FORECAST_REVENUE),
-    "tpch_returned_items": (
-        q_tpch_returned_items, SQL_TPCH_RETURNED_ITEMS),
-    "tpch_customer_distribution": (
-        q_tpch_customer_distribution, SQL_TPCH_CUSTOMER_DISTRIBUTION),
-    "events_autocorrelation": (
-        q_events_autocorrelation, SQL_EVENTS_AUTOCORRELATION),
-    "events_out_of_orderness": (
-        q_events_out_of_orderness, SQL_EVENTS_OUT_OF_ORDERNESS),
-    "customer_balance_buckets": (
-        q_customer_balance_buckets, SQL_CUSTOMER_BALANCE_BUCKETS),
-    "customer_points_capped": (
-        q_customer_points_capped, SQL_CUSTOMER_POINTS_CAPPED),
-    "orders_key_gap_audit": (
-        q_orders_key_gap_audit, SQL_ORDERS_KEY_GAP_AUDIT),
-    "events_burstiness": (q_events_burstiness, SQL_EVENTS_BURSTINESS),
-    "nation_region_full_outer": (
-        q_nation_region_full_outer, SQL_NATION_REGION_FULL_OUTER),
-    "orders_rank_family": (
-        q_orders_rank_family, SQL_ORDERS_RANK_FAMILY),
-    "terms_conditional_entropy": (
-        q_terms_conditional_entropy, SQL_TERMS_CONDITIONAL_ENTROPY),
-    "lineitem_weighted_median": (
-        q_lineitem_weighted_median, SQL_LINEITEM_WEIGHTED_MEDIAN),
-    "events_gini_concentration": (
-        q_events_gini_concentration, SQL_EVENTS_GINI_CONCENTRATION),
     "quality_classifier": (q_quality_classifier, SQL_QUALITY_CLASSIFIER),
     "train_export_manifest": (
         q_train_export_manifest, SQL_TRAIN_EXPORT_MANIFEST),
@@ -11209,14 +4931,8 @@ OPS: dict[str, tuple] = {
         q_docs_duplicate_ngram_fraction, SQL_DOCS_DUPLICATE_NGRAM_FRACTION),
     "ccnet_perplexity_buckets": (
         q_ccnet_perplexity_buckets, SQL_CCNET_PERPLEXITY_BUCKETS),
-    "transcript_pack_masked": (
-        q_transcript_pack_masked, SQL_TRANSCRIPT_PACK_MASKED),
     "dedup_keep_best_quality": (
         q_dedup_keep_best_quality, SQL_DEDUP_KEEP_BEST_QUALITY),
-    "transcript_cross_conv_echo": (
-        q_transcript_cross_conv_echo, SQL_TRANSCRIPT_CROSS_CONV_ECHO),
-    "quality_classifier_eval": (
-        q_quality_classifier_eval, SQL_QUALITY_CLASSIFIER_EVAL),
     "sft_export_manifest": (
         q_sft_export_manifest, SQL_SFT_EXPORT_MANIFEST),
 }

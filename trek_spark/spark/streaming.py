@@ -89,10 +89,10 @@ def stream_dedup_exact(stream: DataFrame,
                        state_ttl_ms: int | None = None) -> DataFrame:
     """Stateful in-stream exact dedup via ``applyInPandasWithState``: only
     the FIRST turn with a given content hash passes; later duplicates —
-    in the same micro-batch or any later one — are dropped. The streaming
-    counterpart of ``dedup_exact``: a crawl firehose re-delivers the same
-    page endlessly, and dropping dupes before the (expensive, Python-CPU)
-    extraction stage is where the savings are.
+    in the same micro-batch or any later one — are dropped. A crawl
+    firehose re-delivers the same page endlessly, and dropping dupes
+    before the (expensive, Python-CPU) extraction stage is where the
+    savings are.
 
     State is keyed by the 128-bit content hash with a single marker row
     per key. ``state_ttl_ms`` bounds state for a LONG-RUNNING continuous
@@ -165,9 +165,8 @@ def stream_turn_rate(stream: DataFrame, window: str = "1 minute",
 
 def stream_sessionize(stream: DataFrame, gap: str = "30 minutes",
                       watermark: str = "2 minutes") -> DataFrame:
-    """Streaming sessionization via ``session_window`` — the
-    DYNAMIC-window analogue of the batch op (ops.py events_sessionize):
-    per conv_id, a session extends while turns keep arriving within
+    """Streaming sessionization via ``session_window`` (DYNAMIC
+    windows): per conv_id, a session extends while turns keep arriving within
     ``gap`` of the previous one and closes after a quiet period.
 
     Why this exists next to the batch op: the batch lag/running-sum
@@ -192,8 +191,7 @@ def stream_join_tool_results(turns: DataFrame, results: DataFrame,
                              max_lag: str = "5 minutes") -> DataFrame:
     """Watermarked STREAM-STREAM interval join: each streaming turn is
     enriched with the tool result that arrives for the same conv_id
-    within ``[turn.ts, turn.ts + max_lag]`` — the streaming analogue of
-    the batch AS-OF join (ops.py events_asof_join).
+    within ``[turn.ts, turn.ts + max_lag]``.
 
     State-boundedness at 100 TB/day rates: BOTH sides carry a watermark
     and the join condition is an equi-key PLUS a closed time interval,
