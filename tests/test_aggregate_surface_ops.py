@@ -1,7 +1,6 @@
 """Known-answer + cross-engine tests for the aggregate-surface batch:
-built-in median (doubled), DataFrame.transpose, ordered string agg,
-and try_* arithmetic under ANSI mode.
-"""
+built-in median (doubled), ordered string agg, and try_* arithmetic
+under ANSI mode."""
 
 import datetime as dt
 
@@ -57,22 +56,6 @@ def test_median_even_count_midpoint(spark, tmp_path):
     got = {r["event_type"]: (int(r["median2_c"]), int(r["n"]))
            for _, r in out.iterrows()}
     assert got == {"click": (500, 4), "view": (1400, 3)}
-
-
-def test_transpose_layout(spark, tmp_path):
-    """Each metric becomes a row keyed by its source column name, each
-    event_type a column; a type with no rows stays NULL (the
-    conditional-agg oracle pins that too)."""
-    rows = [(1, _T, 10, "click", 1.0), (2, _T, 11, "click", 1.0),
-            (3, _T, 10, "view", 1.0)]
-    _write(spark, tmp_path, rows)
-    out = _cross_check(spark, tmp_path, "events_transpose")
-    bym = {r["metric"]: r for _, r in out.iterrows()}
-    assert set(bym) == {"n_events", "n_users"}
-    assert int(float(bym["n_events"]["click"])) == 2
-    assert int(float(bym["n_users"]["click"])) == 2
-    assert int(float(bym["n_events"]["view"])) == 1
-    assert bym["n_events"]["error"] in ("None", "nan", "<NA>")
 
 
 def test_string_agg_caps_at_five_sorted(spark, tmp_path):

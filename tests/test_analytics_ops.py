@@ -1,7 +1,5 @@
-"""Known-answer + cross-engine tests for the round-7 analytics op
-batch (parked for the r8 record window): CUSUM changepoint, RFM
-segmentation, and market-basket co-occurrence.
-"""
+"""Known-answer + cross-engine tests for the analytics ops: CUSUM
+changepoint and market-basket co-occurrence."""
 
 import datetime as dt
 
@@ -74,33 +72,6 @@ def test_cusum_constant_stream_is_flat(spark, tmp_path):
                        ["events"])
     r = out.iloc[0]
     assert (r["change_pos"], r["cusum_stat"]) == ("1", "0")
-
-
-# ----------------------------------------------------- customer_rfm_segments
-
-def test_rfm_quartiles_and_tiebreak(spark, tmp_path):
-    """Four customers engineered so each lands in a distinct quartile
-    on every axis; customers 2 and 3 tie on frequency (2 orders each)
-    and the custkey tiebreak must order them 2 then 3."""
-    def order(key, cust, day, total):
-        return (key, cust, _T0 + dt.timedelta(days=day), total)
-    rows = [order(1, 1, 10, 100.0), order(2, 1, 10, 100.0),
-            order(3, 1, 10, 100.0),
-            order(4, 2, 8, 100.0), order(5, 2, 8, 100.0),
-            order(6, 3, 6, 50.0), order(7, 3, 6, 50.0),
-            order(8, 4, 4, 10.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "customer_rfm_segments",
-                       ["orders"])
-    got = {(r["r_q"], r["f_q"], r["m_q"]):
-           (r["n_customers"], r["segment_cents"])
-           for _, r in out.iterrows()}
-    assert got == {("1", "1", "1"): ("1", "30000"),
-                   ("2", "2", "2"): ("1", "20000"),
-                   ("3", "3", "3"): ("1", "10000"),
-                   ("4", "4", "4"): ("1", "1000")}
 
 
 # -------------------------------------------------------- basket_part_pairs

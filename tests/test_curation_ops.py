@@ -657,3 +657,38 @@ def test_keep_best_quality_beats_min_id(spark, tmp_path):
     assert int(r["n_members"]) == 2
     _cross_check(spark, _duck(tmp_path), tmp_path,
                  "dedup_keep_best_quality")
+
+
+# ----------------------------------------------- transcript_cross_conv_echo
+
+def test_cross_conv_echo_projects_pairs_excludes_same_conv(spark, tmp_path):
+    """Docs 20/21 are near-dups in conversations 20 and 21 → echo pair
+    (20, 21); docs 40/90 are near-dups in the SAME conversation 40
+    (90 % 50 = 40) → excluded. No other near-dup pairs exist."""
+    base = ("the quick brown fox jumps over one lazy dog while "
+            "rain falls on green hills near {} old stone bridges")
+    other = ("completely different sentence about numerical methods "
+             "for solving {} differential equations with boundary "
+             "conditions on compact manifolds today")
+    rows = [
+        (20, base.format("casino"), "en", "web", 100),
+        (21, base.format("theorem"), "en", "web", 100),
+        (40, other.format("elliptic"), "en", "web", 100),
+        (90, other.format("parabolic"), "en", "web", 100),
+        (7, "unrelated filler text about gardening tips and soil "
+            "acidity for tomato plants in raised beds", "en", "web", 90),
+    ]
+    _write_documents(spark, tmp_path, rows)
+    out = (O.OPS["transcript_cross_conv_echo"][0](spark, str(tmp_path))
+           .toPandas())
+    assert len(out) == 1
+    r = out.iloc[0]
+    assert (int(r["conv_a"]), int(r["conv_b"])) == (20, 21)
+    assert int(r["n_echo_pairs"]) == 1
+    assert int(r["max_jaccard_e4"]) >= 5000
+    # the same-conv near-dup pair really exists at doc level
+    pairs = O.OPS["dedup_ngram_jaccard"][0](spark, str(tmp_path)).toPandas()
+    assert {(int(a), int(b)) for a, b in
+            zip(pairs["id_a"], pairs["id_b"])} == {(20, 21), (40, 90)}
+    _cross_check(spark, _duck(tmp_path), tmp_path,
+                 "transcript_cross_conv_echo")

@@ -1,8 +1,8 @@
-"""Partitioning-invariance checks for the order-sensitive ops the
-curate, embed-curate and train-export jobs use (the test_closing_ops
-pattern, extended): the embedding-curation argmins, hashed-gram df
-joins, tercile cuts, cluster winner windows and the export manifests
-must not shift when the shuffle width changes arrival order.
+"""Partitioning-invariance checks for this session's order-sensitive
+op batches (the test_closing_ops pattern, extended): statistical tests
+built on ordered-cumsum windows, the KN/Zipf term pipelines, native
+session windows, and the embedding-curation argmins must not shift
+when the shuffle width changes arrival order.
 """
 
 import pytest
@@ -25,8 +25,16 @@ def _canon(df):
 
 
 @pytest.mark.parametrize("name", [
+    "events_ks_drift",
+    "events_rank_sum",
+    "events_chi2_independence",
+    "events_session_window_native",
+    "terms_kn_bigram_probs",
+    "terms_zipf_slope",
+    "events_linreg_exact",
     "semantic_dedup_medoid",
     "embedding_label_noise",
+    "tpch_sole_failure_suppliers",
 ])
 def test_partitioning_invariance_r7b(spark, name):
     """Shuffle width 1 vs 7: grouping and arrival order change, the
@@ -51,6 +59,7 @@ def test_partitioning_invariance_r7b(spark, name):
     "dedup_keep_best_quality",
     "quality_classifier",
     "train_export_manifest",
+    "transcript_cross_conv_echo",
     "sft_export_manifest",
 ])
 def test_partitioning_invariance_r8_late(spark, name):

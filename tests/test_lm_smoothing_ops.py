@@ -1,7 +1,5 @@
 """Hand-computed known-answer + cross-engine tests for the exact-
-rational LM smoothing ops (interpolated Kneser-Ney bigrams with
-D = 3/4, Good-Turing adjusted counts).
-"""
+rational interpolated Kneser-Ney bigram probabilities (D = 3/4)."""
 
 import duckdb
 import pytest
@@ -63,15 +61,3 @@ def test_kn_probabilities_sum_below_one(spark, tmp_path):
     fn, _ = O.OPS["terms_kn_bigram_probs"]
     for row in fn(spark, str(tmp_path)).collect():
         assert 0 < row.p_num <= row.p_den, row
-
-
-def test_good_turing_spectrum_gap(spark, tmp_path):
-    """Frequencies a,b ×1, c ×2, d ×4: r=1 smooths to (1+1)·N₂/N₁ =
-    2/2; r=2 has no r=3 class → num 0 (auditable gap); the top class
-    r=4 has no successor → num 0."""
-    _write_docs(spark, tmp_path, ["a b c c d d d d"])
-    out = _cross_check(spark, tmp_path, "terms_good_turing")
-    got = {int(r["r"]): (int(r["n_r"]), int(r["rstar_num"]),
-                         int(r["rstar_den"]))
-           for _, r in out.iterrows()}
-    assert got == {1: (2, 2, 2), 2: (1, 0, 1), 4: (1, 0, 1)}

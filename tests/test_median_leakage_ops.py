@@ -1,7 +1,5 @@
-"""Known-answer + cross-engine tests for the round-7 median/leakage op
-batch (parked for the r8 record window): two-pass histogram-refined
-exact median, train/test split-leakage audit, and MAD robust outliers.
-"""
+"""Known-answer + cross-engine tests for the two-pass
+histogram-refined exact median."""
 
 import datetime as dt
 
@@ -76,61 +74,3 @@ def test_median_histogram_duplicate_values_at_boundary(spark, tmp_path):
     out = _cross_check(spark, tmp_path, "lineitem_median_histogram",
                        ["lineitem"])
     assert out.iloc[0]["median_cents"] == "10000"
-
-
-# ----------------------------------------------------- split_leakage_audit
-
-def test_split_leakage_flags_cross_split_neardups(spark, tmp_path):
-    """doc 0 is train, doc 8 is test (md5-tick precomputed); both
-    carry identical text (J=1) -> one cross-split pair. docs 1,2
-    (both train) share another text -> one same-split pair with
-    n_cross=0. A singleton doc must produce nothing."""
-    dup_a = "the quick brown fox jumps over the lazy dog again today"
-    dup_b = "pack my box with five dozen liquor jugs every single day"
-    rows = [(0, dup_a, "en", "web", len(dup_a)),
-            (8, dup_a, "en", "web", len(dup_a)),
-            (1, dup_b, "en", "web", len(dup_b)),
-            (2, dup_b, "en", "web", len(dup_b)),
-            (3, "completely unrelated text about volcanic geology",
-             "en", "web", 48)]
-    _write(spark, tmp_path, "documents",
-           "doc_id long, text string, lang string, source string, "
-           "n_chars long", rows)
-    out = _cross_check(spark, tmp_path, "split_leakage_audit",
-                       ["documents"])
-    got = {(r["split_lo"], r["split_hi"]): (r["n_pairs"], r["n_cross"])
-           for _, r in out.iterrows()}
-    assert got == {("test", "train"): ("1", "1"),
-                   ("train", "train"): ("1", "0")}
-
-
-# ------------------------------------------------------ events_anomaly_mad
-
-def test_mad_flags_planted_outlier_zscore_misses(spark, tmp_path):
-    """Type 'a': cents 998,1000,1000,1002,9999 -> med=1000 (k=3),
-    devs sorted 0,0,2,2,8999 -> MAD=2, gate dev>6 flags ONLY the
-    9999 row. The outlier itself participates in both medians (no
-    peeking) — robustness is what keeps med/MAD pinned."""
-    vals = [9.98, 10.00, 10.00, 10.02, 99.99]
-    rows = [(i, _T0, 1, "a", vals[i], None) for i in range(5)]
-    _write(spark, tmp_path, "events",
-           "event_id long, ts timestamp, user_id long, "
-           "event_type string, value double, props string", rows)
-    out = _cross_check(spark, tmp_path, "events_anomaly_mad", ["events"])
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert (r["cents"], r["med"], r["mad"]) == ("9999", "1000", "2")
-
-
-def test_mad_zero_degeneracy_flags_any_deviation(spark, tmp_path):
-    """Constant distribution (5,5,5) plus one 7: MAD=0, so ANY
-    nonzero deviation is an outlier — the known MAD degeneracy, and
-    the behaviour both engines must share exactly."""
-    vals = [0.05, 0.05, 0.05, 0.07]
-    rows = [(i, _T0, 1, "b", vals[i], None) for i in range(4)]
-    _write(spark, tmp_path, "events",
-           "event_id long, ts timestamp, user_id long, "
-           "event_type string, value double, props string", rows)
-    out = _cross_check(spark, tmp_path, "events_anomaly_mad", ["events"])
-    assert len(out) == 1
-    assert out.iloc[0]["cents"] == "7"

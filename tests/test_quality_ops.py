@@ -1,10 +1,16 @@
-"""Known-answer + cross-engine tests for the learned quality classifier."""
+"""Known-answer + cross-engine tests for the exact rolling median and
+the learned quality classifier."""
+
+import datetime as dt
 
 import duckdb
 import pytest
 
 from trek_spark.spark import ops as O
 from trek_spark.spark.session import get_spark
+
+_T0 = dt.datetime(2024, 1, 1)
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -32,6 +38,41 @@ def _cross_check(spark, path, name, tables):
     b = b.sort_values(by=list(b.columns)).reset_index(drop=True)
     assert a.equals(b), f"{name}: Spark vs DuckDB mismatch\n{a}\n{b}"
     return a
+
+
+# --------------------------------------------------- events_rolling_median
+
+def test_rolling_median_exact_frames(spark, tmp_path):
+    """User 5 (passes %5), values 1,9,3,7,5 in time order with
+    event_ids 0,3,6,9,12 (all pass %3): trailing-11 frames are the
+    prefixes, so medians are the lower-middles of sorted prefixes:
+    [1]->1, [1,9]->1, [1,3,9]->3, [1,3,7,9]->3, [1,3,5,7,9]->5."""
+    vals = [1.0, 9.0, 3.0, 7.0, 5.0]
+    rows = [(i * 3, _T0 + dt.timedelta(seconds=i), 5, "click",
+             vals[i], None) for i in range(5)]
+    _write(spark, tmp_path, "events",
+           "event_id long, ts timestamp, user_id long, "
+           "event_type string, value double, props string", rows)
+    out = _cross_check(spark, tmp_path, "events_rolling_median",
+                       ["events"])
+    got = {r["event_id"]: r["roll_median"] for _, r in out.iterrows()}
+    assert got == {"0": "100", "3": "100", "6": "300",
+                   "9": "300", "12": "500"}
+
+
+def test_rolling_median_frame_truncates_at_11(spark, tmp_path):
+    """15 rows of ascending values: the last row's frame holds only
+    the trailing 11 (values 5..15 in cents), median = 1000 — a frame
+    that grew without bound would give 800."""
+    rows = [(i * 3, _T0 + dt.timedelta(seconds=i), 10, "click",
+             float(i + 1), None) for i in range(15)]
+    _write(spark, tmp_path, "events",
+           "event_id long, ts timestamp, user_id long, "
+           "event_type string, value double, props string", rows)
+    out = _cross_check(spark, tmp_path, "events_rolling_median",
+                       ["events"])
+    got = {r["event_id"]: r["roll_median"] for _, r in out.iterrows()}
+    assert got["42"] == "1000"
 
 
 # ---------------------------------------------------------------------------

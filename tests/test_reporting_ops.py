@@ -1,8 +1,6 @@
-"""Known-answer + cross-engine tests for the round-7 reporting /
-LM-statistics op batch (parked for the r8 record window):
-month-over-month + year-over-year deltas, Pareto cumulative share,
-and Kneser-Ney continuation counts.
-"""
+"""Known-answer + cross-engine tests for the reporting /
+LM-statistics ops: Pareto cumulative share and Kneser-Ney
+continuation counts."""
 
 import datetime as dt
 
@@ -39,29 +37,6 @@ def _cross_check(spark, path, name, tables):
     b = b.sort_values(by=list(b.columns)).reset_index(drop=True)
     assert a.equals(b), f"{name}: Spark vs DuckDB mismatch\n{a}\n{b}"
     return a
-
-
-# ------------------------------------------------------------ orders_mom_yoy
-
-def test_mom_yoy_deltas_and_missing_priors(spark, tmp_path):
-    """Months 2023-12 (100), 2024-01 (200), 2024-12 (150): the first
-    month has no MoM prior (flag 0), January has no YoY prior, and
-    December's YoY compares across the 11-month gap in the month
-    series while its MoM compares against January — two different
-    lags over two different orderings."""
-    rows = [(1, 1, dt.datetime(2023, 12, 5), 100.0),
-            (2, 1, dt.datetime(2024, 1, 7), 200.0),
-            (3, 1, dt.datetime(2024, 12, 9), 150.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "orders_mom_yoy", ["orders"])
-    got = {(r["y"], r["m"]): (r["mom_delta"], r["yoy_delta"],
-                              r["has_mom"], r["has_yoy"])
-           for _, r in out.iterrows()}
-    assert got == {("2023", "12"): ("0", "0", "0", "0"),
-                   ("2024", "1"): ("10000", "0", "1", "0"),
-                   ("2024", "12"): ("-5000", "5000", "1", "1")}
 
 
 # -------------------------------------------------------- orders_pareto_cume

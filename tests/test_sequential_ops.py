@@ -1,7 +1,6 @@
 """Known-answer + cross-engine tests for batch 26: the recursive
 double-clamped walk (with the case separating it from any windowed
-closed form), the sequential-key gap audit, and burstiness.
-"""
+closed form), burstiness, and the both-sides-null full outer join."""
 
 import datetime as dt
 
@@ -75,20 +74,6 @@ def test_points_walk_floor_clamp(spark, tmp_path):
     assert (int(r["final_balance"]), int(r["n_saturated"])) == (50, 0)
 
 
-def test_key_gap_audit_runs(spark, tmp_path):
-    """Keys 1..20 with 8–10 absent from the DATA, plus the injected
-    %97==13 drop: gaps (8,3) and (13,1) — consecutive missing keys
-    merge into one run."""
-    keys = [k for k in range(1, 21) if k not in (8, 9, 10)]
-    _write(spark, tmp_path, "orders", "o_orderkey long",
-           [(k,) for k in keys])
-    out = _cross_check(spark, tmp_path, "orders_key_gap_audit",
-                       ["orders"])
-    got = {int(r["gap_start"]): int(r["gap_len"])
-           for _, r in out.iterrows()}
-    assert got == {8: 3, 13: 1}
-
-
 def test_burstiness_constant_vs_bursty(spark, tmp_path):
     """Constant daily counts → Fano numerator 0; a bursty type (counts
     1 and 9 over two days) → num = 2·82 − 100 = 64, den = 2·10."""
@@ -134,20 +119,3 @@ def test_full_outer_both_null_sides(spark, tmp_path):
     assert rows[("N1", "R1")] == (0, 0)
     assert rows[("N4", "R4")] == (0, 0)
     assert len(rows) == 5
-
-
-def test_rank_family_tie_semantics(spark, tmp_path):
-    """Buckets [3,3,2,1] per one priority: rank = 1,1,3,4 (skips),
-    dense_rank = 1,1,2,3 (doesn't), row_number = 1,2,3,4 (orderkey
-    tiebreak inside the tie pair)."""
-    rows = [(1, "HIGH", 30000.0), (2, "HIGH", 30500.0),
-            (3, "HIGH", 20000.0), (4, "HIGH", 10000.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_orderpriority string, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "orders_rank_family", ["orders"])
-    got = {int(r["o_orderkey"]): (int(r["rnk"]), int(r["drnk"]),
-                                  int(r["rn"]))
-           for _, r in out.iterrows()}
-    assert got == {1: (1, 1, 1), 2: (1, 1, 2),
-                   3: (3, 2, 3), 4: (4, 3, 4)}

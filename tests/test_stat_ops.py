@@ -1,8 +1,6 @@
-"""Known-answer + cross-engine tests for the statistical-testing and
-semantics-parity batch: exact Mann–Whitney rank-sum, chi-square
-independence, NULL aggregate semantics, and ratio_to_report shares.
-All expectations are hand-computed.
-"""
+"""Known-answer + cross-engine tests for the statistical-testing
+batch: exact Mann–Whitney rank-sum and chi-square independence. All
+expectations are hand-computed."""
 
 import datetime as dt
 
@@ -101,49 +99,3 @@ def test_chi2_independent_is_zero(spark, tmp_path):
     out = _cross_check(spark, tmp_path, "events_chi2_independence",
                        ["events"])
     assert int(out.iloc[0]["chi2_e6"]) == 0
-
-
-# --------------------------------------------------- events_null_semantics
-
-def test_null_group_and_skipped_nulls(spark, tmp_path):
-    """user_id 4 lands in the NULL group (its own group, not dropped);
-    value 0.30 → cents 30 → v = nullif(30 % 10, 0) = NULL, skipped by
-    sum/min/max/count(v)/distinct but counted by count(*)."""
-    rows = [
-        (1, dt.datetime(2024, 1, 1), 0, "click", 0.03),   # nk 0, v 3
-        (2, dt.datetime(2024, 1, 1), 0, "click", 0.30),   # nk 0, v NULL
-        (3, dt.datetime(2024, 1, 1), 0, "click", 0.13),   # nk 0, v 3 (dup)
-        (4, dt.datetime(2024, 1, 1), 4, "click", 0.07),   # nk NULL, v 7
-        (5, dt.datetime(2024, 1, 1), 9, "click", 0.20),   # nk NULL, v NULL
-    ]
-    _write(spark, tmp_path, "events", _EV_SCHEMA, rows)
-    out = _cross_check(spark, tmp_path, "events_null_semantics",
-                       ["events"])
-    byk = {str(r["nk"]): r for _, r in out.iterrows()}
-    assert len(byk) == 2
-    k0 = [v for k, v in byk.items() if k in ("0", "0.0")][0]
-    knull = [v for k, v in byk.items() if k not in ("0", "0.0")][0]
-    assert (int(k0["n_all"]), int(k0["n_nonnull"]),
-            int(float(k0["sum_v"])), int(k0["n_distinct"])) == (3, 2, 6, 1)
-    assert (int(knull["n_all"]), int(knull["n_nonnull"]),
-            int(float(knull["sum_v"]))) == (2, 1, 7)
-
-
-# ------------------------------------------------- orders_percent_of_total
-
-def test_percent_of_total_rounding(spark, tmp_path):
-    """Nation 1: customers at 300/100 → 7500/2500 bp. Nation 2: three
-    equal customers → 3333 bp each (rounded integer division, the
-    thirds don't sum to 10000 — that's the honest answer)."""
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long",
-           [(1, 1), (2, 1), (3, 2), (4, 2), (5, 2)])
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_totalprice double",
-           [(1, 1, 300.0), (2, 2, 100.0),
-            (3, 3, 50.0), (4, 4, 50.0), (5, 5, 50.0)])
-    out = _cross_check(spark, tmp_path, "orders_percent_of_total",
-                       ["customer", "orders"])
-    got = {int(r["c_custkey"]): int(r["share_bp"])
-           for _, r in out.iterrows()}
-    assert got == {1: 7500, 2: 2500, 3: 3333, 4: 3333, 5: 3333}

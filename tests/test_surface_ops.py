@@ -1,8 +1,6 @@
 """Known-answer + cross-engine tests for the Spark-4 surface batch
-(pipe syntax, UTF8_LCASE collation, Python UDTF) and the exact-integer
-statistical ops (two-sample KS, Benford audit) — parked for the r8
-record window.
-"""
+(pipe syntax, UTF8_LCASE collation) and the exact-integer statistical
+ops (two-sample KS, Benford audit)."""
 
 import datetime as dt
 
@@ -126,22 +124,3 @@ def test_benford_digits_and_expected_constant(spark, tmp_path):
     got = {int(r["digit"]): (int(r["n"]), int(r["expected_e6"]))
            for _, r in out.iterrows()}
     assert got == {1: (3, 301029), 9: (1, 45757)}
-
-
-# ------------------------------------------------------ docs_chunks_udtf
-
-def test_udtf_chunking_partial_tail_and_empty_doc(spark, tmp_path):
-    """21 words → chunks of 10/10/1 with correct boundary words; a
-    doc with no [a-z] words emits nothing."""
-    words = [chr(97 + i) * 2 for i in range(21)]   # aa bb cc ... uu
-    _write(spark, tmp_path, "documents",
-           "doc_id long, text string",
-           [(1, " ".join(words)), (2, "123 456 !!")])
-    out = _cross_check(spark, tmp_path, "docs_chunks_udtf", ["documents"])
-    assert sorted(out["doc_id"].astype(int).unique()) == [1]
-    got = {int(r["chunk_idx"]): (int(r["n_words"]), r["first_word"],
-                                 r["last_word"])
-           for _, r in out.iterrows()}
-    assert got == {0: (10, "aa", "jj"),
-                   1: (10, "kk", "tt"),
-                   2: (1, "uu", "uu")}

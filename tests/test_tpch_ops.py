@@ -1,9 +1,7 @@
 """Known-answer + cross-engine tests for the adapted canonical TPC-H
-batch (Q7/Q8/Q15/Q17/Q18/Q19/Q21/Q22 shapes — parked for the r8 record
-window). Each test plants the semantic corner the op exists to get
-right: strict thresholds, tie handling, double-correlation exclusion
-rules, and rounded-integer-division shares.
-"""
+shapes. Each test plants the semantic corner the op exists to get
+right: strict thresholds, tie handling, semi-join counting and
+double-correlation exclusion rules."""
 
 import datetime as dt
 
@@ -51,69 +49,6 @@ def _li(ok, pk, sk, qty, price, disc=0.0, rf="N", ship=dt.datetime(1996, 6, 1)):
     return (ok, pk, sk, float(qty), float(price), float(disc), rf, ship)
 
 
-# ------------------------------------------------- tpch_volume_shipping (Q7)
-
-def test_volume_shipping_directions_and_internal_trade(spark, tmp_path):
-    """N3→N2 and N2→N3 are separate output rows; N3→N3 internal trade
-    and out-of-window shipments are excluded."""
-    _write(spark, tmp_path, "lineitem", _LI_SCHEMA, [
-        _li(1, 1, 30, 1, 100.0),                       # N3 supp → N2 cust
-        _li(2, 1, 20, 1, 200.0),                       # N2 supp → N3 cust
-        _li(3, 1, 30, 1, 400.0),                       # N3 → N3: internal
-        _li(4, 1, 30, 1, 800.0, ship=dt.datetime(1999, 1, 1)),  # window
-    ])
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long",
-           [(1, 2), (2, 3), (3, 3), (4, 2)])
-    _write(spark, tmp_path, "supplier",
-           "s_suppkey long, s_nationkey long", [(30, 3), (20, 2)])
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long", [(2, 2), (3, 3)])
-    _write(spark, tmp_path, "nation",
-           "n_nationkey long, n_name string",
-           [(2, "NATION_2"), (3, "NATION_3")])
-    out = _cross_check(spark, tmp_path, "tpch_volume_shipping",
-                       ["lineitem", "orders", "supplier", "customer",
-                        "nation"])
-    got = {(r["supp_nation"], r["cust_nation"]): int(r["revenue_e4"])
-           for _, r in out.iterrows()}
-    assert got == {("NATION_3", "NATION_2"): 100 * 100 * 100,
-                   ("NATION_2", "NATION_3"): 200 * 100 * 100}
-
-
-# --------------------------------------------------- tpch_market_share (Q8)
-
-def test_market_share_rounding_and_nation_split(spark, tmp_path):
-    """NATION_3 supplier contributes 100 of 300 total → share_bp
-    3333 (rounded integer division, .33̅ truncating the half-adjust)."""
-    _write(spark, tmp_path, "lineitem", _LI_SCHEMA, [
-        _li(1, 1, 30, 1, 100.0),      # NATION_3 supplier
-        _li(2, 1, 20, 1, 200.0),      # NATION_2 supplier
-    ])
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp",
-           [(1, 9, dt.datetime(1996, 3, 1)), (2, 9, dt.datetime(1996, 9, 1))])
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long", [(9, 7)])
-    _write(spark, tmp_path, "nation",
-           "n_nationkey long, n_name string, n_regionkey long",
-           [(7, "NATION_7", 1), (3, "NATION_3", 2), (2, "NATION_2", 2)])
-    _write(spark, tmp_path, "region",
-           "r_regionkey long, r_name string", [(1, "ASIA")])
-    _write(spark, tmp_path, "supplier",
-           "s_suppkey long, s_nationkey long", [(30, 3), (20, 2)])
-    _write(spark, tmp_path, "part",
-           "p_partkey long, p_type string", [(1, "ECONOMY")])
-    out = _cross_check(spark, tmp_path, "tpch_market_share",
-                       ["lineitem", "orders", "customer", "nation",
-                        "region", "supplier", "part"])
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert int(r["nation_rev_e4"]) == 100 * 100 * 100
-    assert int(r["total_rev_e4"]) == 300 * 100 * 100
-    assert int(r["share_bp"]) == 3333
-
-
 # --------------------------------------------------- tpch_top_supplier (Q15)
 
 def test_top_supplier_tie_returns_both(spark, tmp_path):
@@ -131,27 +66,6 @@ def test_top_supplier_tie_returns_both(spark, tmp_path):
     out = _cross_check(spark, tmp_path, "tpch_top_supplier",
                        ["lineitem", "supplier"])
     assert sorted(out["s_name"]) == ["Supplier#A", "Supplier#B"]
-
-
-# --------------------------------------------- tpch_small_qty_revenue (Q17)
-
-def test_small_qty_strict_threshold(spark, tmp_path):
-    """Part avg qty = 25 (lines 1, 5, 69): 20% of avg = 5. qty 1
-    qualifies (5·1·3=15 < 75); qty 5 is EXACTLY the boundary
-    (5·5·3=75 < 75 false) and must be excluded — strict inequality,
-    the corner that round-tripped floats get wrong."""
-    _write(spark, tmp_path, "lineitem", _LI_SCHEMA, [
-        _li(1, 1, 9, 1, 10.0),
-        _li(2, 1, 9, 5, 20.0),
-        _li(3, 1, 9, 69, 40.0),
-    ])
-    _write(spark, tmp_path, "part",
-           "p_partkey long, p_brand string", [(1, "Brand#13")])
-    out = _cross_check(spark, tmp_path, "tpch_small_qty_revenue",
-                       ["lineitem", "part"])
-    r = out.iloc[0]
-    assert int(r["n_lines"]) == 1
-    assert int(r["small_qty_revenue_c"]) == 1000
 
 
 # ------------------------------------------------- tpch_large_orders (Q18)
@@ -220,29 +134,6 @@ def test_sole_failure_double_correlation(spark, tmp_path):
                        ["lineitem", "supplier"])
     got = {r["s_name"]: int(r["numwait"]) for _, r in out.iterrows()}
     assert got == {"Supplier#X": 1}
-
-
-# ------------------------------- tpch_inactive_premium_customers (Q22)
-
-def test_inactive_premium_strict_avg_and_recency(spark, tmp_path):
-    """Positive-balance avg = (100+300)/2 = 200. Customer at exactly
-    200.00 is excluded (strict >); the 300.00 customer qualifies only
-    if they have no order since 1999 — one has a 1998 order (ok), one
-    a 2000 order (excluded). Negative balances don't drag the avg."""
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long, c_acctbal double",
-           [(1, 5, 100.0), (2, 5, 300.0), (3, 5, 200.0),
-            (4, 6, 300.0), (5, 6, -500.0)])
-    _write(spark, tmp_path, "orders",
-           "o_custkey long, o_orderdate timestamp",
-           [(2, dt.datetime(1998, 6, 1)),     # old order: still inactive
-            (4, dt.datetime(2000, 6, 1))])    # recent: excluded
-    out = _cross_check(spark, tmp_path, "tpch_inactive_premium_customers",
-                       ["customer", "orders"])
-    got = {int(r["c_nationkey"]): (int(r["n_customers"]),
-                                   int(r["total_bal_c"]))
-           for _, r in out.iterrows()}
-    assert got == {5: (1, 30000)}
 
 
 # ------------------------------------------- tpch_customer_distribution (Q13)

@@ -1,8 +1,6 @@
 """Known-answer + cross-engine tests for the warehouse-analytics batch:
-XYZ variability classes (exact CV² threshold algebra, boundary pinned),
-seasonal-naive backtest alignment, and the hint-invariance of the
-shuffle-hash join op.
-"""
+seasonal-naive backtest alignment and the hint-invariance of the
+shuffle-hash join op."""
 
 import datetime as dt
 
@@ -43,23 +41,6 @@ def _cross_check(spark, path, name, tables):
 _LI = ("l_orderkey long, l_partkey long, l_suppkey long, "
        "l_quantity double, l_extendedprice double, l_discount double, "
        "l_returnflag string, l_shipdate timestamp")
-
-
-def test_xyz_classes_boundaries(spark, tmp_path):
-    """Part 1: months (10,10,10) → CV 0 → X. Part 2: (10,30) → CV
-    exactly 0.5 → Y (inclusive threshold: 4·(nQ−S²) = S²). Part 3:
-    (10,90) → CV 0.8 → Z."""
-    rows = []
-    oid = 0
-    for pk, months in ((1, [10, 10, 10]), (2, [10, 30]), (3, [10, 90])):
-        for i, q in enumerate(months):
-            oid += 1
-            rows.append((oid, pk, 1, float(q), 100.0, 0.0, "N",
-                         dt.datetime(1996, 1 + i, 15)))
-    _write(spark, tmp_path, "lineitem", _LI, rows)
-    out = _cross_check(spark, tmp_path, "orders_xyz_classes", ["lineitem"])
-    got = {int(r["l_partkey"]): r["xyz_class"] for _, r in out.iterrows()}
-    assert got == {1: "X", 2: "Y", 3: "Z"}
 
 
 def test_seasonal_naive_calendar_alignment(spark, tmp_path):

@@ -30,17 +30,46 @@ AUDITS = {
         ("Window", "hot-bucket cap before collect_list"),
         ("Scan parquet", "md5 signatures evaluated once", 1),
     ],
+    "events_sessionize": [
+        ("Window", "lag + running sum number sessions in one keyed "
+                   "window; the session rollup reuses the partitioning"),
+        ("HashAggregate", "per-session aggregate is map-side partial "
+                          "after the window"),
+    ],
+    "customer_value_deciles": [
+        ("Window", "global ntile runs over the PRE-AGGREGATED "
+                   "|customers| rows (revenue cents grouped first), "
+                   "never raw orders"),
+        ("HashAggregate", "per-customer cents aggregate before the "
+                          "window; decile rollup after"),
+    ],
     "docs_repetition_ratio": [
         ("Scan parquet", "pure per-row column expressions over one "
                          "scan; the only exchange is _t_wide's "
                          "scale-adaptive map widening (no-op on a "
                          "properly split input)"),
     ],
+    "stratified_sample": [
+        ("Scan parquet", "pure-function sample = ONE codegen'd filter "
+                         "over one scan — no sampling pass, no shuffle",
+         1),
+        ("* Filter", "the md5-tick keep decision runs inside whole-stage "
+                     "codegen (JVM, no Python)"),
+    ],
     "benchmark_contamination": [
         ("BroadcastHashJoin", "benchmark shingles broadcast (eval sets "
                               "are small); corpus shingles never shuffle "
                               "against each other"),
         ("Window", "hot-shingle cap before the join"),
+    ],
+    "customer_value_deciles_approx": [
+        ("ObjectHashAggregate", "approx_percentile cutoffs via a "
+                                "partial-aggregable sketch, not a sort"),
+        ("BroadcastNestedLoopJoin", "1-row cutoff array broadcast back to "
+                                    "the banding scan"),
+        ("Sort", "the whole point of the approx twin: NO sort anywhere — "
+                 "the exact op's global-window sort is the 10⁹-customer "
+                 "scale-killer", 0),
     ],
     "pii_redact": [
         ("Exchange", "pure per-row regexp scrub: ZERO shuffle", 0),
@@ -389,6 +418,53 @@ AUDITS = {
                             "aggregate — never the corpus"),
         ("BroadcastHashJoin", "band offsets broadcast back"),
     ],
+    "events_rolling_median": [
+        ("Window", "one frame-bounded collect per row — the array is "
+                   "capped at 11 elements BY THE FRAME", 1),
+        ("Exchange", "one user_id shuffle", 1),
+        ("PushedFilters: [IsNotNull(user_id)",
+         "the %5 user decimation reaches the scan"),
+    ],
+    "lineitem_median_histogram": [
+        ("BroadcastHashJoin", "the 6-row bucket directory broadcasts "
+                              "back; pass 2 touches only target-"
+                              "bucket rows"),
+        ("Scan parquet", "two passes = two scans (histogram, then "
+                         "bucket rescan) — never a full-group sort",
+         2),
+    ],
+    "events_changepoint_cusum": [
+        ("Exchange", "prefix/total/argmax windows all share ONE "
+                     "user_id shuffle", 1),
+        ("Window", "running sums, whole-partition totals, and the "
+                   "argmax pick are separate passes (plus a "
+                   "WindowGroupLimit prune) — all inside the one "
+                   "shuffle", 4),
+        ("PushedFilters: [IsNotNull(user_id)",
+         "the %7 decimation reaches the scan"),
+    ],
+    "basket_part_pairs": [
+        ("HashAggregate", "basket collect + pair counts + part "
+                          "counts all partial-aggregate"),
+        ("CartesianProduct", "pairs explode WITHIN baskets (capped "
+                             "at 200 parts), never across the "
+                             "catalog", 0),
+        ("BroadcastNestedLoopJoin", "the scalar N rides as a "
+                                    "broadcast 1-row join"),
+    ],
+    "orders_pareto_cume": [
+        ("SinglePartition", "the global rank sorts the CUSTOMER "
+                            "AGGREGATE, not the orders (documented "
+                            "approx swap at 10^9 customers)"),
+        ("BroadcastNestedLoopJoin", "the corpus total rides as a "
+                                    "broadcast 1-row join"),
+    ],
+    "terms_continuation_counts": [
+        ("HashAggregate", "distinct bigrams, continuation counts, "
+                          "and raw counts all partial-aggregate"),
+        ("CartesianProduct", "bigrams come from a per-doc array "
+                             "transform, never a self-join", 0),
+    ],
     "customer_lateral_top2": [
         ("WindowGroupLimit", "the per-customer ORDER BY/LIMIT lateral "
                              "decorrelates into a group-limit pushed "
@@ -397,6 +473,47 @@ AUDITS = {
         ("BroadcastNestedLoopJoin", "the correlation is an equi-join "
                                     "key", 0),
         ("CartesianProduct", "never a cartesian", 0),
+    ],
+    "tpch_disjunctive_join": [
+        ("BroadcastHashJoin", "Q19's OR-of-ANDs still plans as a hash "
+                              "join on l_partkey = p_partkey with the "
+                              "disjunction as residual"),
+        ("BroadcastNestedLoopJoin", "not a nested-loop", 0),
+        ("CartesianProduct", "not a cartesian", 0),
+    ],
+    "tpch_top_supplier": [
+        ("BroadcastHashJoin", "the one-row max joins back by broadcast "
+                              "— no driver collect for the scalar"),
+        ("PushedFilters: [IsNotNull(l_shipdate)",
+         "quarter window pushed to the scan"),
+    ],
+    "tpch_sole_failure_suppliers": [
+        ("LeftSemi", "EXISTS(other supplier) is a semi-join"),
+        ("LeftAnti", "NOT EXISTS(other returner) is an anti-join"),
+        ("CartesianProduct", "the suppkey inequality rides the "
+                             "orderkey equi-join as residual", 0),
+    ],
+    "orders_pipe_syntax": [
+        ("PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate",
+         "pipe-syntax |> WHERE lowers to the same pushed predicate "
+         "as the classic form — the |> stages don't fence pushdown"),
+        ("HashAggregate", "|> AGGREGATE partial-aggregates map-side"),
+    ],
+    "events_ks_drift": [
+        ("Window", "one ordered cumsum over DISTINCT values only"),
+        ("In(event_type, [click,view])",
+         "the two-slice IN filter reaches the events scan"),
+        ("CartesianProduct", "the totals/max joins are one-row "
+                             "broadcasts, never a real cartesian", 0),
+    ],
+    "lineitem_benford": [
+        ("HashAggregate", "9-key aggregate collapses map-side"),
+        ("Exchange", "exactly one tiny shuffle", 1),
+    ],
+    "events_rank_sum": [
+        ("Window", "ordered cumsum over DISTINCT values only"),
+        ("In(event_type, [click,view])",
+         "slice filter reaches the events scan"),
     ],
     "semantic_dedup_medoid": [
         ("BroadcastHashJoin", "k medoid rows broadcast back to "
@@ -409,6 +526,16 @@ AUDITS = {
         ("Window", "top-3 neighbors via window rank"),
         ("CartesianProduct", "in-cell self-join is an equi-join on "
                              "cell", 0),
+    ],
+    "orders_shuffle_hash_join": [
+        ("ShuffledHashJoin", "the shuffle_hash hint actually plans a "
+                             "hash join (a silently-degraded hint is "
+                             "worse than none)"),
+        ("SortMergeJoin", "no SMJ double-sort", 0),
+    ],
+    "tpch_customer_distribution": [
+        ("LeftOuter", "the k=0 bucket needs the LEFT join — an inner "
+                      "join silently drops orderless customers"),
     ],
 }
 

@@ -165,8 +165,9 @@ def stream_turn_rate(stream: DataFrame, window: str = "1 minute",
 
 def stream_sessionize(stream: DataFrame, gap: str = "30 minutes",
                       watermark: str = "2 minutes") -> DataFrame:
-    """Streaming sessionization via ``session_window`` (DYNAMIC
-    windows): per conv_id, a session extends while turns keep arriving within
+    """Streaming sessionization via ``session_window`` — the
+    DYNAMIC-window analogue of the batch op (ops.py events_sessionize):
+    per conv_id, a session extends while turns keep arriving within
     ``gap`` of the previous one and closes after a quiet period.
 
     Why this exists next to the batch op: the batch lag/running-sum
