@@ -7,7 +7,10 @@ against the golden expectations.
 
 ``queries``/``oracle_sql`` expose the relational + training-data operator
 surface (SURVEY.md §2.0 and the dedup/similarity/text-analysis ops) with
-DuckDB oracles; extraction ops are rows-only (non-SQL-expressible).
+DuckDB oracles.
+
+``_stream_late_data_audit`` and ``_stream_dedup_within_watermark`` are
+streaming checks with no SQL oracle; ``tests/test_streaming.py`` runs them.
 """
 
 from __future__ import annotations
@@ -54,351 +57,6 @@ def entry(spark: SparkSession) -> DataFrame:
         )
         .orderBy("conv_id", "turn_idx")
     )
-
-
-def _extract_fixture_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extraction op (rows-only check): per-turn extraction results over the
-    deterministic fixture corpus (sf_dir-independent — the transcript table
-    is synthesized, not part of the driver's TPC-H testdata)."""
-    from trek_spark.spark.corpus import build_transcripts
-    from trek_spark.spark.job import extract_turns
-
-    transcripts = build_transcripts(spark)
-    return (
-        extract_turns(transcripts, num_partitions=8)
-        .select("conv_id", "turn_idx", "title", "author", "site",
-                "word_count",
-                F.substring(F.md5(F.coalesce("extracted_text", F.lit(""))),
-                            1, 16).alias("md_hash"))
-        .orderBy("conv_id", "turn_idx")
-    )
-
-
-def _extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-span offsets per turn (rows-only): north-star span surface.
-
-    Runs on a deterministic quarter of the corpus (murmur3 hash of
-    conv_id) — the span invariants (in-bounds, non-overlapping,
-    monotonic) are per-turn properties, so a stable sample preserves the
-    check while keeping this entry cheap enough that the driver's
-    per-round budget records every entry after it (r5 recorded only 50
-    of 54 — the full-corpus double extraction starved the tail)."""
-    from trek_spark.spark.corpus import build_transcripts
-    from trek_spark.spark.job import extract_turns
-
-    transcripts = (build_transcripts(spark)
-                   .filter(F.abs(F.hash("conv_id")) % 4 == 0))
-    return (
-        extract_turns(transcripts, num_partitions=8)
-        .select("conv_id", "turn_idx",
-                F.explode_outer("content_spans").alias("span"))
-        .select("conv_id", "turn_idx",
-                F.col("span.start").alias("start"),
-                F.col("span.end").alias("end"),
-                F.col("span.kind").alias("kind"))
-        .orderBy("conv_id", "turn_idx", "start")
-    )
-
-
-def _multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing op (rows-only): binary payloads through the
-    Arrow-batched decode stub → typed metadata columns."""
-    from trek_spark.spark.multimodal import (
-        attach_media_meta,
-        media_corpus_from_documents,
-    )
-
-    media = media_corpus_from_documents(spark, sf_dir)
-    return (attach_media_meta(media)
-            .select("media_id", "media_type", "mime", "n_bytes",
-                    "content_hash", "width", "height", "duration_ms")
-            .orderBy("media_id"))
-
-
-def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature op (rows-only): REAL content features for the
-    BMP/PCM-WAV payloads of the synthetic corpus (mean color + luminance
-    histogram / windowed RMS), hash-stub for the raw "video" rows; no SQL
-    oracle — DuckDB has no image/audio codec."""
-    from trek_spark.spark.multimodal import (
-        attach_features,
-        media_corpus_from_documents,
-    )
-
-    media = media_corpus_from_documents(spark, sf_dir)
-    return (attach_features(media)
-            .select("media_id", "media_type",
-                    F.round(F.element_at("features", 1), 4).alias("f0"),
-                    F.round(F.element_at("features", 2), 4).alias("f1"),
-                    F.round(F.element_at("features", 16), 4).alias("f15"),
-                    F.size("features").alias("dim"))
-            .orderBy("media_id"))
-
-
-def _avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling op (rows-only): the corpus's MJPEG-in-AVI
-    rows through ``sample_video_frames`` — RIFF chunk walk, evenly
-    spaced picks validated by the full stdlib JPEG decoder, emitted as
-    standalone image/jpeg frames whose mime + real decoded dimensions
-    are re-derived per frame (proof the video pixel path is real, not a
-    header fake); raw-byte "video" rows exercise the declared non-MJPEG
-    stub and surface as image/bmp fakes. No SQL oracle — DuckDB has no
-    video codec."""
-    import pandas as pd
-
-    from trek_spark.spark.multimodal import (
-        decode_headers,
-        media_corpus_from_documents,
-        sample_video_frames,
-    )
-
-    media = (media_corpus_from_documents(spark, sf_dir)
-             .filter(F.col("media_type") == "video"))
-    frames = sample_video_frames(media, n_frames=3)
-
-    def meta(it):
-        for pdf in it:
-            hdrs = [decode_headers(p if isinstance(p, (bytes, bytearray))
-                                   else b"") or {}
-                    for p in pdf["frame"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].astype("int64"),
-                "frame_idx": pdf["frame_idx"].astype("int32"),
-                "n_bytes": pd.Series([len(p) for p in pdf["frame"]],
-                                     dtype="int64"),
-                "mime": pd.Series([h.get("mime") for h in hdrs],
-                                  dtype=object),
-                "frame_w": pd.Series([h.get("width") for h in hdrs],
-                                     dtype="object"),
-                "frame_h": pd.Series([h.get("height") for h in hdrs],
-                                     dtype="object"),
-            })
-
-    return (frames.mapInPandas(
-                meta, schema="media_id long, frame_idx int, n_bytes long, "
-                             "mime string, frame_w int, frame_h int")
-            .orderBy("media_id", "frame_idx"))
-
-
-def _extract_pdf_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PDF branch op (rows-only): deterministic embedded-PDF turns through
-    the same fused extraction stage (north-star "embedded PDFs via layout
-    parse"; no SQL oracle — DuckDB has no PDF codec)."""
-    from trek_spark.extract.pdf_text import make_simple_pdf
-    from trek_spark.spark.job import extract_turns
-
-    rows = []
-    for i in range(8):
-        payload = make_simple_pdf(
-            [f"Report {i} heading", f"Body line one of report {i}",
-             f"Body line two of report {i}"],
-            compress=(i % 2 == 1)).decode("latin-1")
-        rows.append((f"pdfconv{i % 3}", i, "tool", payload, "pdf",
-                     f"https://pdf.example/{i}"))
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-              "tool string, url string")
-    return (
-        extract_turns(df, num_partitions=4)
-        .select("conv_id", "turn_idx", "extractor_type", "word_count",
-                F.substring(F.md5(F.coalesce("extracted_text", F.lit(""))),
-                            1, 16).alias("md_hash"))
-        .orderBy("conv_id", "turn_idx")
-    )
-
-
-def _stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming op (rows-only): in-stream exact dedup through
-    ``applyInPandasWithState`` over two micro-batches with planted
-    within-batch and cross-batch duplicates — state persistence is what's
-    being checked (no SQL oracle: DuckDB has no streaming state)."""
-    import datetime as dt
-    import tempfile
-
-    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
-    from trek_spark.spark.streaming import stream_dedup_exact
-
-    base = tempfile.mkdtemp(prefix="stream_dedup_op_")
-    d, out, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    t0 = dt.datetime(2024, 1, 1)
-
-    def rows(batch):
-        return [(c, i, "user", txt, None,
-                 t0 + dt.timedelta(minutes=m), None)
-                for c, i, txt, m in batch]
-
-    spark.createDataFrame(
-        rows([("c1", 0, "alpha doc", 0), ("c2", 0, "alpha doc", 5),
-              ("c1", 1, "beta doc", 1)]), TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(d)
-    spark.createDataFrame(
-        rows([("c3", 0, "alpha doc", 9), ("c3", 1, "gamma doc", 10)]),
-        TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(d)
-
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (stream_dedup_exact(stream).writeStream
-         .format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        # awaitTermination(timeout) RETURNS False on timeout (it does not
-        # raise): reading the sink now would present a partial result as
-        # the op's answer with the query leaked in the background
-        q.stop()
-        raise RuntimeError("stream_dedup_exact: availableNow drain did "
-                           "not finish within 300s")
-    return (spark.read.parquet(out)
-            .select("conv_id", "turn_idx", "text", "content_hash")
-            .orderBy("text"))
-
-
-def _stream_turn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked windowed streaming aggregation (rows-only): turn
-    counts per (1-minute window, role) over a two-file stream with a
-    planted late row. Deterministic timestamps → deterministic windows;
-    the memory sink in complete mode makes the availableNow drain's
-    final answer readable (file sinks can't do complete-mode
-    aggregations). No SQL oracle: DuckDB has no streaming/watermark
-    surface."""
-    import datetime as dt
-    import tempfile
-
-    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
-    from trek_spark.spark.streaming import stream_turn_rate
-
-    base = tempfile.mkdtemp(prefix="stream_rate_op_")
-    d, ckpt = f"{base}/in", f"{base}/ckpt"
-    t0 = dt.datetime(2024, 1, 1)
-
-    def rows(batch):
-        return [(c, i, role, txt, None,
-                 t0 + dt.timedelta(seconds=s), None)
-                for c, i, role, txt, s in batch]
-
-    spark.createDataFrame(
-        rows([("c1", 0, "user", "hello", 10),
-              ("c1", 1, "assistant", "hi there", 20),
-              ("c2", 0, "user", "query", 70)]), TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(d)
-    spark.createDataFrame(
-        rows([("c2", 1, "assistant", "answer", 80),
-              ("c3", 0, "user", "late row", 15)]), TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(d)
-
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (stream_turn_rate(stream).writeStream
-         .format("memory").queryName("stream_rate_op")
-         .option("checkpointLocation", ckpt)
-         .outputMode("complete").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_turn_rate: availableNow drain did "
-                           "not finish within 300s")
-    return (spark.table("stream_rate_op")
-            .select(F.col("window.start").cast("long").alias("win_start_s"),
-                    "role", "turns", "bytes_in")
-            .orderBy("win_start_s", "role"))
-
-
-def _stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sessionization via session_window (rows-only): dynamic
-    per-conversation windows over a deterministic two-file stream — a
-    30-minute gap chains turns into one session, a quiet period splits
-    it, keys never merge. Complete-mode memory sink makes the
-    availableNow drain's final merged sessions readable. No SQL oracle:
-    DuckDB has no streaming/session-window surface."""
-    import datetime as dt
-    import tempfile
-
-    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
-    from trek_spark.spark.streaming import stream_sessionize
-
-    base = tempfile.mkdtemp(prefix="stream_sess_op_")
-    d, ckpt = f"{base}/in", f"{base}/ckpt"
-
-    def t(h, m):
-        return dt.datetime(2024, 2, 1, h, m, 0)
-
-    rows1 = [("A", 0, "user", "hi", None, t(10, 0), None),
-             ("A", 1, "assistant", "hello", None, t(10, 10), None),
-             ("B", 0, "user", "solo", None, t(10, 5), None)]
-    rows2 = [("A", 2, "user", "back after lunch", None, t(11, 0), None),
-             ("B", 1, "user", "bridge", None, t(10, 20), None)]
-    for batch in (rows1, rows2):
-        (spark.createDataFrame(batch, TRANSCRIPT_SCHEMA)
-         .coalesce(1).write.mode("append").parquet(d))
-
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (stream_sessionize(stream, gap="30 minutes", watermark="5 minutes")
-         .writeStream.format("memory").queryName("stream_sess_op")
-         .option("checkpointLocation", ckpt)
-         .outputMode("complete").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_sessionize: availableNow drain did "
-                           "not finish within 300s")
-    return (spark.table("stream_sess_op")
-            .select("conv_id",
-                    F.col("session_window.start").cast("long")
-                     .alias("sess_start_s"),
-                    F.col("session_window.end").cast("long")
-                     .alias("sess_end_s"),
-                    "turns", "bytes_in")
-            .orderBy("conv_id", "sess_start_s"))
-
-
-def _stream_join_tool_results(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream interval join (rows-only): streaming
-    turns enriched with tool results arriving for the same conv_id
-    within [ts, ts + 5 min] — both sides watermarked so state is
-    evictable. Deterministic planted streams: one in-window pair per
-    turn, one too-late result, one orphan conv that must not emit. No
-    SQL oracle: DuckDB has no stream-stream join/watermark surface."""
-    import datetime as dt
-    import tempfile
-
-    from trek_spark.spark.streaming import stream_join_tool_results
-
-    base_ts = dt.datetime(2024, 3, 1, 12, 0, 0)
-    base = tempfile.mkdtemp(prefix="stream_join_op_")
-    turns_dir, res_dir = f"{base}/turns", f"{base}/results"
-    out, ckpt = f"{base}/out", f"{base}/ckpt"
-
-    turn_schema = "conv_id string, turn_idx int, role string, ts timestamp"
-    res_schema = ("conv_id string, tool string, res_ts timestamp, "
-                  "payload string")
-    (spark.createDataFrame(
-        [("c1", 0, "user", base_ts),
-         ("c1", 1, "assistant", base_ts + dt.timedelta(minutes=1)),
-         ("c2", 0, "user", base_ts)], turn_schema)
-     .coalesce(1).write.mode("append").parquet(turns_dir))
-    (spark.createDataFrame(
-        [("c1", "search", base_ts + dt.timedelta(minutes=2), "hits=3"),
-         ("c1", "fetch", base_ts + dt.timedelta(minutes=5, seconds=30),
-          "ok"),
-         ("c9", "search", base_ts + dt.timedelta(minutes=1), "orphan")],
-        res_schema)
-     .coalesce(1).write.mode("append").parquet(res_dir))
-
-    q = (stream_join_tool_results(
-            spark.readStream.schema(turn_schema).parquet(turns_dir),
-            spark.readStream.schema(res_schema).parquet(res_dir))
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_join_tool_results: availableNow drain "
-                           "did not finish within 300s")
-    return (spark.read.parquet(out)
-            .select("conv_id", "turn_idx", "role", "tool",
-                    F.col("ts").cast("long").alias("ts_s"),
-                    F.col("res_ts").cast("long").alias("res_ts_s"))
-            .orderBy("conv_id", "turn_idx", "tool"))
 
 
 def _stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,36 +172,6 @@ def _stream_dedup_within_watermark(spark: SparkSession,
         .orderBy("conv_id", "turn_idx"))
 
 
-def _synth_source_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only proof that the Spark-4 Python Data Source surface
-    (trek_spark/spark/sources.py, format `trek_transcripts`) runs in
-    the driver environment: 40 deterministically generated
-    conversations read partition-parallel through the registered
-    source, summarized per role (fixed 4-row record; the synthetic
-    rows are a pure md5 function of coordinates, so counts are stable
-    across runs and machines). sf_dir is unused — the source IS the
-    data."""
-    from pyspark.sql import functions as F
-
-    from trek_spark.spark import sources
-
-    sources.register(spark)
-    df = (spark.read.format("trek_transcripts")
-          .option("conversations", 40).option("numPartitions", 4).load())
-    return (df.groupBy("role")
-            .agg(F.count("*").alias("n_turns"),
-                 F.sum(F.length("text")).alias("text_chars"))
-            .orderBy("role"))
-
-
-_R8_ROWS_ONLY = {
-    "stream_sessionize": _stream_sessionize,
-    "stream_join_tool_results": _stream_join_tool_results,
-    "stream_late_data_audit": _stream_late_data_audit,
-    "stream_dedup_within_watermark": _stream_dedup_within_watermark,
-    "synth_source_turns": _synth_source_turns,
-}
-
 # queries() exposes at most 50 entries (only that many are recorded per
 # run): the oracle-checked ops below, in record order.
 _DRIVER_RECORD_CAP = 50
@@ -611,20 +239,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         f"queries() exposes {len(out)} entries; the driver records only "
         f"{_DRIVER_RECORD_CAP} — shrink _WINDOW")
     return out
-
-
-# Rows-only entries (no SQL oracle), outside the queries() window;
-# importable for tests and tools.
-_ROWS_ONLY_RECORDED = {
-    "multimodal_decode": _multimodal_decode,
-    "multimodal_features": _multimodal_features,
-    "extract_pdf_turns": _extract_pdf_turns,
-    "avi_frame_sample": _avi_frame_sample,
-    "stream_turn_rate": _stream_turn_rate,
-    "stream_dedup_exact": _stream_dedup_exact,
-    "extract_content_spans": _extract_spans,
-    "extract_fixture_turns": _extract_fixture_turns,
-}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -5,7 +5,9 @@ window is the fixed list ``_WINDOW`` of oracle-checked ops, in record
 order.
 Every other ``OPS`` entry must be reached by a job, serve as a job
 test's reference implementation, or be one of the listed ops still held
-for their own unit tests; nothing else belongs in ``OPS``.
+for their own unit tests; nothing else belongs in ``OPS``. Likewise every
+function of ``__spark_entry__.py`` is part of the contract, called by it,
+or run by a test.
 """
 import glob
 import os
@@ -80,13 +82,6 @@ def test_oracle_keys_subset_of_queries():
             assert name not in o
 
 
-def test_rows_only_entries_kept_importable_for_r10():
-    for name, fn in E._ROWS_ONLY_RECORDED.items():
-        assert callable(fn), name
-    for name, fn in E._R8_ROWS_ONLY.items():
-        assert callable(fn), name
-
-
 def _global_names(code):
     """Global names a function's code object (and its nested code) loads."""
     out = set(code.co_names)
@@ -94,6 +89,14 @@ def _global_names(code):
         if isinstance(c, types.CodeType):
             out |= _global_names(c)
     return out
+
+
+def _other_tests_src():
+    """Source of every tests/test_*.py file except this one."""
+    here = os.path.abspath(__file__)
+    return "".join(open(p).read()
+                   for p in glob.glob(f"{_REPO}/tests/test_*.py")
+                   if os.path.abspath(p) != here)
 
 
 def _reached_functions():
@@ -133,10 +136,7 @@ def test_unit_tested_ops_are_unreached_and_tested():
     """Each op held over for its unit tests is still registered, is not
     reached by a job or the window (else it needs no listing),
     and is named by a test outside this file."""
-    here = os.path.abspath(__file__)
-    tests_src = "".join(open(p).read()
-                        for p in glob.glob(f"{_REPO}/tests/test_*.py")
-                        if os.path.abspath(p) != here)
+    tests_src = _other_tests_src()
     window = set(E.queries())
     reached = _reached_functions()
     for name in _UNIT_TESTED_OPS:
@@ -145,3 +145,22 @@ def test_unit_tested_ops_are_unreached_and_tested():
         fn = OPS[name][0].__name__
         assert fn not in reached, name
         assert name in tests_src or fn in tests_src, name
+
+
+def test_every_entry_function_is_reached():
+    """Each top-level function of __spark_entry__.py is entry, queries
+    or oracle_sql, is called by one of them, or is named by a test
+    outside this file."""
+    tests_src = _other_tests_src()
+    funcs = {name for name, fn in vars(E).items()
+             if isinstance(fn, types.FunctionType)
+             and fn.__module__ == E.__name__}
+    todo = {"entry", "queries", "oracle_sql"}
+    reached = set()
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        todo |= (_global_names(getattr(E, name).__code__) & funcs) - reached
+    unreached = sorted(name for name in funcs - reached
+                       if not re.search(rf"\b{name}\b", tests_src))
+    assert unreached == []

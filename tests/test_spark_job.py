@@ -88,8 +88,13 @@ def test_metrics_not_inflated(spark, tmp_path_factory):
 def test_checkpoint_resume(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job"))
     transcripts = seeded_transcripts(spark, 40, seed=2)
+    # dynamic partition overwrite is scoped to the job's own writes
+    overwrite_mode = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(overwrite_mode)
+    before = spark.conf.get(overwrite_mode)
     r1 = run_extraction_job(spark, transcripts, out, num_partitions=8,
                             part_buckets=8)
+    assert spark.conf.get(overwrite_mode) == before
     assert r1["rows"] == 40
     # failures come from the write's Observation: they must equal the
     # written rows with an error (the seeded empty_input turn)

@@ -22,7 +22,7 @@ parser built on the public PDF 1.x format:
 
 Scope: simple generated PDFs (reports, exports, print-to-PDF) — the shape
 that appears embedded in transcripts. Scanned/image PDFs yield no text by
-construction (that is the multimodal decode path's territory).
+construction (there is no OCR path).
 """
 
 from __future__ import annotations

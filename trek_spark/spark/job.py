@@ -68,9 +68,6 @@ from pyspark.sql import functions as F
 
 from .udf import METRICS_SCHEMA, RESULT_SCHEMA, extract_map_in_pandas
 
-RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
-METRIC_COLS = [f.name for f in METRICS_SCHEMA.fields]
-
 # Input bytes one core extracts per wave, the most work a kill -9 can
 # lose per core: ~45 s at ~0.7 ms per KB of HTML. For file sources the
 # size estimate counts compressed bytes (HTML in zstd parquet is ~2.3x
@@ -294,8 +291,10 @@ def _write_metrics(turns: DataFrame, buckets: set[int],
              F.sum("wall_ms").alias("wall_ms"),
              F.count("*").alias("batches"))
     )
-    (metrics.write.mode("overwrite")
-     .partitionBy("part_bucket").parquet(metrics_dir))
+    with scoped_conf(turns.sparkSession,
+                     "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+        (metrics.write.mode("overwrite")
+         .partitionBy("part_bucket").parquet(metrics_dir))
 
 
 def run_extraction_job(
@@ -346,8 +345,6 @@ def run_extraction_job(
         print(f"[job] Iceberg runtime not on classpath; falling back to "
               f"parquet sink under {turns_dir}", flush=True)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     df = transcripts.withColumn(
         "part_bucket", F.pmod(F.hash("conv_id"), F.lit(part_buckets)))
 
@@ -359,7 +356,9 @@ def run_extraction_job(
     wave_groups = [todo[i::n_waves] for i in range(n_waves)]
 
     rows_out = failures = 0
-    with (scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled",
+    with (scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode",
+                      "dynamic"),
+          scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled",
                       "false"),
           scoped_conf(spark, "spark.sql.execution.arrow.maxBytesPerBatch",
                       str(ARROW_BATCH_BYTES))):

@@ -1,15 +1,15 @@
-"""Vectorized extraction UDFs.
+"""Vectorized extraction worker.
 
 The whole per-document pipeline (SURVEY.md §2.1-§2.8) is fused into ONE
-Arrow-batched pandas UDF: Spark sees ``string → struct`` with zero per-row
-Python dispatch at the Spark level — batches cross the JVM↔Python boundary
-once as Arrow record batches, and the Python loop inside the batch is
-amortized (the reference's per-doc cost dominates; Arrow overhead is noise).
+Arrow-batched ``mapInPandas`` function, ``extract_map_in_pandas``: zero
+per-row Python dispatch at the Spark level — batches cross the JVM↔Python
+boundary once as Arrow record batches, and the Python loop inside the batch
+is amortized (the reference's per-doc cost dominates; Arrow overhead is
+noise).
 
-``trek_extract_udf`` is the scalar form for ``withColumn``;
-``extract_map_in_pandas`` is the ``mapInPandas`` form that additionally emits
-per-batch lineage/metrics columns (docs in/out, bytes, wall ms, failures) for
-the metrics side-table required by the north rule.
+Each output row carries the ``RESULT_SCHEMA`` columns plus the lineage
+columns of ``METRICS_SCHEMA`` (``part_id``, ``batch_idx``, ``doc_bytes``,
+``wall_ms``), from which the job derives its metrics side-table.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import traceback
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -578,16 +577,6 @@ def _extract_series(texts: pd.Series, urls: Optional[pd.Series],
         if was_enabled:
             gc.enable()
     return pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
-
-
-def make_trek_extract_udf():
-    """Scalar pandas UDF: (text[, url]) → RESULT_SCHEMA struct."""
-
-    @F.pandas_udf(RESULT_SCHEMA)
-    def trek_extract(text: pd.Series, url: pd.Series) -> pd.DataFrame:
-        return _extract_series(text, url)
-
-    return trek_extract
 
 
 METRICS_SCHEMA = StructType([
