@@ -4,11 +4,13 @@
         --input  /path/to/transcript-dir \
         --output /path/to/out \
         --checkpoint /path/to/ckpt \
-        [--partitions N] [--continuous] [--dedup [--dedup-ttl-ms MS]]
+        [--partitions N] [--dedup] [--continuous]
+        [--dedup-ttl-ms MS]   # needs --dedup and --continuous
 
-File-source stream of transcript turns -> the same fused salted extraction
-as the batch job -> checkpointed parquet sink (exactly-once across
-restarts). Default is trigger(availableNow=True): drain what's there and
+File-source stream of transcript turns -> [exact dedup ->] the batch job's
+fused extraction -> checkpointed parquet sink (exactly-once across
+restarts). With --dedup, dedup and extraction run as one Python stage per
+micro-batch. Default is trigger(availableNow=True): drain what's there and
 exit (the cron-batch deployment shape); --continuous keeps the query
 running on the default micro-batch trigger.
 """
@@ -25,16 +27,24 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--partitions", type=int, default=8)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="Python tasks per micro-batch (default: "
+                         "defaultParallelism); with --dedup this is the "
+                         "state partition count, fixed by the checkpoint "
+                         "at its first start")
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--dedup", action="store_true",
                     help="drop exact-duplicate turns (stateful, "
                          "first-seen-wins) before extraction")
     ap.add_argument("--dedup-ttl-ms", type=int, default=None,
-                    help="state TTL for --dedup in continuous mode; "
-                         "leave unset for availableNow drains")
+                    help="state TTL for --dedup; needs --continuous")
     args = ap.parse_args()
+    if args.dedup_ttl_ms is not None and not args.dedup:
+        ap.error("--dedup-ttl-ms needs --dedup")
+    if args.dedup_ttl_ms is not None and not args.continuous:
+        ap.error("--dedup-ttl-ms needs --continuous: a pending state "
+                 "timeout never lets an availableNow drain terminate")
 
     from trek_spark.spark.session import get_spark
     from trek_spark.spark.streaming import stream_extract_turns

@@ -176,6 +176,116 @@ def test_stream_extract_with_dedup_stage(spark, tmp_path_factory):
     assert {(r.conv_id, r.turn_idx) for r in got} == {("c1", 0), ("c1", 1)}
 
 
+def _html_rows(batch):
+    """TRANSCRIPT_SCHEMA rows from (conv_id, turn_idx, body, minute)."""
+    import datetime as dt
+    t0 = dt.datetime(2024, 1, 1)
+    return [(c, i, "user",
+             f"<html><body><article><p>{body}</p></article></body></html>",
+             None, t0 + dt.timedelta(minutes=m), None)
+            for c, i, body, m in batch]
+
+
+def test_stream_dedup_is_one_stage_on_num_partitions(spark,
+                                                      tmp_path_factory):
+    """dedup=True: the state operator runs on num_partitions partitions
+    (not the session's shuffle partitions) and extraction is fused into
+    its stage, so the micro-batch plan holds exactly one Exchange. The
+    caller's session conf is left as it was."""
+    import re
+
+    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
+
+    d = str(tmp_path_factory.mktemp("shape_in"))
+    out = str(tmp_path_factory.mktemp("shape_out"))
+    ckpt = str(tmp_path_factory.mktemp("shape_ckpt"))
+    spark.createDataFrame(_html_rows([("c1", 0, "Alpha body.", 0),
+                                      ("c2", 0, "Alpha body.", 1),
+                                      ("c1", 1, "Beta body.", 2)]),
+                          TRANSCRIPT_SCHEMA) \
+        .coalesce(1).write.mode("append").parquet(d)
+    q = stream_extract_turns(spark, d, out, ckpt, num_partitions=2,
+                             dedup=True)
+    assert q.awaitTermination(300)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.read.parquet(out).count() == 2
+
+
+def test_stream_dedup_across_restart(spark, tmp_path_factory):
+    """Dedup state survives a restart on the same checkpoint: a later
+    re-delivery of a first-run text is dropped, a new text passes, and the
+    state partition count stays the first run's even when the restart
+    asks for another num_partitions."""
+    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
+
+    d = str(tmp_path_factory.mktemp("restart_in"))
+    out = str(tmp_path_factory.mktemp("restart_out"))
+    ckpt = str(tmp_path_factory.mktemp("restart_ckpt"))
+
+    def write(batch):
+        spark.createDataFrame(_html_rows(batch), TRANSCRIPT_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(d)
+
+    def keys():
+        return {(r.conv_id, r.turn_idx) for r in
+                spark.read.parquet(out).select("conv_id", "turn_idx")
+                .collect()}
+
+    write([("c1", 0, "First text.", 0), ("c1", 1, "Second text.", 1)])
+    q = stream_extract_turns(spark, d, out, ckpt, num_partitions=2,
+                             dedup=True)
+    assert q.awaitTermination(300)
+    assert keys() == {("c1", 0), ("c1", 1)}
+
+    # re-delivery of "First text." under a new key and a later ts
+    write([("c9", 0, "First text.", 60), ("c9", 1, "New text.", 61)])
+    q2 = stream_extract_turns(spark, d, out, ckpt, num_partitions=3,
+                              dedup=True)
+    assert q2.awaitTermination(300)
+    assert keys() == {("c1", 0), ("c1", 1), ("c9", 1)}
+    assert q2.lastProgress["numInputRows"] == 2
+    assert q2.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2
+
+
+@pytest.mark.parametrize("kwargs", [
+    {"dedup": True, "dedup_ttl_ms": 60_000},           # availableNow drain
+    {"dedup_ttl_ms": 60_000, "available_now": False},  # TTL without dedup
+])
+def test_stream_dedup_ttl_rejected_before_start(spark, tmp_path_factory,
+                                                kwargs):
+    """A state TTL with an availableNow drain would never terminate, and a
+    TTL without dedup has no state to bound: both fail before any query
+    starts or the checkpoint is touched."""
+    ckpt = tmp_path_factory.mktemp("ttl_ckpt")
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError):
+        stream_extract_turns(spark, str(tmp_path_factory.mktemp("ttl_in")),
+                             str(tmp_path_factory.mktemp("ttl_out")),
+                             str(ckpt), **kwargs)
+    assert len(spark.streams.active) == active
+    assert not any(ckpt.iterdir())
+
+
+def test_stream_job_rejects_dedup_ttl_without_continuous(tmp_path):
+    """jobs/stream_job.py refuses the combinations stream_extract_turns
+    rejects, at argument parsing (exit 2), before a session starts."""
+    import subprocess
+    import sys
+    job = os.path.join(os.path.dirname(__file__), "..", "jobs",
+                       "stream_job.py")
+    base = [sys.executable, job, "--input", str(tmp_path),
+            "--output", str(tmp_path), "--checkpoint", str(tmp_path)]
+    for extra in (["--dedup", "--dedup-ttl-ms", "1000"],
+                  ["--continuous", "--dedup-ttl-ms", "1000"]):
+        r = subprocess.run(base + extra, capture_output=True, text=True,
+                           timeout=60)
+        assert r.returncode == 2, r.stderr
+        assert "--dedup-ttl-ms needs" in r.stderr
+
+
 def test_stream_stream_interval_join(spark, tmp_path_factory):
     """Watermarked stream-stream interval join: a turn is enriched by
     the tool result arriving on the same conv_id within [ts, ts+5min];

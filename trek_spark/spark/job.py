@@ -123,19 +123,19 @@ def extract_turns(df: DataFrame, num_partitions: int | None = None,
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism * 4
-    base_cols = [c for c in df.columns]
-    out_schema = ", ".join(
-        [f"{c} {_spark_type(df, c)}" for c in base_cols if c != "text"]
+    salted_df = salted(df, num_partitions, salt_buckets)
+    return salted_df.drop("salt").mapInPandas(
+        extract_map_in_pandas, schema=extract_schema(df))
+
+
+def extract_schema(df: DataFrame) -> str:
+    """``extract_map_in_pandas`` output schema for input ``df``: its
+    columns minus ``text``, then the result and metrics columns."""
+    return ", ".join(
+        [f"{c} {t}" for c, t in df.dtypes if c != "text"]
         + [f"{f.name} {f.dataType.simpleString()}" for f in RESULT_SCHEMA.fields]
         + [f"{f.name} {f.dataType.simpleString()}" for f in METRICS_SCHEMA.fields]
     )
-    salted_df = salted(df, num_partitions, salt_buckets)
-    return salted_df.drop("salt").mapInPandas(
-        extract_map_in_pandas, schema=out_schema)
-
-
-def _spark_type(df: DataFrame, col: str) -> str:
-    return dict(df.dtypes)[col]
 
 
 def _fs_and_path(spark: SparkSession, dir_: str):

@@ -1,16 +1,19 @@
 """Structured Streaming surface for the extraction pipeline.
 
 The reference is a per-document library with no streaming story; at
-transcript-firehose scale the same fused extraction runs unchanged as a
-stateless Structured Streaming stage:
+transcript-firehose scale the same fused extraction runs unchanged inside
+Structured Streaming:
 
 * ``stream_extract_turns`` — ``readStream`` over a transcript directory →
-  the SAME salted ``mapInPandas`` plan as the batch job (``extract_turns``
-  is stateless per row, so it is streaming-safe as-is) → parquet sink with
-  a checkpoint location. End-to-end exactly-once: the file source records
-  consumed files and the file sink commits atomically per micro-batch, so
-  a crashed micro-batch replays without duplication — the streaming
-  counterpart of the batch job's wave-committed resume.
+  extraction → parquet sink with a checkpoint location. Without dedup the
+  extraction is the batch job's salted ``mapInPandas`` plan
+  (``extract_turns`` is stateless per row, so it is streaming-safe
+  as-is); with dedup the same ``mapInPandas`` runs directly on the dedup
+  state operator's output, so a micro-batch is one Python stage. End-to-end
+  exactly-once: the file source records consumed files and the file sink
+  commits atomically per micro-batch, so a crashed micro-batch replays
+  without duplication — the streaming counterpart of the batch job's
+  wave-committed resume.
 * ``stream_turn_rate`` — watermarked sliding-window throughput metrics
   (late turns beyond the watermark are dropped, state is bounded), the
   standard monitoring side-channel for a long-running ingest.
@@ -27,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .corpus import TRANSCRIPT_SCHEMA
-from .job import extract_turns
+from .job import extract_schema, extract_turns, scoped_conf
+from .udf import extract_map_in_pandas
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str,
@@ -46,35 +50,59 @@ def stream_extract_turns(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
     salt_buckets: int = 16,
     available_now: bool = True,
     dedup: bool = False,
     dedup_ttl_ms: int | None = None,
 ) -> StreamingQuery:
-    """readStream → [stateful exact dedup →] salted mapInPandas
-    extraction → parquet sink.
+    """readStream → [stateful exact dedup →] mapInPandas extraction →
+    parquet sink. Restart with the same checkpoint_dir resumes from the
+    last committed micro-batch.
 
-    The extraction stage is stateless (one row in → one row out), so the
-    batch plan applies verbatim; the salt still defuses long-conversation
-    skew inside each micro-batch. Restart with the same checkpoint_dir
-    resumes from the last committed micro-batch.
+    ``num_partitions`` (default ``defaultParallelism``) sizes the Python
+    stage of each micro-batch. Every Python task has a fixed cost
+    whatever rows it carries, so more tasks than cores only add cost.
 
-    ``dedup=True`` inserts :func:`stream_dedup_exact` BEFORE extraction —
-    re-delivered pages are dropped before they cost Python CPU. For a
-    continuous deployment set ``dedup_ttl_ms`` (bounds state) and
+    ``dedup=False``: the batch job's salted plan (``extract_turns``) with
+    ``num_partitions`` extraction partitions; the salt defuses
+    long-conversation skew inside each micro-batch.
+
+    ``dedup=True`` runs :func:`stream_dedup_exact` and extraction in ONE
+    stage: ``mapInPandas`` applies directly to the dedup output, with no
+    salted repartition. The state operator's content-hash partitioning
+    already spreads each conversation's turns uniformly, which is the
+    job the salt does, and re-delivered pages are dropped before they
+    cost extraction CPU. The state partition count is ``num_partitions``:
+    the query starts under that ``spark.sql.shuffle.partitions`` (the
+    caller's session conf is restored afterwards). Spark clones the
+    session conf at ``start()`` and records the count in the checkpoint's
+    offset log, so it is fixed at the checkpoint's first start; on
+    restart the checkpoint's count wins over ``num_partitions``.
+
+    For a continuous deployment set ``dedup_ttl_ms`` (bounds state) and
     configure the RocksDB state store
     (``spark.sql.streaming.stateStore.providerClass`` →
     ``RocksDBStateStoreProvider``) so hash-marker state lives off-heap
-    and spills to disk; leave ``dedup_ttl_ms`` None for availableNow
-    drains (a pending processing-time timeout prevents drain
-    termination)."""
+    and spills to disk. ``dedup_ttl_ms`` needs ``dedup`` and is rejected
+    with ``available_now`` (a pending processing-time timeout prevents
+    drain termination); both raise ``ValueError`` before any query
+    starts."""
+    if dedup_ttl_ms is not None and not dedup:
+        raise ValueError("dedup_ttl_ms needs dedup=True")
+    if dedup_ttl_ms is not None and available_now:
+        raise ValueError("dedup_ttl_ms never lets an availableNow drain "
+                         "terminate; use it only with available_now=False")
+    n = num_partitions or spark.sparkContext.defaultParallelism
     stream = read_transcript_stream(spark, input_dir)
     if dedup:
-        stream = stream_dedup_exact(stream, state_ttl_ms=dedup_ttl_ms) \
+        deduped = stream_dedup_exact(stream, state_ttl_ms=dedup_ttl_ms) \
             .drop("content_hash")
-    extracted = extract_turns(stream, num_partitions=num_partitions,
-                              salt_buckets=salt_buckets)
+        extracted = deduped.mapInPandas(extract_map_in_pandas,
+                                        schema=extract_schema(deduped))
+    else:
+        extracted = extract_turns(stream, num_partitions=n,
+                                  salt_buckets=salt_buckets)
     writer = (extracted.writeStream
               .format("parquet")
               .option("path", output_dir)
@@ -82,7 +110,8 @@ def stream_extract_turns(
               .outputMode("append"))
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(n)):
+        return writer.start()
 
 
 def stream_dedup_exact(stream: DataFrame,
