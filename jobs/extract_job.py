@@ -32,7 +32,11 @@ def main() -> None:
     ap.add_argument("--input-format", default="parquet",
                     choices=["parquet", "iceberg"])
     ap.add_argument("--output", required=True)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="extraction tasks per wave; default: one per "
+                         "16 MiB of the wave's estimated input, between "
+                         "defaultParallelism and 4x defaultParallelism "
+                         "(4x when the input size is unknown)")
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--part-buckets", type=int, default=64)
     ap.add_argument("--no-resume", action="store_true")

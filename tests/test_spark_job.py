@@ -210,8 +210,12 @@ def test_empty_buckets_not_reextracted(spark, tmp_path_factory):
     run_extraction_job(spark, transcripts, out, num_partitions=8,
                        part_buckets=64)
     from trek_spark.spark.job import _completed_buckets
-    assert len(_completed_buckets(
-        spark, os.path.join(out, "_committed"))) == 64
+    committed = os.path.join(out, "_committed")
+    assert len(_completed_buckets(spark, committed)) == 64
+    # the concurrent marker creates leave exactly one marker per bucket
+    assert sorted(f for f in os.listdir(committed)
+                  if not f.startswith(".")) \
+        == [f"bucket-{b:05d}" for b in range(64)]
     r2 = run_extraction_job(spark, transcripts, out, num_partitions=8,
                             part_buckets=64)
     assert r2["rows"] == 0
@@ -219,22 +223,42 @@ def test_empty_buckets_not_reextracted(spark, tmp_path_factory):
 
 
 def test_plan_waves_sized_from_input_bytes(spark, tmp_path_factory):
-    """Waves come from the optimizer's size estimate: a small parquet
-    input is one wave, an input Spark cannot size gets the fixed
-    fallback, and an explicit ``waves`` wins (capped at one bucket per
+    """Waves and extraction tasks come from one optimizer size estimate:
+    a small parquet input is one wave of one task per core, an input
+    Spark cannot size gets the fixed fallbacks (4 × parallelism tasks),
+    a full 64 MiB-per-core wave keeps 4 × parallelism, and an explicit
+    ``waves`` or ``num_partitions`` wins (waves capped at one bucket per
     wave)."""
-    from trek_spark.spark.job import UNKNOWN_SIZE_WAVES, plan_waves
+    from trek_spark.spark.job import (
+        UNKNOWN_SIZE_WAVES, WAVE_BYTES_PER_CORE, plan_waves,
+    )
 
+    par = spark.sparkContext.defaultParallelism
     d = str(tmp_path_factory.mktemp("waves") / "in")
     seeded_transcripts(spark, 20, seed=9).write.parquet(d)
     small = spark.read.parquet(d)
-    assert plan_waves(small, 64) == 1
+    assert plan_waves(small, 64) == (1, par)
     unsized = spark.createDataFrame(
         spark.sparkContext.parallelize([("c", 0)]), "conv_id string, n int")
-    assert plan_waves(unsized, 64) == UNKNOWN_SIZE_WAVES == 4
-    assert plan_waves(small, 64, waves=3) == 3
-    assert plan_waves(unsized, 2, waves=3) == 2
-    assert plan_waves(small, 0) == 0
+    assert plan_waves(unsized, 64) == (UNKNOWN_SIZE_WAVES, 4 * par)
+    assert UNKNOWN_SIZE_WAVES == 4
+    assert plan_waves(small, 64, waves=3) == (3, par)
+    assert plan_waves(unsized, 2, waves=3) == (2, 4 * par)
+    assert plan_waves(small, 0)[0] == 0
+
+    # spark.range(n) is sized 8 bytes per row without reading anything
+    wave_rows = par * WAVE_BYTES_PER_CORE // 8
+    assert plan_waves(spark.range(wave_rows), 64) == (1, 4 * par)
+    assert plan_waves(spark.range(wave_rows // 2), 64) == (1, 2 * par)
+    assert plan_waves(spark.range(3 * wave_rows), 64) == (3, 4 * par)
+    assert plan_waves(spark.range(wave_rows), 64, waves=4) == (4, par)
+
+    # extract_turns' default is the same rule with the frame as one wave
+    assert extract_turns(small).rdd.getNumPartitions() == par
+    assert extract_turns(seeded_transcripts(spark, 20, seed=9)) \
+        .rdd.getNumPartitions() == 4 * par  # list-backed: unsized
+    assert extract_turns(small, num_partitions=3) \
+        .rdd.getNumPartitions() == 3
 
 
 def test_salting_spreads_conversations(spark):

@@ -9,6 +9,16 @@ Physical plan (SURVEY.md §3.4):
   document, not bytes, so AQE's byte-based skew split won't trigger);
   including turn_idx in the salt hash spreads a single giant conversation
   across S partitions while keeping placement deterministic.
+* The shuffle's partition count is the extraction stage's task count, and
+  it is sized from the wave's bytes (:func:`plan_waves`): one task per
+  ``WAVE_BYTES_PER_CORE / 4`` (16 MiB) of the wave's estimated input,
+  clamped to ``[defaultParallelism, 4 × defaultParallelism]``. Each Python
+  task has a fixed start-up cost, and under the partitioned write each
+  task opens one file per output bucket it touches, so a small wave runs
+  one task per core. A full wave (64 MiB per core) and an input Spark
+  cannot size keep ``4 × defaultParallelism``: there the per-task cost is
+  small against the extraction, and the extra tasks keep the
+  large-document tail from straggling.
 * Extraction runs in ``mapInPandas`` (narrow, post-shuffle): Arrow batches
   in, result + per-row lineage columns out. No further shuffle — the write
   is partition-local.
@@ -29,16 +39,16 @@ Physical plan (SURVEY.md §3.4):
   hash bucket of conv_id (NOT the physical partition id). The set of
   completed buckets is recorded in per-bucket marker files written only
   AFTER the wave's write job returns (``_committed/bucket-N``, colocated
-  with the table) — no driver-local state. Data-file presence is NOT
-  trusted as a completion signal: FileOutputCommitter moves task output
-  file-by-file at job commit (non-atomic rename on S3A), so a crash
-  during commit can leave a partially populated bucket directory. The
-  work is executed in WAVES (bucket groups), one write job per wave; a
-  kill -9 anywhere before the markers re-runs that wave, and dynamic
-  partition overwrite makes the re-run replace — never duplicate — its
-  buckets. Zero-row buckets get markers too (they create no partition
-  directory, so a listing-based checkpoint would re-extract them every
-  run).
+  with the table, created concurrently) — no driver-local state.
+  Data-file presence is NOT trusted as a completion signal:
+  FileOutputCommitter moves task output file-by-file at job commit
+  (non-atomic rename on S3A), so a crash during commit can leave a
+  partially populated bucket directory. The work is executed in WAVES
+  (bucket groups), one write job per wave; a kill -9 anywhere before the
+  markers re-runs that wave, and dynamic partition overwrite makes the
+  re-run replace — never duplicate — its buckets. Zero-row buckets get
+  markers too (they create no partition directory, so a listing-based
+  checkpoint would re-extract them every run).
 * Waves are sized from input bytes (:func:`plan_waves`): the optimizer's
   size estimate of the input over ``defaultParallelism ×
   WAVE_BYTES_PER_CORE``. 64 MiB per core is about 45 s of extraction per
@@ -61,6 +71,7 @@ from __future__ import annotations
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -118,11 +129,12 @@ def extract_turns(df: DataFrame, num_partitions: int | None = None,
     for the stage (see ``scoped_conf``): coalescing merges post-shuffle
     partitions by BYTES, but extraction cost is Python CPU per document —
     byte-based coalescing was measured to halve effective parallelism on
-    local[32]. Partition count defaults to 4× parallelism so the
-    large-document tail doesn't straggle."""
-    spark = df.sparkSession
+    local[32]. The partition count defaults to :func:`plan_waves`'s task
+    count for ``df`` as one wave: one task per 16 MiB of its estimated
+    size, between ``defaultParallelism`` and ``4 × defaultParallelism``
+    (the upper bound when Spark cannot size ``df``)."""
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 4
+        num_partitions = plan_waves(df, 1)[1]
     salted_df = salted(df, num_partitions, salt_buckets)
     return salted_df.drop("salt").mapInPandas(
         extract_map_in_pandas, schema=extract_schema(df))
@@ -180,13 +192,22 @@ def _mark_buckets_committed(spark: SparkSession, committed_dir: str,
     wave's write job has returned (= job commit finished), so a marker's
     existence implies every data file of that bucket is in the table.
     Single-file creates are atomic-visibility operations on both HDFS and
-    S3, unlike the committer's multi-file rename sequence."""
+    S3, unlike the committer's multi-file rename sequence.
+
+    The creates run on 8 threads: on S3A each is a PUT, so one after
+    another they are a fixed cost per wave. Their order does not matter:
+    each marker on its own proves its bucket committed, so any subset a
+    crash leaves behind is still a correct checkpoint (the rerun redoes
+    the unmarked buckets)."""
     fs, path, jvm = _fs_and_path(spark, committed_dir)
     fs.mkdirs(path)
-    for b in buckets:
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{committed_dir}/bucket-{b:05d}")
-        fs.create(marker, True).close()
+    Path = jvm.org.apache.hadoop.fs.Path
+
+    def mark(b: int) -> None:
+        fs.create(Path(f"{committed_dir}/bucket-{b:05d}"), True).close()
+
+    with ThreadPoolExecutor(8) as pool:
+        list(pool.map(mark, buckets))  # re-raises a failed create
 
 
 def _trusted_completed_buckets(spark: SparkSession, committed_dir: str,
@@ -240,28 +261,37 @@ def _write_wave_table(spark: SparkSession, extracted: DataFrame,
 
 
 def plan_waves(transcripts: DataFrame, n_buckets: int,
-               waves: int | None = None) -> int:
-    """Write waves for ``n_buckets`` pending buckets of ``transcripts``.
+               waves: int | None = None) -> tuple[int, int]:
+    """``(waves, tasks)``: write waves for ``n_buckets`` pending buckets of
+    ``transcripts``, and extraction tasks per wave, both from one read of
+    the optimizer's size estimate of the input.
 
-    An explicit ``waves`` wins. Otherwise the optimizer's size estimate
-    of the input, over ``defaultParallelism × WAVE_BYTES_PER_CORE``,
-    rounded up; ``UNKNOWN_SIZE_WAVES`` when Spark has no estimate (it
-    reports ``spark.sql.defaultSizeInBytes``, e.g. for RDD- or
-    list-backed frames). Capped at one bucket per wave; 0 when nothing
-    is pending."""
-    if n_buckets == 0:
-        return 0
+    Waves: an explicit ``waves`` wins. Otherwise the estimate over
+    ``defaultParallelism × WAVE_BYTES_PER_CORE``, rounded up. Capped at
+    one bucket per wave; 0 when nothing is pending.
+
+    Tasks: one per ``WAVE_BYTES_PER_CORE / 4`` of a wave's share of the
+    estimate, clamped to ``[defaultParallelism, 4 × defaultParallelism]``,
+    so a full wave gets ``4 ×``.
+
+    When Spark has no estimate (it reports ``spark.sql.defaultSizeInBytes``,
+    e.g. for RDD- or list-backed frames): ``UNKNOWN_SIZE_WAVES`` waves of
+    ``4 × defaultParallelism`` tasks."""
+    spark = transcripts.sparkSession
+    parallelism = spark.sparkContext.defaultParallelism
+    size = transcripts._jdf.queryExecution().optimizedPlan() \
+        .stats().sizeInBytes()
+    sized = size < spark._jsparkSession.sessionState().conf() \
+        .defaultSizeInBytes()
     if waves is None:
-        spark = transcripts.sparkSession
-        size = transcripts._jdf.queryExecution().optimizedPlan() \
-            .stats().sizeInBytes()
-        if size >= spark._jsparkSession.sessionState().conf() \
-                .defaultSizeInBytes():
-            waves = UNKNOWN_SIZE_WAVES
-        else:
-            waves = math.ceil(size / (spark.sparkContext.defaultParallelism
-                                      * WAVE_BYTES_PER_CORE))
-    return max(1, min(waves, n_buckets))
+        waves = (math.ceil(size / (parallelism * WAVE_BYTES_PER_CORE))
+                 if sized else UNKNOWN_SIZE_WAVES)
+    waves = min(max(waves, 1), n_buckets)
+    tasks = 4 * parallelism
+    if sized and waves:
+        tasks = min(tasks, max(parallelism, math.ceil(
+            size / waves / (WAVE_BYTES_PER_CORE // 4))))
+    return waves, tasks
 
 
 def _write_metrics(turns: DataFrame, buckets: set[int],
@@ -325,7 +355,9 @@ def run_extraction_job(
     The checkpoint lives with the table: completed buckets are the marked
     ones (``_completed_buckets``), and the remaining buckets run in
     ``waves`` write jobs — by default sized from input bytes
-    (:func:`plan_waves`) — so a crash loses at most one wave of work. No
+    (:func:`plan_waves`) — so a crash loses at most one wave of work. Each
+    wave's extraction runs ``num_partitions`` tasks, by default sized from
+    the wave's share of the input bytes (:func:`plan_waves`). No
     driver-local state. Each wave's counts come from an ``Observation``
     on its write; extraction runs with AQE coalescing off and Arrow
     batches capped at ``ARROW_BATCH_BYTES``.
@@ -352,7 +384,9 @@ def run_extraction_job(
         spark, committed_dir, resume,
         output_table if use_table else None)
     todo = [b for b in range(part_buckets) if b not in done]
-    n_waves = plan_waves(transcripts, len(todo), waves)
+    n_waves, tasks = plan_waves(transcripts, len(todo), waves)
+    if num_partitions is None:
+        num_partitions = tasks
     wave_groups = [todo[i::n_waves] for i in range(n_waves)]
 
     rows_out = failures = 0
