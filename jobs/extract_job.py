@@ -8,7 +8,7 @@ Usage (north-rule launch mode):
         --input  /path/to/transcripts            \
         --output /path/to/out                    \
         [--input-format parquet|iceberg]         \
-        [--partitions N] [--salt-buckets S] [--waves W] [--no-resume]
+        [--partitions N] [--waves W] [--no-resume]
 
 Reads the transcript table (conv_id, turn_idx, role, text, tool, ts[, url]),
 runs the salted, checkpointed extraction job (waves sized from input bytes
@@ -37,7 +37,6 @@ def main() -> None:
                          "16 MiB of the wave's estimated input, between "
                          "defaultParallelism and 4x defaultParallelism "
                          "(4x when the input size is unknown)")
-    ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--part-buckets", type=int, default=64)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--output-table", default=None,
@@ -70,7 +69,6 @@ def main() -> None:
         summary = run_extraction_job(
             spark, transcripts, args.output,
             num_partitions=args.partitions,
-            salt_buckets=args.salt_buckets,
             part_buckets=args.part_buckets,
             resume=not args.no_resume,
             waves=args.waves,

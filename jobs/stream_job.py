@@ -32,7 +32,6 @@ def main() -> None:
                          "defaultParallelism); with --dedup this is the "
                          "state partition count, fixed by the checkpoint "
                          "at its first start")
-    ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--dedup", action="store_true",
                     help="drop exact-duplicate turns (stateful, "
@@ -54,7 +53,6 @@ def main() -> None:
         q = stream_extract_turns(
             spark, args.input, args.output, args.checkpoint,
             num_partitions=args.partitions,
-            salt_buckets=args.salt_buckets,
             available_now=not args.continuous,
             dedup=args.dedup,
             dedup_ttl_ms=args.dedup_ttl_ms,

@@ -27,28 +27,14 @@ _JOB_REFERENCE_OPS = {"dedup_keep_best_quality", "dedup_clusters",
 # ops no job or window op reaches, kept for now with their unit tests;
 # the next ops.py cut deletes them together with those tests
 _UNIT_TESTED_OPS = {
-    "basket_part_pairs", "customer_balance_buckets",
-    "customer_points_capped", "customer_value_deciles",
-    "customer_value_deciles_approx", "dedup_hot_shingle_audit",
-    "dedup_lsh_dropped_buckets", "dedup_minhash_estimate",
-    "embedding_near_dup", "events_burstiness",
-    "events_changepoint_cusum", "events_chi2_independence",
-    "events_hll_merge", "events_ks_drift", "events_linreg_exact",
-    "events_median_by_type", "events_rank_sum",
-    "events_rolling_median", "events_seasonal_naive_error",
-    "events_session_window_native", "events_sessionize",
-    "events_string_agg", "events_try_arithmetic",
-    "events_two_step_transitions", "events_xml_parse",
-    "lineitem_benford", "lineitem_median_histogram",
-    "nation_region_full_outer", "orders_pareto_cume",
-    "orders_pipe_syntax", "orders_shuffle_hash_join",
-    "part_collated_brands", "stratified_sample",
-    "terms_continuation_counts", "terms_kn_bigram_probs",
-    "terms_zipf_slope", "tpch_customer_distribution",
-    "tpch_disjunctive_join", "tpch_forecast_revenue",
-    "tpch_large_orders", "tpch_order_priority_check",
-    "tpch_sole_failure_suppliers", "tpch_top_supplier",
-    "transcript_cross_conv_echo",
+    "customer_value_deciles", "customer_value_deciles_approx",
+    "dedup_hot_shingle_audit", "dedup_lsh_dropped_buckets",
+    "dedup_minhash_estimate", "embedding_near_dup",
+    "events_rolling_median", "events_sessionize", "stratified_sample",
+    "tpch_customer_distribution", "tpch_disjunctive_join",
+    "tpch_forecast_revenue", "tpch_large_orders",
+    "tpch_order_priority_check", "tpch_sole_failure_suppliers",
+    "tpch_top_supplier", "transcript_cross_conv_echo",
 }
 
 

@@ -39,10 +39,12 @@ def turn_digests() -> dict[str, str]:
     out = {}
     for t in gen.web_pages(7, 160, 1_600_000) + gen.chat_turns(7, 160):
         doc = t.doc
-        r = extract_pdf_one(doc.text) if doc.tool == "pdf" else extract_one(doc.text, doc.url)
+        r = (extract_pdf_one(doc.text) if doc.tool == "pdf"
+             else extract_one(doc.text, doc.url))
         blob = json.dumps({k: r[k] for k in FIELDS}, sort_keys=True,
                           ensure_ascii=False, separators=(",", ":"))
-        out[f"{t.conv_id}/{t.turn_idx}"] = hashlib.sha256(blob.encode("utf-8")).hexdigest()
+        digest = hashlib.sha256(blob.encode("utf-8")).hexdigest()
+        out[f"{t.conv_id}/{t.turn_idx}"] = digest
     return out
 
 

@@ -1,8 +1,7 @@
-"""Partitioning-invariance checks for this session's order-sensitive
-op batches (the test_closing_ops pattern, extended): statistical tests
-built on ordered-cumsum windows, the KN/Zipf term pipelines, native
-session windows, and the embedding-curation argmins must not shift
-when the shuffle width changes arrival order.
+"""Partitioning-invariance checks for order-sensitive op batches (the
+test_closing_ops pattern, extended): the embedding-curation argmins,
+the TPC-H sole-failure suppliers and the late-wave curation ops must not
+shift when the shuffle width changes arrival order.
 """
 
 import pytest
@@ -25,13 +24,6 @@ def _canon(df):
 
 
 @pytest.mark.parametrize("name", [
-    "events_ks_drift",
-    "events_rank_sum",
-    "events_chi2_independence",
-    "events_session_window_native",
-    "terms_kn_bigram_probs",
-    "terms_zipf_slope",
-    "events_linreg_exact",
     "semantic_dedup_medoid",
     "embedding_label_noise",
     "tpch_sole_failure_suppliers",

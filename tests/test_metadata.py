@@ -1,7 +1,8 @@
 """Metadata extraction unit tests (cases mirror reference
 src/metadata.rs:805-945 embedded tests)."""
 
-from trek_spark.extract.head_scan import collect_initial_data
+from trek_spark.dom.parser import parse_html
+from trek_spark.extract.head_scan import collect_from_dom
 from trek_spark.extract.metadata import (
     clean_author_string,
     clean_title,
@@ -76,7 +77,7 @@ def test_head_scan_collects_signals():
       </script>
     </head><body><p>x</p></body></html>
     """
-    data = collect_initial_data(html)
+    data = collect_from_dom(parse_html(html))
     assert data.title == "Doc — Title"
     assert data.canonical == "https://example.com/a"
     assert data.favicon == "/fav.ico"
@@ -94,7 +95,8 @@ def test_metadata_priority_chain():
       <meta name="author" content="By Jane Doe">
     </head><body></body></html>
     """
-    md = extract_metadata(collect_initial_data(html), "https://www.example.com/x")
+    md = extract_metadata(collect_from_dom(parse_html(html)),
+                          "https://www.example.com/x")
     assert md["title"] == "Real Title"  # placeholder og:title skipped
     assert md["site"] == "Site"
     assert md["author"] == "Jane Doe"

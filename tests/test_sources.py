@@ -95,7 +95,7 @@ def test_stream_feeds_extraction_stage(spark):
     from trek_spark.spark.job import extract_turns
 
     df = _batch(spark, 12, 2).withColumn("url", F.lit(None).cast("string"))
-    out = extract_turns(df, num_partitions=4, salt_buckets=4)
+    out = extract_turns(df, num_partitions=4)
     rows = out.collect()
     assert len(rows) == _batch(spark, 12, 2).count()
     by_key = {(r.conv_id, r.turn_idx): r for r in rows}

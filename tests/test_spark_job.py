@@ -131,11 +131,11 @@ def test_resume_after_partial_crash(spark, tmp_path_factory):
     calls = {"n": 0}
     orig = jobmod.extract_turns
 
-    def crashing_extract(df, num_partitions=None, salt_buckets=16):
+    def crashing_extract(df, num_partitions=None):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated executor loss")
-        return orig(df, num_partitions, salt_buckets)
+        return orig(df, num_partitions)
 
     jobmod.extract_turns = crashing_extract
     try:
@@ -264,7 +264,7 @@ def test_plan_waves_sized_from_input_bytes(spark, tmp_path_factory):
 def test_salting_spreads_conversations(spark):
     from trek_spark.spark.job import salted
     t = seeded_transcripts(spark, 64, seed=6)
-    df = salted(t, 8, salt_buckets=16)
+    df = salted(t, 8)
     parts = df.withColumn("pid", F.spark_partition_id()) \
         .groupBy("pid").count().collect()
     assert len(parts) > 1  # one conversation cannot pin a single partition
@@ -273,7 +273,7 @@ def test_salting_spreads_conversations(spark):
 def test_giant_conversation_skew(spark, tmp_path_factory):
     """North-rule skew clause: a single conversation holding most of the
     corpus must not pin one partition. The salt includes turn_idx, so one
-    conv_id spreads across salt_buckets partitions; verify the spread and
+    conv_id spreads across SALT_BUCKETS partitions; verify the spread and
     that the job completes with correct output."""
     from pyspark.sql import functions as F
 
@@ -293,7 +293,7 @@ def test_giant_conversation_skew(spark, tmp_path_factory):
     skewed = base.unionByName(giant)
 
     from trek_spark.spark.job import salted
-    parts = (salted(skewed, 8, salt_buckets=16)
+    parts = (salted(skewed, 8)
              .filter(F.col("conv_id") == "conv-giant")
              .withColumn("pid", F.spark_partition_id())
              .select("pid").distinct().count())

@@ -286,99 +286,6 @@ def test_stream_job_rejects_dedup_ttl_without_continuous(tmp_path):
         assert "--dedup-ttl-ms needs" in r.stderr
 
 
-def test_stream_stream_interval_join(spark, tmp_path_factory):
-    """Watermarked stream-stream interval join: a turn is enriched by
-    the tool result arriving on the same conv_id within [ts, ts+5min];
-    a result outside the window (or on another conv) must not match.
-    Both sides are real file streams drained with availableNow."""
-    import datetime as dt
-
-    from trek_spark.spark.streaming import stream_join_tool_results
-
-    base = dt.datetime(2025, 1, 1, 12, 0, 0)
-    turns_dir = str(tmp_path_factory.mktemp("ss_turns"))
-    res_dir = str(tmp_path_factory.mktemp("ss_results"))
-    out = str(tmp_path_factory.mktemp("ss_out"))
-    ckpt = str(tmp_path_factory.mktemp("ss_ckpt"))
-
-    turn_schema = "conv_id string, turn_idx int, role string, ts timestamp"
-    res_schema = "conv_id string, tool string, res_ts timestamp, " \
-                 "payload string"
-    spark.createDataFrame(
-        [("c1", 0, "user", base),
-         ("c1", 1, "assistant", base + dt.timedelta(minutes=1)),
-         ("c2", 0, "user", base)],
-        turn_schema).coalesce(1).write.mode("append").parquet(turns_dir)
-    spark.createDataFrame(
-        [("c1", "search", base + dt.timedelta(minutes=2), "hits=3"),
-         # too late for c1 turn 0 (lag > 5 min) but joins turn 1
-         ("c1", "fetch", base + dt.timedelta(minutes=5, seconds=30), "ok"),
-         # different conv: must never appear against c1/c2 turns
-         ("c9", "search", base + dt.timedelta(minutes=1), "orphan")],
-        res_schema).coalesce(1).write.mode("append").parquet(res_dir)
-
-    turns = (spark.readStream.schema(turn_schema).parquet(turns_dir))
-    results = (spark.readStream.schema(res_schema).parquet(res_dir))
-    joined = stream_join_tool_results(turns, results)
-    q = (joined.writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(300)
-
-    got = {(r.conv_id, r.turn_idx, r.tool)
-           for r in spark.read.parquet(out).collect()}
-    assert got == {("c1", 0, "search"),    # 2 min lag: in window
-                   ("c1", 1, "search"),    # 1 min lag: in window
-                   ("c1", 1, "fetch")}     # 4.5 min lag from turn 1
-    # the orphan conv and the >5-min pairing never emitted
-
-
-def test_stream_sessionize_dynamic_windows(spark, tmp_path_factory):
-    """session_window semantics pinned on crafted timestamps: turns
-    within the 30-min gap chain into one session (end = last turn +
-    gap), a 50-min quiet period splits a conversation into two
-    sessions, and conversations never merge across conv_id."""
-    from datetime import datetime
-
-    from trek_spark.spark.streaming import stream_sessionize
-
-    d = str(tmp_path_factory.mktemp("sess_in"))
-    ckpt = str(tmp_path_factory.mktemp("sess_ckpt"))
-
-    def t(h, m):
-        return datetime(2026, 3, 1, h, m, 0)
-
-    rows = [
-        ("A", 0, "user", "hi", None, t(10, 0), None),
-        ("A", 1, "assistant", "hello", None, t(10, 10), None),
-        ("A", 2, "user", "back after lunch", None, t(11, 0), None),
-        ("B", 0, "user", "solo", None, t(10, 5), None),
-    ]
-    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
-    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA) \
-        .write.mode("append").parquet(d)
-
-    stream = read_transcript_stream(spark, d)
-    sess = stream_sessionize(stream, gap="30 minutes",
-                             watermark="5 minutes")
-    q = (sess.writeStream.format("memory").queryName("sessions")
-         .outputMode("complete")
-         .trigger(availableNow=True).option("checkpointLocation", ckpt)
-         .start())
-    q.awaitTermination(300)
-    got = {(r.conv_id, r.start.strftime("%H:%M"), r.end.strftime("%H:%M"),
-            r.turns)
-           for r in spark.sql(
-               "SELECT conv_id, session_window.start AS start, "
-               "session_window.end AS end, turns FROM sessions"
-           ).collect()}
-    assert got == {
-        ("A", "10:00", "10:40", 2),   # chained: end = 10:10 + 30 min
-        ("A", "11:00", "11:30", 1),   # split by the 50-min quiet gap
-        ("B", "10:05", "10:35", 1),   # keys never merge
-    }
-
-
 def test_stream_late_data_dropped_after_checkpoint_restore(spark):
     """The watermark must survive a checkpoint restore and drop a row
     replayed into an already-closed window: exactly one emitted row for

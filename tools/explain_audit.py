@@ -425,46 +425,6 @@ AUDITS = {
         ("PushedFilters: [IsNotNull(user_id)",
          "the %5 user decimation reaches the scan"),
     ],
-    "lineitem_median_histogram": [
-        ("BroadcastHashJoin", "the 6-row bucket directory broadcasts "
-                              "back; pass 2 touches only target-"
-                              "bucket rows"),
-        ("Scan parquet", "two passes = two scans (histogram, then "
-                         "bucket rescan) — never a full-group sort",
-         2),
-    ],
-    "events_changepoint_cusum": [
-        ("Exchange", "prefix/total/argmax windows all share ONE "
-                     "user_id shuffle", 1),
-        ("Window", "running sums, whole-partition totals, and the "
-                   "argmax pick are separate passes (plus a "
-                   "WindowGroupLimit prune) — all inside the one "
-                   "shuffle", 4),
-        ("PushedFilters: [IsNotNull(user_id)",
-         "the %7 decimation reaches the scan"),
-    ],
-    "basket_part_pairs": [
-        ("HashAggregate", "basket collect + pair counts + part "
-                          "counts all partial-aggregate"),
-        ("CartesianProduct", "pairs explode WITHIN baskets (capped "
-                             "at 200 parts), never across the "
-                             "catalog", 0),
-        ("BroadcastNestedLoopJoin", "the scalar N rides as a "
-                                    "broadcast 1-row join"),
-    ],
-    "orders_pareto_cume": [
-        ("SinglePartition", "the global rank sorts the CUSTOMER "
-                            "AGGREGATE, not the orders (documented "
-                            "approx swap at 10^9 customers)"),
-        ("BroadcastNestedLoopJoin", "the corpus total rides as a "
-                                    "broadcast 1-row join"),
-    ],
-    "terms_continuation_counts": [
-        ("HashAggregate", "distinct bigrams, continuation counts, "
-                          "and raw counts all partial-aggregate"),
-        ("CartesianProduct", "bigrams come from a per-doc array "
-                             "transform, never a self-join", 0),
-    ],
     "customer_lateral_top2": [
         ("WindowGroupLimit", "the per-customer ORDER BY/LIMIT lateral "
                              "decorrelates into a group-limit pushed "
@@ -493,28 +453,6 @@ AUDITS = {
         ("CartesianProduct", "the suppkey inequality rides the "
                              "orderkey equi-join as residual", 0),
     ],
-    "orders_pipe_syntax": [
-        ("PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate",
-         "pipe-syntax |> WHERE lowers to the same pushed predicate "
-         "as the classic form — the |> stages don't fence pushdown"),
-        ("HashAggregate", "|> AGGREGATE partial-aggregates map-side"),
-    ],
-    "events_ks_drift": [
-        ("Window", "one ordered cumsum over DISTINCT values only"),
-        ("In(event_type, [click,view])",
-         "the two-slice IN filter reaches the events scan"),
-        ("CartesianProduct", "the totals/max joins are one-row "
-                             "broadcasts, never a real cartesian", 0),
-    ],
-    "lineitem_benford": [
-        ("HashAggregate", "9-key aggregate collapses map-side"),
-        ("Exchange", "exactly one tiny shuffle", 1),
-    ],
-    "events_rank_sum": [
-        ("Window", "ordered cumsum over DISTINCT values only"),
-        ("In(event_type, [click,view])",
-         "slice filter reaches the events scan"),
-    ],
     "semantic_dedup_medoid": [
         ("BroadcastHashJoin", "k medoid rows broadcast back to "
                               "members"),
@@ -526,12 +464,6 @@ AUDITS = {
         ("Window", "top-3 neighbors via window rank"),
         ("CartesianProduct", "in-cell self-join is an equi-join on "
                              "cell", 0),
-    ],
-    "orders_shuffle_hash_join": [
-        ("ShuffledHashJoin", "the shuffle_hash hint actually plans a "
-                             "hash join (a silently-degraded hint is "
-                             "worse than none)"),
-        ("SortMergeJoin", "no SMJ double-sort", 0),
     ],
     "tpch_customer_distribution": [
         ("LeftOuter", "the k=0 bucket needs the LEFT join — an inner "

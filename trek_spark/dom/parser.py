@@ -1,16 +1,17 @@
-"""Tolerant HTML → Node-tree parser on stdlib ``html.parser``.
+"""Tolerant HTML → Node-tree parser.
 
 Plays the role html5ever/kuchikiki parsing plays in the reference
 (``src/dom/mod.rs:44-48``). Implements the HTML5 tree-construction rules that
 matter for real-world extraction: void elements, implied end tags
 (p/li/td/tr/dt/dd/option...), raw-text elements, stray end-tag recovery, and
-table-ish nesting tolerance. Entity decoding is handled by html.parser
-(convert_charrefs=True) exactly once at parse time.
+table-ish nesting tolerance. The tree builder takes html.parser's handler
+callbacks; :func:`parse_html` drives it with the one-shot tokenizer in
+:mod:`trek_spark.dom.tokenizer`, which decodes entities exactly once, as
+html.parser does with ``convert_charrefs=True``.
 """
 
 from __future__ import annotations
 
-import os
 from html.parser import HTMLParser
 
 from .node import COMMENT, DOCUMENT, ELEMENT, Node, VOID_ELEMENTS
@@ -212,26 +213,18 @@ class _TreeBuilder(HTMLParser):
         pass
 
 
-_USE_STDLIB_TOKENIZER = bool(os.environ.get("TREK_DOM_STDLIB"))
-
-
 def parse_html(html: str) -> Node:
     """Parse an HTML document/fragment into a DOCUMENT Node.
 
     Ensures html/body structure exists so passes can rely on ``body()``.
 
     Tokenization runs through :mod:`trek_spark.dom.tokenizer` — a one-shot
-    fast path with byte-parity to html.parser (enforced by
-    tests/test_tokenizer_parity.py). ``TREK_DOM_STDLIB=1`` switches back to
-    the stdlib driver (A/B lever, belt-and-braces escape hatch).
+    fast path with byte-parity to html.parser driving the same builder
+    (enforced by tests/test_tokenizer_parity.py).
     """
     tb = _TreeBuilder()
     try:
-        if _USE_STDLIB_TOKENIZER:
-            tb.feed(html)
-            tb.close()
-        else:
-            scan(html, tb)
+        scan(html, tb)
     except Exception:
         # the tokenizer is already tolerant; belt-and-braces so one hostile
         # doc never kills a whole Arrow batch.

@@ -1,18 +1,18 @@
-"""Phase 0 — single streaming pass collecting head signals.
+"""Phase 0 — collect head signals from the parsed document.
 
 Equivalent of the reference's lol_html streaming collection
 (``src/lib.rs:390-523``): meta tags, canonical link, favicon, <title>,
 ``fc:frame`` mini-app embed, and ``application/ld+json`` schema.org blocks
-(with ``@graph`` flattening). One pass over the raw HTML with a tag-only
-stdlib parser — no tree is built for metadata, matching the reference's
-"never load full DOM for the head" design (``docs/architecture.md:171-176``).
+(with ``@graph`` flattening). The reference streams the raw HTML so it never
+builds a tree for the head (``docs/architecture.md:171-176``); here the
+pipeline parses each document once, so the signals come from one walk over
+that tree's elements.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
 from typing import Optional
 
 
@@ -26,101 +26,11 @@ class CollectedData:
     canonical: Optional[str] = None
 
 
-class _HeadCollector(HTMLParser):
-    """Records only meta/link/title/ld+json; never builds a tree."""
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.data = CollectedData()
-        self._in_title = False
-        self._title_buf: list[str] = []
-        self._in_ldjson = False
-        self._script_buf: list[str] = []
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "meta":
-            a = dict(attrs)
-            content = a.get("content")
-            if content is None:
-                return
-            name = a.get("name")
-            prop = a.get("property")
-            if name is None and prop is None:
-                return
-            if name == "fc:frame":
-                self.data.mini_app_embed = content
-            self.data.meta_tags.append(
-                {"name": name, "property": prop, "content": content}
-            )
-        elif tag == "link":
-            a = dict(attrs)
-            rel = a.get("rel") or ""
-            href = a.get("href")
-            if not href:
-                return
-            rel_tokens = rel.split()
-            if rel == "canonical":
-                if self.data.canonical is None:
-                    self.data.canonical = href
-            if "icon" in rel_tokens or "shortcut" in rel_tokens:
-                # prefer rel="icon" exactly over shortcut variants
-                if self.data.favicon is None or rel == "icon":
-                    self.data.favicon = href
-        elif tag == "title":
-            self._in_title = True
-            self._title_buf = []
-        elif tag == "script":
-            a = dict(attrs)
-            if (a.get("type") or "").strip().lower() == "application/ld+json":
-                self._in_ldjson = True
-                self._script_buf = []
-
-    def handle_startendtag(self, tag, attrs):
-        self.handle_starttag(tag, attrs)
-
-    def handle_endtag(self, tag):
-        if tag == "title" and self._in_title:
-            self._in_title = False
-            self.data.title = "".join(self._title_buf).strip()
-        elif tag == "script" and self._in_ldjson:
-            self._in_ldjson = False
-            raw = "".join(self._script_buf)
-            try:
-                val = json.loads(raw)
-            except (ValueError, RecursionError):
-                return
-            graph = val.get("@graph") if isinstance(val, dict) else None
-            if isinstance(graph, list):
-                self.data.schema_org_data.extend(graph)
-            else:
-                self.data.schema_org_data.append(val)
-
-    def handle_data(self, data):
-        if self._in_title:
-            self._title_buf.append(data)
-        elif self._in_ldjson:
-            self._script_buf.append(data)
-
-
-def collect_initial_data(html: str) -> CollectedData:
-    c = _HeadCollector()
-    try:
-        c.feed(html)
-        c.close()
-    except Exception:
-        pass
-    return c.data
-
-
 def collect_from_dom(doc) -> CollectedData:
-    """Tree-walk equivalent of the streaming collector, for callers that
-    already hold the parsed document (the pipeline's single-parse path).
-    Verified byte-identical to ``collect_initial_data`` across the whole
-    golden corpus — both ride the same stdlib tokenizer, so the same meta/
-    link/title/ld+json elements exist in both views. Semantics preserved:
-    LAST <title> wins, FIRST canonical wins, rel="icon" beats shortcut
-    variants, @graph flattens."""
-    import json as _json
+    """Head signals of a parsed document (the pipeline's single-parse
+    path). Semantics of the reference's collector: LAST <title> wins,
+    FIRST canonical wins, rel="icon" beats shortcut variants, @graph
+    flattens."""
     d = CollectedData()
     for n in doc.iter_elements():
         tag = n.tag
@@ -155,7 +65,7 @@ def collect_from_dom(doc) -> CollectedData:
             if (n.get("type") or "").strip().lower() == "application/ld+json":
                 raw = n.text_content()
                 try:
-                    val = _json.loads(raw)
+                    val = json.loads(raw)
                 except (ValueError, RecursionError):
                     continue
                 graph = val.get("@graph") if isinstance(val, dict) else None

@@ -4,11 +4,12 @@ per-partition lineage/metrics and a table-native checkpoint.
 Physical plan (SURVEY.md §3.4):
 
 * One shuffle per wave write — ``repartition(N, conv_id, salt)`` where
-  ``salt = pmod(hash(conv_id, turn_idx), S)``. The salt defuses
-  long-conversation skew the optimizer can't see (cost is Python CPU per
-  document, not bytes, so AQE's byte-based skew split won't trigger);
-  including turn_idx in the salt hash spreads a single giant conversation
-  across S partitions while keeping placement deterministic.
+  ``salt = pmod(hash(conv_id, turn_idx), S)``, S = ``SALT_BUCKETS``
+  (16). The salt defuses long-conversation skew the optimizer can't see
+  (cost is Python CPU per document, not bytes, so AQE's byte-based skew
+  split won't trigger); including turn_idx in the salt hash spreads a
+  single giant conversation across S partitions while keeping placement
+  deterministic.
 * The shuffle's partition count is the extraction stage's task count, and
   it is sized from the wave's bytes (:func:`plan_waves`): one task per
   ``WAVE_BYTES_PER_CORE / 4`` (16 MiB) of the wave's estimated input,
@@ -89,6 +90,9 @@ UNKNOWN_SIZE_WAVES = 4
 # Arrow batch cap for the extraction stage: about five 28 KB pages, the
 # batch the row cap yielded with four fixed waves.
 ARROW_BATCH_BYTES = 128 << 10
+# Salt values per conversation (S in ``pmod(hash(conv_id, turn_idx), S)``):
+# one giant conversation spreads over at most this many partitions.
+SALT_BUCKETS = 16
 
 
 @contextmanager
@@ -110,18 +114,18 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, prev)
 
 
-def salted(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
+def salted(df: DataFrame, num_partitions: int) -> DataFrame:
     """Add skew-defusing salt and repartition on (conv_id, salt)."""
     return (
         df.withColumn(
             "salt", F.pmod(F.hash("conv_id", "turn_idx"),
-                           F.lit(salt_buckets)))
+                           F.lit(SALT_BUCKETS)))
         .repartition(num_partitions, "conv_id", "salt")
     )
 
 
-def extract_turns(df: DataFrame, num_partitions: int | None = None,
-                  salt_buckets: int = 16) -> DataFrame:
+def extract_turns(df: DataFrame,
+                  num_partitions: int | None = None) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts[, url]) →
     extracted turns with result + lineage columns.
 
@@ -135,7 +139,7 @@ def extract_turns(df: DataFrame, num_partitions: int | None = None,
     (the upper bound when Spark cannot size ``df``)."""
     if num_partitions is None:
         num_partitions = plan_waves(df, 1)[1]
-    salted_df = salted(df, num_partitions, salt_buckets)
+    salted_df = salted(df, num_partitions)
     return salted_df.drop("salt").mapInPandas(
         extract_map_in_pandas, schema=extract_schema(df))
 
@@ -332,7 +336,6 @@ def run_extraction_job(
     transcripts: DataFrame,
     output_dir: str,
     num_partitions: int | None = None,
-    salt_buckets: int = 16,
     part_buckets: int = 64,
     resume: bool = True,
     waves: int | None = None,
@@ -400,7 +403,7 @@ def run_extraction_job(
             counts = Observation()
             extracted = extract_turns(
                 df.filter(F.col("part_bucket").isin(wave)),
-                num_partitions, salt_buckets,
+                num_partitions,
             ).observe(counts, F.count(F.lit(1)).alias("rows"),
                       F.sum(F.col("error").isNotNull().cast("long"))
                       .alias("failures"))

@@ -5,22 +5,21 @@ transcript-firehose scale the same fused extraction runs unchanged inside
 Structured Streaming:
 
 * ``stream_extract_turns`` — ``readStream`` over a transcript directory →
-  extraction → parquet sink with a checkpoint location. Without dedup the
-  extraction is the batch job's salted ``mapInPandas`` plan
-  (``extract_turns`` is stateless per row, so it is streaming-safe
-  as-is); with dedup the same ``mapInPandas`` runs directly on the dedup
-  state operator's output, so a micro-batch is one Python stage. End-to-end
-  exactly-once: the file source records consumed files and the file sink
-  commits atomically per micro-batch, so a crashed micro-batch replays
-  without duplication — the streaming counterpart of the batch job's
-  wave-committed resume.
-* ``stream_turn_rate`` — watermarked sliding-window throughput metrics
-  (late turns beyond the watermark are dropped, state is bounded), the
-  standard monitoring side-channel for a long-running ingest.
-
-Both are driven by ``trigger(availableNow=True)`` in tests (process all
-available input, then stop) and by the default micro-batch trigger in a
-deployment.
+  [exact dedup →] extraction → parquet sink with a checkpoint location.
+  Without dedup the extraction is the batch job's salted ``mapInPandas``
+  plan (``extract_turns`` is stateless per row, so it is streaming-safe
+  as-is); with dedup the same ``mapInPandas`` runs directly on the output
+  of ``stream_dedup_exact``'s state operator, so a micro-batch is one
+  Python stage. End-to-end exactly-once: the file source records consumed
+  files and the file sink commits atomically per micro-batch, so a crashed
+  micro-batch replays without duplication — the streaming counterpart of
+  the batch job's wave-committed resume. Drained with
+  ``trigger(availableNow=True)`` by default (process all available input,
+  then stop); a deployment runs it on the default micro-batch trigger.
+* ``stream_turn_rate`` — watermarked windowed turn counts (late turns
+  beyond the watermark are dropped, state is bounded), the monitoring
+  side-channel for a long-running ingest; the driver contract's
+  late-data audit runs on it.
 """
 
 from __future__ import annotations
@@ -51,7 +50,6 @@ def stream_extract_turns(
     output_dir: str,
     checkpoint_dir: str,
     num_partitions: int | None = None,
-    salt_buckets: int = 16,
     available_now: bool = True,
     dedup: bool = False,
     dedup_ttl_ms: int | None = None,
@@ -101,8 +99,7 @@ def stream_extract_turns(
         extracted = deduped.mapInPandas(extract_map_in_pandas,
                                         schema=extract_schema(deduped))
     else:
-        extracted = extract_turns(stream, num_partitions=n,
-                                  salt_buckets=salt_buckets)
+        extracted = extract_turns(stream, num_partitions=n)
     writer = (extracted.writeStream
               .format("parquet")
               .option("path", output_dir)
@@ -190,64 +187,3 @@ def stream_turn_rate(stream: DataFrame, window: str = "1 minute",
             .groupBy(w, "role")
             .agg(F.count("*").alias("turns"),
                  F.sum(F.length("text")).alias("bytes_in")))
-
-
-def stream_sessionize(stream: DataFrame, gap: str = "30 minutes",
-                      watermark: str = "2 minutes") -> DataFrame:
-    """Streaming sessionization via ``session_window`` — the
-    DYNAMIC-window analogue of the batch op (ops.py events_sessionize):
-    per conv_id, a session extends while turns keep arriving within
-    ``gap`` of the previous one and closes after a quiet period.
-
-    Why this exists next to the batch op: the batch lag/running-sum
-    formulation needs the whole history of a key in one sort — fine for
-    a bounded table, impossible for an unbounded stream. session_window
-    keeps ONE [start, end) interval per open session as state, merges
-    intervals when a late-but-in-watermark turn bridges two of them,
-    and the watermark gives the eviction bound (a session whose
-    end + gap is older than the watermark can never grow again, so its
-    state is finalized and dropped — bounded state at any arrival
-    rate). Output carries the computed session bounds plus per-session
-    turn/byte counts."""
-    return (stream
-            .withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap), F.col("conv_id"))
-            .agg(F.count("*").alias("turns"),
-                 F.sum(F.length("text")).alias("bytes_in")))
-
-
-def stream_join_tool_results(turns: DataFrame, results: DataFrame,
-                             watermark: str = "2 minutes",
-                             max_lag: str = "5 minutes") -> DataFrame:
-    """Watermarked STREAM-STREAM interval join: each streaming turn is
-    enriched with the tool result that arrives for the same conv_id
-    within ``[turn.ts, turn.ts + max_lag]``.
-
-    State-boundedness at 100 TB/day rates: BOTH sides carry a watermark
-    and the join condition is an equi-key PLUS a closed time interval,
-    which is exactly what Structured Streaming needs to compute a state
-    eviction bound for each side (turns older than watermark+lag and
-    results older than watermark are dropped from state; without the
-    interval the state would grow forever). Inner join → a turn with no
-    result inside the window simply doesn't emit, which is the
-    deterministic, replayable semantics (left-outer would emit nulls
-    only after watermark passage)."""
-    t = turns.withWatermark("ts", watermark).alias("t")
-    r = results.withWatermark("res_ts", watermark).alias("r")
-    return t.join(
-        r,
-        F.expr(f"""
-            t.conv_id = r.conv_id AND
-            r.res_ts >= t.ts AND
-            r.res_ts <= t.ts + interval {max_lag}
-        """),
-        "inner",
-    ).select(
-        F.col("t.conv_id").alias("conv_id"),
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col("t.role").alias("role"),
-        F.col("t.ts").alias("ts"),
-        F.col("r.tool").alias("tool"),
-        F.col("r.res_ts").alias("res_ts"),
-        F.col("r.payload").alias("payload"),
-    )
