@@ -30,11 +30,13 @@ _UNIT_TESTED_OPS = {
     "customer_value_deciles", "customer_value_deciles_approx",
     "dedup_hot_shingle_audit", "dedup_lsh_dropped_buckets",
     "dedup_minhash_estimate", "embedding_near_dup",
+    "events_chi2_independence", "events_ks_drift", "events_rank_sum",
     "events_rolling_median", "events_sessionize", "stratified_sample",
-    "tpch_customer_distribution", "tpch_disjunctive_join",
-    "tpch_forecast_revenue", "tpch_large_orders",
-    "tpch_order_priority_check", "tpch_sole_failure_suppliers",
-    "tpch_top_supplier", "transcript_cross_conv_echo",
+    "terms_kn_bigram_probs", "tpch_customer_distribution",
+    "tpch_disjunctive_join", "tpch_forecast_revenue",
+    "tpch_large_orders", "tpch_order_priority_check",
+    "tpch_sole_failure_suppliers", "tpch_top_supplier",
+    "transcript_cross_conv_echo",
 }
 
 

@@ -1,7 +1,8 @@
 """Partitioning-invariance checks for order-sensitive op batches (the
-test_closing_ops pattern, extended): the embedding-curation argmins,
-the TPC-H sole-failure suppliers and the late-wave curation ops must not
-shift when the shuffle width changes arrival order.
+test_closing_ops pattern, extended): statistical tests built on
+ordered-cumsum windows, the KN bigram pipeline, the embedding-curation
+argmins, the TPC-H sole-failure suppliers and the late-wave curation
+ops must not shift when the shuffle width changes arrival order.
 """
 
 import pytest
@@ -24,6 +25,10 @@ def _canon(df):
 
 
 @pytest.mark.parametrize("name", [
+    "events_ks_drift",
+    "events_rank_sum",
+    "events_chi2_independence",
+    "terms_kn_bigram_probs",
     "semantic_dedup_medoid",
     "embedding_label_noise",
     "tpch_sole_failure_suppliers",

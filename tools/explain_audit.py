@@ -453,6 +453,18 @@ AUDITS = {
         ("CartesianProduct", "the suppkey inequality rides the "
                              "orderkey equi-join as residual", 0),
     ],
+    "events_ks_drift": [
+        ("Window", "one ordered cumsum over DISTINCT values only"),
+        ("In(event_type, [click,view])",
+         "the two-slice IN filter reaches the events scan"),
+        ("CartesianProduct", "the totals/max joins are one-row "
+                             "broadcasts, never a real cartesian", 0),
+    ],
+    "events_rank_sum": [
+        ("Window", "ordered cumsum over DISTINCT values only"),
+        ("In(event_type, [click,view])",
+         "slice filter reaches the events scan"),
+    ],
     "semantic_dedup_medoid": [
         ("BroadcastHashJoin", "k medoid rows broadcast back to "
                               "members"),

@@ -5114,6 +5114,203 @@ GROUP BY 1
 """
 
 
+def q_events_ks_drift(spark, sf_dir):
+    """Exact two-sample Kolmogorov–Smirnov distance between the value
+    distributions of 'click' and 'view' events — the drift test a
+    training pipeline runs between data slices. Fully integer: values
+    quantize to cents, the CDF gap at each distinct value is
+    |c1·n2 − c2·n1| (common denominator n1·n2 never divides), and the
+    statistic is its max with the smallest attaining value reported.
+    Scale: one groupBy on value_c + one ordered cumsum window + the
+    scalar max joined back by broadcast (same aggregate subtree →
+    AQE ReusedExchange, the top_supplier precedent). The full-sort
+    window is over DISTINCT values (bounded, ≪ event count)."""
+    ev = (_t(spark, sf_dir, "events")
+          .filter(F.col("event_type").isin("click", "view"))
+          .select(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
+                  .alias("value_c"), "event_type"))
+    per_v = (ev.groupBy("value_c")
+             .agg(F.sum(F.expr(
+                     "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END"))
+                  .alias("d1"),
+                  F.sum(F.expr(
+                     "CASE WHEN event_type = 'view' THEN 1 ELSE 0 END"))
+                  .alias("d2")))
+    w = Window.orderBy("value_c").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    cdf = (per_v
+           .withColumn("c1", F.sum("d1").over(w))
+           .withColumn("c2", F.sum("d2").over(w)))
+    tot = cdf.agg(F.max("c1").alias("n1"), F.max("c2").alias("n2"))
+    gaps = (cdf.crossJoin(F.broadcast(tot))
+            .withColumn("gap", F.expr("abs(c1 * n2 - c2 * n1)")))
+    mx = gaps.agg(F.max("gap").alias("ks_num"))
+    return (
+        gaps.join(F.broadcast(mx), gaps.gap == mx.ks_num)
+        .groupBy("n1", "n2", "ks_num")
+        .agg(F.min("value_c").alias("ks_at_value_c"))
+        .select("n1", "n2", "ks_num", "ks_at_value_c")
+    )
+
+
+SQL_EVENTS_KS_DRIFT = """
+WITH per_v AS (
+  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_c,
+         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS d1,
+         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS d2
+  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
+), cdf AS (
+  SELECT value_c,
+         CAST(sum(d1) OVER (ORDER BY value_c
+              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c1,
+         CAST(sum(d2) OVER (ORDER BY value_c
+              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c2
+  FROM per_v
+), gaps AS (
+  SELECT value_c, c1, c2,
+         (SELECT max(c1) FROM cdf) AS n1,
+         (SELECT max(c2) FROM cdf) AS n2,
+         abs(c1 * (SELECT max(c2) FROM cdf)
+             - c2 * (SELECT max(c1) FROM cdf)) AS gap
+  FROM cdf
+)
+SELECT n1, n2, CAST(gap AS BIGINT) AS ks_num,
+       CAST(min(value_c) AS BIGINT) AS ks_at_value_c
+FROM gaps WHERE gap = (SELECT max(gap) FROM gaps)
+GROUP BY 1, 2, 3
+"""
+
+def q_events_rank_sum(spark, sf_dir):
+    """Exact Mann–Whitney U (Wilcoxon rank-sum) between 'click' and
+    'view' event values — the nonparametric twin of events_ks_drift.
+    Tie-averaged ranks stay integral by working in DOUBLED rank units:
+    a tie group at value v with cb items before it contributes
+    d_g · (2·cb + cnt + 1) to group g's doubled rank sum, so
+    U2_g = R2_g − n_g·(n_g+1) is exact bigint. The identity
+    U2_click + U2_view = 2·n1·n2 is emitted as a checked column.
+    Scale: one groupBy on distinct values + one ordered cumsum window
+    (distinct values ≪ events), then a single-row aggregate."""
+    ev = (_t(spark, sf_dir, "events")
+          .filter(F.col("event_type").isin("click", "view"))
+          .select(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
+                  .alias("value_c"), "event_type"))
+    per_v = (ev.groupBy("value_c")
+             .agg(F.sum(F.expr(
+                     "CASE WHEN event_type = 'click' THEN 1 ELSE 0 END"))
+                  .alias("d1"),
+                  F.sum(F.expr(
+                     "CASE WHEN event_type = 'view' THEN 1 ELSE 0 END"))
+                  .alias("d2")))
+    w = (Window.orderBy("value_c")
+         .rowsBetween(Window.unboundedPreceding, -1))
+    ranked = (per_v
+              .withColumn("cb", F.coalesce(
+                  F.sum(F.expr("d1 + d2")).over(w), F.lit(0)))
+              .withColumn("r2_1", F.expr("d1 * (2 * cb + d1 + d2 + 1)"))
+              .withColumn("r2_2", F.expr("d2 * (2 * cb + d1 + d2 + 1)")))
+    return (
+        ranked.agg(F.sum("d1").alias("n1"), F.sum("d2").alias("n2"),
+                   F.sum("r2_1").alias("rank2_click"),
+                   F.sum("r2_2").alias("rank2_view"))
+        .withColumn("u2_click", F.expr("rank2_click - n1 * (n1 + 1)"))
+        .withColumn("u2_view", F.expr("rank2_view - n2 * (n2 + 1)"))
+        .withColumn("identity_ok", F.expr(
+            "CAST(u2_click + u2_view = 2 * n1 * n2 AS INT)"))
+        .select("n1", "n2", "u2_click", "u2_view", "identity_ok")
+    )
+
+
+SQL_EVENTS_RANK_SUM = """
+WITH per_v AS (
+  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_c,
+         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS d1,
+         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS d2
+  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
+), ranked AS (
+  SELECT d1, d2,
+         coalesce(sum(d1 + d2) OVER (ORDER BY value_c
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+  FROM per_v
+), tot AS (
+  SELECT CAST(sum(d1) AS BIGINT) AS n1, CAST(sum(d2) AS BIGINT) AS n2,
+         CAST(sum(d1 * (2 * cb + d1 + d2 + 1)) AS BIGINT) AS rank2_click,
+         CAST(sum(d2 * (2 * cb + d1 + d2 + 1)) AS BIGINT) AS rank2_view
+  FROM ranked
+)
+SELECT n1, n2,
+       rank2_click - n1 * (n1 + 1) AS u2_click,
+       rank2_view - n2 * (n2 + 1) AS u2_view,
+       CAST((rank2_click - n1 * (n1 + 1)) + (rank2_view - n2 * (n2 + 1))
+            = 2 * n1 * n2 AS INT) AS identity_ok
+FROM tot
+"""
+
+
+def q_events_chi2_independence(spark, sf_dir):
+    """Chi-square independence test: is event_type independent of the
+    day-of-week? The weekday is portable arithmetic (days since a
+    fixed Monday, mod 7 — no engine dow() convention involved). Each
+    cell's term ((O·N − R·C)² / (N·R·C), scaled ×10⁶) is one
+    IDENTICAL scalar double expression over exact integers, floored
+    to bigint BEFORE the cross-cell sum (the module convention: what
+    must never cross engines is a float SUM, not a deterministic
+    per-row IEEE tree — squaring O·N in pure int64 would overflow
+    under ANSI at ~10⁹ events, the r7 review lesson). Emits dof and
+    the observed cell count alongside chi2_e6."""
+    ev = _t(spark, sf_dir, "events").select(
+        "event_type",
+        F.expr("CAST(datediff(ts, DATE '1970-01-05') % 7 AS INT)")
+        .alias("wd"))
+    cells = ev.groupBy("event_type", "wd").agg(F.count("*").alias("o"))
+    rows = ev.groupBy("event_type").agg(F.count("*").alias("r"))
+    cols = ev.groupBy("wd").agg(F.count("*").alias("c"))
+    n = ev.agg(F.count("*").alias("n"))
+    terms = (cells
+             .join(F.broadcast(rows), "event_type")
+             .join(F.broadcast(cols), "wd")
+             .crossJoin(F.broadcast(n))
+             .withColumn("term_e6", F.expr(
+                 "CAST(floor(CAST(o * n - r * c AS DOUBLE)"
+                 " * CAST(o * n - r * c AS DOUBLE)"
+                 " / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE)"
+                 "    * CAST(c AS DOUBLE)) * 1000000) AS BIGINT)")))
+    return (
+        terms.agg(
+            F.sum("term_e6").alias("chi2_e6"),
+            F.count("*").alias("n_cells"),
+            F.expr("(count(DISTINCT event_type) - 1)"
+                   " * (count(DISTINCT wd) - 1)").alias("dof"))
+    )
+
+
+SQL_EVENTS_CHI2_INDEPENDENCE = """
+WITH ev AS (
+  SELECT event_type,
+         CAST(datediff('day', DATE '1970-01-05', ts) % 7 AS INT) AS wd
+  FROM events
+), cells AS (
+  SELECT event_type, wd, count(*) AS o FROM ev GROUP BY 1, 2
+), rws AS (
+  SELECT event_type, count(*) AS r FROM ev GROUP BY 1
+), cls AS (
+  SELECT wd, count(*) AS c FROM ev GROUP BY 1
+), tot AS (
+  SELECT count(*) AS n FROM ev
+), terms AS (
+  SELECT CAST(floor(CAST(o * n - r * c AS DOUBLE)
+              * CAST(o * n - r * c AS DOUBLE)
+              / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE)
+                 * CAST(c AS DOUBLE)) * 1000000) AS BIGINT) AS term_e6,
+         event_type, wd
+  FROM cells JOIN rws USING (event_type) JOIN cls USING (wd), tot
+)
+SELECT CAST(sum(term_e6) AS BIGINT) AS chi2_e6,
+       count(*) AS n_cells,
+       CAST((count(DISTINCT event_type) - 1)
+            * (count(DISTINCT wd) - 1) AS BIGINT) AS dof
+FROM terms
+"""
+
 # --------------------------------------------------------------------------
 # Embedding-space curation: SemDeDup-style semantic dedup and kNN
 # label-noise detection — both reuse the trained-IVF cell machinery
@@ -5317,6 +5514,76 @@ FROM top3 GROUP BY 1, 2
 
 SQL_EMBEDDING_LABEL_NOISE = _sql_embedding_label_noise()
 
+
+def q_terms_kn_bigram_probs(spark, sf_dir):
+    """Interpolated Kneser–Ney bigram probabilities with discount
+    D = 3/4, as EXACT RATIONALS: scaling by 4·c(w1)·B turns
+    P_KN(w2|w1) = max(c12−D,0)/c1 + D·N1+(w1•)/c1 · N1+(•w2)/B into
+    num = max(4·c12−3, 0)·B + 3·N1+(w1•)·N1+(•w2), den = 4·c1·B —
+    bigint arithmetic end to end. Output limited to bigrams with
+    c12 ≥ 3 (volume; same gate both engines).
+
+    Scale: bigram counts partial-aggregate map-side; the bigram-type
+    table (vocabulary-bounded, tiny next to the corpus) materializes
+    once (r9: its four consumers — left totals, continuation counts,
+    B, and the join probe — have non-identical children, so exchange
+    reuse never covered them and the tokenize + bigram agg ran up to
+    4×; measured 1.20 → 0.74 s at sf0.1); the three side statistics
+    are aggregates OF that table joined back on w1/w2; B is a one-row
+    broadcast. On a real cluster swap the localCheckpoint for
+    checkpoint()/a table write."""
+    docs = _t(spark, sf_dir, "documents")
+    words = (docs.select(F.expr(
+        "regexp_extract_all(lower(text), '([a-z]+)', 1)").alias("ws"))
+        .where(F.size("ws") >= 2))
+    bigrams = (words.select(F.explode(F.expr(
+        "transform(sequence(1, size(ws) - 1),"
+        " i -> struct(ws[i - 1] AS w1, ws[i] AS w2))")).alias("b"))
+        .select("b.w1", "b.w2"))
+    c12 = (bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+           .localCheckpoint(eager=True))
+    left = c12.groupBy("w1").agg(
+        F.sum("c12").alias("c1"),
+        F.count("*").alias("fanout"))          # N1+(w1 •)
+    cont = c12.groupBy("w2").agg(
+        F.count("*").alias("cont"))            # N1+(• w2)
+    btot = c12.agg(F.count("*").alias("b_types"))
+    return (
+        c12.join(left, "w1").join(cont, "w2")
+        .crossJoin(F.broadcast(btot))
+        .filter(F.col("c12") >= 3)
+        .select(
+            "w1", "w2", "c12",
+            F.expr("greatest(4 * c12 - 3, 0) * b_types"
+                   " + 3 * fanout * cont").alias("p_num"),
+            F.expr("4 * c1 * b_types").alias("p_den"))
+    )
+
+
+SQL_TERMS_KN_BIGRAM_PROBS = """
+WITH ws AS (
+  SELECT regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents
+), bigrams AS (
+  SELECT w[i] AS w1, w[i + 1] AS w2
+  FROM ws, UNNEST(range(1, len(w))) AS t(i)
+  WHERE len(w) >= 2
+), c12 AS (
+  SELECT w1, w2, count(*) AS c12 FROM bigrams GROUP BY 1, 2
+), lft AS (
+  SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS fanout
+  FROM c12 GROUP BY 1
+), cont AS (
+  SELECT w2, count(*) AS cont FROM c12 GROUP BY 1
+), btot AS (
+  SELECT count(*) AS b_types FROM c12
+)
+SELECT w1, w2, c12,
+       CAST(greatest(4 * c12 - 3, 0) * b_types
+            + 3 * fanout * cont AS BIGINT) AS p_num,
+       CAST(4 * c1 * b_types AS BIGINT) AS p_den
+FROM c12 JOIN lft USING (w1) JOIN cont USING (w2), btot
+WHERE c12 >= 3
+"""
 
 def q_tpch_order_priority_check(spark, sf_dir):
     """TPC-H Q4 shape (order priority checking), adapted: no
@@ -5814,10 +6081,16 @@ OPS: dict[str, tuple] = {
         q_tpch_disjunctive_join, SQL_TPCH_DISJUNCTIVE_JOIN),
     "tpch_sole_failure_suppliers": (
         q_tpch_sole_failure_suppliers, SQL_TPCH_SOLE_FAILURE_SUPPLIERS),
+    "events_ks_drift": (q_events_ks_drift, SQL_EVENTS_KS_DRIFT),
+    "events_rank_sum": (q_events_rank_sum, SQL_EVENTS_RANK_SUM),
+    "events_chi2_independence": (
+        q_events_chi2_independence, SQL_EVENTS_CHI2_INDEPENDENCE),
     "semantic_dedup_medoid": (
         q_semantic_dedup_medoid, SQL_SEMANTIC_DEDUP_MEDOID),
     "embedding_label_noise": (
         q_embedding_label_noise, SQL_EMBEDDING_LABEL_NOISE),
+    "terms_kn_bigram_probs": (
+        q_terms_kn_bigram_probs, SQL_TERMS_KN_BIGRAM_PROBS),
     "tpch_order_priority_check": (
         q_tpch_order_priority_check, SQL_TPCH_ORDER_PRIORITY_CHECK),
     "tpch_forecast_revenue": (
