@@ -1,7 +1,7 @@
 """Extraction scaling probe.
 
 Not the benchmark of record (that is ``perfbench/``). Headline metric:
-extracted turns/sec through the full pipeline (scan → salt/repartition →
+extracted turns/sec through the full pipeline (scan → range repartition →
 fused pandas-UDF extraction) on a deterministic tiled fixture corpus.
 
 Scaling criterion (north rule: >=0.8 efficiency from N to 4N executors,
@@ -65,7 +65,7 @@ def _extraction_run(cpus: int, copies: int,
     ``num_partitions`` is given the physical plan is pinned (scaling pair
     uses the same value at both levels so ONLY parallelism differs)."""
     from trek_spark.spark.corpus import tile_transcripts
-    from trek_spark.spark.job import extract_turns, scoped_conf
+    from trek_spark.spark.job import extract_turns
     from trek_spark.spark.session import get_spark
 
     if num_partitions is None:
@@ -75,16 +75,13 @@ def _extraction_run(cpus: int, copies: int,
     try:
         corpus = tile_transcripts(spark, copies).persist()
         n_rows = corpus.count()
-        with scoped_conf(spark,
-                         "spark.sql.adaptive.coalescePartitions.enabled",
-                         "false"):
-            warm = tile_transcripts(spark, 1).repartition(num_partitions)
-            extract_turns(warm, num_partitions=num_partitions) \
-                .select("conv_id").count()
-            t0 = time.time()
-            extracted = extract_turns(corpus, num_partitions=num_partitions)
-            out_rows = extracted.select("conv_id").count()
-            wall = time.time() - t0
+        warm = tile_transcripts(spark, 1).repartition(num_partitions)
+        extract_turns(warm, num_partitions=num_partitions) \
+            .select("conv_id").count()
+        t0 = time.time()
+        extracted = extract_turns(corpus, num_partitions=num_partitions)
+        out_rows = extracted.select("conv_id").count()
+        wall = time.time() - t0
         corpus.unpersist()
         assert out_rows == n_rows
         return {"cpus": cpus, "rows": out_rows, "wall_sec": round(wall, 3),

@@ -11,9 +11,9 @@ Usage (north-rule launch mode):
         [--partitions N] [--waves W] [--no-resume]
 
 Reads the transcript table (conv_id, turn_idx, role, text, tool, ts[, url]),
-runs the salted, checkpointed extraction job (waves sized from input bytes
-unless --waves is given), writes the turns + metrics tables and prints a
-one-line JSON summary of this run.
+runs the range-partitioned, checkpointed extraction job (waves sized from
+input bytes unless --waves is given), writes the turns + metrics tables and
+prints a one-line JSON summary of this run.
 
 With no --input, runs on the built-in deterministic fixture corpus (smoke
 mode / this sandbox).

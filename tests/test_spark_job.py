@@ -1,5 +1,6 @@
-"""Spark-level integration tests: corpus → salted extraction → per-turn
-equality, checkpoint resume, metrics (north-rule surface)."""
+"""Spark-level integration tests: corpus → range-partitioned extraction →
+per-turn equality, checkpoint resume, output layout, metrics (north-rule
+surface)."""
 
 import json
 import os
@@ -77,7 +78,7 @@ def test_metrics_not_inflated(spark, tmp_path_factory):
     metrics = spark.read.parquet(os.path.join(out, "metrics"))
     total_docs = metrics.agg(F.sum("docs_in")).collect()[0][0]
     assert total_docs == 30 == r["rows"]
-    # resume run must not duplicate metrics rows (dynamic overwrite)
+    # resume run must not duplicate metrics rows (plain overwrite)
     run_extraction_job(spark, transcripts, out, num_partitions=8,
                        part_buckets=8)
     total_docs2 = (spark.read.parquet(os.path.join(out, "metrics"))
@@ -261,10 +262,35 @@ def test_plan_waves_sized_from_input_bytes(spark, tmp_path_factory):
         .rdd.getNumPartitions() == 3
 
 
+def test_one_wave_writes_about_one_file_per_bucket(spark, tmp_path_factory):
+    """Range partitioning puts each bucket in one extraction task except
+    at the task boundaries, so a one-wave job writes at most populated
+    buckets + tasks - 1 data files; metrics/ is one unpartitioned table
+    whose docs_in still sums to the row count."""
+    out = str(tmp_path_factory.mktemp("layout"))
+    transcripts = seeded_transcripts(spark, 64, seed=10)
+    r = run_extraction_job(spark, transcripts, out, num_partitions=4,
+                           part_buckets=8, waves=1)
+    assert r["rows"] == 64
+    turns_dir = os.path.join(out, "turns")
+    bucket_dirs = [d for d in os.listdir(turns_dir)
+                   if d.startswith("part_bucket=")]
+    files = [f for d in bucket_dirs
+             for f in os.listdir(os.path.join(turns_dir, d))
+             if f.endswith(".parquet")]
+    assert len(files) <= len(bucket_dirs) + 3, (len(files), bucket_dirs)
+    metrics_dir = os.path.join(out, "metrics")
+    assert not any(d.startswith("part_bucket=")
+                   for d in os.listdir(metrics_dir))
+    metrics = spark.read.parquet(metrics_dir)
+    assert "part_bucket" in metrics.columns
+    assert metrics.agg(F.sum("docs_in")).collect()[0][0] == 64
+
+
 def test_salting_spreads_conversations(spark):
-    from trek_spark.spark.job import salted
+    from trek_spark.spark.job import range_partitioned
     t = seeded_transcripts(spark, 64, seed=6)
-    df = salted(t, 8)
+    df = range_partitioned(t, 8)
     parts = df.withColumn("pid", F.spark_partition_id()) \
         .groupBy("pid").count().collect()
     assert len(parts) > 1  # one conversation cannot pin a single partition
@@ -272,9 +298,10 @@ def test_salting_spreads_conversations(spark):
 
 def test_giant_conversation_skew(spark, tmp_path_factory):
     """North-rule skew clause: a single conversation holding most of the
-    corpus must not pin one partition. The salt includes turn_idx, so one
-    conv_id spreads across SALT_BUCKETS partitions; verify the spread and
-    that the job completes with correct output."""
+    corpus must not pin one partition. The range keys include turn_idx,
+    so one conv_id splits at turn boundaries across as many partitions as
+    its share of the rows; verify the spread and that the job completes
+    with correct output."""
     from pyspark.sql import functions as F
 
     base = seeded_transcripts(spark, 8, seed=7)
@@ -292,8 +319,8 @@ def test_giant_conversation_skew(spark, tmp_path_factory):
                      F.lit(None).cast("string").alias("url")))
     skewed = base.unionByName(giant)
 
-    from trek_spark.spark.job import salted
-    parts = (salted(skewed, 8)
+    from trek_spark.spark.job import range_partitioned
+    parts = (range_partitioned(skewed, 8)
              .filter(F.col("conv_id") == "conv-giant")
              .withColumn("pid", F.spark_partition_id())
              .select("pid").distinct().count())

@@ -1,25 +1,24 @@
-"""The extraction job: scan → salt/repartition → extract → write, with
+"""The extraction job: scan → range-partition → extract → write, with
 per-partition lineage/metrics and a table-native checkpoint.
 
 Physical plan (SURVEY.md §3.4):
 
-* One shuffle per wave write — ``repartition(N, conv_id, salt)`` where
-  ``salt = pmod(hash(conv_id, turn_idx), S)``, S = ``SALT_BUCKETS``
-  (16). The salt defuses long-conversation skew the optimizer can't see
-  (cost is Python CPU per document, not bytes, so AQE's byte-based skew
-  split won't trigger); including turn_idx in the salt hash spreads a
-  single giant conversation across S partitions while keeping placement
-  deterministic.
+* One shuffle per wave write — ``repartitionByRange(N, part_bucket,
+  conv_id, turn_idx)`` (:func:`range_partitioned`). The sampled bounds
+  balance rows per task and give each task a contiguous run of buckets,
+  so a wave writes at most ``populated buckets + N − 1`` files, and
+  ``turn_idx`` splits a giant conversation across tasks: skew AQE's
+  byte-based split can't see (cost is Python CPU per document). AQE
+  never coalesces a shuffle with an explicit N.
 * The shuffle's partition count is the extraction stage's task count, and
   it is sized from the wave's bytes (:func:`plan_waves`): one task per
   ``WAVE_BYTES_PER_CORE / 4`` (16 MiB) of the wave's estimated input,
   clamped to ``[defaultParallelism, 4 × defaultParallelism]``. Each Python
-  task has a fixed start-up cost, and under the partitioned write each
-  task opens one file per output bucket it touches, so a small wave runs
-  one task per core. A full wave (64 MiB per core) and an input Spark
-  cannot size keep ``4 × defaultParallelism``: there the per-task cost is
-  small against the extraction, and the extra tasks keep the
-  large-document tail from straggling.
+  task has a fixed start-up cost, so a small wave runs one task per core.
+  A full wave (64 MiB per core) and an input Spark cannot size keep
+  ``4 × defaultParallelism``: there the per-task cost is small against
+  the extraction, and the extra tasks keep the large-document tail from
+  straggling.
 * Extraction runs in ``mapInPandas`` (narrow, post-shuffle): Arrow batches
   in, result + per-row lineage columns out. No further shuffle — the write
   is partition-local.
@@ -57,14 +56,15 @@ Physical plan (SURVEY.md §3.4):
   counts compressed parquet), which bounds what a kill -9 loses; an input
   that small is one wave. Cost model: each wave re-scans the
   input (the bucket predicate is a computed hash, not prunable on generic
-  parquet); extraction is Python-CPU-bound at ~100x the scan cost, so the
-  extra scans are noise, and on an Iceberg input bucketed by conv_id the
-  scan prunes too.
+  parquet), and the range bounds add one sampling pass over the wave's
+  input inside the same SQL execution; extraction is Python-CPU-bound at
+  ~100x the scan cost, so the extra scans are noise, and on an Iceberg
+  input bucketed by conv_id the scan prunes too.
 * The ``metrics/`` side-table is derived data: computed ONCE per run,
   after the last wave, over every committed bucket, from the lineage
-  columns each written row carries — outside the no-coalesce scope, so
-  AQE coalesces its small shuffle. A crash before that step is repaired
-  by the next run that commits.
+  columns each written row carries, as one unpartitioned table (plain
+  overwrite; the ``turns/`` listing runs on the driver). A crash before
+  that step is repaired by the next run that commits.
 """
 
 from __future__ import annotations
@@ -90,16 +90,13 @@ UNKNOWN_SIZE_WAVES = 4
 # Arrow batch cap for the extraction stage: about five 28 KB pages, the
 # batch the row cap yielded with four fixed waves.
 ARROW_BATCH_BYTES = 128 << 10
-# Salt values per conversation (S in ``pmod(hash(conv_id, turn_idx), S)``):
-# one giant conversation spreads over at most this many partitions.
-SALT_BUCKETS = 16
 
 
 @contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a session conf for the duration of a block, then restore it
-    (round-1 ADVICE: extract_turns leaked coalescePartitions=false into
-    every later relational query on the shared session)."""
+    """Set a session conf for the duration of a block, then restore it,
+    so a job's settings do not leak into later queries on the shared
+    session (round-1 ADVICE)."""
     try:
         prev = spark.conf.get(key)
     except Exception:
@@ -114,14 +111,14 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, prev)
 
 
-def salted(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Add skew-defusing salt and repartition on (conv_id, salt)."""
-    return (
-        df.withColumn(
-            "salt", F.pmod(F.hash("conv_id", "turn_idx"),
-                           F.lit(SALT_BUCKETS)))
-        .repartition(num_partitions, "conv_id", "salt")
-    )
+def range_partitioned(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Range-repartition ``df`` into ``num_partitions`` on ``(part_bucket,
+    conv_id, turn_idx)``, or ``(conv_id, turn_idx)`` without
+    ``part_bucket``; Spark samples the bounds from ``df``."""
+    keys = ["conv_id", "turn_idx"]
+    if "part_bucket" in df.columns:
+        keys.insert(0, "part_bucket")
+    return df.repartitionByRange(num_partitions, *keys)
 
 
 def extract_turns(df: DataFrame,
@@ -129,18 +126,15 @@ def extract_turns(df: DataFrame,
     """transcripts(conv_id, turn_idx, role, text, tool, ts[, url]) →
     extracted turns with result + lineage columns.
 
-    Callers that execute this plan should disable AQE partition coalescing
-    for the stage (see ``scoped_conf``): coalescing merges post-shuffle
-    partitions by BYTES, but extraction cost is Python CPU per document —
-    byte-based coalescing was measured to halve effective parallelism on
-    local[32]. The partition count defaults to :func:`plan_waves`'s task
-    count for ``df`` as one wave: one task per 16 MiB of its estimated
-    size, between ``defaultParallelism`` and ``4 × defaultParallelism``
-    (the upper bound when Spark cannot size ``df``)."""
+    The rows are range-partitioned (:func:`range_partitioned`) into
+    ``num_partitions`` extraction tasks. The count defaults to
+    :func:`plan_waves`'s task count for ``df`` as one wave: one task per
+    16 MiB of its estimated size, between ``defaultParallelism`` and
+    ``4 × defaultParallelism`` (the upper bound when Spark cannot size
+    ``df``); fewer when ``df`` has fewer distinct keys."""
     if num_partitions is None:
         num_partitions = plan_waves(df, 1)[1]
-    salted_df = salted(df, num_partitions)
-    return salted_df.drop("salt").mapInPandas(
+    return range_partitioned(df, num_partitions).mapInPandas(
         extract_map_in_pandas, schema=extract_schema(df))
 
 
@@ -301,11 +295,11 @@ def plan_waves(transcripts: DataFrame, n_buckets: int,
 def _write_metrics(turns: DataFrame, buckets: set[int],
                    metrics_dir: str) -> None:
     """Derive the per-(bucket, partition) side-table of ``buckets`` from
-    the lineage columns of the written rows and overwrite those
-    partitions of ``metrics_dir``. A bucket's rows all come from one
-    write job, so (part_bucket, part_id, batch_idx) names one Arrow
-    batch; per-row facts aggregate directly, and the batch-level wall_ms
-    is deduped with first()."""
+    the lineage columns of the written rows and overwrite ``metrics_dir``
+    with it, unpartitioned (``buckets`` is every committed bucket). A
+    bucket's rows all come from one write job, so (part_bucket, part_id,
+    batch_idx) names one Arrow batch; per-row facts aggregate directly,
+    and the batch-level wall_ms is deduped with first()."""
     per_batch = (
         turns.filter(F.col("part_bucket").isin(sorted(buckets)))
         .select("part_bucket", "part_id", "batch_idx", "doc_bytes",
@@ -325,10 +319,7 @@ def _write_metrics(turns: DataFrame, buckets: set[int],
              F.sum("wall_ms").alias("wall_ms"),
              F.count("*").alias("batches"))
     )
-    with scoped_conf(turns.sparkSession,
-                     "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        (metrics.write.mode("overwrite")
-         .partitionBy("part_bucket").parquet(metrics_dir))
+    metrics.write.mode("overwrite").parquet(metrics_dir)
 
 
 def run_extraction_job(
@@ -348,9 +339,10 @@ def run_extraction_job(
     Layout under output_dir:
       turns/      parquet partitioned by part_bucket (data + lineage cols)
       metrics/    per-(bucket, partition) docs_in, failures, bytes_in,
-                  wall_ms, batches; partitioned by part_bucket, derived
-                  once per committing run from turns/ over every committed
-                  bucket (dynamic overwrite, idempotent on resume)
+                  wall_ms, batches, part_bucket; one unpartitioned
+                  table, derived once per committing run from turns/
+                  over every committed bucket (plain overwrite,
+                  idempotent on resume)
       _committed/ one marker file per completed bucket, written right
                   after the wave's write job returns (the resume
                   checkpoint)
@@ -362,8 +354,8 @@ def run_extraction_job(
     wave's extraction runs ``num_partitions`` tasks, by default sized from
     the wave's share of the input bytes (:func:`plan_waves`). No
     driver-local state. Each wave's counts come from an ``Observation``
-    on its write; extraction runs with AQE coalescing off and Arrow
-    batches capped at ``ARROW_BATCH_BYTES``.
+    on its write; extraction runs with Arrow batches capped at
+    ``ARROW_BATCH_BYTES``.
 
     ``output_table`` selects the Iceberg sink (SURVEY §1.2/§3.4:
     ``writeTo(...).overwritePartitions()``) when the Iceberg runtime is on
@@ -395,8 +387,6 @@ def run_extraction_job(
     rows_out = failures = 0
     with (scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode",
                       "dynamic"),
-          scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled",
-                      "false"),
           scoped_conf(spark, "spark.sql.execution.arrow.maxBytesPerBatch",
                       str(ARROW_BATCH_BYTES))):
         for wave in wave_groups:
@@ -431,8 +421,14 @@ def run_extraction_job(
             # of only empty buckets (no data files) readable
             lineage = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                                 for f in METRICS_SCHEMA.fields)
-            turns = spark.read.schema(
-                f"{lineage}, error string, part_bucket int").parquet(turns_dir)
+            # list the bucket directories on the driver, not in a job
+            with scoped_conf(
+                    spark,
+                    "spark.sql.sources.parallelPartitionDiscovery.threshold",
+                    str(part_buckets + 1)):
+                turns = spark.read.schema(
+                    f"{lineage}, error string, part_bucket int"
+                ).parquet(turns_dir)
         _write_metrics(turns, done, metrics_dir)
 
     wall = time.time() - t0

@@ -6,16 +6,17 @@ Structured Streaming:
 
 * ``stream_extract_turns`` — ``readStream`` over a transcript directory →
   [exact dedup →] extraction → parquet sink with a checkpoint location.
-  Without dedup the extraction is the batch job's salted ``mapInPandas``
-  plan (``extract_turns`` is stateless per row, so it is streaming-safe
-  as-is); with dedup the same ``mapInPandas`` runs directly on the output
-  of ``stream_dedup_exact``'s state operator, so a micro-batch is one
-  Python stage. End-to-end exactly-once: the file source records consumed
-  files and the file sink commits atomically per micro-batch, so a crashed
-  micro-batch replays without duplication — the streaming counterpart of
-  the batch job's wave-committed resume. Drained with
-  ``trigger(availableNow=True)`` by default (process all available input,
-  then stop); a deployment runs it on the default micro-batch trigger.
+  Without dedup the extraction is the batch job's range-partitioned
+  ``mapInPandas`` plan (``extract_turns`` is stateless per row, so it is
+  streaming-safe as-is); with dedup the same ``mapInPandas`` runs
+  directly on the output of ``stream_dedup_exact``'s state operator, so
+  a micro-batch is one Python stage. End-to-end exactly-once: the file
+  source records consumed files and the file sink commits atomically per
+  micro-batch, so a crashed micro-batch replays without duplication — the
+  streaming counterpart of the batch job's wave-committed resume. Drained
+  with ``trigger(availableNow=True)`` by default (process all available
+  input, then stop); a deployment runs it on the default micro-batch
+  trigger.
 * ``stream_turn_rate`` — watermarked windowed turn counts (late turns
   beyond the watermark are dropped, state is bounded), the monitoring
   side-channel for a long-running ingest; the driver contract's
@@ -62,16 +63,17 @@ def stream_extract_turns(
     stage of each micro-batch. Every Python task has a fixed cost
     whatever rows it carries, so more tasks than cores only add cost.
 
-    ``dedup=False``: the batch job's salted plan (``extract_turns``) with
-    ``num_partitions`` extraction partitions; the salt defuses
-    long-conversation skew inside each micro-batch.
+    ``dedup=False``: the batch job's plan (``extract_turns``) with at most
+    ``num_partitions`` extraction partitions; each micro-batch samples
+    its range bounds over ``(conv_id, turn_idx)``, which splits a long
+    conversation across tasks inside the micro-batch.
 
     ``dedup=True`` runs :func:`stream_dedup_exact` and extraction in ONE
     stage: ``mapInPandas`` applies directly to the dedup output, with no
-    salted repartition. The state operator's content-hash partitioning
+    range repartition. The state operator's content-hash partitioning
     already spreads each conversation's turns uniformly, which is the
-    job the salt does, and re-delivered pages are dropped before they
-    cost extraction CPU. The state partition count is ``num_partitions``:
+    job the range bounds do, and re-delivered pages are dropped before
+    they cost extraction CPU. The state partition count is ``num_partitions``:
     the query starts under that ``spark.sql.shuffle.partitions`` (the
     caller's session conf is restored afterwards). Spark clones the
     session conf at ``start()`` and records the count in the checkpoint's
