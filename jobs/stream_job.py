@@ -9,10 +9,12 @@
 
 File-source stream of transcript turns -> [exact dedup ->] the batch job's
 fused extraction -> checkpointed parquet sink (exactly-once across
-restarts). With --dedup, dedup and extraction run as one Python stage per
-micro-batch. Default is trigger(availableNow=True): drain what's there and
-exit (the cron-batch deployment shape); --continuous keeps the query
-running on the default micro-batch trigger.
+restarts). With --dedup, a vectorized pick keeps each text's earliest copy
+in the micro-batch and Spark's native streaming dedup drops texts seen in
+earlier micro-batches, with extraction fused into the dedup's stage; no
+per-key Python call. Default is trigger(availableNow=True): drain what's
+there and exit (the cron-batch deployment shape); --continuous keeps the
+query running on the default micro-batch trigger.
 """
 
 from __future__ import annotations
@@ -42,8 +44,9 @@ def main() -> None:
     if args.dedup_ttl_ms is not None and not args.dedup:
         ap.error("--dedup-ttl-ms needs --dedup")
     if args.dedup_ttl_ms is not None and not args.continuous:
-        ap.error("--dedup-ttl-ms needs --continuous: a pending state "
-                 "timeout never lets an availableNow drain terminate")
+        ap.error("--dedup-ttl-ms needs --continuous: it expires texts by "
+                 "wall time, so a drain's output would depend on when it "
+                 "runs")
 
     from trek_spark.spark.session import get_spark
     from trek_spark.spark.streaming import stream_extract_turns

@@ -103,10 +103,10 @@ def test_stream_pdf_turns_dispatch(spark, tmp_path_factory):
 
 
 def test_stream_dedup_exact_stateful(spark, tmp_path_factory):
-    """applyInPandasWithState in-stream dedup: the first turn per content
-    hash passes; duplicates are dropped BOTH within a micro-batch and
-    across micro-batches (state persists between batches); unique content
-    always passes."""
+    """stream_dedup_exact (vectorized in-batch pick + native streaming
+    dedup): the earliest turn per content hash passes; duplicates are
+    dropped BOTH within a micro-batch and across micro-batches (state
+    persists between batches); unique content always passes."""
     import datetime as dt
 
     from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
@@ -188,9 +188,12 @@ def _html_rows(batch):
 
 def test_stream_dedup_is_one_stage_on_num_partitions(spark,
                                                       tmp_path_factory):
-    """dedup=True: the state operator runs on num_partitions partitions
-    (not the session's shuffle partitions) and extraction is fused into
-    its stage, so the micro-batch plan holds exactly one Exchange. The
+    """dedup=True plan shape: the in-batch pick's repartition and the
+    state operator's shuffle both hash content_hash into num_partitions
+    partitions (not the session's shuffle partitions), so the plan holds
+    exactly those two Exchanges; there is one StreamingDeduplicate on
+    num_partitions state partitions, and extraction is fused into its
+    stage (no Exchange between the extraction MapInPandas and it). The
     caller's session conf is left as it was."""
     import re
 
@@ -209,7 +212,16 @@ def test_stream_dedup_is_one_stage_on_num_partitions(spark,
     assert q.awaitTermination(300)
     assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2
     plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
-    assert len(re.findall(r"\bExchange\b", plan)) == 1
+    exchanges = re.findall(r"\bExchange\b.*", plan)
+    assert len(exchanges) == 2
+    assert all(re.match(r"Exchange hashpartitioning\(content_hash#\d+, 2\)",
+                        e) for e in exchanges), exchanges
+    dedups = re.findall(r"StreamingDeduplicate .*numPartitions = (\d+)\]",
+                        plan)
+    assert dedups == ["2"]
+    above = plan[plan.index("MapInPandas extract_map_in_pandas"):
+                 plan.index("StreamingDeduplicate")]
+    assert "Exchange" not in above
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.read.parquet(out).count() == 2
 
@@ -248,6 +260,94 @@ def test_stream_dedup_across_restart(spark, tmp_path_factory):
     assert keys() == {("c1", 0), ("c1", 1), ("c9", 1)}
     assert q2.lastProgress["numInputRows"] == 2
     assert q2.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2
+
+
+def test_dedup_earliest_copy_wins_across_files_in_one_batch(
+        spark, tmp_path_factory):
+    """Two files in ONE availableNow micro-batch: the earlier-ts copy of a
+    text sits in the smaller file. Spark plans larger files first, so a
+    dedup that keeps the first copy its task reads would keep the later
+    copy; the earliest (ts, conv_id, turn_idx) copy must survive."""
+    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
+
+    d = str(tmp_path_factory.mktemp("earliest_in"))
+    out = str(tmp_path_factory.mktemp("earliest_out"))
+    ckpt = str(tmp_path_factory.mktemp("earliest_ckpt"))
+    big = [("c9", 0, "Shared body.", 30)] + [
+        ("c9", i, f"Padding body {i} " + "filler " * 200, 30 + i)
+        for i in range(1, 24)]
+    for batch in (big, [("c1", 0, "Shared body.", 0)]):
+        spark.createDataFrame(_html_rows(batch), TRANSCRIPT_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(d)
+    q = stream_extract_turns(spark, d, out, ckpt, num_partitions=2,
+                             dedup=True)
+    assert q.awaitTermination(300)
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"]] == [len(big) + 1]
+    keys = {(r.conv_id, r.turn_idx) for r in
+            spark.read.parquet(out).select("conv_id", "turn_idx").collect()}
+    assert ("c1", 0) in keys and ("c9", 0) not in keys
+    assert len(keys) == len(big)
+
+
+def test_stream_dedup_ttl_expires_in_continuous_query(spark,
+                                                      tmp_path_factory):
+    """dedup_ttl_ms in a continuous query: a re-delivery inside the TTL is
+    dropped, and one after expiry is admitted.
+
+    The real expiry: a text is evicted at the end of the micro-batch that
+    follows the first one starting at least dedup_ttl_ms after its first
+    sighting (Spark runs that follow-up at once, without input if none is
+    waiting); copies arriving before the eviction are dropped. So a text
+    lives at least the TTL, under steady input about the TTL plus one or
+    two micro-batches, and without input it is not evicted. A later
+    sighting does not extend its life (the old ProcessingTimeTimeout
+    state was refreshed by every sighting)."""
+    import datetime as dt
+    import time
+
+    from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
+
+    ttl_ms = 6000
+    d = str(tmp_path_factory.mktemp("ttl_run_in"))
+    out = str(tmp_path_factory.mktemp("ttl_run_out"))
+    ckpt = str(tmp_path_factory.mktemp("ttl_run_ckpt"))
+    q = stream_extract_turns(spark, d, out, ckpt, num_partitions=2,
+                             dedup=True, dedup_ttl_ms=ttl_ms,
+                             available_now=False)
+
+    def deliver(conv_id, body):
+        spark.createDataFrame(_html_rows([(conv_id, 0, body, 0)]),
+                              TRANSCRIPT_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(d)
+        q.processAllAvailable()
+
+    def started():
+        """Start time (epoch s) of each micro-batch that read input."""
+        return [dt.datetime.fromisoformat(
+                    p["timestamp"].replace("Z", "+00:00")).timestamp()
+                for p in q.recentProgress if p["numInputRows"]]
+
+    def evicted():
+        return sum(op.get("numRowsRemoved", 0) for p in q.recentProgress
+                   for op in p["stateOperators"])
+
+    try:
+        deliver("c1", "Repeated body.")
+        deliver("c2", "Repeated body.")  # inside the TTL: dropped
+        first, second = started()
+        assert second - first < ttl_ms / 1000  # the premise of the drop
+        time.sleep(max(0.0, first + ttl_ms / 1000 - time.time()) + 0.5)
+        deliver("c3", "Fresh body.")  # a micro-batch past the TTL
+        deadline = time.time() + 60
+        while evicted() < 1 and time.time() < deadline:
+            time.sleep(0.2)
+        assert evicted() == 1
+        deliver("c4", "Repeated body.")  # after expiry: admitted
+    finally:
+        q.stop()
+    keys = {r.conv_id for r in spark.read.parquet(out).collect()}
+    assert keys == {"c1", "c3", "c4"}
 
 
 @pytest.mark.parametrize("kwargs", [
