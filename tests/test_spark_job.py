@@ -287,6 +287,55 @@ def test_one_wave_writes_about_one_file_per_bucket(spark, tmp_path_factory):
     assert metrics.agg(F.sum("docs_in")).collect()[0][0] == 64
 
 
+def test_workers_keep_unchanged_zip_directories(spark):
+    """PySpark's worker calls ``importlib.invalidate_caches()`` before
+    every task. Once a worker has imported ``trek_spark.spark.udf``, that
+    call re-reads no unchanged zip or jar directory
+    (``trek_spark.spark.zip_directories``)."""
+    def probe(batches):
+        import os
+        import zipimport
+
+        import pandas as pd
+        from trek_spark.spark import udf, zip_directories  # noqa: F401
+
+        reads = getattr(zipimport, "_probe_reads", None)
+        if reads is None:
+            # First probe on this worker: count directory reads from here.
+            reads = zipimport._probe_reads = {"n": 0, "at_task_end": 0}
+            read_directory = zipimport._read_directory
+
+            def counted(archive):
+                reads["n"] += 1
+                return read_directory(archive)
+
+            zipimport._read_directory = counted
+            since_last_task = -1
+        else:
+            since_last_task = reads["n"] - reads["at_task_end"]
+        for _ in batches:
+            pass
+        reads["at_task_end"] = reads["n"]
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "installed": [zipimport.zipimporter.invalidate_caches
+                          is zip_directories._invalidate_if_changed],
+            "reads": [since_last_task]})
+
+    def run(tasks):
+        return (spark.range(0, tasks, numPartitions=tasks)
+                .mapInPandas(probe, "pid long, installed boolean, reads long")
+                .collect())
+
+    # Idle workers are taken first in, first out: the first job has
+    # enough tasks to reach every idle worker, so the second job's
+    # workers all carry a counter from it.
+    run(16)
+    reporting = [r for r in run(2) if r.reads >= 0]
+    assert reporting
+    assert all(r.installed and r.reads == 0 for r in reporting), reporting
+
+
 def test_salting_spreads_conversations(spark):
     from trek_spark.spark.job import range_partitioned
     t = seeded_transcripts(spark, 64, seed=6)

@@ -75,10 +75,9 @@ _SESSION_GAP_S = 1800  # classic 30-minute inactivity boundary
 def q_events_sessionize(spark, sf_dir):
     """Sessionization — split each user's event stream on >30-minute
     inactivity gaps and aggregate per session (the canonical
-    clickstream/transcript operator; batch formulation of what
-    ``applyInPandasWithState`` does in the streaming surface). One
-    shuffle on user_id: lag detects boundaries, a running sum numbers
-    sessions, and the session rollup reuses the same partitioning.
+    clickstream/transcript operator). One shuffle on user_id: lag
+    detects boundaries, a running sum numbers sessions, and the session
+    rollup reuses the same partitioning.
     All-integer epoch arithmetic, so the oracle hashes exactly."""
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     cum = (Window.partitionBy("user_id").orderBy("t", "event_id")

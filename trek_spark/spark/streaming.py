@@ -67,7 +67,13 @@ def stream_extract_turns(
 
     ``num_partitions`` (default ``defaultParallelism``) sizes each Python
     stage of a micro-batch. Every Python task has a fixed cost
-    whatever rows it carries, so more tasks than cores only add cost.
+    whatever rows it carries, so more tasks than cores only add cost:
+    0.1-0.2 s from submit to the UDF's first batch on a warm worker,
+    mostly JVM planning and scheduling (task launch to UDF entry is about
+    0.07 s). The worker's re-read of every zip/jar directory before
+    each task, 0.2-0.45 s more, is skipped for unchanged archives
+    (:mod:`.zip_directories`, installed when the worker imports
+    :mod:`.udf`).
 
     ``dedup=False``: the batch job's plan (``extract_turns``) with at most
     ``num_partitions`` extraction partitions; each micro-batch samples

@@ -30,6 +30,12 @@ from pyspark.sql.types import (
 )
 
 from ..extract.pipeline import trek_parse
+from .zip_directories import keep_unchanged_zip_directories
+
+# Every Python stage's UDF unpickles through this module, so each worker
+# installs the rule at its first task and skips re-reading unchanged
+# zip/jar directories before every later one.
+keep_unchanged_zip_directories()
 
 # Arrow-safe result struct (SURVEY.md §1.2 mapping of TrekResponse,
 # reference src/types.rs:120-138). schema_org stays JSON-encoded string —
