@@ -4,10 +4,10 @@
 ``web_pages(7, 160, 1_600_000)`` plus ``chat_turns(7, 160)``, i.e. pages,
 share pages, chat fragments and PDFs) run through ``extract_one``, or
 ``extract_pdf_one`` for ``tool == "pdf"`` turns, exactly as the job's
-Arrow UDF calls them.  Each turn's ``extracted_text``, ``title``,
-``word_count``, ``error`` and ``content_spans`` are hashed to one sha256
-and compared with the committed digest in ``tests/data/``, so a failure
-names the turns whose output changed.
+Arrow UDF calls them.  Each turn's ``RESULT_SCHEMA`` fields, all but the
+timing field ``parse_time_ms``, are hashed to one sha256 and compared
+with the committed digest in ``tests/data/``, so a failure names the
+turns whose output changed.
 
 Any change to ``dom/``, ``extract/`` or ``spark/udf.py`` that is meant to
 keep outputs identical must leave this test green.  When a change is
@@ -26,7 +26,8 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIGEST = os.path.join(ROOT, "tests", "data", "extraction_snapshot.json")
-FIELDS = ("extracted_text", "title", "word_count", "error", "content_spans")
+# Every output column except the wall-clock ``parse_time_ms``.
+UNHASHED = ("parse_time_ms",)
 
 
 def turn_digests() -> dict[str, str]:
@@ -34,14 +35,16 @@ def turn_digests() -> dict[str, str]:
     if ROOT not in sys.path:
         sys.path.insert(0, ROOT)
     from perfbench import gen
-    from trek_spark.spark.udf import extract_one, extract_pdf_one
+    from trek_spark.spark.udf import (
+        RESULT_SCHEMA, extract_one, extract_pdf_one)
 
+    fields = [f.name for f in RESULT_SCHEMA.fields if f.name not in UNHASHED]
     out = {}
     for t in gen.web_pages(7, 160, 1_600_000) + gen.chat_turns(7, 160):
         doc = t.doc
         r = (extract_pdf_one(doc.text) if doc.tool == "pdf"
              else extract_one(doc.text, doc.url))
-        blob = json.dumps({k: r[k] for k in FIELDS}, sort_keys=True,
+        blob = json.dumps({k: r[k] for k in fields}, sort_keys=True,
                           ensure_ascii=False, separators=(",", ":"))
         digest = hashlib.sha256(blob.encode("utf-8")).hexdigest()
         out[f"{t.conv_id}/{t.turn_idx}"] = digest
