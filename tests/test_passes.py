@@ -307,3 +307,109 @@ def test_count_words_cjk_fast_path_equivalence():
     ]
     for html in cases:
         assert count_words(html) == reference(html), repr(html)
+
+
+def test_pre_or_code_set_matches_ancestor_walk():
+    """The per-pass set holds exactly the elements whose ancestor walk
+    finds a pre/code, including nested pre/code and a root inside one."""
+    html = ("<div><pre><span>a<code><b>x</b></code></span></pre>"
+            "<p><code><i><em>y</em></i></code><span>z</span></p>"
+            "<code><pre><u>w</u></pre></code><div><a>v</a></div></div>")
+    body = body_of(parse_html(html))
+    inside = passes._pre_or_code_descendants(body)
+    nodes = body.iter_elements()
+    assert inside == {n for n in nodes if passes._inside_pre_or_code(n)}
+    assert {n.tag for n in inside} == {"span", "code", "b", "i", "em",
+                                       "pre", "u"}
+    inner = next(n for n in nodes if n.tag == "b")
+    assert passes._pre_or_code_descendants(inner) == {inner}
+
+
+def test_passes_keep_pre_and_code_content_exempt():
+    """Removal, div flattening and bare-span unwrapping skip everything
+    under a pre/code, also when the wrappers around the pre are unwrapped
+    in the same pass."""
+    chrome = '<span class="share-buttons">s</span>'
+    html = (f"<div><div><pre>{chrome}<div><b>k</b></div></pre></div></div>"
+            f"<p><code><span>c</span>{chrome}</code><span>t</span></p>")
+    out = run(html, passes.remove_clutter)
+    assert out.count("share-buttons") == 2
+    out = run(html, passes.selectors_pass)
+    assert out.count("share-buttons") == 2
+    out = run(html, passes.flatten_wrapper_elements_legacy)
+    assert out.startswith("<pre>") and "<div><b>k</b></div>" in out
+    out = run(html, passes.promote_semantics)
+    assert "<code><span>c</span>" in out and "<span>t</span>" not in out
+
+
+def test_nested_div_extraction_is_near_linear():
+    """A deep run of nested <div>s costs about linear time: 4x the depth
+    may take about 4x as long, not the ~16x of a per-node ancestor walk
+    (best of 3 runs at each depth)."""
+    import time
+    from trek_spark.spark.udf import extract_one
+
+    def best_time(depth):
+        html = ("<html><body>" + "<div>" * depth + "<p>deep text</p>"
+                + "</div>" * depth + "</body></html>")
+        best = None
+        for _ in range(3):
+            t0 = time.perf_counter()
+            r = extract_one(html)
+            dt = time.perf_counter() - t0
+            best = dt if best is None else min(best, dt)
+        assert r["error"] is None and r["extracted_text"] == "deep text"
+        return best
+
+    small, large = best_time(2_000), best_time(8_000)
+    assert large / small < 8, (small, large)
+
+
+def test_count_words_direct():
+    """Tags count as word breaks; any whitespace run, nbsp included,
+    separates words; CJK characters count one each."""
+    from trek_spark.extract.utils import count_words
+
+    assert count_words("") == 0
+    assert count_words("   \t\n ") == 0
+    assert count_words("<p></p><br/>") == 0
+    assert count_words("<b>bold</b>word") == 2
+    assert count_words("glued<br>words<i>x</i>y") == 4
+    assert count_words("a\t\tb\n\n\nc  d   e") == 5
+    assert count_words("  lead and trail  ") == 3
+    assert count_words("\n<p> one </p>\n") == 1
+    assert count_words("日本語 text 中文") == 6
+    assert count_words("<p>漢字</p>kanji<b>かな</b>") == 5
+    assert count_words("x<a href='日本'>y</a>") == 2
+
+
+def test_spaced_text_longer_matches_joined_length():
+    """The early-exit length check agrees with the joined text's length
+    at every limit, with words split across text nodes and runs of
+    whitespace (nbsp included) inside and between them."""
+    frags = [
+        "<div><h2>Title</h2></div>",
+        "<div><h2>Ti<b>tle</b></h2>  more\n\ttext <i>x</i>y\u00a0 </div>",
+        "<div> <span>a</span><span>b</span> <span> c</span> d </div>",
+        "<div><p>   </p><p></p>word<!-- c -->glued</div>",
+        "<div></div>",
+    ]
+    for frag in frags:
+        node = body_of(parse_html(frag)).children[0]
+        n = len(" ".join(node.text_content().split()))
+        for limit in range(n + 3):
+            assert passes._spaced_text_longer(node, limit) == (n > limit), \
+                (frag, limit)
+
+
+def test_removal_marks_heading_of_emptied_section():
+    """Removing a section's only content marks the heading that
+    introduced it, directly or inside a wrapper holding little else."""
+    html = ('<h2>Share</h2><!-- x --> <div class="share-buttons">s</div>'
+            '<div><h3>Follow us</h3> ok</div><div class="share-buttons">f</div>'
+            '<div><h3>Long</h3><p>plenty of other words here</p></div>'
+            '<div class="share-buttons">g</div>')
+    out = run(html, passes.remove_clutter)
+    assert '<h2 data-trek-orphaned="1">Share</h2>' in out
+    assert '<h3 data-trek-orphaned="1">Follow us</h3>' in out
+    assert "<h3>Long</h3>" in out and "share-buttons" not in out

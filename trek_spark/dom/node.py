@@ -79,6 +79,15 @@ def post_order_elements(root: "Node") -> list:
     return out
 
 
+def release_memos() -> None:
+    """Drop the memo's hold on the last walked tree. Called when a
+    document is done, so its tree is unreachable garbage at the worker's
+    per-document gen-0 sweep instead of surviving it into an older
+    generation that is not collected until the task ends."""
+    bump_tick()
+    _postorder_memo.clear()
+
+
 class Node:
     __slots__ = ("type", "tag", "attrs", "children", "parent", "text",
                  "_snap_tick", "_snap_all", "_snap_el", "_snap_text")

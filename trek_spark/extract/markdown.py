@@ -35,6 +35,21 @@ _MULTI_NL_RE = re.compile(r"\n{3,}")
 _BACKREF_RE = re.compile(r"\s*↩(?:︎)?\s*$")
 _QUOTE_ONLY_RE = re.compile(r"(?:> )+(?:  )?")
 _LANG_CLASS_RE = re.compile(r"(?:^|\s)(?:lang|language)-([A-Za-z0-9_+\-]+)")
+# Per-block and per-line rewrites, compiled once. Each call site first
+# checks a substring every match must contain, so the common line or
+# block that cannot match skips the regex engine.
+_SPACE_RUN_RE = re.compile(r" {2,}")
+_SPACE_RUN_BEFORE_TEXT_RE = re.compile(r" {2,}(?=\S)")
+_CELL_SPACE_RUN_RE = re.compile(" {4,}")
+_LINE_BREAK_WS_RE = re.compile(r"\s*\n\s*")
+_LEADING_ENUM_RE = re.compile(r"^(\d+)\.(?=\s)")
+_TRAILING_BREAKS_RE = re.compile(r"((?:  \n)+)\s*$")
+_ARABIC_PUNCT_AFTER_BOLD_RE = re.compile(
+    "(?<=[^\\s*]\\*\\*)(?=[\u060c\u061b\u061f])")
+_EMPHASIS_SPACE_PUNCT_RE = re.compile(r"(?<=\*) (?=[,.;:])")
+_SPACE_COLON_RE = re.compile(r"(?<=\S) :(?=\s|$)")
+_LINK_SPACE_PUNCT_RE = re.compile(
+    r"(\]\([^()\s]*(?:\\[()][^()\s]*)*\)) (?=[.,;:!?](?:\s|$))")
 
 _CODE_CHROME_CLASS = (
     "code__header", "code-header", "codeheader", "copy-button",
@@ -173,7 +188,9 @@ def escape_table_cell(s: str) -> str:
     # newlines map 1:1 to spaces (block boundaries inside a cell become
     # the double-space the golden corpus uses); no further collapsing
     s = s.replace("|", "\\|").replace("\r", "").replace("\n", " ")
-    return re.sub(" {4,}", "   ", s).strip()
+    if "    " in s:
+        s = _CELL_SPACE_RUN_RE.sub("   ", s)
+    return s.strip()
 
 
 # ---------------------------------------------------------------- links
@@ -1163,7 +1180,9 @@ class Renderer:
                 self.render_inline_node(n, buf)
             run.clear()
             # collapse space runs except the two-space hard-break marker
-            val = re.sub(r" {2,}(?=\S)", " ", buf.value())
+            val = buf.value()
+            if "  " in val:
+                val = _SPACE_RUN_BEFORE_TEXT_RE.sub(" ", val)
             # trim at the ends but keep spaces interior to the run — the
             # golden corpus preserves spaces around embedded display math
             # ("…is: \n$$", "$$\n , there")
@@ -1394,10 +1413,14 @@ class Renderer:
                 and "**" not in text[2:-2] and len(text) > 4:
             text = text[2:-2]
         # headings are single-line: internal hard breaks become spaces
-        text = re.sub(r"\s*\n\s*", " ", text)
-        text = re.sub(r" {2,}", " ", text).strip()
+        if "\n" in text:
+            text = _LINE_BREAK_WS_RE.sub(" ", text)
+        if "  " in text:
+            text = _SPACE_RUN_RE.sub(" ", text)
+        text = text.strip()
         # a leading "N." would parse as an ordered-list marker
-        text = re.sub(r"^(\d+)\.(?=\s)", r"\1\\.", text)
+        if text[:1].isdigit():
+            text = _LEADING_ENUM_RE.sub(r"\1\\.", text)
         if not text:
             return
         out.ensure_nl(2)
@@ -1408,7 +1431,8 @@ class Renderer:
         inner = self.render_inline(node)
         # collapse double spaces across inline-element boundaries, sparing
         # the two-space hard-break marker (spaces before \n)
-        inner = re.sub(r" {2,}(?=\S)", " ", inner)
+        if "  " in inner:
+            inner = _SPACE_RUN_BEFORE_TEXT_RE.sub(" ", inner)
         text = inner.strip()
         if not text:
             return
@@ -1591,7 +1615,8 @@ class Renderer:
         body_first = "".join(inline_parts).strip()
         # collapse double spaces across inline-element boundaries (same
         # rule as paragraphs), sparing two-space hard-break markers
-        body_first = re.sub(r" {2,}(?=\S)", " ", body_first)
+        if "  " in body_first:
+            body_first = _SPACE_RUN_BEFORE_TEXT_RE.sub(" ", body_first)
         # continuation lines after a hard break indent to the content
         # column (HN listing subtext lines)
         body_first = body_first.replace(
@@ -1833,7 +1858,9 @@ def _keep_trailing_breaks(inner: str, text: str) -> str:
     lines."""
     if not text:
         return text
-    m = re.search(r"((?:  \n)+)\s*$", inner)
+    # a match is all whitespace running to the end, so it starts inside
+    # the trailing whitespace: search only there
+    m = _TRAILING_BREAKS_RE.search(inner, len(inner.rstrip()))
     if m:
         n = m.group(1).count("\n")
         if n >= 2:
@@ -1850,15 +1877,20 @@ def post_process(md: str, footnotes: list[tuple[str, str]], title: str) -> str:
         whole = m.group(0)
         return whole[0] if whole and whole[0] != "[" else ""
 
-    s = _EMPTY_LINK_RE.sub(_empty_link_sub, s)
+    if "[](" in s:
+        s = _EMPTY_LINK_RE.sub(_empty_link_sub, s)
     # Arabic-script punctuation directly after a closing ** gets a space
     # (golden corpus convention for RTL comma/semicolon/question mark)
-    s = re.sub("(?<=[^\\s*]\\*\\*)(?=[\u060c\u061b\u061f])", " ", s)
+    if "**\u060c" in s or "**\u061b" in s or "**\u061f" in s:
+        s = _ARABIC_PUNCT_AFTER_BOLD_RE.sub(" ", s)
     # drop a stray space between closing emphasis and ASCII punctuation
     # ("*Journal* , 1962" → "*Journal*, 1962")
-    s = re.sub(r"(?<=\*) (?=[,.;:])", "", s)
-    s = _BANG_BANG_RE.sub(r"! \1", s)
-    s = _MULTI_NL_RE.sub("\n\n", s)
+    if "* " in s:
+        s = _EMPHASIS_SPACE_PUNCT_RE.sub("", s)
+    if "!![" in s or "![![" in s:
+        s = _BANG_BANG_RE.sub(r"! \1", s)
+    if "\n\n\n" in s:
+        s = _MULTI_NL_RE.sub("\n\n", s)
     # golden-corpus quirk: a lone space between two periods collapses
     # (". ." placeholder strings render as "..")
     s = s.replace(". .", "..")
@@ -1881,20 +1913,21 @@ def post_process(md: str, footnotes: list[tuple[str, str]], title: str) -> str:
     lines = s.split("\n")
     in_fence = False
     for i, line in enumerate(lines):
-        if line.lstrip().startswith("```"):
+        if "```" in line and line.lstrip().startswith("```"):
             in_fence = not in_fence
-        if _QUOTE_ONLY_RE.fullmatch(line):
+        if line[:2] == "> " and _QUOTE_ONLY_RE.fullmatch(line):
             cleaned.append(line)  # blank blockquote line "> " keeps its space
             continue
-        if not in_fence and "`" not in line and "$" not in line:
-            # prose keeps no space before a colon ("formulæ : 8" → "formulæ: 8")
-            line = re.sub(r"(?<=\S) :(?=\s|$)", ":", line)
         if not in_fence:
+            # prose keeps no space before a colon ("formulæ : 8" → "formulæ: 8")
+            if " :" in line and "`" not in line and "$" not in line:
+                line = _SPACE_COLON_RE.sub(":", line)
             # whitespace between a link and following ASCII punctuation
             # (left by removed tooltip/popover content) collapses
-            line = re.sub(r"(\]\([^()\s]*(?:\\[()][^()\s]*)*\)) (?=[.,;:!?](?:\s|$))",
-                          r"\1", line)
-        trailing = len(line) - len(line.rstrip(" "))
+            if ") " in line:
+                line = _LINK_SPACE_PUNCT_RE.sub(r"\1", line)
+        trailing = (len(line) - len(line.rstrip(" "))
+                    if line[-1:] == " " else 0)
         # a single trailing space survives when text runs straight into a
         # display-math fence ("…and they are \n$$" in the golden corpus)
         if trailing == 2 or (trailing == 1 and i + 1 < len(lines)

@@ -23,13 +23,8 @@ import re
 from typing import Optional
 from urllib.parse import urljoin
 
-from ..constants import (
-    EXACT_SELECTORS,
-    PARTIAL_SELECTORS,
-    TEST_ATTRIBUTES,
-)
+from ..constants import PARTIAL_SELECTORS, TEST_ATTRIBUTES
 from ..dom.node import COMMENT, ELEMENT, TEXT, Node
-from ..dom.select import compile_selector
 
 _HEADING_TAGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
 _CLUTTER_TAGS = frozenset(("script", "style", "nav", "footer", "header",
@@ -82,7 +77,6 @@ _HEADING_LEVEL_TOKEN_RE = re.compile(r"h\d-related$")
 _ELEMENTOR_CHROME_RE = re.compile(
     r"location-header|location-footer|nav-menu|site-logo|jet-ajax-search|"
     r"jet-engine-maps|jet-listing-grid|jet-search")
-_EXACT_COMPILED = [compile_selector(s) for s in EXACT_SELECTORS]
 
 
 def _inside_footnotes_container(node: Node) -> bool:
@@ -104,6 +98,25 @@ def _inside_pre_or_code(node: Node) -> bool:
             return True
         cur = cur.parent
     return False
+
+
+def _pre_or_code_descendants(root: Node) -> set:
+    """Elements of ``root``'s subtree (``root`` included) that have a
+    ``pre``/``code`` ancestor, for a whole pass in one traversal.
+
+    Asking ``_inside_pre_or_code`` per node walks every ancestor of every
+    node, which is quadratic in nesting depth. Each subtree is added once:
+    a ``pre``/``code`` already in the set had its whole subtree added by
+    an ancestor. The set stays exact while a pass unwraps or removes
+    elements that are not ``pre``/``code`` (an unwrapped ``div`` or
+    ``span`` hands its children a parent with the same ancestry)."""
+    if _inside_pre_or_code(root):
+        return set(root.iter_elements())
+    inside: set = set()
+    for n in root.iter_elements():
+        if n.tag in ("pre", "code") and n not in inside:
+            inside.update(n.iter_elements()[1:])
+    return inside
 
 
 def value_matches_partial(value: str, attr: str) -> bool:
@@ -189,36 +202,77 @@ def _mark_orphaned_heading(removed: Node) -> None:
     heading sibling, or the one inside a preceding wrapper) so the
     dangling-heading cleanup knows its section was emptied by REMOVAL
     rather than authored empty."""
-    cur = removed.prev_sibling()
-    while cur is not None:
+    parent = removed.parent
+    if parent is None:
+        return
+    siblings = parent.children
+    for i in range(removed.index_in_parent() - 1, -1, -1):
+        cur = siblings[i]
         if cur.type == ELEMENT:
             if cur.tag in _HEADING_TAGS:
                 cur.set("data-trek-orphaned", "1")
                 return
-            inner = None
-            for d in cur.iter_elements():
-                if d.tag in _HEADING_TAGS:
-                    inner = d
-                    break
+            inner = _first_heading(cur)
             if inner is not None:
-                wrap_text = " ".join(cur.text_content().split())
                 head_text = " ".join(inner.text_content().split())
-                if len(wrap_text) <= len(head_text) + 10:
+                if not _spaced_text_longer(cur, len(head_text) + 10):
                     inner.set("data-trek-orphaned", "1")
             return
         if cur.type == TEXT and cur.text.strip():
             return
-        cur = cur.prev_sibling()
+
+
+def _first_heading(node: Node) -> Optional[Node]:
+    """First heading element of ``node``'s subtree in document order,
+    walking only as far as it."""
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if n.tag in _HEADING_TAGS:
+            return n
+        for c in reversed(n.children):
+            if c.type == ELEMENT:
+                stack.append(c)
+    return None
+
+
+def _spaced_text_longer(node: Node, limit: int) -> bool:
+    """``len(" ".join(node.text_content().split())) > limit``, reading
+    text nodes only until the answer is known.
+
+    The length is the non-space characters plus one per gap between
+    words; a word may run across text nodes. It never shrinks as text is
+    appended, so the walk stops as soon as it passes ``limit``."""
+    chars = words = 0
+    glued = False  # the text so far ends inside a word
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if n.type != TEXT:
+            stack.extend(reversed(n.children))
+            continue
+        t = n.text
+        if not t:
+            continue
+        toks = t.split()
+        if toks:
+            chars += sum(map(len, toks))
+            words += len(toks) - (glued and not t[0].isspace())
+            if chars + words - 1 > limit:
+                return True
+        glued = not t[-1].isspace()
+    return False
 
 
 def remove_clutter(body: Node, remove_exact: bool = True,
                    remove_partial: bool = True) -> int:
     to_remove = []
     total_text = len(body.text_content())
+    in_code = _pre_or_code_descendants(body)
     for n in body.descendants_snapshot():
         if n.parent is None:
             continue
-        if _inside_pre_or_code(n):
+        if n in in_code:
             continue
         t = n.tag
         if t in _CLUTTER_TAGS:
@@ -318,27 +372,6 @@ def remove_clutter(body: Node, remove_exact: bool = True,
     return removed
 
 
-def remove_exact_selectors(body: Node) -> None:
-    """Apply EXACT_SELECTORS (`src/constants.rs:86-194`) as removals.
-
-    The reference applies these through its removal configuration; pre/code
-    subtrees are exempt, html/body never removed.
-    """
-    to_remove = []
-    for n in body.descendants_snapshot():
-        if n.parent is None or n.tag in ("html", "body"):
-            continue
-        if _inside_pre_or_code(n):
-            continue
-        for sel in _EXACT_COMPILED:
-            if sel.matches(n):
-                to_remove.append(n)
-                break
-    for n in to_remove:
-        if n.parent is not None and not _contains_math(n):
-            n.detach()
-
-
 # ------------------------------------------------------------- removals pre
 
 def selectors_pass(body: Node) -> int:
@@ -347,10 +380,11 @@ def selectors_pass(body: Node) -> int:
     # hoisted: the scan phase never mutates, and recomputing the full body
     # text per matched candidate was quadratic on widget-heavy documents
     total = len(body.text_content())
+    in_code = _pre_or_code_descendants(body)
     for n in body.descendants_snapshot():
         if n.parent is None:
             continue
-        if _inside_pre_or_code(n):
+        if n in in_code:
             continue
         if n.tag == "span" and "mw-headline" in n.classes():
             continue
@@ -587,10 +621,11 @@ def _legacy_div_flattenable(n: Node) -> bool:
 def flatten_wrapper_elements_legacy(body: Node) -> None:
     """Unwrap attribute-safe <div>s (`src/standardize_legacy.rs:166-251`).
     Pre subtrees exempt (the reference carves out pre regions)."""
+    in_code = _pre_or_code_descendants(body)
     for n in body.descendants_snapshot():
         if n.parent is None or n.tag != "div":
             continue
-        if _inside_pre_or_code(n):
+        if n in in_code:
             continue
         if not n.element_children():
             # text-only wrappers stay discrete so content-pattern removals
@@ -702,10 +737,11 @@ def promote_semantics(body: Node) -> None:
         if promote:
             n.tag = "p"
 
+    in_code = _pre_or_code_descendants(body)
     for n in _post_order(body):
         if n.tag != "span" or n.parent is None:
             continue
-        if _inside_pre_or_code(n):
+        if n in in_code:
             continue
         if not n.attrs:
             n.unwrap()

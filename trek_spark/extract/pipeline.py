@@ -20,7 +20,7 @@ import re
 import time
 from typing import Optional
 
-from ..dom.node import ELEMENT, TEXT, Node, inner_html, serialize
+from ..dom.node import Node, inner_html, release_memos
 from ..dom.parser import body_of, parse_html
 from . import elements, passes, removals_post
 from .head_scan import collect_from_dom
@@ -194,6 +194,9 @@ def trek_parse(html: str, url: Optional[str] = None,
         return _trek_parse_inner(html, url, options)
     finally:
         _parse_depth -= 1
+        if _parse_depth == 0:
+            release_memos()
+            removals_post.release_memos()
 
 
 def _trek_parse_inner(html: str, url: Optional[str] = None,

@@ -78,6 +78,13 @@ def _memo_fresh() -> None:
         _memo_tick[0] = _nodemod._TICK
 
 
+def release_memos() -> None:
+    """Drop the memos' hold on the last document's nodes (see
+    ``dom.node.release_memos``)."""
+    _text_memo.clear()
+    _ltl_memo.clear()
+
+
 def _text(n: Node) -> str:
     _memo_fresh()
     r = _text_memo.get(n)

@@ -21,7 +21,9 @@ _CJK_ANY_RE = re.compile("[\u3040-\u30ff\u3400-\u9fff\uac00-\ud7af\uf900-\ufaff]
 
 
 def count_words(html: str) -> int:
-    text = strip_html_tags(html)
+    # ``split()`` already skips whitespace runs and the ends, so only the
+    # tags need replacing (by a space, so words either side stay apart)
+    text = _TAG_RE.sub(" ", html)
     # no CJK anywhere: every whitespace token counts exactly 1 (the
     # dominant case -- skips the per-word per-char range scan)
     if _CJK_ANY_RE.search(text) is None:
