@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-from .node import COMMENT, DOCUMENT, ELEMENT, Node, VOID_ELEMENTS
+from .node import ELEMENT, TEXT, VOID_ELEMENTS, Node, bump_tick
 from .tokenizer import scan
 
 # Tags whose open implies closing an open <p> (HTML5 "closes a p element").
@@ -140,27 +140,31 @@ class _TreeBuilder(HTMLParser):
     def handle_starttag(self, tag, attrs):
         if tag in _CLOSE_TRIGGERS:
             self._close_implied(tag)
+        stack = self.stack
         # HTML5 implied <tr>: a cell opening directly inside a row-group
         # (or table) gets a synthesized row.
-        if tag in ("td", "th") and self.stack[-1].tag in (
+        if tag in ("td", "th") and stack[-1].tag in (
                 "thead", "tbody", "tfoot", "table"):
             tr = Node(ELEMENT, "tr")
-            self._top().append(tr)
-            self.stack.append(tr)
-        # first-declared attribute wins, per spec
-        adjust = tag == "svg" or self._in_svg()
-        adict: dict = {}
-        for k, v in attrs:
-            if adjust:
-                k = _SVG_ATTR_ADJUST.get(k, k)
-            if k not in adict:
-                adict[k] = v if v is not None else ""
+            stack[-1].append(tr)
+            stack.append(tr)
         el = Node(ELEMENT, tag)
-        if adict:
-            el.attrs = adict
-        self._top().append(el)
+        if attrs:
+            # first-declared attribute wins, per spec
+            adjust = tag == "svg" or self._svg_depth > 0
+            adict = el.attrs
+            for k, v in attrs:
+                if adjust:
+                    k = _SVG_ATTR_ADJUST.get(k, k)
+                if k not in adict:
+                    adict[k] = v if v is not None else ""
+        # a new element has no parent to detach from; parse_html bumps the
+        # mutation tick once for the whole tree
+        top = stack[-1]
+        el.parent = top
+        top.children.append(el)
         if tag not in VOID_ELEMENTS:
-            self.stack.append(el)
+            stack.append(el)
             if tag == "svg":
                 self._svg_depth += 1
 
@@ -183,6 +187,12 @@ class _TreeBuilder(HTMLParser):
         if tag in VOID_ELEMENTS:
             return
         stack = self.stack
+        if len(stack) > 1 and stack[-1].tag == tag:
+            # the common well-nested close
+            stack.pop()
+            if tag == "svg":
+                self._svg_depth -= 1
+            return
         # find the matching open tag
         for i in range(len(stack) - 1, 0, -1):
             if stack[i].tag == tag:
@@ -193,12 +203,14 @@ class _TreeBuilder(HTMLParser):
     def handle_data(self, data):
         if not data:
             return
-        top = self._top()
+        top = self.stack[-1]
         kids = top.children
         if kids and kids[-1].type == 3:  # merge adjacent text
             kids[-1].text += data
         else:
-            top.append(Node.text_node(data))
+            t = Node(TEXT, text=data)
+            t.parent = top
+            kids.append(t)
 
     def handle_comment(self, data):
         self._top().append(Node.comment(data))
@@ -229,6 +241,7 @@ def parse_html(html: str) -> Node:
         # the tokenizer is already tolerant; belt-and-braces so one hostile
         # doc never kills a whole Arrow batch.
         pass
+    bump_tick()
     return tb.root
 
 

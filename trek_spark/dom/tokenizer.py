@@ -159,7 +159,7 @@ def scan(rawdata: str, h) -> None:
                     elif attrvalue[:1] == "'" == attrvalue[-1:] or \
                             attrvalue[:1] == '"' == attrvalue[-1:]:
                         attrvalue = attrvalue[1:-1]
-                    if attrvalue:
+                    if attrvalue and "&" in attrvalue:
                         attrvalue = unescape(attrvalue)
                     attrs.append((attrname.lower(), attrvalue))
                     k = am.end()

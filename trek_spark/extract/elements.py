@@ -1926,6 +1926,9 @@ def _wrap_raw_latex(root: Node) -> None:
     for t in root.iter():
         if t.type != TEXT:
             continue
+        text = t.text
+        if "$" not in text and "\\(" not in text and "\\[" not in text:
+            continue  # no delimiter: skip the ancestor walk
         cur = t.parent
         skip = False
         while cur is not None:
@@ -1937,8 +1940,6 @@ def _wrap_raw_latex(root: Node) -> None:
             text_nodes.append(t)
     for tn in text_nodes:
         text = tn.text
-        if "$" not in text and "\\(" not in text and "\\[" not in text:
-            continue
         parts = []
         last = 0
         had_block = False

@@ -24,7 +24,7 @@ from ..dom.node import Node, inner_html, release_memos
 from ..dom.parser import body_of, parse_html
 from . import elements, passes, removals_post
 from .head_scan import collect_from_dom
-from .html_to_text import html_to_text, node_to_text
+from .html_to_text import node_to_text
 from .markdown import node_to_markdown
 from .metadata import extract_metadata
 from .utils import count_words
@@ -275,20 +275,19 @@ def _response(content_html: str, metadata: dict, collected,
     # (`src/lib.rs:154-181,314-341`): `content` is markdown when
     # output.markdown else the cleaned HTML; `content_markdown` is populated
     # only under separate_markdown.
-    md = None
-    if want_md or want_separate:
-        if body is not None:
-            md = node_to_markdown(body, metadata.get("title", ""), url)
-        else:
-            md = node_to_markdown(body_of(parse_html(content_html or "")),
-                                  metadata.get("title", ""), url)
     # plain-text rendering (reference public surface `src/html_to_text.rs`):
     # reuse the final DOM when the generic path provides it; extractor paths
-    # pass body=None and we parse their (small, already-cleaned) HTML.
+    # pass body=None and we parse their (small, already-cleaned) HTML once
+    # for both renderings, taking the text before ``body_of`` wraps it.
     if body is not None:
         text = node_to_text(body)
     else:
-        text = html_to_text(content_html or "")
+        doc = parse_html(content_html or "")
+        text = node_to_text(doc) if content_html else ""
+        body = body_of(doc)
+    md = None
+    if want_md or want_separate:
+        md = node_to_markdown(body, metadata.get("title", ""), url)
     return {
         "content": (md or "") if want_md else content_html,
         "content_markdown": md if want_separate else None,

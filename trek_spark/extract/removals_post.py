@@ -1244,6 +1244,17 @@ def _drop_contentless_headings(root: Node) -> None:
         return
     order = [n for n in root.iter() if n.type in (ELEMENT, TEXT)]
     pos = {id(n): i for i, n in enumerate(order)}
+    # nodes with a heading ancestor, from one pass instead of an ancestor
+    # walk per text node. This pass only detaches headings and wrappers
+    # holding nothing but one heading, so text it still inspects keeps
+    # the same answer.
+    if root.has_ancestor_tag(*_HEADING_TAGS):
+        in_heading = set(order)
+    else:
+        in_heading = set()
+        for d in root.iter_elements():
+            if d.tag in _HEADING_TAGS and d not in in_heading:
+                in_heading.update(d.iter()[1:])
     # Suffix precompute — content_next[i] = smallest j >= i holding real
     # content. Makes the common (non-orphan) path O(nodes) total instead
     # of O(headings x nodes), which mattered on TOC-heavy documents (a
@@ -1257,7 +1268,7 @@ def _drop_contentless_headings(root: Node) -> None:
     for i in range(n_nodes - 1, -1, -1):
         n = order[i]
         if (n.type == TEXT and n.text.strip()
-                and not n.has_ancestor_tag(*_HEADING_TAGS)) or \
+                and n not in in_heading) or \
            (n.type == ELEMENT and n.tag in ("img", "table", "pre",
                                             "iframe", "video", "math")):
             nxt = i
@@ -1291,7 +1302,7 @@ def _drop_contentless_headings(root: Node) -> None:
                         and int(n.tag[1]) <= level:
                     break
                 if n.type == TEXT and n.text.strip() \
-                        and not n.has_ancestor_tag(*_HEADING_TAGS):
+                        and n not in in_heading:
                     has_content = True
                     break
                 if n.type == ELEMENT and n.tag in ("img", "table", "pre",
