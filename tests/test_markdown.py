@@ -115,3 +115,70 @@ def test_math_katex_annotation():
 def test_srcset_best_width():
     out = md('<p><img srcset="a.png 100w, b.png 800w, c.png 400w"></p>')
     assert out == "![](b.png)"
+
+
+def test_post_process_space_before_colon():
+    """Prose drops the space before a colon that ends a word; lines with
+    code or math, lines inside a fence, and colons glued to the next word
+    keep it."""
+    from trek_spark.extract.markdown import post_process
+
+    cases = {
+        "formulæ : 8": "formulæ: 8",
+        "ends with :": "ends with:",
+        "a :b stays": "a :b stays",
+        "no guard here: x": "no guard here: x",
+        "`code` : kept": "`code` : kept",
+        "$x$ : kept": "$x$ : kept",
+        "a : b : c": "a: b: c",
+    }
+    for line, want in cases.items():
+        assert post_process(line, [], "") == want, line
+    doc = "before : x\n\n```\nkey : value\n```\n\nafter : y"
+    assert post_process(doc, [], "") == (
+        "before: x\n\n```\nkey : value\n```\n\nafter: y")
+
+
+def test_post_process_link_then_punctuation():
+    """A space between a link's closing parenthesis and ASCII punctuation
+    that ends a word goes, outside fences only; escaped parentheses in
+    the URL still count as part of the link."""
+    from trek_spark.extract.markdown import post_process
+
+    cases = {
+        "see [a](http://x) , then": "see [a](http://x), then",
+        "end [a](http://x) ?": "end [a](http://x)?",
+        r"[a](http://x/\(y\)) ; z": r"[a](http://x/\(y\)); z",
+        "[a](http://x) ,5 stays": "[a](http://x) ,5 stays",
+        "(plain) , no link": "(plain) , no link",
+        "[a](http://x)!": "[a](http://x)!",
+    }
+    for line, want in cases.items():
+        assert post_process(line, [], "") == want, line
+    doc = "```\n[a](http://x) , code\n```\n\n[a](http://x) , prose"
+    assert post_process(doc, [], "") == (
+        "```\n[a](http://x) , code\n```\n\n[a](http://x), prose")
+
+
+def test_post_process_line_rules_match_unguarded_patterns():
+    """The substring guards never skip a line the two per-line patterns
+    would change: seeded random prose lines against the patterns applied
+    unconditionally."""
+    import random
+    import re
+
+    from trek_spark.extract.markdown import post_process
+
+    colon = re.compile(r"(?<=\S) :(?=\s|$)")
+    link = re.compile(
+        r"(\]\([^()\s]*(?:\\[()][^()\s]*)*\)) (?=[.,;:!?](?:\s|$))")
+    tokens = ["word", " ", ":", " :", ")", ") ", "](", "[a](b)", "(c)",
+              "[d](e/\\(f\\))", ",", ";", "?", "`", "$", "  ", "\t", "x"]
+    rng = random.Random(5)
+    for _ in range(3000):
+        line = "".join(rng.choice(tokens) for _ in range(rng.randint(1, 9)))
+        want = line
+        if "`" not in want and "$" not in want:
+            want = colon.sub(":", want)
+        want = link.sub(r"\1", want)
+        assert post_process(line, [], "") == want.strip(), repr(line)
