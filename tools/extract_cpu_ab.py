@@ -7,9 +7,9 @@ batches (what the 128 KiB Arrow batch cap gives these pages) and reports
 ``time.process_time()`` per pass. Passes alternate between the trees,
 with the first side swapped every round, and each worker runs a full
 ``gc.collect()`` before a pass, as PySpark's daemon does between tasks.
-Prints, per seed, the best pass of each tree and their ratio.
+Prints, per seed (1-3), the best of 3 passes of each tree and their ratio.
 
-    python tools/extract_cpu_ab.py PARENT_DIR CHANGE_DIR [--seeds 1 2 3] [--passes 3]
+    python tools/extract_cpu_ab.py PARENT_DIR CHANGE_DIR
 
 Make the two trees with ``git archive <rev> | tar x -C <dir>``.
 """
@@ -19,6 +19,9 @@ from __future__ import annotations
 import argparse
 import subprocess
 import sys
+
+SEEDS = (1, 2, 3)
+PASSES = 3  # per tree and seed; the best one counts
 
 _WORKER = r"""
 import gc, sys, time
@@ -44,7 +47,7 @@ for _ in sys.stdin:
 """
 
 
-def ab(trees: list[str], seed: int, passes: int) -> list[list[float]]:
+def ab(trees: list[str], seed: int) -> list[list[float]]:
     procs = [subprocess.Popen([sys.executable, "-c", _WORKER, tree, str(seed)],
                               stdin=subprocess.PIPE, stdout=subprocess.PIPE,
                               text=True) for tree in trees]
@@ -53,7 +56,7 @@ def ab(trees: list[str], seed: int, passes: int) -> list[list[float]]:
             if p.stdout.readline().strip() != "ready":
                 raise RuntimeError("worker failed to start")
         times: list[list[float]] = [[], []]
-        for i in range(passes):
+        for i in range(PASSES):
             for k in ((0, 1) if i % 2 == 0 else (1, 0)):
                 procs[k].stdin.write("pass\n")
                 procs[k].stdin.flush()
@@ -69,11 +72,9 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent")
     ap.add_argument("change")
-    ap.add_argument("--seeds", type=int, nargs="+", default=[1, 2, 3])
-    ap.add_argument("--passes", type=int, default=3)
     args = ap.parse_args()
-    for seed in args.seeds:
-        a, b = ab([args.parent, args.change], seed, args.passes)
+    for seed in SEEDS:
+        a, b = ab([args.parent, args.change], seed)
         print(f"seed {seed}: parent {min(a):.2f} s  change {min(b):.2f} s  "
               f"change/parent {min(b) / min(a):.3f}", flush=True)
 

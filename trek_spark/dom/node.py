@@ -400,6 +400,28 @@ class Node:
         return "<Document>"
 
 
+def descendants_under(root: Node, tags: frozenset,
+                      include_text: bool = False) -> set:
+    """Nodes of ``root``'s subtree (``root`` included) that have an
+    ancestor element whose tag is in ``tags``: elements only, or text and
+    comment nodes too with ``include_text``.
+
+    One traversal for a whole pass, where an ancestor walk per node is
+    quadratic in nesting depth. Each matching subtree is added once: a
+    matching element already in the set had its whole subtree added by
+    an ancestor. The set stays exact while a pass unwraps or removes
+    elements whose tag is not in ``tags`` (an unwrapped wrapper hands its
+    children a parent with the same ancestry)."""
+    walk = Node.iter if include_text else Node.iter_elements
+    if root.has_ancestor_tag(*tags):
+        return set(walk(root))
+    inside: set = set()
+    for n in root.iter_elements():
+        if n.tag in tags and n not in inside:
+            inside.update(walk(n)[1:])
+    return inside
+
+
 def _escape_text(s: str) -> str:
     if "&" in s:
         s = s.replace("&", "&amp;")

@@ -94,12 +94,6 @@ class _TreeBuilder(HTMLParser):
         self.stack: list[Node] = [self.root]
         self._svg_depth = 0
 
-    def _in_svg(self) -> bool:
-        # O(1): _svg_depth counts open <svg> elements on the stack,
-        # maintained by _pop_to (slice deletes) and the pushes below —
-        # the per-start-tag full-stack scan was ~2% of parse wall
-        return self._svg_depth > 0
-
     def _pop_to(self, i: int) -> None:
         """del stack[i:] with svg-depth bookkeeping."""
         stack = self.stack
@@ -111,6 +105,18 @@ class _TreeBuilder(HTMLParser):
     # -- helpers ---------------------------------------------------------
     def _top(self) -> Node:
         return self.stack[-1]
+
+    def _set_attrs(self, el: Node, attrs) -> None:
+        """First-declared attribute wins, per spec; inside <svg> names get
+        their SVG case. ``_svg_depth`` counts the open <svg> elements on
+        the stack, so the check is O(1), not a scan of the stack."""
+        adjust = el.tag == "svg" or self._svg_depth > 0
+        adict = el.attrs
+        for k, v in attrs:
+            if adjust:
+                k = _SVG_ATTR_ADJUST.get(k, k)
+            if k not in adict:
+                adict[k] = v if v is not None else ""
 
     def _close_implied(self, tag: str) -> None:
         if tag in _P_CLOSERS:
@@ -150,14 +156,7 @@ class _TreeBuilder(HTMLParser):
             stack.append(tr)
         el = Node(ELEMENT, tag)
         if attrs:
-            # first-declared attribute wins, per spec
-            adjust = tag == "svg" or self._svg_depth > 0
-            adict = el.attrs
-            for k, v in attrs:
-                if adjust:
-                    k = _SVG_ATTR_ADJUST.get(k, k)
-                if k not in adict:
-                    adict[k] = v if v is not None else ""
+            self._set_attrs(el, attrs)
         # a new element has no parent to detach from; parse_html bumps the
         # mutation tick once for the whole tree
         top = stack[-1]
@@ -170,17 +169,12 @@ class _TreeBuilder(HTMLParser):
 
     def handle_startendtag(self, tag, attrs):
         # <tag/> — treat as start; non-void elements become empty elements
-        adjust = tag == "svg" or self._in_svg()
-        adict: dict = {}
-        for k, v in attrs:
-            if adjust:
-                k = _SVG_ATTR_ADJUST.get(k, k)
-            if k not in adict:
-                adict[k] = v if v is not None else ""
-        self._close_implied(tag)
         el = Node(ELEMENT, tag)
-        if adict:
-            el.attrs = adict
+        if attrs:
+            # before the implied closes: SVG naming follows the stack as
+            # the tag found it
+            self._set_attrs(el, attrs)
+        self._close_implied(tag)
         self._top().append(el)
 
     def handle_endtag(self, tag):

@@ -24,7 +24,7 @@ from typing import Optional
 from urllib.parse import urljoin
 
 from ..constants import PARTIAL_SELECTORS, TEST_ATTRIBUTES
-from ..dom.node import COMMENT, ELEMENT, TEXT, Node
+from ..dom.node import COMMENT, ELEMENT, TEXT, Node, descendants_under
 
 _HEADING_TAGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
 _CLUTTER_TAGS = frozenset(("script", "style", "nav", "footer", "header",
@@ -91,32 +91,7 @@ def _inside_footnotes_container(node: Node) -> bool:
     return False
 
 
-def _inside_pre_or_code(node: Node) -> bool:
-    cur = node.parent
-    while cur is not None:
-        if cur.type == ELEMENT and cur.tag in ("pre", "code"):
-            return True
-        cur = cur.parent
-    return False
-
-
-def _pre_or_code_descendants(root: Node) -> set:
-    """Elements of ``root``'s subtree (``root`` included) that have a
-    ``pre``/``code`` ancestor, for a whole pass in one traversal.
-
-    Asking ``_inside_pre_or_code`` per node walks every ancestor of every
-    node, which is quadratic in nesting depth. Each subtree is added once:
-    a ``pre``/``code`` already in the set had its whole subtree added by
-    an ancestor. The set stays exact while a pass unwraps or removes
-    elements that are not ``pre``/``code`` (an unwrapped ``div`` or
-    ``span`` hands its children a parent with the same ancestry)."""
-    if _inside_pre_or_code(root):
-        return set(root.iter_elements())
-    inside: set = set()
-    for n in root.iter_elements():
-        if n.tag in ("pre", "code") and n not in inside:
-            inside.update(n.iter_elements()[1:])
-    return inside
+_PRE_CODE = frozenset(("pre", "code"))
 
 
 def value_matches_partial(value: str, attr: str) -> bool:
@@ -268,7 +243,7 @@ def remove_clutter(body: Node, remove_exact: bool = True,
                    remove_partial: bool = True) -> int:
     to_remove = []
     total_text = len(body.text_content())
-    in_code = _pre_or_code_descendants(body)
+    in_code = descendants_under(body, _PRE_CODE)
     for n in body.descendants_snapshot():
         if n.parent is None:
             continue
@@ -380,7 +355,7 @@ def selectors_pass(body: Node) -> int:
     # hoisted: the scan phase never mutates, and recomputing the full body
     # text per matched candidate was quadratic on widget-heavy documents
     total = len(body.text_content())
-    in_code = _pre_or_code_descendants(body)
+    in_code = descendants_under(body, _PRE_CODE)
     for n in body.descendants_snapshot():
         if n.parent is None:
             continue
@@ -621,7 +596,7 @@ def _legacy_div_flattenable(n: Node) -> bool:
 def flatten_wrapper_elements_legacy(body: Node) -> None:
     """Unwrap attribute-safe <div>s (`src/standardize_legacy.rs:166-251`).
     Pre subtrees exempt (the reference carves out pre regions)."""
-    in_code = _pre_or_code_descendants(body)
+    in_code = descendants_under(body, _PRE_CODE)
     for n in body.descendants_snapshot():
         if n.parent is None or n.tag != "div":
             continue
@@ -737,7 +712,7 @@ def promote_semantics(body: Node) -> None:
         if promote:
             n.tag = "p"
 
-    in_code = _pre_or_code_descendants(body)
+    in_code = descendants_under(body, _PRE_CODE)
     for n in _post_order(body):
         if n.tag != "span" or n.parent is None:
             continue

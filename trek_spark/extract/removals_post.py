@@ -11,7 +11,7 @@ import re
 
 from ..constants import NAVIGATION_INDICATORS
 from ..dom import node as _nodemod
-from ..dom.node import ELEMENT, TEXT, Node
+from ..dom.node import ELEMENT, TEXT, Node, descendants_under
 
 _HEADING_TAGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
 
@@ -1248,13 +1248,7 @@ def _drop_contentless_headings(root: Node) -> None:
     # walk per text node. This pass only detaches headings and wrappers
     # holding nothing but one heading, so text it still inspects keeps
     # the same answer.
-    if root.has_ancestor_tag(*_HEADING_TAGS):
-        in_heading = set(order)
-    else:
-        in_heading = set()
-        for d in root.iter_elements():
-            if d.tag in _HEADING_TAGS and d not in in_heading:
-                in_heading.update(d.iter()[1:])
+    in_heading = descendants_under(root, _HEADING_TAGS, include_text=True)
     # Suffix precompute — content_next[i] = smallest j >= i holding real
     # content. Makes the common (non-orphan) path O(nodes) total instead
     # of O(headings x nodes), which mattered on TOC-heavy documents (a
