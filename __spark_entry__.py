@@ -123,11 +123,11 @@ def _stream_dedup_within_watermark(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` evidence (rows-only): the
     engine-native streaming dedup (Spark 3.5+) whose state self-expires
-    at the watermark — the operator ``stream_dedup_exact`` runs for its
-    TTL (``dedup_ttl_ms``) over a processing-time column. Two files:
-    batch 1 carries a key and its in-batch duplicate; batch 2 replays
-    the same key within the watermark window plus one fresh key. The
-    duplicate replays must be suppressed — exactly 3 distinct keys
+    at the watermark — the operator ``stream_extract_turns(dedup=True)``
+    runs for its TTL (``dedup_ttl_ms``) over a processing-time column.
+    Two files: batch 1 carries a key and its in-batch duplicate; batch 2
+    replays the same key within the watermark window plus one fresh key.
+    The duplicate replays must be suppressed — exactly 3 distinct keys
     emit. No SQL oracle: DuckDB has no streaming surface."""
     import datetime as dt
     import tempfile

@@ -9,19 +9,50 @@
 
 File-source stream of transcript turns -> [exact dedup ->] the batch job's
 fused extraction -> checkpointed parquet sink (exactly-once across
-restarts). With --dedup, a vectorized pick keeps each text's earliest copy
-in the micro-batch and Spark's native streaming dedup drops texts seen in
-earlier micro-batches, with extraction fused into the dedup's stage; no
-per-key Python call. Default is trigger(availableNow=True): drain what's
-there and exit (the cron-batch deployment shape); --continuous keeps the
-query running on the default micro-batch trigger.
+restarts). With --dedup, one Python stage per micro-batch keeps each
+text's earliest copy in its content-hash partition and extracts only
+those, then Spark's native streaming dedup drops texts seen in earlier
+micro-batches; no per-key Python call. Default is
+trigger(availableNow=True): drain what's there and exit (the cron-batch
+deployment shape); --continuous keeps the query running on the default
+micro-batch trigger.
+
+The JSON status line it prints last also says where the time went
+(``progress_summary``): micro-batches run, input rows, the median
+micro-batch wall time, the summed state-store commit time and the rows
+the dedup state dropped.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import sys
+
+
+def progress_summary(progress: list) -> dict:
+    """Where a query's time went, from ``StreamingQuery.recentProgress``
+    (the last ``spark.sql.streaming.numRecentProgressUpdates`` entries,
+    default 100). A micro-batch is an entry that ran one: it has an
+    ``addBatch`` duration. Idle entries repeat the last micro-batch's
+    state numbers and are skipped. ``trigger_ms_p50`` is over the
+    micro-batches that read input; the state sums also count the
+    no-input micro-batches that only evict state."""
+    ran = [p for p in progress if "addBatch" in p["durationMs"]]
+    trigger_ms = [p["durationMs"]["triggerExecution"] for p in ran
+                  if p["numInputRows"]]
+    state = [op for p in ran for op in p["stateOperators"]]
+    return {
+        "micro_batches": len(ran),
+        "input_rows": sum(p["numInputRows"] for p in ran),
+        "trigger_ms_p50": statistics.median(trigger_ms) if trigger_ms
+        else None,
+        "state_commit_ms": sum(op["commitTimeMs"] for op in state),
+        "dedup_dropped_rows": sum(
+            op["customMetrics"].get("numDroppedDuplicateRows", 0)
+            for op in state),
+    }
 
 
 def main() -> None:
@@ -63,7 +94,8 @@ def main() -> None:
         q.awaitTermination()
         print(json.dumps({"status": "drained" if not args.continuous
                           else "stopped",
-                          "output": args.output}))
+                          "output": args.output,
+                          **progress_summary(q.recentProgress)}))
     finally:
         spark.stop()
 

@@ -103,50 +103,74 @@ def test_stream_pdf_turns_dispatch(spark, tmp_path_factory):
 
 
 def test_stream_dedup_exact_stateful(spark, tmp_path_factory):
-    """stream_dedup_exact (vectorized in-batch pick + native streaming
+    """stream_extract_turns(dedup=True) (in-batch pick + native streaming
     dedup): the earliest turn per content hash passes; duplicates are
     dropped BOTH within a micro-batch and across micro-batches (state
-    persists between batches); unique content always passes."""
-    import datetime as dt
-
+    persists between two drains on one checkpoint); unique content always
+    passes."""
     from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
-    from trek_spark.spark.streaming import stream_dedup_exact
 
     d = str(tmp_path_factory.mktemp("dedup_in"))
     out = str(tmp_path_factory.mktemp("dedup_out"))
     ckpt = str(tmp_path_factory.mktemp("dedup_ckpt"))
 
-    def rows(batch):
-        t0 = dt.datetime(2024, 1, 1)
-        return [(c, i, "user", txt, None, t0 + dt.timedelta(minutes=m), None)
-                for c, i, txt, m in batch]
+    def drain(batch):
+        spark.createDataFrame(_html_rows(batch), TRANSCRIPT_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(d)
+        q = stream_extract_turns(spark, d, out, ckpt, num_partitions=2,
+                                 dedup=True)
+        assert q.awaitTermination(300)  # False = still running (timed out)
+        summary = _stream_job().progress_summary(q.recentProgress)
+        return summary, sorted(
+            (r.conv_id, r.turn_idx) for r in
+            spark.read.parquet(out).select("conv_id", "turn_idx").collect())
 
-    # batch file 1: "AAA" twice (different convs), "BBB" once
-    spark.createDataFrame(rows([("c1", 0, "AAA", 0), ("c2", 0, "AAA", 5),
-                                ("c1", 1, "BBB", 1)]),
-                          TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(d)
-    # batch file 2: "AAA" again (cross-batch dup) + new "CCC"
-    spark.createDataFrame(rows([("c3", 0, "AAA", 9), ("c3", 1, "CCC", 10)]),
-                          TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(d)
+    # drain 1: "AAA" twice (different convs), "BBB" once; the earliest-ts
+    # AAA (c1 turn 0 at t+0) wins, and the in-batch copy never reaches
+    # the state operator
+    summary, keys = drain([("c1", 0, "AAA", 0), ("c2", 0, "AAA", 5),
+                           ("c1", 1, "BBB", 1)])
+    assert keys == [("c1", 0), ("c1", 1)]
+    assert (summary["input_rows"], summary["dedup_dropped_rows"]) == (3, 0)
+    # drain 2: "AAA" again (cross-batch dup) + new "CCC"; the state drops it
+    summary, keys = drain([("c3", 0, "AAA", 9), ("c3", 1, "CCC", 10)])
+    assert keys == [("c1", 0), ("c1", 1), ("c3", 1)]
+    assert (summary["input_rows"], summary["dedup_dropped_rows"]) == (2, 1)
 
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (stream_dedup_exact(stream).writeStream
-         .format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(300)  # False = still running (timed out)
 
-    got = spark.read.parquet(out).collect()
-    by_text = {}
-    for r in got:
-        by_text.setdefault(r.text, []).append((r.conv_id, r.turn_idx))
-    assert sorted(by_text) == ["AAA", "BBB", "CCC"]
-    assert all(len(v) == 1 for v in by_text.values())
-    # the earliest-ts AAA won (c1 turn 0 at t+0)
-    assert by_text["AAA"] == [("c1", 0)]
+def test_earliest_copies_pick():
+    """The in-batch pick alone, no Spark: each content hash's earliest
+    (ts, conv_id, turn_idx) row over the whole partition wins, null ts
+    sorting last and full ties going to input order; kept rows stay in
+    their batch and order, an emptied batch is still yielded, and an
+    empty partition yields nothing."""
+    import pandas as pd
+
+    from trek_spark.spark.streaming import _earliest_copies
+
+    t0, t1 = pd.Timestamp("2024-01-01"), pd.Timestamp("2024-01-02")
+
+    def frame(rows):
+        return pd.DataFrame(rows, columns=["content_hash", "ts", "conv_id",
+                                           "turn_idx", "text"])
+
+    b0 = frame([("h1", None, "a", 0, "h1 null ts"),
+                ("h2", t0, "b", 0, "h2 conv b"),
+                ("h3", t0, "z", 1, "h3 first"),
+                ("h3", t0, "z", 1, "h3 second")])
+    b1 = frame([("h2", t0, "a", 3, "h2 conv a"),
+                ("h4", t0, "c", 2, "h4 turn 2"),
+                ("h4", t0, "c", 1, "h4 turn 1"),
+                ("h1", t1, "q", 9, "h1 with ts"),
+                ("h5", None, "x", 0, "h5 only copy")])
+    b2 = frame([("h4", t1, "a", 0, "h4 later")])
+    out = list(_earliest_copies(iter([b0, b1, b2])))
+    assert [list(o.text) for o in out] == [
+        ["h3 first"],
+        ["h2 conv a", "h4 turn 1", "h1 with ts", "h5 only copy"],
+        []]
+    assert list(out[1].columns) == list(b1.columns)
+    assert list(_earliest_copies(iter([]))) == []
 
 
 def test_stream_extract_with_dedup_stage(spark, tmp_path_factory):
@@ -188,13 +212,15 @@ def _html_rows(batch):
 
 def test_stream_dedup_is_one_stage_on_num_partitions(spark,
                                                       tmp_path_factory):
-    """dedup=True plan shape: the in-batch pick's repartition and the
-    state operator's shuffle both hash content_hash into num_partitions
-    partitions (not the session's shuffle partitions), so the plan holds
-    exactly those two Exchanges; there is one StreamingDeduplicate on
-    num_partitions state partitions, and extraction is fused into its
-    stage (no Exchange between the extraction MapInPandas and it). The
-    caller's session conf is left as it was."""
+    """dedup=True plan shape: one Python stage per micro-batch. The pick
+    and extraction are one MapInPandas (no ArrowEvalPython or
+    BatchEvalPython filter) below the state operator; the pick's
+    repartition and the state operator's shuffle both hash content_hash
+    into num_partitions partitions (not the session's shuffle
+    partitions), so the plan holds exactly those two Exchanges; there is
+    one StreamingDeduplicate on num_partitions state partitions with no
+    Python operator above it. The caller's session conf is left as it
+    was."""
     import re
 
     from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA
@@ -212,6 +238,9 @@ def test_stream_dedup_is_one_stage_on_num_partitions(spark,
     assert q.awaitTermination(300)
     assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 2
     plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    python_ops = re.findall(r"\b\w*(?:EvalPython|InPandas|InArrow)\w*\b",
+                            plan)
+    assert python_ops == ["MapInPandas"], plan
     exchanges = re.findall(r"\bExchange\b.*", plan)
     assert len(exchanges) == 2
     assert all(re.match(r"Exchange hashpartitioning\(content_hash#\d+, 2\)",
@@ -219,9 +248,9 @@ def test_stream_dedup_is_one_stage_on_num_partitions(spark,
     dedups = re.findall(r"StreamingDeduplicate .*numPartitions = (\d+)\]",
                         plan)
     assert dedups == ["2"]
-    above = plan[plan.index("MapInPandas extract_map_in_pandas"):
-                 plan.index("StreamingDeduplicate")]
-    assert "Exchange" not in above
+    # the plan prints root first: what precedes the state operator is
+    # above it, and the state/write stage runs no Python
+    assert "MapInPandas" not in plan[:plan.index("StreamingDeduplicate")]
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.read.parquet(out).count() == 2
 
@@ -367,6 +396,44 @@ def test_stream_dedup_ttl_rejected_before_start(spark, tmp_path_factory,
                              str(ckpt), **kwargs)
     assert len(spark.streams.active) == active
     assert not any(ckpt.iterdir())
+
+
+def _stream_job():
+    """jobs/stream_job.py as a module (it is a script, not in a package)."""
+    import importlib.util as u
+
+    spec = u.spec_from_file_location(
+        "stream_job", os.path.join(os.path.dirname(__file__), "..", "jobs",
+                                   "stream_job.py"))
+    mod = u.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_stream_job_progress_summary():
+    """The stream job's in-band summary, no Spark: micro-batches are the
+    progress entries that ran one (an addBatch duration), so an idle
+    entry repeating the last batch's state numbers is not counted twice;
+    the p50 wall time is over the micro-batches that read input, and the
+    state sums include a no-input micro-batch that only evicted state."""
+    def entry(rows, trigger_ms, commit_ms, dropped, ran=True):
+        durations = {"triggerExecution": trigger_ms, "latestOffset": 3}
+        if ran:
+            durations["addBatch"] = trigger_ms - 10
+        return {"numInputRows": rows, "durationMs": durations,
+                "stateOperators": [{
+                    "commitTimeMs": commit_ms,
+                    "customMetrics": {"numDroppedDuplicateRows": dropped}}]}
+
+    progress = [entry(45, 900, 120, 0), entry(90, 700, 100, 9),
+                entry(45, 500, 80, 4), entry(0, 60, 80, 4, ran=False),
+                entry(0, 200, 30, 0)]
+    assert _stream_job().progress_summary(progress) == {
+        "micro_batches": 4, "input_rows": 180, "trigger_ms_p50": 700,
+        "state_commit_ms": 330, "dedup_dropped_rows": 13}
+    assert _stream_job().progress_summary([]) == {
+        "micro_batches": 0, "input_rows": 0, "trigger_ms_p50": None,
+        "state_commit_ms": 0, "dedup_dropped_rows": 0}
 
 
 def test_stream_job_rejects_dedup_ttl_without_continuous(tmp_path):

@@ -4,10 +4,13 @@ two source trees side by side.
 Each tree gets one worker process that runs ``extract_map_in_pandas`` over
 ``perfbench/gen.py``'s ``web_pages(seed, 320, 320 * 26000)`` in 5-row
 batches (what the 128 KiB Arrow batch cap gives these pages) and reports
-``time.process_time()`` per pass. Passes alternate between the trees,
-with the first side swapped every round, and each worker runs a full
+``time.process_time()`` per pass. A round is one pass of each tree, the
+first side swapped every round, and each worker runs a full
 ``gc.collect()`` before a pass, as PySpark's daemon does between tasks.
-Prints, per seed (1-3), the best of 3 passes of each tree and their ratio.
+A round's ratio is change over parent, so a swing of the shared host
+that spans the round cancels out. Prints, per seed (1-3), the median
+seconds of each tree and the median ratio over 5 rounds, then the
+median ratio over all rounds of all seeds.
 
     python tools/extract_cpu_ab.py PARENT_DIR CHANGE_DIR
 
@@ -17,11 +20,12 @@ Make the two trees with ``git archive <rev> | tar x -C <dir>``.
 from __future__ import annotations
 
 import argparse
+import statistics
 import subprocess
 import sys
 
 SEEDS = (1, 2, 3)
-PASSES = 3  # per tree and seed; the best one counts
+ROUNDS = 5  # per seed; one pass of each tree per round
 
 _WORKER = r"""
 import gc, sys, time
@@ -56,7 +60,7 @@ def ab(trees: list[str], seed: int) -> list[list[float]]:
             if p.stdout.readline().strip() != "ready":
                 raise RuntimeError("worker failed to start")
         times: list[list[float]] = [[], []]
-        for i in range(PASSES):
+        for i in range(ROUNDS):
             for k in ((0, 1) if i % 2 == 0 else (1, 0)):
                 procs[k].stdin.write("pass\n")
                 procs[k].stdin.flush()
@@ -73,10 +77,17 @@ def main() -> None:
     ap.add_argument("parent")
     ap.add_argument("change")
     args = ap.parse_args()
+    ratios = []
     for seed in SEEDS:
         a, b = ab([args.parent, args.change], seed)
-        print(f"seed {seed}: parent {min(a):.2f} s  change {min(b):.2f} s  "
-              f"change/parent {min(b) / min(a):.3f}", flush=True)
+        seed_ratios = [y / x for x, y in zip(a, b)]
+        ratios += seed_ratios
+        print(f"seed {seed}: parent {statistics.median(a):.2f} s  "
+              f"change {statistics.median(b):.2f} s  change/parent "
+              f"{statistics.median(seed_ratios):.3f} (rounds "
+              f"{' '.join(f'{r:.3f}' for r in seed_ratios)})", flush=True)
+    print(f"all seeds: change/parent {statistics.median(ratios):.3f} "
+          f"(median of {len(ratios)} rounds)")
 
 
 if __name__ == "__main__":

@@ -819,7 +819,12 @@ class Renderer:
         # which is exactly "delete, then collapse".
         if "\ufeff" in raw:
             raw = raw.replace("\ufeff", "")
-        return escape_md_text(_ASCII_WS_RUN.sub(" ", raw))
+        # the substitution changes raw exactly when it holds two spaces in
+        # a row or a non-space ASCII whitespace character
+        if ("  " in raw or "\n" in raw or "\t" in raw or "\r" in raw
+                or "\f" in raw or "\v" in raw):
+            raw = _ASCII_WS_RUN.sub(" ", raw)
+        return escape_md_text(raw)
 
     def render_inline(self, node: Node) -> str:
         out = _Out()

@@ -8,9 +8,10 @@ Structured Streaming:
   [exact dedup →] extraction → parquet sink with a checkpoint location.
   Without dedup the extraction is the batch job's range-partitioned
   ``mapInPandas`` plan (``extract_turns`` is stateless per row, so it is
-  streaming-safe as-is); with dedup the same ``mapInPandas`` runs on
-  ``stream_dedup_exact``'s output (a vectorized earliest-copy pick, then
-  Spark's native dedup: no per-key Python call). End-to-end exactly-once:
+  streaming-safe as-is); with dedup one ``mapInPandas`` per
+  content-hash partition keeps each text's earliest copy and extracts
+  only those, and Spark's native dedup drops texts seen in earlier
+  micro-batches (no per-key Python call). End-to-end exactly-once:
   the file source records consumed files and the file sink commits
   atomically per micro-batch, so a crashed micro-batch replays without
   duplication — the streaming counterpart of the batch job's
@@ -25,13 +26,12 @@ Structured Streaming:
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import BooleanType
 
 from .corpus import TRANSCRIPT_SCHEMA
 from .job import (WAVE_BYTES_PER_CORE, extract_schema, extract_turns,
@@ -65,7 +65,7 @@ def stream_extract_turns(
     parquet sink. Restart with the same checkpoint_dir resumes from the
     last committed micro-batch.
 
-    ``num_partitions`` (default ``defaultParallelism``) sizes each Python
+    ``num_partitions`` (default ``defaultParallelism``) sizes the Python
     stage of a micro-batch. Every Python task has a fixed cost
     whatever rows it carries, so more tasks than cores only add cost:
     0.1-0.2 s from submit to the UDF's first batch on a warm worker,
@@ -80,11 +80,22 @@ def stream_extract_turns(
     its range bounds over ``(conv_id, turn_idx)``, which splits a long
     conversation across tasks inside the micro-batch.
 
-    ``dedup=True`` applies ``mapInPandas`` directly to
-    :func:`stream_dedup_exact`'s output, in the state operator's stage:
-    the content-hash partitioning already spreads each conversation's
-    turns, and re-delivered pages are dropped before they cost
-    extraction CPU. Its shuffles and state store have ``num_partitions``
+    ``dedup=True``: exact dedup on ``content_hash`` (md5 of the text): the
+    earliest ``(ts, conv_id, turn_idx)`` copy in the first micro-batch
+    holding a text is written; every other copy is dropped. One Python
+    stage per micro-batch:
+
+    1. The micro-batch is hash-repartitioned on ``content_hash``, so all
+       copies of a text share a task, whose ``mapInPandas`` keeps each
+       hash's earliest row (:func:`_earliest_copies`) and extracts only
+       those: in-batch copies cost no extraction CPU.
+    2. Spark's native ``dropDuplicates`` keeps the cross-batch state and
+       drops re-deliveries of texts seen in earlier micro-batches after
+       their extraction (under 1 ms per chat turn). It keeps the first
+       copy its task reads, not the earliest, which is exact only because
+       step 1 leaves it one copy per text.
+
+    Both shuffles and the state store have ``num_partitions``
     partitions: the query starts under that
     ``spark.sql.shuffle.partitions`` (the caller's conf is restored
     afterwards). The checkpoint records the count at its first start;
@@ -92,10 +103,16 @@ def stream_extract_turns(
 
     For a continuous deployment set ``dedup_ttl_ms`` (bounds state) and
     the RocksDB state store (``spark.sql.streaming.stateStore
-    .providerClass`` → ``RocksDBStateStoreProvider``). ``dedup_ttl_ms``
-    needs ``dedup`` and is rejected with ``available_now``: it expires
-    hashes by wall time, so a drain re-run from the checkpoint would
-    forget hashes by how long ago the last drain ran. Both raise
+    .providerClass`` → ``RocksDBStateStoreProvider``). It dedups with
+    ``dropDuplicatesWithinWatermark`` over ``current_timestamp()`` (the
+    micro-batch start) with a watermark delay of half the TTL. A hash is
+    evicted at the end of the micro-batch after the first one starting
+    at least ``dedup_ttl_ms`` after its first sighting (Spark runs it at
+    once, without input if none waits); copies before that are dropped.
+    Later sightings do not extend its life; without input nothing is
+    evicted. ``dedup_ttl_ms`` needs ``dedup`` and is rejected with
+    ``available_now``: a drain re-run from the checkpoint would forget
+    hashes by how long ago the last drain ran. Both raise
     ``ValueError`` before any query starts."""
     if dedup_ttl_ms is not None and not dedup:
         raise ValueError("dedup_ttl_ms needs dedup=True")
@@ -106,10 +123,21 @@ def stream_extract_turns(
     n = num_partitions or spark.sparkContext.defaultParallelism
     stream = read_transcript_stream(spark, input_dir)
     if dedup:
-        deduped = stream_dedup_exact(stream, state_ttl_ms=dedup_ttl_ms) \
-            .drop("content_hash")
-        extracted = deduped.mapInPandas(extract_map_in_pandas,
-                                        schema=extract_schema(deduped))
+        hashed = stream.withColumn(
+            "content_hash", F.md5(F.coalesce(F.col("text"), F.lit(""))))
+        # The pick must run after the repartition: over the scan's splits
+        # a task would see one file's copies of a text, not all of them.
+        extracted = hashed.repartition("content_hash").mapInPandas(
+            _extract_earliest_copies, schema=extract_schema(hashed))
+        if dedup_ttl_ms is None:
+            extracted = extracted.dropDuplicates(["content_hash"])
+        else:
+            extracted = (
+                extracted.withColumn("seen_at", F.current_timestamp())
+                .withWatermark("seen_at", f"{dedup_ttl_ms // 2} milliseconds")
+                .dropDuplicatesWithinWatermark(["content_hash"])
+                .drop("seen_at"))
+        extracted = extracted.drop("content_hash")
     else:
         extracted = extract_turns(stream, num_partitions=n)
     writer = (extracted.writeStream
@@ -123,59 +151,31 @@ def stream_extract_turns(
         return writer.start()
 
 
-def _earliest_copy(batches: Iterator[Tuple[pd.Series, pd.Series, pd.Series,
-                                           pd.Series]]
-                   ) -> Iterator[pd.Series]:
-    """True for each content hash's earliest ``(ts, conv_id, turn_idx)``
-    row of the whole partition (nulls last, ties in input order)."""
-    frames = [pd.DataFrame({"hash": h, "ts": ts, "conv": c, "idx": i})
-              for h, ts, c, i in batches]
-    if frames:
-        yield ~(pd.concat(frames, ignore_index=True)
-                .sort_values(["ts", "conv", "idx"], kind="stable")
-                .duplicated("hash").sort_index())
+def _earliest_copies(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
+    """Each ``content_hash``'s earliest ``(ts, conv_id, turn_idx)`` row of
+    the whole partition (nulls last, ties in input order). A kept row
+    stays in its batch, in input order; every batch is yielded, emptied
+    or not, so extraction's ``batch_idx`` still numbers the input's Arrow
+    batches."""
+    batches = list(batches)
+    if not batches:
+        return
+    keys = pd.concat([b[["content_hash", "ts", "conv_id", "turn_idx"]]
+                      for b in batches], ignore_index=True)
+    keep = ~(keys.sort_values(["ts", "conv_id", "turn_idx"], kind="stable")
+             .duplicated("content_hash").sort_index().to_numpy())
+    start = 0
+    for b in batches:
+        yield b[keep[start:start + len(b)]]
+        start += len(b)
 
 
-# Non-deterministic: see stream_dedup_exact, step 1.
-_earliest_copy_udf = F.pandas_udf(_earliest_copy,
-                                  BooleanType()).asNondeterministic()
-
-
-def stream_dedup_exact(stream: DataFrame,
-                       state_ttl_ms: int | None = None) -> DataFrame:
-    """In-stream exact dedup on ``content_hash`` (md5 of the text, added as
-    a column): the earliest ``(ts, conv_id, turn_idx)`` copy in the first
-    micro-batch holding a text passes; every other copy, in that
-    micro-batch or a later one, is dropped before extraction spends CPU
-    on it. No per-key Python call:
-
-    1. The micro-batch is hash-repartitioned on ``content_hash``, so all
-       copies of a text share a partition, where a vectorized filter
-       over four narrow columns keeps the earliest. The filter is
-       non-deterministic so the optimizer cannot push it below the
-       repartition, where it would see one input split's copies only.
-    2. Spark's native ``dropDuplicates`` keeps the cross-batch state. It
-       keeps the first copy its task reads, not the earliest, which is
-       exact only because step 1 leaves it one copy per text.
-
-    ``state_ttl_ms`` bounds state for a long-running stream:
-    ``dropDuplicatesWithinWatermark`` over ``current_timestamp()`` (the
-    micro-batch start) with a watermark delay of half the TTL. A hash is
-    evicted at the end of the micro-batch after the first one starting
-    at least ``state_ttl_ms`` after its first sighting (Spark runs it at
-    once, without input if none waits); copies before that are dropped.
-    Later sightings do not extend its life; without input nothing is
-    evicted."""
-    hashed = stream.withColumn(
-        "content_hash", F.md5(F.coalesce(F.col("text"), F.lit(""))))
-    picked = hashed.repartition("content_hash").filter(
-        _earliest_copy_udf("content_hash", "ts", "conv_id", "turn_idx"))
-    if state_ttl_ms is None:
-        return picked.dropDuplicates(["content_hash"])
-    return (picked.withColumn("seen_at", F.current_timestamp())
-            .withWatermark("seen_at", f"{state_ttl_ms // 2} milliseconds")
-            .dropDuplicatesWithinWatermark(["content_hash"])
-            .drop("seen_at"))
+def _extract_earliest_copies(batches: Iterator[pd.DataFrame]
+                             ) -> Iterator[pd.DataFrame]:
+    """The deduped micro-batch's one Python stage: the pick, then
+    ``extract_map_in_pandas`` over the kept rows."""
+    return extract_map_in_pandas(_earliest_copies(batches))
 
 
 def stream_turn_rate(stream: DataFrame, window: str = "1 minute",
