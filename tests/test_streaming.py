@@ -428,10 +428,11 @@ def test_stream_job_progress_summary():
     progress = [entry(45, 900, 120, 0), entry(90, 700, 100, 9),
                 entry(45, 500, 80, 4), entry(0, 60, 80, 4, ran=False),
                 entry(0, 200, 30, 0)]
-    assert _stream_job().progress_summary(progress) == {
+    summary = _stream_job().progress_summary
+    assert summary(progress) == {
         "micro_batches": 4, "input_rows": 180, "trigger_ms_p50": 700,
         "state_commit_ms": 330, "dedup_dropped_rows": 13}
-    assert _stream_job().progress_summary([]) == {
+    assert summary([]) == {
         "micro_batches": 0, "input_rows": 0, "trigger_ms_p50": None,
         "state_commit_ms": 0, "dedup_dropped_rows": 0}
 
