@@ -18,41 +18,16 @@ deployment shape); --continuous keeps the query running on the default
 micro-batch trigger.
 
 The JSON status line it prints last also says where the time went
-(``progress_summary``): micro-batches run, input rows, the median
-micro-batch wall time, the summed state-store commit time and the rows
-the dedup state dropped.
+(``trek_spark.spark.streaming.progress_summary``): micro-batches run,
+input rows, the median micro-batch wall time, the summed state-store
+commit time and the rows the dedup state dropped.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import statistics
 import sys
-
-
-def progress_summary(progress: list) -> dict:
-    """Where a query's time went, from ``StreamingQuery.recentProgress``
-    (the last ``spark.sql.streaming.numRecentProgressUpdates`` entries,
-    default 100). A micro-batch is an entry that ran one: it has an
-    ``addBatch`` duration. Idle entries repeat the last micro-batch's
-    state numbers and are skipped. ``trigger_ms_p50`` is over the
-    micro-batches that read input; the state sums also count the
-    no-input micro-batches that only evict state."""
-    ran = [p for p in progress if "addBatch" in p["durationMs"]]
-    trigger_ms = [p["durationMs"]["triggerExecution"] for p in ran
-                  if p["numInputRows"]]
-    state = [op for p in ran for op in p["stateOperators"]]
-    return {
-        "micro_batches": len(ran),
-        "input_rows": sum(p["numInputRows"] for p in ran),
-        "trigger_ms_p50": statistics.median(trigger_ms) if trigger_ms
-        else None,
-        "state_commit_ms": sum(op["commitTimeMs"] for op in state),
-        "dedup_dropped_rows": sum(
-            op["customMetrics"].get("numDroppedDuplicateRows", 0)
-            for op in state),
-    }
 
 
 def main() -> None:
@@ -80,7 +55,8 @@ def main() -> None:
                  "runs")
 
     from trek_spark.spark.session import get_spark
-    from trek_spark.spark.streaming import stream_extract_turns
+    from trek_spark.spark.streaming import (progress_summary,
+                                            stream_extract_turns)
 
     spark = get_spark("trek-extract-stream")
     try:

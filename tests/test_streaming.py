@@ -1,6 +1,7 @@
 """Structured Streaming extraction tests: file source → fused extraction →
 parquet sink with checkpoint; watermarked windowed metrics."""
 
+import json
 import os
 
 import pytest
@@ -9,7 +10,8 @@ from pyspark.sql import functions as F
 from trek_spark.spark.corpus import seeded_transcripts
 from trek_spark.spark.session import get_spark
 from trek_spark.spark.streaming import (
-    read_transcript_stream, stream_extract_turns, stream_turn_rate,
+    progress_summary, read_transcript_stream, stream_extract_turns,
+    stream_turn_rate,
 )
 
 
@@ -120,7 +122,7 @@ def test_stream_dedup_exact_stateful(spark, tmp_path_factory):
         q = stream_extract_turns(spark, d, out, ckpt, num_partitions=2,
                                  dedup=True)
         assert q.awaitTermination(300)  # False = still running (timed out)
-        summary = _stream_job().progress_summary(q.recentProgress)
+        summary = progress_summary(q.recentProgress)
         return summary, sorted(
             (r.conv_id, r.turn_idx) for r in
             spark.read.parquet(out).select("conv_id", "turn_idx").collect())
@@ -398,24 +400,13 @@ def test_stream_dedup_ttl_rejected_before_start(spark, tmp_path_factory,
     assert not any(ckpt.iterdir())
 
 
-def _stream_job():
-    """jobs/stream_job.py as a module (it is a script, not in a package)."""
-    import importlib.util as u
-
-    spec = u.spec_from_file_location(
-        "stream_job", os.path.join(os.path.dirname(__file__), "..", "jobs",
-                                   "stream_job.py"))
-    mod = u.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_stream_job_progress_summary():
+def test_progress_summary():
     """The stream job's in-band summary, no Spark: micro-batches are the
     progress entries that ran one (an addBatch duration), so an idle
     entry repeating the last batch's state numbers is not counted twice;
     the p50 wall time is over the micro-batches that read input, and the
-    state sums include a no-input micro-batch that only evicted state."""
+    state sums include a no-input micro-batch that only evicted state.
+    Progress objects with a ``json`` property read the same as dicts."""
     def entry(rows, trigger_ms, commit_ms, dropped, ran=True):
         durations = {"triggerExecution": trigger_ms, "latestOffset": 3}
         if ran:
@@ -428,11 +419,16 @@ def test_stream_job_progress_summary():
     progress = [entry(45, 900, 120, 0), entry(90, 700, 100, 9),
                 entry(45, 500, 80, 4), entry(0, 60, 80, 4, ran=False),
                 entry(0, 200, 30, 0)]
-    summary = _stream_job().progress_summary
-    assert summary(progress) == {
-        "micro_batches": 4, "input_rows": 180, "trigger_ms_p50": 700,
-        "state_commit_ms": 330, "dedup_dropped_rows": 13}
-    assert summary([]) == {
+
+    class Progress:
+        def __init__(self, entry):
+            self.json = json.dumps(entry)
+
+    want = {"micro_batches": 4, "input_rows": 180, "trigger_ms_p50": 700,
+            "state_commit_ms": 330, "dedup_dropped_rows": 13}
+    assert progress_summary(progress) == want
+    assert progress_summary([Progress(p) for p in progress]) == want
+    assert progress_summary([]) == {
         "micro_batches": 0, "input_rows": 0, "trigger_ms_p50": None,
         "state_commit_ms": 0, "dedup_dropped_rows": 0}
 

@@ -10,7 +10,6 @@ site-suffix title cleaning, and author-string cleanup.
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 from typing import Optional
 from urllib.parse import urlsplit
 
@@ -250,16 +249,6 @@ def _try_separator_split(title: str, pattern: re.Pattern, suffix_only: bool,
     return None
 
 
-@lru_cache(maxsize=1024)
-def _site_affix_res(site_name: str) -> tuple[re.Pattern, re.Pattern]:
-    """The site-name suffix and prefix patterns of :func:`clean_title`,
-    compiled once per site name (a page set has more site names than
-    ``re``'s own cache holds)."""
-    escaped = re.escape(site_name)
-    return (re.compile(rf"\s*{_SEPARATORS}\s*{escaped}\s*$", re.I),
-            re.compile(rf"^\s*{escaped}\s*{_SEPARATORS}\s*", re.I))
-
-
 def clean_title(title: str, site_name: str) -> tuple[str, str]:
     """Strip site suffix/prefix from a title; returns (title, detected_site).
     Ref `src/metadata.rs:465-548`."""
@@ -268,9 +257,11 @@ def clean_title(title: str, site_name: str) -> tuple[str, str]:
 
     if site_name and site_name.lower() != title.lower() and _word_count(site_name) <= 6:
         site_lower = site_name.lower()
-        suffix_re, prefix_re = _site_affix_res(site_name)
+        escaped = re.escape(site_name)
+        suffix_re = re.compile(rf"\s*{_SEPARATORS}\s*{escaped}\s*$", re.I)
         if suffix_re.search(title):
             return suffix_re.sub("", title).strip(), site_name
+        prefix_re = re.compile(rf"^\s*{escaped}\s*{_SEPARATORS}\s*", re.I)
         if prefix_re.search(title):
             return prefix_re.sub("", title).strip(), site_name
 

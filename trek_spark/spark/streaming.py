@@ -18,6 +18,9 @@ Structured Streaming:
   wave-committed resume. Drained with ``trigger(availableNow=True)`` by
   default (process all available input, then stop); a deployment runs it
   on the default micro-batch trigger.
+* ``progress_summary`` — micro-batches, input rows, median trigger time,
+  state-store commit time and dedup drops of a query's recent progress;
+  ``jobs/stream_job.py`` prints it with its status line.
 * ``stream_turn_rate`` — watermarked windowed turn counts (late turns
   beyond the watermark are dropped, state is bounded), the monitoring
   side-channel for a long-running ingest; the driver contract's
@@ -26,6 +29,8 @@ Structured Streaming:
 
 from __future__ import annotations
 
+import json
+import statistics
 from typing import Iterator
 
 import pandas as pd
@@ -91,9 +96,19 @@ def stream_extract_turns(
        those: in-batch copies cost no extraction CPU.
     2. Spark's native ``dropDuplicates`` keeps the cross-batch state and
        drops re-deliveries of texts seen in earlier micro-batches after
-       their extraction (under 1 ms per chat turn). It keeps the first
-       copy its task reads, not the earliest, which is exact only because
-       step 1 leaves it one copy per text.
+       their extraction. It keeps the first copy its task reads, not the
+       earliest, which is exact only because step 1 leaves it one copy
+       per text.
+
+    The one stage pays off for short texts in small micro-batches, such
+    as a chat-turn stream: a Python stage's fixed cost per task outweighs
+    extracting a re-delivered turn (under 1 ms). For web pages it can
+    lose: a page re-delivered in a later micro-batch costs its whole
+    extraction (11-22 ms), and the second shuffle carries the extraction
+    output, about 2.5 times the bytes of the input rows. Each Python
+    task also reads its whole partition before extracting, and holds
+    each input batch until its kept rows go to extraction (a trigger
+    admits at most ``WAVE_BYTES_PER_CORE`` per core).
 
     Both shuffles and the state store have ``num_partitions``
     partitions: the query starts under that
@@ -151,6 +166,33 @@ def stream_extract_turns(
         return writer.start()
 
 
+def progress_summary(progress: list) -> dict:
+    """Where a query's time went, from ``StreamingQuery.recentProgress``
+    (the last ``spark.sql.streaming.numRecentProgressUpdates`` entries,
+    default 100; plain dicts or progress objects with a ``json``
+    property). A micro-batch is an entry that ran one: it has an
+    ``addBatch`` duration. Idle entries repeat the last micro-batch's
+    state numbers and are skipped. ``trigger_ms_p50`` is over the
+    micro-batches that read input; the state sums also count the
+    no-input micro-batches that only evict state."""
+    progress = [json.loads(p.json) if hasattr(p, "json") else p
+                for p in progress]
+    ran = [p for p in progress if "addBatch" in p["durationMs"]]
+    trigger_ms = [p["durationMs"]["triggerExecution"] for p in ran
+                  if p["numInputRows"]]
+    state = [op for p in ran for op in p["stateOperators"]]
+    return {
+        "micro_batches": len(ran),
+        "input_rows": sum(p["numInputRows"] for p in ran),
+        "trigger_ms_p50": statistics.median(trigger_ms) if trigger_ms
+        else None,
+        "state_commit_ms": sum(op["commitTimeMs"] for op in state),
+        "dedup_dropped_rows": sum(
+            op["customMetrics"].get("numDroppedDuplicateRows", 0)
+            for op in state),
+    }
+
+
 def _earliest_copies(batches: Iterator[pd.DataFrame]
                      ) -> Iterator[pd.DataFrame]:
     """Each ``content_hash``'s earliest ``(ts, conv_id, turn_idx)`` row of
@@ -166,7 +208,8 @@ def _earliest_copies(batches: Iterator[pd.DataFrame]
     keep = ~(keys.sort_values(["ts", "conv_id", "turn_idx"], kind="stable")
              .duplicated("content_hash").sort_index().to_numpy())
     start = 0
-    for b in batches:
+    for i, b in enumerate(batches):
+        batches[i] = None  # held input shrinks as extraction goes on
         yield b[keep[start:start + len(b)]]
         start += len(b)
 
