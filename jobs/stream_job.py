@@ -19,8 +19,9 @@ micro-batch trigger.
 
 The JSON status line it prints last also says where the time went
 (``trek_spark.spark.streaming.progress_summary``): micro-batches run,
-input rows, the median micro-batch wall time, the summed state-store
-commit time and the rows the dedup state dropped.
+input rows, the median micro-batch wall time, the state-store commit
+time summed over state partitions (task time, not wall) and the rows the
+dedup state dropped.
 """
 
 from __future__ import annotations
@@ -42,8 +43,10 @@ def main() -> None:
                          "at its first start")
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--dedup", action="store_true",
-                    help="drop exact-duplicate turns (stateful, "
-                         "first-seen-wins) before extraction")
+                    help="drop exact-duplicate turns: each micro-batch "
+                         "keeps a text's earliest copy before extraction; "
+                         "copies of texts seen in earlier micro-batches "
+                         "are dropped after it")
     ap.add_argument("--dedup-ttl-ms", type=int, default=None,
                     help="state TTL for --dedup; needs --continuous")
     args = ap.parse_args()

@@ -336,6 +336,81 @@ def test_workers_keep_unchanged_zip_directories(spark):
     assert all(r.installed and r.reads == 0 for r in reporting), reporting
 
 
+def test_workers_load_pyspark_from_installed_copy(spark):
+    """On a local master the workers start through
+    ``trek_spark.spark.daemon``: with an installed pyspark identical to
+    ``$SPARK_HOME``'s zip, the zip is off their path and pyspark is loaded
+    from outside any zip."""
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    from trek_spark.spark.daemon import _same_package
+
+    bundled = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
+    installed = os.path.dirname(pyspark.__file__)
+    if not (os.path.isdir(installed) and os.path.isfile(bundled)
+            and _same_package(bundled, "pyspark", installed)):
+        pytest.skip("no installed pyspark identical to SPARK_HOME's zip")
+
+    def probe(batches):
+        import sys
+
+        import pandas as pd
+        import pyspark
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "file": [pyspark.__file__],
+            "zips": [[p for p in sys.path if ".zip" in p]]})
+
+    rows = (spark.range(0, 4, numPartitions=4)
+            .mapInPandas(probe, "file string, zips array<string>").collect())
+    assert rows
+    for r in rows:
+        assert os.path.isfile(r.file), r.file
+        assert not any(os.path.basename(z) == "pyspark.zip" for z in r.zips), r.zips
+
+
+def test_spark_submit_py_files_from_outside_cwd(spark, tmp_path_factory):
+    """The documented launch mode: spark-submit with the package as a
+    ``--py-files`` zip, from a cwd outside the repository and without
+    ``PYTHONPATH``. The workers' daemon module must import from the zip,
+    and spark-submit's ``--master`` must be the session's master."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, os.path.join(root, "tools", "package.py")],
+                   check=True, capture_output=True)
+    tmp = tmp_path_factory.mktemp("submit")
+    seeded_transcripts(spark, 12, seed=9).filter(F.col("text") != "") \
+        .write.parquet(str(tmp / "in"))
+    events = tmp / "events"
+    events.mkdir()
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "SPARK_GRAFT_MASTER")}
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[2]",
+         "--conf", "spark.eventLog.enabled=true",
+         "--conf", f"spark.eventLog.dir=file://{events}",
+         "--conf", "spark.eventLog.compress=false",
+         "--py-files", os.path.join(root, "dist", "trek_spark.zip"),
+         os.path.join(root, "jobs", "extract_job.py"),
+         "--input", str(tmp / "in"), "--output", str(tmp / "out")],
+        cwd=tmp, env=env, capture_output=True, text=True, timeout=300)
+    summary = [line for line in proc.stdout.splitlines()
+               if line.startswith("{")]
+    assert proc.returncode == 0 and summary, proc.stderr[-3000:]
+    result = json.loads(summary[-1])
+    assert (result["rows"], result["failures"]) == (11, 0), result
+    masters = [e["Spark Properties"]["spark.master"]
+               for log in events.rglob("events_*")
+               for e in map(json.loads, log.read_text().splitlines())
+               if e["Event"] == "SparkListenerEnvironmentUpdate"]
+    assert masters == ["local[2]"], masters
+
+
 def test_salting_spreads_conversations(spark):
     from trek_spark.spark.job import range_partitioned
     t = seeded_transcripts(spark, 64, seed=6)

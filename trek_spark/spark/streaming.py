@@ -174,7 +174,10 @@ def progress_summary(progress: list) -> dict:
     ``addBatch`` duration. Idle entries repeat the last micro-batch's
     state numbers and are skipped. ``trigger_ms_p50`` is over the
     micro-batches that read input; the state sums also count the
-    no-input micro-batches that only evict state."""
+    no-input micro-batches that only evict state. ``state_commit_ms`` is
+    summed over state partitions (task time, not wall): the partitions
+    commit in parallel, so a micro-batch waits for about its sum divided
+    by the partition count."""
     progress = [json.loads(p.json) if hasattr(p, "json") else p
                 for p in progress]
     ran = [p for p in progress if "addBatch" in p["durationMs"]]

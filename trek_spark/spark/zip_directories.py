@@ -8,7 +8,10 @@ mid-session becomes importable. On CPython 3.11 and 3.12 that makes every
 central directory: one importer per imported pyspark subpackage over
 ``pyspark.zip`` (1,328 entries), two over the spark-core jar (5,359) and
 one over py4j, 0.2-0.45 s per task on a warm worker. 3.13 reads the
-directory lazily and needs nothing here.
+directory lazily and needs nothing here. On a local master whose workers
+start through ``trek_spark.spark.daemon``, the pyspark.zip and py4j
+importers are gone when an installed copy matches; the jar importers, and
+those over any ``--py-files`` archive, remain.
 
 :func:`keep_unchanged_zip_directories` wraps
 ``zipimporter.invalidate_caches``: an importer keeps the cached directory
